@@ -33,10 +33,6 @@ SHORELINE_SCHEMA = (
 # cell resolution for tile assignment: cell edge 4096 m >= tile core 3840 m
 DEFAULT_CELL_RES = 11
 
-# cloned-session memo for shorelines_colocated: one pinned session per
-# (SparkContext, maxPartitionBytes value) for the application lifetime
-_PINNED_SESSIONS: dict = {}
-
 
 def _rc_to_world(pts_rc: np.ndarray, transform: list[float]) -> np.ndarray:
     """(row, col) pixel coords -> world coords at pixel centers."""
@@ -224,8 +220,6 @@ def shorelines_fused(
         meta = comp_op.tide_filtered(meta)
 
     def fused(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one shared kernel body with the colocated path — a fix there
-        # (certainty sampling, cell assignment) reaches both plans
         return _shoreline_rows_for_group(pdf, level, min_vertices, cell_res)
 
     return (
@@ -237,112 +231,10 @@ def shorelines_fused(
     )
 
 
-def shorelines_colocated(
-    spark,
-    table_path: str,
-    years=None,
-    apply_tide_filter: bool = True,
-    level: float = 0.0,
-    min_vertices: int = 10,
-    cell_res: int = DEFAULT_CELL_RES,
-) -> DataFrame:
-    """ZERO-shuffle tiles -> shorelines for snapshot tables written by
-    sources.tiles.write_tiles.
-
-    write_tiles clusters rows so each (cell_id, year) partition
-    directory holds exactly one file; every (tile, year) group is
-    therefore complete within one file. This reader pins
-    `spark.sql.files.maxPartitionBytes` above the table's largest file
-    (from the manifest) so Spark never splits a file across tasks, then
-    groups WITHIN partitions in one mapInPandas — the image bytes are
-    never shuffled. The tide-cutoff join stays a broadcast (map-side),
-    so the whole plan is: scan -> broadcast join -> grouped kernel.
-
-    At 10^12 images this is the difference between shuffling the whole
-    corpus once per run and shuffling nothing: the table layout IS the
-    partitioning (the Spark analog of the reference running one CLI per
-    tile directory, raster.py:530-536).
-
-    Measured trade-off (local[32], 51k tiles): the staged path wins
-    locally (3.9s vs 7.2s) because a local shuffle is page-cached while
-    this path pays the small-files tax (~600 files x ~3ms open/footer =
-    the whole difference; a plain 32-file scan of the same bytes is 7x
-    faster than the 600-file scan). On a cluster the economics invert:
-    files are ~512 MB (no tax) and the avoided shuffle is network-bound
-    over the full corpus. Use staged locally / for small tables,
-    colocated for production-layout tables.
-    """
-    from ..operators import composite as comp_op
-    from ..sources.table import SnapshotTable
-    from ..sources.tiles import read_tiles
-
-    from pyspark.sql import SparkSession as _SS
-
-    table = SnapshotTable(spark, table_path)
-    meta = table._metadata()
-    max_bytes = max((f.get("bytes", 0) for f in meta["files"]), default=0)
-    conf_key = "spark.sql.files.maxPartitionBytes"
-    # Pin the conf on a CLONED session (same SparkContext, copied
-    # session state) and build the plan against the clone: file-split
-    # planning reads the conf lazily at ACTION time, so setting it on
-    # the caller's session and restoring it before returning would mean
-    # the pin is gone by the time the returned DataFrame executes —
-    # large files would be split across tasks and groups fragmented.
-    # The clone's conf lives as long as the returned plan; the caller's
-    # session is never touched. Clones are MEMOIZED per (context,
-    # pinned value): a loop over many tables reuses one clone per
-    # distinct file size instead of leaking a session (and its JVM
-    # state/listeners) per call. The pinned value is read at plan-BUILD
-    # time — rewrite the table and rebuild the plan to pick up new
-    # sizes.
-    pin_val = str(max(int(max_bytes) + (1 << 20), 8 << 20))
-    # key on applicationId, not id(sparkContext): a stopped context's
-    # object id can be reused by a NEW context after GC, which would
-    # hand back a clone of the dead session. App ids are unique per
-    # context; entries from previous (dead) apps are evicted here so
-    # the memo never grows beyond one app's distinct file sizes.
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _PINNED_SESSIONS if k[0] != app_id]:
-        del _PINNED_SESSIONS[k]
-    cache_key = (app_id, pin_val)
-    pinned = _PINNED_SESSIONS.get(cache_key)
-    if pinned is None:
-        pinned = _SS(spark.sparkContext, spark._jsparkSession.cloneSession())
-        pinned.conf.set(conf_key, pin_val)
-        _PINNED_SESSIONS[cache_key] = pinned
-
-    tiles = read_tiles(pinned, table_path, years=years)
-    meta_df = comp_op.with_caption(tiles)
-    if apply_tide_filter:
-        meta_df = comp_op.tide_filtered(meta_df)
-    src = meta_df.select(
-        "tile_x", "tile_y", "year", "bytes", "fmt", "transform", "halo_px"
-    )
-
-    def kernel(batches):
-        import pandas as _pd
-
-        buf = []
-        for pdf in batches:
-            if len(pdf):
-                buf.append(pdf)
-        if not buf:
-            return
-        allp = _pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-        for (tx, ty, yr), grp in allp.groupby(["tile_x", "tile_y", "year"]):
-            out = _shoreline_rows_for_group(
-                grp, level, min_vertices, cell_res
-            )
-            if len(out):
-                yield out
-
-    return src.mapInPandas(kernel, SHORELINE_SCHEMA)
-
-
 def _shoreline_rows_for_group(
     grp: pd.DataFrame, level: float, min_vertices: int, cell_res: int
 ) -> pd.DataFrame:
-    """Shared kernel body: one (tile, year) obs group -> shoreline rows."""
+    """Fused kernel body: one (tile, year) obs group -> shoreline rows."""
     from ..codecs import image as img_codec
     from ..operators import composite as comp_op
 

@@ -96,7 +96,13 @@ def read_csv_survey_dms(
         # '2001-01-01' ends in '-01', which the unanchored alternative
         # read as a -01 hour offset and double-shifted — moving a
         # midnight survey into the previous day (wrong year
-        # attribution) for negative-offset zones (ADVICE r5)
+        # attribution) for negative-offset zones.
+        # Assumption: offsets are parsed only after a COLON-separated
+        # time (HH:MM[:SS]). ISO-8601 basic format ('20010101T003000Z')
+        # and hour-only times never match here, so they are read as
+        # naive; to_timestamp itself rejects the basic format under
+        # ANSI mode, so such a file fails to load instead of landing
+        # in a shifted year.
         has_offset = F.col("obs_time").rlike(
             r"\d{2}:\d{2}(:\d{2})?(\.\d+)?\s*(Z|[+-]\d{2}:?\d{2}|[+-]\d{2})\s*$"
         )

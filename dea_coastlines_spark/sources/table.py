@@ -87,7 +87,8 @@ class SnapshotTable:
             return json.load(f)
 
     def snapshots(self) -> list[dict]:
-        """Snapshot log (id, ts, operation, file/row counts)."""
+        """Snapshot log (id, ts, operation, file/row counts, and the
+        caller-supplied commit summary)."""
         out = []
         for v in range(1, self.current_version() + 1):
             m = self._metadata(v)
@@ -98,6 +99,7 @@ class SnapshotTable:
                     "operation": m["operation"],
                     "n_files": len(m["files"]),
                     "n_rows": sum(f["rows"] for f in m["files"]),
+                    "summary": m.get("summary", {}),
                 }
             )
         return out
@@ -105,7 +107,11 @@ class SnapshotTable:
     def _commit(self, operation: str, files: list[dict], schema_json: str,
                 partition_by: list[str], expected_version: int | None = None,
                 retire: list[str] | None = None,
-                txn: tuple[str, int] | None = None) -> int:
+                txn: tuple[str, int] | None = None,
+                summary: dict | None = None) -> int:
+        """Publish snapshot v{N+1}. `summary` is a small JSON-able dict
+        stored with this commit only (not carried forward), e.g. the
+        keys a checkpoint batch completed."""
         os.makedirs(self.meta_dir, exist_ok=True)
         cur = self.current_version()
         if expected_version is not None and cur != expected_version:
@@ -131,6 +137,7 @@ class SnapshotTable:
             "schema_json": schema_json,
             "retired_names": sorted(set(retired) | set(retire or [])),
             "txns": txns,
+            "summary": summary or {},
             "files": files,
         }
         # Publish content ATOMICALLY with the commit point: write + fsync
@@ -177,9 +184,8 @@ class SnapshotTable:
         stage_dir = f"{self.data_dir}/stage-{stage_id}"
         if partition_by and cluster:
             # cluster rows so each partition directory gets ONE file:
-            # avoids small-files explosion AND guarantees co-location of
-            # a partition key's rows (enables the shuffle-free grouped
-            # paths, e.g. contours.shorelines_colocated)
+            # avoids a small-files explosion and keeps one manifest
+            # entry per partition key
             df = df.repartition(*[F.col(c) for c in partition_by])
         writer = df.write.mode("overwrite")
         if partition_by:

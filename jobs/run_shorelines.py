@@ -15,9 +15,10 @@ Usage (local example; on a cluster swap --master for YARN/k8s):
         --synth 4,2,2000,2002,3 --tiles-table /tmp/tiles \
         --output /tmp/shorelines --checkpoint-dir /tmp/ckpt
 
-Re-running with the same --checkpoint-dir resumes: completed
-(cell_id, year) partitions are skipped via the lineage table
-(reference analog: run_completed markers, coastlines/raster.py:716-725).
+Re-running with the same --checkpoint-dir resumes: cells (cell_id, all
+years together) committed by an earlier run are skipped via the
+checkpoint stage's commit log (reference analog: run_completed markers,
+coastlines/raster.py:716-725).
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ def parse_args(argv):
     p.add_argument("--output", required=True,
                    help="snapshot-table path for shoreline rows")
     p.add_argument("--checkpoint-dir", default=None,
-                   help="enable per-(cell, year) lineage + resume")
+                   help="enable per-cell_id lineage + resume")
     p.add_argument("--checkpoint-batch-cells", type=int, default=None,
                    help="commit lineage every N cells so a killed job "
                         "resumes at the last completed batch")
@@ -100,7 +101,7 @@ def main(argv=None) -> int:
     resumed_keys = 0
     if args.checkpoint_dir:
         ckpt = CheckpointedPipeline(spark, args.checkpoint_dir)
-        resumed_keys = ckpt.completed_keys("shorelines").count()
+        resumed_keys = len(ckpt.done_keys("shorelines"))
         # Keyed by cell_id ONLY (not (cell, year)): the tide-cutoff
         # window is a min/max over a tile's FULL time series
         # (coastlines/raster.py:283-289), so a cell must recompute all

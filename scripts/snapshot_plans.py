@@ -9,6 +9,8 @@ Usage:
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
@@ -42,9 +44,10 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = registry[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)

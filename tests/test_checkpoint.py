@@ -5,12 +5,14 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from dea_coastlines_spark.operators import composite as comp_op
 from dea_coastlines_spark.plans.checkpoint import CheckpointedPipeline
+from dea_coastlines_spark.sources.table import CommitConflictError, SnapshotTable
 from dea_coastlines_spark.synth import corpus
 
 SPEC = corpus.CorpusSpec(
@@ -107,61 +109,103 @@ def test_resumed_output_matches_uninterrupted(spark, base_dir):
     assert resumed.equals(clean)
 
 
-def test_batched_commits_and_crash_window_idempotence(spark, base_dir):
+def test_batched_commits_and_crash_window_idempotence(spark, base_dir,
+                                                      monkeypatch):
     """batch_keys=1 commits per cell; a crash BETWEEN the data write and
-    the lineage append (the only non-atomic window) re-runs that cell
-    idempotently — dynamic partition overwrite replaces the orphan
-    partition instead of appending a duplicate copy."""
+    the commit that references it leaves only unreferenced staged files:
+    the resumed run redoes exactly that cell, the output holds no
+    duplicate, and vacuum reclaims the orphaned files."""
     tiles = comp_op.with_caption(
         spark.createDataFrame(corpus.generate_pandas(SPEC))
     )
-    calls: list[int] = []
+    calls: list[list[str]] = []
 
     def stage_fn(todo):
-        calls.append(
-            todo.select("tile_x", "tile_y").distinct().count()
-        )
+        calls.append(sorted(
+            f"{r.tile_x}|{r.tile_y}"
+            for r in todo.select("tile_x", "tile_y").distinct().collect()
+        ))
         return comp_op.annual_composites(todo, apply_tide_filter=False)
 
-    # interrupted run: process the first cell only, then "die" after its
-    # data landed but BEFORE its lineage row was appended
-    p1 = CheckpointedPipeline(spark, base_dir)
-
+    # interrupted run: the first cell's files are written, then the
+    # process "dies" before its commit
     class Boom(RuntimeError):
         pass
 
-    orig_append = p1._append_lineage
-    state = {"first": True}
+    def dying_commit(self, *args, **kwargs):
+        raise Boom()
 
-    def dying_append(rows):
-        if state["first"]:
-            state["first"] = False
-            raise Boom()  # crash in the write->lineage window
-        orig_append(rows)
-
-    p1._append_lineage = dying_append
-    with pytest.raises(Boom):
+    p1 = CheckpointedPipeline(spark, base_dir)
+    with monkeypatch.context() as mp, pytest.raises(Boom):
+        mp.setattr(SnapshotTable, "_commit", dying_commit)
         p1.run_stage("comp", tiles, ["tile_x", "tile_y"], stage_fn,
                      batch_keys=1)
-    assert calls == [1]  # exactly one cell was processed before the kill
-    # orphan data exists for that cell, no lineage
-    assert p1.completed_keys("comp").count() == 0
+    assert calls == [["0|0"]]  # one cell was processed before the kill
+    assert p1.done_keys("comp") == []  # staged files, no commit
+    orphans = list((Path(base_dir) / "comp" / "data").rglob("*.parquet"))
+    assert orphans
 
-    # resumed run: all 3 cells are todo again (no lineage); per-cell
-    # batches mean 3 calls of 1 cell each; the orphan partition is
-    # REPLACED, not duplicated
+    # resumed run: the killed cell is redone, then the other two; one
+    # commit per cell
     p2 = CheckpointedPipeline(spark, base_dir)
     out = p2.run_stage("comp", tiles, ["tile_x", "tile_y"], stage_fn,
                        batch_keys=1)
-    assert calls == [1, 1, 1, 1]
-    assert p2.completed_keys("comp").count() == 3
+    assert calls == [["0|0"], ["0|0"], ["1|0"], ["2|0"]]
+    lin = p2.lineage().toPandas()
+    assert sorted(lin.cell_key) == ["0|0", "1|0", "2|0"]
+    assert (lin.run_id == p2.run_id).all()
+    assert lin.completed_at.nunique() == 3
     # duplicate check: one composite row per (tile, year)
     n_keys = out.select("tile_x", "tile_y", "year").distinct().count()
     assert out.count() == n_keys == 3 * len(SPEC.years)
+
+    # the killed batch's staged files are the only unreferenced ones
+    assert p2.table("comp").vacuum(min_age_s=0) == len(orphans)
+    assert not any(f.exists() for f in orphans)
 
     # a third run has nothing to do and returns identical output
     p3 = CheckpointedPipeline(spark, base_dir)
     out3 = p3.run_stage("comp", tiles, ["tile_x", "tile_y"], stage_fn,
                         batch_keys=1)
-    assert calls == [1, 1, 1, 1]  # no new fn invocations
+    assert len(calls) == 4  # no new fn invocations
     assert out3.count() == out.count()
+
+
+def test_concurrent_committers_conflict_then_rerun(spark, base_dir):
+    """Two runners share one base dir and read the same work list. The
+    one that commits second raises CommitConflictError instead of
+    appending the same keys again; a rerun skips what the winner
+    committed and leaves one row per (tile, year)."""
+    tiles = comp_op.with_caption(
+        spark.createDataFrame(corpus.generate_pandas(SPEC))
+    )
+    keys = ["tile_x", "tile_y"]
+    p1 = CheckpointedPipeline(spark, base_dir)
+    p2 = CheckpointedPipeline(spark, base_dir)
+
+    def plain(todo):
+        return comp_op.annual_composites(todo, apply_tide_filter=False)
+
+    def racing(todo):
+        # p1 has read its work list; p2 runs and commits the same keys
+        # before p1 commits
+        p2.run_stage("comp", tiles, keys, plain)
+        return plain(todo)
+
+    with pytest.raises(CommitConflictError):
+        p1.run_stage("comp", tiles, keys, racing)
+    assert sorted(p1.done_keys("comp")) == ["0|0", "1|0", "2|0"]
+    assert set(p1.lineage().toPandas().run_id) == {p2.run_id}
+
+    calls: list[int] = []
+
+    def counted(todo):
+        calls.append(1)
+        return plain(todo)
+
+    out = CheckpointedPipeline(spark, base_dir).run_stage(
+        "comp", tiles, keys, counted
+    )
+    assert calls == []
+    n_keys = out.select("tile_x", "tile_y", "year").distinct().count()
+    assert out.count() == n_keys == 3 * len(SPEC.years)

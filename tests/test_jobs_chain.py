@@ -12,6 +12,7 @@ import sys
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.errors import DateTimeException
 from pyspark.sql import functions as F
 
 from dea_coastlines_spark.sources import write_tiles
@@ -777,3 +778,18 @@ def test_validation_dms_survey_format(spark, tmp_path):
     ]) == 0
     c = json.load(open(tmp_path / "stats_dms_utc.json"))
     assert c["overall"]["n"] == 3
+    # ISO-8601 basic format: no colon-separated time, so the offset
+    # classifier reads it as naive and never shifts it; to_timestamp
+    # rejects the string under ANSI mode, so the job fails loudly
+    # rather than attributing the survey to a guessed year
+    compact = dms + [("t1", "20010101T003000Z", 50.6, 0.0, "t1", lat, lon)]
+    pd.DataFrame(
+        compact, columns=["site", "obs_time", "chainage_m", "elevation",
+                          "profile_id", "lat_dms", "lon_dms"]
+    ).to_csv(tmp_path / "survey_dms_compact.csv", index=False)
+    with pytest.raises(DateTimeException, match="20010101T003000Z"):
+        rv.main(common + [
+            "--survey-csv", str(tmp_path / "survey_dms_compact.csv"),
+            "--survey-format", "dms", "--survey-tz", "Australia/Adelaide",
+            "--output", str(tmp_path / "stats_dms_compact.json"),
+        ])

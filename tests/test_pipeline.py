@@ -190,40 +190,6 @@ def test_fused_equals_staged(spark, tiles_df):
     assert key(fused.collect()) == key(staged.collect())
 
 
-def test_colocated_equals_staged(spark, tiles_df, tmp_path):
-    """shorelines_colocated (zero shuffle of image bytes) must equal the
-    staged pipeline on a write_tiles table, and its plan must contain
-    no Exchange on the image-bytes branch."""
-    import contextlib
-    import io
-    import re
-
-    from dea_coastlines_spark.operators.contours import shorelines_colocated
-    from dea_coastlines_spark.sources import write_tiles
-
-    path = str(tmp_path / "tiles")
-    write_tiles(tiles_df, path)
-    col = shorelines_colocated(spark, path, apply_tide_filter=True)
-    staged = shoreline_pipeline(tiles_df, apply_tide_filter=True)
-
-    def key(rows):
-        return sorted(
-            (r.tile_x, r.tile_y, r.year, bytes(r.geometry).hex(), r.certainty)
-            for r in rows
-        )
-
-    assert key(col.collect()) == key(staged.collect())
-
-    # plan: the only Exchange feeds the tiny tide-cutoff aggregate; the
-    # bytes branch (scan -> broadcast join -> MapInPandas) has none.
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        shorelines_colocated(spark, path, apply_tide_filter=False).explain("formatted")
-    plan = buf.getvalue()
-    assert "FlatMapGroupsInPandas" not in plan  # grouped WITHIN partitions
-    assert len(re.findall(r"\) Exchange", plan)) == 0
-
-
 def test_shorelines_in_aoi_matches_bruteforce(spark, tiles_df):
     """Vertex-level PIP of shorelines against AOI rectangles == numpy
     brute force (n_inside, frac_inside, and the surviving pair set)."""

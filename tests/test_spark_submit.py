@@ -60,9 +60,9 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
 )
 def test_sigkill_mid_run_resumes_without_recompute(tmp_path):
     """north_rule verbatim: 'a killed job resumes without recomputing
-    completed H3 cells'. SIGKILL the job once the first per-cell lineage
-    commit lands, rerun, and check the rerun (a) skips the completed
-    cells and (b) produces exactly the uninterrupted result."""
+    completed H3 cells'. SIGKILL the job once the first per-cell
+    checkpoint commit lands, rerun, and check the rerun (a) skips the
+    completed cells and (b) produces exactly the uninterrupted result."""
     import signal
     import time
 
@@ -97,15 +97,16 @@ def test_sigkill_mid_run_resumes_without_recompute(tmp_path):
                           cwd=str(tmp_path), env=env, timeout=420)
     assert base.returncode == 0, base.stderr[-2000:]
 
-    # victim run: SIGKILL as soon as the first lineage commit exists
+    # victim run: SIGKILL as soon as the first per-cell commit exists
     victim = subprocess.Popen(cmd("v", []), cwd=str(tmp_path), env=env,
                               stdout=subprocess.DEVNULL,
                               stderr=subprocess.DEVNULL)
-    lineage = tmp_path / "ckpt_v" / "_lineage"
+    first_commit = (tmp_path / "ckpt_v" / "shorelines" / "metadata"
+                    / "v1.metadata.json")
     deadline = time.time() + 300
     killed = False
     while time.time() < deadline and victim.poll() is None:
-        if lineage.exists() and any(lineage.glob("*.parquet")):
+        if first_commit.exists():
             victim.send_signal(signal.SIGKILL)
             killed = True
             break
