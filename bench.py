@@ -237,30 +237,17 @@ def _measure_tiles(spark, times: dict) -> float:
         corpus.generate_spark(spark, spec).write.mode("overwrite").parquet(f"{tmp}/tiles")
         tiles = spark.read.parquet(f"{tmp}/tiles")
 
-        from dea_coastlines_spark.operators.contours import shorelines_fused
+        def build():
+            return shoreline_pipeline(tiles, apply_tide_filter=True)
 
-        # Two physical strategies for the same query (byte-equal
-        # output, pinned by test_pipeline.py::test_fused_equals_staged):
-        # staged materializes the composite table (wanted when masking/
-        # gapfill consume it); fused is the plan the engine picks for
-        # the straight tiles->vectors query. Headline tiles/sec = fused.
-        variants = {
-            "shoreline_pipeline": lambda: shoreline_pipeline(
-                tiles, apply_tide_filter=True
-            ),
-            "shoreline_pipeline_fused": lambda: shorelines_fused(
-                tiles, apply_tide_filter=True
-            ),
-        }
-        for vname, build in variants.items():
-            build().write.mode("overwrite").format("noop").save()  # warmup
-            dt = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                build().write.mode("overwrite").format("noop").save()
-                dt = min(dt, time.perf_counter() - t0)
-            times[vname] = round(dt, 3)
-        return round(n_tiles / times["shoreline_pipeline_fused"], 2)
+        build().write.mode("overwrite").format("noop").save()  # warmup
+        dt = float("inf")
+        for _ in range(2):
+            t0 = time.perf_counter()
+            build().write.mode("overwrite").format("noop").save()
+            dt = min(dt, time.perf_counter() - t0)
+        times["shoreline_pipeline"] = round(dt, 3)
+        return round(n_tiles / dt, 2)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -59,11 +59,7 @@ def synth_corpus(path: str, cpus: int, scale: int = 1) -> int:
 
 
 def worker(cpus: int, tiles_path: str) -> None:
-    # fused single-grouped-stage plan: the strategy the engine picks for
-    # the straight tiles->vectors query (byte-equal to the staged pair,
-    # test_pipeline.py::test_fused_equals_staged); ~30% less per-row
-    # overhead, same scaling shape
-    from dea_coastlines_spark.operators.contours import shorelines_fused
+    from dea_coastlines_spark.plans.pipeline import shoreline_pipeline
     from dea_coastlines_spark.session import get_spark
 
     # identical shuffle partitioning at BOTH levels: the two runs execute
@@ -75,7 +71,7 @@ def worker(cpus: int, tiles_path: str) -> None:
     n_tiles = tiles.count()
 
     def run():
-        shorelines_fused(tiles, apply_tide_filter=True).write.mode(
+        shoreline_pipeline(tiles, apply_tide_filter=True).write.mode(
             "overwrite"
         ).format("noop").save()
 

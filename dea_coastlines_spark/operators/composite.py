@@ -13,8 +13,8 @@ Spark plan (scale notes):
     (tile_x, tile_y, year) group does decode -> stack -> nanmedian/std/
     count -> float32-TIFF re-encode. Group size = obs_per_year tiles
     (bounded memory: the dask-chunk analog, raster.py:549).
-  * `repartition` before the grouped map uses (tile_x, tile_y) so the
-    subsequent per-tile gapfill window reuses the shuffle partitioning.
+  * the grouped map's own hash exchange on (tile_x, tile_y, year) is the
+    only shuffle of pixel bytes; there is no extra repartition.
 """
 
 from __future__ import annotations
@@ -127,13 +127,19 @@ def _nan_median_std_count(stack: np.ndarray):
     return med, std, n.astype(np.float32)
 
 
+def decode_stats(grp: pd.DataFrame):
+    """One observation group's encoded tiles -> (median, std, count)
+    rasters: the shared body of every composite kernel."""
+    stack = np.stack(
+        [img_codec.decode_tile(bytes(b), f) for b, f in zip(grp["bytes"], grp["fmt"])]
+    )
+    return _nan_median_std_count(stack)
+
+
 def _composite_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """Grouped-map kernel: one (tile, year) stack -> composite row."""
     first = pdf.iloc[0]
-    stack = np.stack(
-        [img_codec.decode_tile(bytes(b), f) for b, f in zip(pdf["bytes"], pdf["fmt"])]
-    )
-    med, std, cnt = _nan_median_std_count(stack)
+    med, std, cnt = decode_stats(pdf)
     return pd.DataFrame(
         [
             {
@@ -153,14 +159,22 @@ def _composite_group(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def annual_composites(tiles: DataFrame, apply_tide_filter: bool = True) -> DataFrame:
-    """tiles (input_hint schema) -> composites, one row per (tile, year)."""
+def observations(tiles: DataFrame, apply_tide_filter: bool = True) -> DataFrame:
+    """tiles -> the columns a composite kernel reads, one row per kept
+    observation (caption parsed, tide window applied)."""
     meta = with_caption(tiles)
     if apply_tide_filter:
         meta = tide_filtered(meta)
     return meta.select(
         "tile_x", "tile_y", "year", "bytes", "fmt", "w", "h", "transform", "halo_px"
-    ).groupBy("tile_x", "tile_y", "year").applyInPandas(_composite_group, COMPOSITE_SCHEMA)
+    )
+
+
+def annual_composites(tiles: DataFrame, apply_tide_filter: bool = True) -> DataFrame:
+    """tiles (input_hint schema) -> composites, one row per (tile, year)."""
+    return observations(tiles, apply_tide_filter).groupBy(
+        "tile_x", "tile_y", "year"
+    ).applyInPandas(_composite_group, COMPOSITE_SCHEMA)
 
 
 def gapfill_composites(tiles: DataFrame, apply_tide_filter: bool = True) -> DataFrame:
@@ -169,12 +183,7 @@ def gapfill_composites(tiles: DataFrame, apply_tide_filter: bool = True) -> Data
     the shuffle-native form of a rangeBetween(-1, 1) frame — a 3-way
     self-union keyed to (year-1, year, year+1) then one grouped map
     (SURVEY.md §2.5). Each task holds <=3 years of one tile."""
-    meta = with_caption(tiles)
-    if apply_tide_filter:
-        meta = tide_filtered(meta)
-    narrow = meta.select(
-        "tile_x", "tile_y", "year", "bytes", "fmt", "w", "h", "transform", "halo_px"
-    )
+    narrow = observations(tiles, apply_tide_filter)
     # one scan, three shuffle keys per row (vs a 3-way self-union which
     # would read the source three times): explode is JVM-side
     shifted = narrow.withColumn(

@@ -9,6 +9,9 @@ boundaries (raster.py:547,684-689).
 Spark plan: one `mapInPandas` over composite rows; each input row emits
 0..n shoreline rows (UDTF shape). Output carries the quadtree `cell_id`
 (tile assignment) so downstream joins/aggregations partition on it.
+`shoreline_pipeline` (plans/pipeline.py) runs `extract_shorelines_tile`
+and `shoreline_rows` inside the composite grouped map instead, for
+callers that need no composite table.
 """
 
 from __future__ import annotations
@@ -29,6 +32,10 @@ SHORELINE_SCHEMA = (
     "cell_id long, tile_x int, tile_y int, year int, "
     "geometry binary, n_vertices int, length_m double, certainty string"
 )
+SHORELINE_COLUMNS = [
+    "cell_id", "tile_x", "tile_y", "year",
+    "geometry", "n_vertices", "length_m", "certainty",
+]
 
 # cell resolution for tile assignment: cell edge 4096 m >= tile core 3840 m
 DEFAULT_CELL_RES = 11
@@ -93,6 +100,33 @@ def extract_shorelines_tile(
     return out
 
 
+def shoreline_rows(
+    pieces: list[dict], tile_x, tile_y, year,
+    cell_res: int = DEFAULT_CELL_RES, **extra,
+) -> list[dict]:
+    """extract_shorelines_tile pieces -> output rows: each piece is keyed
+    by the quadtree cell of its mean vertex; `extra` adds constant
+    columns (e.g. `level`)."""
+    cell_ids = cells.xy_to_cell(
+        np.array([p.pop("_rep_x") for p in pieces]),
+        np.array([p.pop("_rep_y") for p in pieces]),
+        cell_res,
+    )
+    key = {"tile_x": int(tile_x), "tile_y": int(tile_y), "year": int(year), **extra}
+    return [{"cell_id": int(c), **key, **p} for c, p in zip(cell_ids, pieces)]
+
+
+def _composite_rasters(r):
+    """Composite row -> (mndwi, stdev, count, transform); a missing
+    certainty raster decodes to None."""
+
+    def dec(b):
+        return tiff.decode_f32(bytes(b)) if b else None
+
+    mndwi = tiff.decode_f32(bytes(r.mndwi_bytes))
+    return mndwi, dec(r.stdev_bytes), dec(r.count_bytes), json.loads(r.transform)
+
+
 def shorelines(
     composites: DataFrame,
     level: float = 0.0,
@@ -105,37 +139,13 @@ def shorelines(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():
-                mndwi = tiff.decode_f32(bytes(r.mndwi_bytes))
-                stdev = tiff.decode_f32(bytes(r.stdev_bytes)) if r.stdev_bytes else None
-                count = tiff.decode_f32(bytes(r.count_bytes)) if r.count_bytes else None
-                transform = json.loads(r.transform)
-                for piece in extract_shorelines_tile(
+                mndwi, stdev, count, transform = _composite_rasters(r)
+                pieces = extract_shorelines_tile(
                     mndwi, stdev, count, transform, int(r.halo_px),
                     level=level, min_vertices=min_vertices,
-                ):
-                    cell = int(
-                        cells.xy_to_cell(
-                            np.array([piece.pop("_rep_x")]),
-                            np.array([piece.pop("_rep_y")]),
-                            cell_res,
-                        )[0]
-                    )
-                    rows.append(
-                        {
-                            "cell_id": cell,
-                            "tile_x": int(r.tile_x),
-                            "tile_y": int(r.tile_y),
-                            "year": int(r.year),
-                            **piece,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "cell_id", "tile_x", "tile_y", "year",
-                    "geometry", "n_vertices", "length_m", "certainty",
-                ],
-            )
+                )
+                rows += shoreline_rows(pieces, r.tile_x, r.tile_y, r.year, cell_res)
+            yield pd.DataFrame(rows, columns=SHORELINE_COLUMNS)
 
     return composites.mapInPandas(extract, SHORELINE_SCHEMA)
 
@@ -157,117 +167,21 @@ def multi_level_shorelines(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():
-                mndwi = tiff.decode_f32(bytes(r.mndwi_bytes))
-                stdev = tiff.decode_f32(bytes(r.stdev_bytes)) if r.stdev_bytes else None
-                count = tiff.decode_f32(bytes(r.count_bytes)) if r.count_bytes else None
-                transform = json.loads(r.transform)
+                mndwi, stdev, count, transform = _composite_rasters(r)
                 for level in levels:
-                    for piece in extract_shorelines_tile(
+                    pieces = extract_shorelines_tile(
                         mndwi, stdev, count, transform, int(r.halo_px),
                         level=float(level), min_vertices=min_vertices,
-                    ):
-                        cell = int(
-                            cells.xy_to_cell(
-                                np.array([piece.pop("_rep_x")]),
-                                np.array([piece.pop("_rep_y")]),
-                                cell_res,
-                            )[0]
-                        )
-                        rows.append(
-                            {
-                                "cell_id": cell,
-                                "tile_x": int(r.tile_x),
-                                "tile_y": int(r.tile_y),
-                                "year": int(r.year),
-                                "level": float(level),
-                                **piece,
-                            }
-                        )
+                    )
+                    rows += shoreline_rows(
+                        pieces, r.tile_x, r.tile_y, r.year, cell_res,
+                        level=float(level),
+                    )
             yield pd.DataFrame(
-                rows,
-                columns=[
-                    "cell_id", "tile_x", "tile_y", "year", "level",
-                    "geometry", "n_vertices", "length_m", "certainty",
-                ],
+                rows, columns=[*SHORELINE_COLUMNS[:4], "level", *SHORELINE_COLUMNS[4:]]
             )
 
     schema = SHORELINE_SCHEMA.replace(
         "year int,", "year int, level double,"
     )
     return composites.mapInPandas(extract, schema)
-
-
-def shorelines_fused(
-    tiles: DataFrame,
-    apply_tide_filter: bool = True,
-    level: float = 0.0,
-    min_vertices: int = 10,
-    cell_res: int = DEFAULT_CELL_RES,
-) -> DataFrame:
-    """Single-stage tiles -> shoreline rows: composite stats + marching
-    squares inside ONE grouped map, skipping the intermediate TIFF
-    encode/decode round trip (3 encodes + 3 decodes per tile-year) and
-    one narrow Python stage. Math identical to
-    annual_composites() |> shorelines() — pinned by
-    tests/test_pipeline.py::test_fused_equals_staged. Use the staged
-    pair when the composite table itself is a wanted output (masking,
-    gapfill, incremental maintenance); use this for the straight
-    tiles->vectors query."""
-    from ..operators import composite as comp_op
-
-    meta = comp_op.with_caption(tiles)
-    if apply_tide_filter:
-        meta = comp_op.tide_filtered(meta)
-
-    def fused(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _shoreline_rows_for_group(pdf, level, min_vertices, cell_res)
-
-    return (
-        meta.select(
-            "tile_x", "tile_y", "year", "bytes", "fmt", "transform", "halo_px"
-        )
-        .groupBy("tile_x", "tile_y", "year")
-        .applyInPandas(fused, SHORELINE_SCHEMA)
-    )
-
-
-def _shoreline_rows_for_group(
-    grp: pd.DataFrame, level: float, min_vertices: int, cell_res: int
-) -> pd.DataFrame:
-    """Fused kernel body: one (tile, year) obs group -> shoreline rows."""
-    from ..codecs import image as img_codec
-    from ..operators import composite as comp_op
-
-    first = grp.iloc[0]
-    stack = np.stack(
-        [img_codec.decode_tile(bytes(b), f) for b, f in zip(grp["bytes"], grp["fmt"])]
-    )
-    med, std, cnt = comp_op._nan_median_std_count(stack)
-    rows = []
-    for piece in extract_shorelines_tile(
-        med, std, cnt, list(first["transform"]), int(first["halo_px"]),
-        level=level, min_vertices=min_vertices,
-    ):
-        cell = int(
-            cells.xy_to_cell(
-                np.array([piece.pop("_rep_x")]),
-                np.array([piece.pop("_rep_y")]),
-                cell_res,
-            )[0]
-        )
-        rows.append(
-            {
-                "cell_id": cell,
-                "tile_x": int(first["tile_x"]),
-                "tile_y": int(first["tile_y"]),
-                "year": int(first["year"]),
-                **piece,
-            }
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "cell_id", "tile_x", "tile_y", "year",
-            "geometry", "n_vertices", "length_m", "certainty",
-        ],
-    )

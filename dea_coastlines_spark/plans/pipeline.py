@@ -3,18 +3,19 @@
 tiles (input_hint schema)
   -> caption parse (JVM from_json)
   -> tide-window row filter           (raster.py:330-337 semantics)
-  -> per-(tile, year) composite       (raster.py:379-384; one grouped map)
-  -> marching-squares vectorization   (vector.py:1450-1456; one mapInPandas)
+  -> per-(tile, year) grouped map: decode -> composite stats
+     (raster.py:379-384) -> marching squares (vector.py:1450-1456)
   -> shoreline rows (cell_id, year, WKB, certainty)
 
-Two Python stages total, everything between them is Catalyst-optimized
+One Python stage total, everything before it is Catalyst-optimized
 DataFrame ops. At 100 TB the plan shape is: parquet/Iceberg scan with
 (cell, year) partition pruning -> broadcast join of tide cutoffs ->
-shuffle on (tile_x, tile_y, year) -> grouped map -> narrow mapInPandas.
+shuffle on (tile_x, tile_y, year) -> grouped map.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators import composite as comp_op
@@ -25,15 +26,29 @@ from ..operators import masking as mask_op
 def shoreline_pipeline(
     tiles: DataFrame,
     apply_tide_filter: bool = True,
-    gapfill: bool = False,
     min_vertices: int = 10,
 ) -> DataFrame:
-    comps = (
-        comp_op.gapfill_composites(tiles, apply_tide_filter)
-        if gapfill
-        else comp_op.annual_composites(tiles, apply_tide_filter)
-    )
-    return cont_op.shorelines(comps, min_vertices=min_vertices)
+    """tiles -> shoreline rows, one grouped map per (tile, year). The
+    composite rasters stay in the kernel: no TIFF encode/decode and no
+    second Python stage. Rows are byte-identical to
+    annual_composites |> contours.shorelines, the staged pair for
+    callers that need the composite table (rates, masking)."""
+
+    def kernel(grp: pd.DataFrame) -> pd.DataFrame:
+        first = grp.iloc[0]
+        med, std, cnt = comp_op.decode_stats(grp)
+        pieces = cont_op.extract_shorelines_tile(
+            med, std, cnt, list(first["transform"]), int(first["halo_px"]),
+            min_vertices=min_vertices,
+        )
+        return pd.DataFrame(
+            cont_op.shoreline_rows(pieces, first["tile_x"], first["tile_y"], first["year"]),
+            columns=cont_op.SHORELINE_COLUMNS,
+        )
+
+    return comp_op.observations(tiles, apply_tide_filter).groupBy(
+        "tile_x", "tile_y", "year"
+    ).applyInPandas(kernel, cont_op.SHORELINE_SCHEMA)
 
 
 def rates_pipeline(
@@ -213,7 +228,7 @@ def shorelines_in_aoi_fused(
     the whole vertex-PIP-reaggregate chain runs inside ONE narrow Arrow
     kernel over the shoreline rows — zero extra exchanges (no vertex
     explode shuffle, no PIP candidate join, no re-agg, no join-back, no
-    upstream persist), the same fusion move shorelines_fused makes for
+    upstream persist), the same fusion move shoreline_pipeline makes for
     the composite stage. Output rows/values equal shorelines_in_aoi
     (pytest parity); only the physical plan differs.
 

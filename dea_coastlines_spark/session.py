@@ -67,6 +67,14 @@ def get_spark(
         # scale inputs have thousands of splits and this is a no-op.
         .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # SnapshotTable reads pass the manifest's explicit file list.
+        # Above this threshold (default 32 paths) Spark lists them in a
+        # Spark job, which in local mode costs more than stat-ing a few
+        # thousand local files on the driver. Spark has no per-read
+        # option for this, so it is set here; submit_session keeps the
+        # default because object-store listing on a cluster gains from
+        # the parallel job.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

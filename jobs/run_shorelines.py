@@ -97,7 +97,6 @@ def main(argv=None) -> int:
     n_tiles = tiles.count()
 
     t0 = time.perf_counter()
-    run = shoreline_pipeline(tiles, apply_tide_filter=not args.no_tide_filter)
     resumed_keys = 0
     if args.checkpoint_dir:
         ckpt = CheckpointedPipeline(spark, args.checkpoint_dir)
@@ -117,14 +116,14 @@ def main(argv=None) -> int:
             batch_keys=args.checkpoint_batch_cells,
         ).drop("cell_key")
     else:
-        out = run
+        out = shoreline_pipeline(tiles, apply_tide_filter=not args.no_tide_filter)
 
     table = SnapshotTable(spark, args.output)
     if table.current_version() == 0:
         table.create(out, partition_by=["year"])
     else:
         table.overwrite_partitions(out)
-    n_out = table.read().count()
+    n_out = table.snapshots()[-1]["n_rows"]
     dt = time.perf_counter() - t0
 
     print(json.dumps({

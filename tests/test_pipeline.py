@@ -173,21 +173,56 @@ def test_parallelism_invariance_exact_match(spark, tiles_df):
 
 
 def test_fused_equals_staged(spark, tiles_df):
-    """shorelines_fused (one grouped stage, no TIFF round trip) must be
-    byte-identical to annual_composites |> shorelines."""
-    from dea_coastlines_spark.operators.contours import shorelines_fused
+    """shoreline_pipeline (one grouped stage, no TIFF round trip) must be
+    byte-identical to annual_composites |> contours.shorelines, the
+    staged pair the rates and masking paths run."""
+    from dea_coastlines_spark.operators import contours as cont_op
 
-    staged = shoreline_pipeline(tiles_df, apply_tide_filter=True)
-    fused = shorelines_fused(tiles_df, apply_tide_filter=True)
+    fused = shoreline_pipeline(tiles_df, apply_tide_filter=True)
+    staged = cont_op.shorelines(comp_op.annual_composites(tiles_df, apply_tide_filter=True))
 
     def key(rows):
         return sorted(
             (r.cell_id, r.tile_x, r.tile_y, r.year, bytes(r.geometry).hex(),
-             r.n_vertices, round(r.length_m, 9), r.certainty)
+             r.n_vertices, r.length_m.hex(), r.certainty)
             for r in rows
         )
 
-    assert key(fused.collect()) == key(staged.collect())
+    a = key(fused.collect())
+    assert a == key(staged.collect())
+    assert len(a) > 0
+
+
+def test_degenerate_groups(spark):
+    """Groups with nothing to contour give defined output, not errors: a
+    fully masked tile-year and an all-water tile give zero rows, a
+    one-observation group is 'insufficient data', and an empty tiles
+    frame gives an empty frame with the shoreline schema."""
+    from dea_coastlines_spark.operators import contours as cont_op
+
+    pdf = corpus.generate_pandas(SPEC)
+    meta = pdf.caption.map(json.loads)
+    tile_x, year, obs = (meta.map(lambda m, k=k: m[k]) for k in ("tile_x", "year", "obs"))
+    n = SPEC.tile_px + 2 * SPEC.halo_px
+
+    def fill(value):
+        return img_codec.encode_tile(np.full((n, n), value, np.float32), "png")
+
+    pdf.loc[(tile_x == 0) & (year == 2000), "bytes"] = fill(np.nan)
+    pdf.loc[tile_x == 1, "bytes"] = fill(0.8)
+    pdf = pdf[~((tile_x == 2) & (year == 2001) & (obs > 0))]
+    tiles = spark.createDataFrame(pdf, corpus.TILES_SCHEMA)
+    sl = shoreline_pipeline(tiles, apply_tide_filter=False).toPandas()
+
+    groups = set(zip(sl.tile_x, sl.year))
+    assert (0, 2000) not in groups and (0, 2001) in groups
+    assert not (sl.tile_x == 1).any()
+    one = sl[(sl.tile_x == 2) & (sl.year == 2001)]
+    assert len(one) > 0 and (one.certainty == "insufficient data").all()
+
+    empty = shoreline_pipeline(spark.createDataFrame([], corpus.TILES_SCHEMA))
+    assert empty.schema == spark.createDataFrame([], cont_op.SHORELINE_SCHEMA).schema
+    assert empty.count() == 0
 
 
 def test_shorelines_in_aoi_matches_bruteforce(spark, tiles_df):

@@ -89,3 +89,28 @@ def test_submit_session_applies_defaults_and_yields_to_existing(spark):
     assert 0 < int(
         _SUBMIT_DEFAULTS["spark.sql.execution.arrow.maxBytesPerBatch"]
     ) <= 256 * 1024 * 1024
+
+
+def test_manifest_read_lists_files_on_driver(spark, tmp_path):
+    """A SnapshotTable read passes the manifest's file list to Spark.
+    With more files than Spark's default parallel-listing threshold
+    (32), get_spark must still list them on the driver: the read starts
+    no Spark job."""
+    from pyspark.sql import functions as F
+
+    from dea_coastlines_spark.sources.table import SnapshotTable
+
+    table = SnapshotTable(spark, str(tmp_path / "t"))
+    table.create(spark.range(40).withColumn("k", F.col("id") % 40), partition_by=["k"])
+    assert table.snapshots()[-1]["n_files"] == 40
+
+    sc = spark.sparkContext
+    group = f"manifest-read-{tmp_path.name}"
+    sc.setJobGroup(group, "SnapshotTable.read listing")
+    try:
+        df = table.read()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert df.count() == 40
