@@ -1,14 +1,20 @@
-"""Spatial join operators: cell-cover point-in-polygon join and
-radius-capped kNN join — the engine's replacements for geopandas
+"""Spatial join operators: point-in-polygon join and radius-capped kNN
+join — the engine's replacements for geopandas
 `sjoin(predicate="within")` (continental.py:276-283),
 `sjoin(how="left")` (vector.py:1288-1289), and
 `sjoin_nearest(max_distance=...)` (vector.py:1228-1233).
 
-Strategy (SURVEY.md §2.3): no Catalyst extension — the spatial join is
-*constructed* as a logical rewrite:
+Broadcast-size polygon tables (AOIs, regions): points_in_polygons is
+one narrow `mapInPandas` over the points with the parsed polygons in a
+broadcast — bbox prune, then the vectorized ray-cast. A lookup then
+costs one Python task per point-scan split, not a cover build and
+three joins.
+
+Everything else (SURVEY.md §2.3): no Catalyst extension — the spatial
+join is *constructed* as a logical rewrite:
 
     polygons --explode--> (cell_id, poly)      [polyfill of bbox]
-    points   --encode--->  cell_id             [vectorized Arrow UDF]
+    points   --encode--->  cell_id             [Catalyst expression]
     equi-join on cell_id                        [Catalyst: hash/broadcast]
     refine: vectorized point-in-polygon / distance kernels
 
@@ -35,7 +41,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..geometry import algorithms as ga
@@ -97,13 +103,9 @@ def explode_polygons_to_cells(
     one cover join can then serve features with different radii);
     pad_m is the uniform fallback.
     """
-
-    from pyspark.sql.types import LongType as _Long
-    from pyspark.sql.types import StructField, StructType
-
     # copy: StructType.add mutates in place, corrupting the input
     # DataFrame's cached schema
-    out_schema = StructType(list(polys.schema.fields) + [StructField("cell_id", _Long())])
+    out_schema = StructType(list(polys.schema.fields) + [StructField("cell_id", LongType())])
 
     def gen(batches):
         for pdf in batches:
@@ -153,75 +155,110 @@ def points_in_polygons(
 ) -> DataFrame:
     """Spatial containment join: point rows x polygon rows.
 
-    Returns points columns + polygon attribute columns for each
-    (point, polygon) containment pair; `how="left"` keeps unmatched
-    points with nulls (region-attribute semantics, vector.py:1288).
+    Returns points columns (point_id first) + polygon attribute columns
+    for each (point, polygon) containment pair; `how="left"` keeps
+    unmatched points with nulls (region-attribute semantics,
+    vector.py:1288).
 
-    With broadcast_polys=True (default) the polygon side is
-    materialized driver-side and broadcast — by contract it is the
-    small side (AOI/region/hotspot tables; the reference's sjoin right
-    sides are study-area-scale). broadcast_polys=False is the
-    big-polygon-table path: the cell cover is built distributed
+    With broadcast_polys=True (default) the polygon side is collected
+    and broadcast — by contract it is the small side (AOI/region/hotspot
+    tables; the reference's sjoin right sides are study-area-scale) —
+    and the join is ONE narrow mapInPandas over `points`: per polygon a
+    bbox prune, then the vectorized ray-cast with holes. No cover, no
+    equi join, no join back; for how="inner" a Catalyst range filter on
+    the union bbox also prunes the point scan (parquet pushdown).
+    broadcast_polys=False is the big-polygon-table path: the cell cover
+    (resolution `res`, which only this path uses) is built distributed
     (geometry replicated per covering cell), the join is a shuffled
     equi join (AQE skew-split applies), and the refine parses WKB
-    inside the kernel. Either way the point side streams: one cell per
-    point, refine is row-streaming mapInPandas, so the plan scales to
-    10^12 points with no point-side replication and no per-key grouped
-    hotspot. broadcast_polys="auto" probes the polygon side's row count
-    (bounded LIMIT scan) and picks the path (resolve_broadcast).
+    inside the kernel. Either way the point side streams with no
+    point-side replication and no per-key grouped hotspot.
+    broadcast_polys="auto" probes the polygon side's row count (bounded
+    LIMIT scan) and picks the path (resolve_broadcast).
     """
     if not resolve_broadcast(polys, broadcast_polys):
         return _points_in_polygons_dist(
             points, polys, res, how, x_col, y_col, point_id
         )
-    spark = points.sparkSession
     polys_pdf = polys.toPandas()
-    polys_pdf["_poly_pos"] = np.arange(len(polys_pdf), dtype=np.int64)
-    rings = [wkb.parse(bytes(g)) for g in polys_pdf["geometry"]]
-    for t, _ in rings:
+    feats = []
+    for g in polys_pdf["geometry"]:
+        t, rings = wkb.parse(bytes(g))
         if t != wkb.POLYGON:
             raise ValueError("points_in_polygons expects Polygon geometry")
+        feats.append((rings, _padded_bbox(rings[0])))
+    attrs = polys_pdf.drop(columns=["geometry"])
+    # nullable int/bool dtypes: left-join misses reindex to <NA>, where
+    # numpy dtypes would turn ids into floats
+    attrs = attrs.astype(
+        {c: {"i": "Int64", "b": "boolean"}[attrs[c].dtype.kind]
+         for c in attrs.columns if attrs[c].dtype.kind in "ib"}
+    )
+    bc = points.sparkSession.sparkContext.broadcast((feats, attrs))
 
-    cover_rows = []
-    for pos, g in enumerate(polys_pdf["geometry"]):
-        x0, y0, x1, y1 = wkb.bbox(bytes(g))
-        for c in cells.polyfill_bbox(x0, y0, x1, y1, res):
-            cover_rows.append((int(c), pos))
-    cover_df = spark.createDataFrame(
-        pd.DataFrame(cover_rows, columns=["cell_id", "_poly_pos"]).astype(
-            {"cell_id": "int64", "_poly_pos": "int64"}
-        )
+    left = how != "inner"
+    if not left:
+        if feats:
+            b = np.array([bb for _, bb in feats])
+            points = points.filter(
+                F.col(x_col).between(float(b[:, 0].min()), float(b[:, 2].max()))
+                & F.col(y_col).between(float(b[:, 1].min()), float(b[:, 3].max()))
+            )
+        else:
+            points = points.filter(F.lit(False))
+    pt_cols = [point_id] + [c for c in points.columns if c != point_id]
+    out_schema = StructType(
+        [points.schema[c] for c in pt_cols]
+        + [StructField(f.name, f.dataType, True)
+           for f in polys.schema.fields if f.name != "geometry"]
     )
 
-    pts = points.withColumn("cell_id", cell_id_expr(F.col(x_col), F.col(y_col), res))
-    cand = pts.select(point_id, x_col, y_col, "cell_id").join(
-        F.broadcast(cover_df), "cell_id"
-    )
-
-    def refine(batches):
+    def kernel(batches):
+        feats, attrs = bc.value
         for pdf in _rebatched(batches):
-            out = []
-            for pos, grp in pdf.groupby("_poly_pos"):
-                payload = rings[int(pos)][1]
-                px, py = grp[x_col].to_numpy(float), grp[y_col].to_numpy(float)
-                inside = ga.points_in_polygon(px, py, payload[0])
-                for hole in payload[1:]:
-                    inside &= ~ga.points_in_polygon(px, py, hole, boundary_counts=False)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            point_id: grp[point_id].to_numpy()[inside],
-                            "_poly_pos": int(pos),
-                        }
-                    )
+            px = pdf[x_col].to_numpy(float)
+            py = pdf[y_col].to_numpy(float)
+            pt_idx, poly_idx = [], []
+            for k, (rings, (x0, y0, x1, y1)) in enumerate(feats):
+                cand = np.flatnonzero(
+                    (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
                 )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+                if cand.size == 0:
+                    continue
+                cx, cy = px[cand], py[cand]
+                inside = ga.points_in_polygon(cx, cy, rings[0])
+                for hole in rings[1:]:
+                    inside &= ~ga.points_in_polygon(cx, cy, hole, boundary_counts=False)
+                pt_idx.append(cand[inside])
+                poly_idx.append(np.full(int(inside.sum()), k))
+            pi = np.concatenate(pt_idx or [np.zeros(0, np.int64)])
+            qi = np.concatenate(poly_idx or [np.zeros(0, np.int64)])
+            if left:
+                miss = np.setdiff1d(np.arange(len(pdf)), pi)
+                pi = np.concatenate([pi, miss])
+                qi = np.concatenate([qi, np.full(miss.size, -1)])
+            yield pd.concat(
+                [
+                    pdf[pt_cols].iloc[pi].reset_index(drop=True),
+                    # -1 (unmatched) reindexes to a row of nulls
+                    attrs.reindex(qi).reset_index(drop=True),
+                ],
+                axis=1,
+            )
 
-    matches = cand.mapInPandas(refine, f"{point_id} long, _poly_pos long")
-    poly_payload = spark.createDataFrame(polys_pdf.drop(columns=["geometry"]))
-    matched = matches.join(F.broadcast(poly_payload), "_poly_pos").drop("_poly_pos")
-    return points.join(matched, point_id, "inner" if how == "inner" else "left")
+    return points.mapInPandas(kernel, out_schema)
+
+
+# The bbox prune must not drop a point the ray-cast would count: its
+# boundary test accepts points ~1e-9 x edge length off an edge.
+_BBOX_PAD_REL = 1e-6
+
+
+def _padded_bbox(shell: np.ndarray) -> tuple[float, float, float, float]:
+    x0, y0 = shell.min(axis=0)
+    x1, y1 = shell.max(axis=0)
+    pad = _BBOX_PAD_REL * max(1.0, x1 - x0, y1 - y0)
+    return (float(x0 - pad), float(y0 - pad), float(x1 + pad), float(y1 + pad))
 
 
 def _points_in_polygons_dist(

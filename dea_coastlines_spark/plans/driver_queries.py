@@ -1878,9 +1878,8 @@ def shorelines_in_aoi_oracle_sql() -> str:
     """Full hash-verified oracle for q_shorelines_in_aoi: sequential
     shoreline recompute, then a plain per-piece loop PIP against the
     three AOI rectangles (the ray-casting kernel is shared and
-    pytest-gated; the fused broadcast kernel, the bbox pruning, and the
-    distributed aggregation are what this verifies). DuckDB re-derives
-    frac_inside and the rounding."""
+    pytest-gated; the broadcast kernel and its bbox pruning are what
+    this verifies). DuckDB re-derives frac_inside and the rounding."""
     import pandas as pd
 
     from ..geometry import algorithms as _ga
@@ -2471,7 +2470,7 @@ def q_shorelines_in_aoi(spark, sf_dir):
     import pandas as pd
 
     from ..geometry import wkb as _wkb
-    from ..plans.pipeline import shoreline_pipeline, shorelines_in_aoi_fused
+    from ..plans.pipeline import shoreline_pipeline, shorelines_in_aoi
     from ..synth import corpus as _corpus
 
     spec = _corpus.CorpusSpec(tile_px=96, halo_px=6, tiles_x=3, tiles_y=2,
@@ -2502,11 +2501,11 @@ def q_shorelines_in_aoi(spark, sf_dir):
             }
         )
     )
-    # fused: the AOI table is broadcast-size, so the whole vertex-PIP
-    # chain runs inside one narrow kernel (half the exchanges of the
-    # cell-cover join path; parity pinned by test_pipeline.py)
+    # the AOI table is broadcast, so the whole vertex-PIP chain runs
+    # inside one narrow kernel with no exchange past the shoreline stage
+    # (plan pinned by test_pipeline.py)
     return (
-        shorelines_in_aoi_fused(sl, aoi, min_frac=0.0)
+        shorelines_in_aoi(sl, aoi, min_frac=0.0)
         .select(
             "tile_x", "tile_y", "year", "aoi_id", "n_inside",
             "n_vertices_total", F.round("frac_inside", 6).alias("frac_inside"),

@@ -115,7 +115,6 @@ def masked_shoreline_pipeline(
 def shorelines_in_aoi(
     shorelines: DataFrame,
     aoi: DataFrame,
-    res: int = 12,
     min_frac: float = 0.0,
     aoi_id: str = "aoi_id",
 ) -> DataFrame:
@@ -125,120 +124,23 @@ def shorelines_in_aoi(
     (coastlines/vector.py:1604,1658: `gpd.clip` against the one grid
     cell) to an attributed many-AOI containment join.
 
-    Plan: explode each shoreline's vertices (one vectorized Arrow
-    kernel; WKB parse is numpy slicing), cell-cover PIP join against
-    the broadcast AOI table, then re-aggregate per (shoreline, AOI):
-    `n_inside` vertices and `frac_inside`. Shorelines with
-    frac_inside >= min_frac survive, carrying the AOI attribute —
-    semi-join semantics when min_frac == 0 (any vertex inside).
+    One row per (shoreline, AOI) pair with at least one vertex inside:
+    the shoreline's columns + `aoi_id`, `n_inside`,
+    `n_vertices_total` and `frac_inside`; pairs with frac_inside <
+    min_frac are dropped (semi-join semantics when min_frac == 0).
 
-    Scale: the vertex side is the big side and streams — one cell per
-    vertex, no replication; two shuffles total (the PIP candidates and
-    the per-shoreline re-aggregation, both keyed well below task-size
-    limits). Deterministic row identity via xxhash64 of the shoreline's
-    business key, so N-vs-4N runs match exactly.
-    """
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
-    from ..geometry import wkb as _wkb
-    from ..operators.spatial_join import points_in_polygons
-
-    from pyspark.sql.window import Window
-
-    # sl feeds two branches (the vertex explode and the attribute join
-    # back); without persist each branch re-executes the entire
-    # raster->vector stage upstream — at corpus scale that is the whole
-    # job twice (same pattern and rationale as rates_pipeline).
-    # Row identity = xxhash64(business key) + a dup ordinal: identical
-    # input rows would otherwise share _sl_id and the join-back would
-    # fan out k x k, silently inflating n_inside (identical rows are
-    # interchangeable, so the ordinal assignment is output-invariant).
-    dup_w = Window.partitionBy(
-        "tile_x", "tile_y", "year", "geometry"
-    ).orderBy(F.lit(1))
-    sl = shorelines.withColumn(
-        "_sl_id",
-        F.xxhash64(
-            "tile_x", "tile_y", "year", "geometry",
-            F.row_number().over(dup_w),
-        ),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    def explode_verts(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            ids, vidx, nvs, xs, ys = [], [], [], [], []
-            for sid, g in zip(pdf["_sl_id"], pdf["geometry"]):
-                c = _wkb.coords_of(bytes(g))
-                n = len(c)
-                ids.append(np.full(n, sid, dtype=np.int64))
-                vidx.append(np.arange(n, dtype=np.int64))
-                nvs.append(np.full(n, n, dtype=np.int64))
-                xs.append(c[:, 0])
-                ys.append(c[:, 1])
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "_sl_id": np.concatenate(ids),
-                        "vidx": np.concatenate(vidx),
-                        # each vertex carries its shoreline's vertex count
-                        # so the total needs no second scan of the verts
-                        "nv_total": np.concatenate(nvs),
-                        "x": np.concatenate(xs),
-                        "y": np.concatenate(ys),
-                    }
-                )
-
-    verts = (
-        sl.select("_sl_id", "geometry")
-        .mapInPandas(
-            explode_verts,
-            "_sl_id long, vidx long, nv_total long, x double, y double",
-        )
-        .withColumn("_vx_id", F.xxhash64("_sl_id", "vidx"))
-    )
-    hits = points_in_polygons(
-        verts, aoi, res=res, how="inner", point_id="_vx_id"
-    )
-    per_aoi = hits.groupBy("_sl_id", aoi_id).agg(
-        F.count("*").alias("n_inside"),
-        F.first("nv_total").alias("n_vertices_total"),
-    )
-    return (
-        sl.join(per_aoi, "_sl_id")
-        .withColumn(
-            "frac_inside",
-            F.col("n_inside") / F.col("n_vertices_total"),
-        )
-        .filter(F.col("frac_inside") >= min_frac)
-        .drop("_sl_id")
-    )
-
-
-def shorelines_in_aoi_fused(
-    shorelines: DataFrame,
-    aoi: DataFrame,
-    min_frac: float = 0.0,
-    aoi_id: str = "aoi_id",
-) -> DataFrame:
-    """Fused variant of shorelines_in_aoi for broadcast-size AOI tables:
-    the whole vertex-PIP-reaggregate chain runs inside ONE narrow Arrow
-    kernel over the shoreline rows — zero extra exchanges (no vertex
-    explode shuffle, no PIP candidate join, no re-agg, no join-back, no
-    upstream persist), the same fusion move shoreline_pipeline makes for
-    the composite stage. Output rows/values equal shorelines_in_aoi
-    (pytest parity); only the physical plan differs.
+    Plan: the whole vertex-PIP-reaggregate chain runs inside ONE narrow
+    Arrow kernel over the shoreline rows — zero exchanges (no vertex
+    explode, no candidate join, no re-aggregation, no join back), the
+    same fusion shoreline_pipeline makes for the composite stage. A
+    lookup over a manifest-pruned SnapshotTable read is one Python task
+    per scan split.
 
     Scale: the AOI table is collected and broadcast (fits comfortably to
-    ~10^5 polygons); the cell-cover shorelines_in_aoi stays the path for
-    AOI tables beyond broadcast size. Per-shoreline work is bbox-pruned
-    vectorized ray-casting — O(verts x candidate AOIs)."""
+    ~10^5 polygons). Per-shoreline work is bbox-pruned vectorized
+    ray-casting — O(verts x candidate AOIs)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401  (schema build)
 
     from ..geometry import algorithms as ga
     from ..geometry import wkb as _wkb
@@ -248,7 +150,7 @@ def shorelines_in_aoi_fused(
     for aid, g in zip(aoi_pdf[aoi_id], aoi_pdf["geometry"]):
         gtype, payload = _wkb.parse(bytes(g))
         if gtype != 3:
-            raise ValueError("shorelines_in_aoi_fused expects Polygon AOIs")
+            raise ValueError("shorelines_in_aoi expects Polygon AOIs")
         shell, holes = payload[0], payload[1:]
         xs, ys = shell[:, 0], shell[:, 1]
         feats.append((aid, shell, holes,
@@ -298,3 +200,8 @@ def shorelines_in_aoi_fused(
             )
 
     return shorelines.mapInPandas(kernel, out_schema)
+
+
+# perfbench/workloads.py imports the old name; the benchmark's files stay
+# fixed while engine changes are measured against them.
+shorelines_in_aoi_fused = shorelines_in_aoi

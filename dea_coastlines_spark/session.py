@@ -65,6 +65,9 @@ def get_spark(
         # refine, decode) inherit scan partitioning — a single 20 MB
         # file must not serialize a 32-core kernel stage. At cluster
         # scale inputs have thousands of splits and this is a no-op.
+        # It is also the split target of SnapshotTable reads, which
+        # coalesce to one split per this many manifest bytes, so small
+        # inputs are not spread one Python task per file.
         .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # SnapshotTable reads pass the manifest's explicit file list.

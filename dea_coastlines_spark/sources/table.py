@@ -36,7 +36,9 @@ Layout:
 from __future__ import annotations
 
 import json
+import math
 import os
+import re
 import shutil
 import time
 import uuid
@@ -485,7 +487,6 @@ class SnapshotTable:
         existing partition-key clustering write yields exactly one file
         per partition), plus one sized repartition(n) job per partition
         that still needs n > 1 files."""
-        import math
 
         m = self._metadata()
         part_cols = m["partition_by"]
@@ -577,7 +578,6 @@ class SnapshotTable:
         partitioner samples keys, no global sort barrier); the zorder
         key is a pure JVM expression (bucket lookup over broadcast
         literal edges + constant-folded bit interleave)."""
-        import math
 
         if (sort_by is None) == (zorder_by is None):
             raise ValueError("give exactly one of sort_by / zorder_by")
@@ -979,8 +979,11 @@ class SnapshotTable:
 
         fields = json.loads(m["schema_json"])["fields"]
         if not files:
+            # an empty RDD has one partition and no Python side; an
+            # empty local list would run a Python task per default slice
             return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(m["schema_json"]))
+                self.spark.sparkContext.emptyRDD(),
+                StructType.fromJson(json.loads(m["schema_json"])),
             )
         paths = [f"{self.path}/{f['path']}" for f in files]
         part_set = set(m["partition_by"])
@@ -1042,9 +1045,22 @@ class SnapshotTable:
         # the withColumn loop reorders appended columns, and a
         # positional union of an empty read with a non-empty one
         # would mis-align columns
-        return _resolve_lineage(
+        df = _resolve_lineage(
             df, [f for f in fields if _previous_names(f)]
         ).select(*schema_cols)
+        # Split planning from the manifest, as Iceberg plans from its
+        # manifests: one split per maxPartitionBytes of file bytes.
+        # Spark alone spreads small inputs over every core, so k small
+        # files feeding a Python kernel would start k Python tasks that
+        # each pay the fixed per-task cost. coalesce never adds
+        # partitions, so large files still split at maxPartitionBytes.
+        if all("bytes" in f for f in files):
+            split = _byte_size(
+                self.spark.conf.get("spark.sql.files.maxPartitionBytes")
+            )
+            total = sum(f["bytes"] for f in files)
+            df = df.coalesce(max(1, math.ceil(total / split)))
+        return df
 
     def prune_stats(
         self,
@@ -1119,6 +1135,14 @@ class SnapshotTable:
             ):
                 shutil.rmtree(full)
         return removed
+
+
+def _byte_size(conf_value: str) -> int:
+    """A Spark byte-size setting ("8388608", "8m", "134217728b") in bytes."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", conf_value.strip().lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {conf_value!r}")
+    return int(m.group(1)) * 1024 ** " kmgtp".index(m.group(2) or " ")
 
 
 def _previous_names(field: dict) -> list[str]:

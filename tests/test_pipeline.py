@@ -227,7 +227,8 @@ def test_degenerate_groups(spark):
 
 def test_shorelines_in_aoi_matches_bruteforce(spark, tiles_df):
     """Vertex-level PIP of shorelines against AOI rectangles == numpy
-    brute force (n_inside, frac_inside, and the surviving pair set)."""
+    brute force (n_inside, frac_inside, and the surviving pair set),
+    through the one shorelines_in_aoi (broadcast AOI kernel)."""
     import pandas as pd
 
     from dea_coastlines_spark.geometry import algorithms as ga
@@ -326,20 +327,19 @@ def test_multi_level_shorelines(spark, tiles_df):
     assert by_level[0.2].isdisjoint(by_level[0.0])
 
 
-def test_shorelines_in_aoi_fused_parity_and_plan(spark, tiles_df):
-    """shorelines_in_aoi_fused == shorelines_in_aoi row-for-row, and its
-    physical plan has ZERO exchanges past the shoreline stage (the PIP
-    chain is fused into one narrow kernel)."""
+def test_shorelines_in_aoi_min_frac_and_plan(spark, tiles_df):
+    """shorelines_in_aoi's min_frac filter keeps exactly the brute-force
+    pairs at or above the fraction, and its physical plan has ZERO
+    exchanges past the shoreline stage (the PIP chain is one narrow
+    kernel)."""
     import contextlib
     import io
     import re
 
     import pandas as pd
 
-    from dea_coastlines_spark.plans.pipeline import (
-        shorelines_in_aoi,
-        shorelines_in_aoi_fused,
-    )
+    from dea_coastlines_spark.geometry import algorithms as ga
+    from dea_coastlines_spark.plans.pipeline import shorelines_in_aoi
 
     sl_df = shoreline_pipeline(tiles_df, apply_tide_filter=True)
     rects = {
@@ -347,46 +347,46 @@ def test_shorelines_in_aoi_fused_parity_and_plan(spark, tiles_df):
         "west_half": (-10.0, -2000.0, 4000.0, 2000.0),
         "east_q": (6500.0, -2000.0, 9000.0, 2000.0),
     }
+    shells = {
+        aid: np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+        for aid, (x0, y0, x1, y1) in rects.items()
+    }
     aoi = spark.createDataFrame(
         pd.DataFrame(
-            {
-                "aoi_id": list(rects),
-                "geometry": [
-                    wkb.polygon(np.array(
-                        [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
-                    ))
-                    for x0, y0, x1, y1 in rects.values()
-                ],
-            }
+            {"aoi_id": list(shells),
+             "geometry": [wkb.polygon(sh) for sh in shells.values()]}
         )
     )
-
-    def key(rows):
-        return sorted(
-            (r.tile_x, r.tile_y, r.year, r.aoi_id, r.n_inside,
-             r.n_vertices_total, round(r.frac_inside, 9),
-             bytes(r.geometry).hex())
-            for r in rows
-        )
-
-    cols = ["tile_x", "tile_y", "year", "aoi_id", "n_inside",
-            "n_vertices_total", "frac_inside", "geometry"]
-    a = shorelines_in_aoi(sl_df, aoi, min_frac=0.0).select(*cols).collect()
-    b = shorelines_in_aoi_fused(sl_df, aoi, min_frac=0.0).select(*cols).collect()
-    assert key(a) == key(b)
-    assert len(b) > 0
-
-    # min_frac filter parity
-    a1 = shorelines_in_aoi(sl_df, aoi, min_frac=0.999).select(*cols).collect()
-    b1 = shorelines_in_aoi_fused(sl_df, aoi, min_frac=0.999).select(*cols).collect()
-    assert key(a1) == key(b1)
-
-    # plan: fused adds no Exchange beyond the upstream shoreline stage
+    # plan: no Exchange beyond the upstream shoreline stage (explained
+    # before sl_df runs: an executed AQE plan also lists its initial plan)
     buf_up, buf_fused = io.StringIO(), io.StringIO()
     with contextlib.redirect_stdout(buf_up):
         sl_df.explain("formatted")
     with contextlib.redirect_stdout(buf_fused):
-        shorelines_in_aoi_fused(sl_df, aoi).explain("formatted")
+        shorelines_in_aoi(sl_df, aoi).explain("formatted")
     n_up = len(re.findall(r"\) Exchange", buf_up.getvalue()))
     n_fused = len(re.findall(r"\) Exchange", buf_fused.getvalue()))
     assert n_fused == n_up
+
+    sl_rows = sl_df.collect()
+
+    def key(r, aid, n_in, n, frac):
+        return (r.tile_x, r.tile_y, r.year, aid, n_in, n, round(frac, 9),
+                bytes(r.geometry).hex())
+
+    cols = ["tile_x", "tile_y", "year", "geometry", "aoi_id", "n_inside",
+            "n_vertices_total", "frac_inside"]
+    for min_frac in (0.0, 0.5, 0.999):
+        want = []
+        for r in sl_rows:
+            c = wkb.coords_of(bytes(r.geometry))
+            for aid, shell in shells.items():
+                n_in = int(ga.points_in_polygon(c[:, 0], c[:, 1], shell).sum())
+                if n_in > 0 and n_in / len(c) >= min_frac:
+                    want.append(key(r, aid, n_in, len(c), n_in / len(c)))
+        got = [
+            key(r, r.aoi_id, r.n_inside, r.n_vertices_total, r.frac_inside)
+            for r in shorelines_in_aoi(sl_df, aoi, min_frac=min_frac)
+            .select(*cols).collect()
+        ]
+        assert sorted(got) == sorted(want) and want, min_frac

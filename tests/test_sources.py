@@ -77,6 +77,73 @@ def test_snapshot_manifest_pruning(spark, tmp_path, sample_df):
         t.read(where={"val": "v1"})
 
 
+def _tasks_of_group(sc, group: str) -> int:
+    tracker = sc.statusTracker()
+    return sum(
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    )
+
+
+def test_snapshot_fully_pruned_read_is_one_task(spark, tmp_path, sample_df):
+    """A read pruned to no files is an empty one-partition plan: its
+    count() runs at most one task, and its schema is the table's."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.create(sample_df, partition_by=["year"])
+    sc = spark.sparkContext
+    group = f"pruned-read-{tmp_path.name}"
+    sc.setJobGroup(group, "fully pruned SnapshotTable.read")
+    try:
+        empty = t.read(where={"year": 1900})
+        assert empty.count() == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _tasks_of_group(sc, group) <= 1
+    assert empty.schema == t.read().schema
+
+
+def test_snapshot_read_splits_by_manifest_bytes(spark, tmp_path):
+    """Scan splits are planned from the manifest: k small files feeding
+    a Python kernel run it in one task, and inputs larger than
+    spark.sql.files.maxPartitionBytes still split at that size."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.create(
+        spark.range(600).select(
+            F.col("id"), (F.col("id") % 6).cast("int").alias("year")
+        ),
+        partition_by=["year"],
+    )
+    df = t.read(where={"year": (1, 4)})
+
+    def kernel(batches):
+        from pyspark import TaskContext
+
+        import pandas as pd
+
+        part = TaskContext.get().partitionId()
+        for pdf in batches:
+            yield pd.DataFrame({"part": [part] * len(pdf), "id": pdf["id"]})
+
+    got = df.mapInPandas(kernel, "part int, id long").toPandas()
+    assert sorted(got["id"]) == [i for i in range(600) if 1 <= i % 6 <= 4]
+    assert got["part"].nunique() == 1
+
+    files = json.loads(
+        (tmp_path / "t" / "metadata" / "v1.metadata.json").read_text()
+    )["files"]
+    total = sum(f["bytes"] for f in files)
+    split = max(f["bytes"] for f in files)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    try:
+        n = t.read().rdd.getNumPartitions()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert n == -(-total // split) > 1
+
+
 def test_snapshot_overwrite_partitions(spark, tmp_path, sample_df):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(sample_df, partition_by=["year"])

@@ -6,6 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from dea_coastlines_spark.geometry import algorithms as ga
 from dea_coastlines_spark.geometry import wkb
@@ -198,28 +199,56 @@ def test_points_in_polygons_distributed_matches_broadcast(spark):
     )
     rects = [(f"p{i}", 1000.0 * i, 500.0 * i, 1000.0 * i + 4000, 500.0 * i + 6000)
              for i in range(12)]
+    hole = np.array([[14000, 4000], [17000, 4000], [17000, 7000], [14000, 7000]], float)
     polys = spark.createDataFrame(
         pd.DataFrame(
             {
-                "poly_id": [r[0] for r in rects],
+                "poly_id": [r[0] for r in rects] + ["holed"],
                 "geometry": [
                     _wkb.polygon(
                         np.array([[r[1], r[2]], [r[3], r[2]], [r[3], r[4]], [r[1], r[4]]])
                     )
                     for r in rects
+                ] + [
+                    _wkb.polygon(
+                        np.array([[13000, 1000], [19000, 1000], [19000, 9000],
+                                  [13000, 9000]], float),
+                        [hole],
+                    )
                 ],
             }
         )
     )
-    a = sj.points_in_polygons(pts, polys, res=12, how="inner")
-    b = sj.points_in_polygons(pts, polys, res=12, how="inner", broadcast_polys=False)
-    ka = sorted((r.point_id, r.poly_id) for r in a.collect())
-    kb = sorted((r.point_id, r.poly_id) for r in b.collect())
-    assert ka == kb and len(ka) > 100
-    # left join parity too
-    al = sj.points_in_polygons(pts, polys, res=12, how="left").count()
-    bl = sj.points_in_polygons(pts, polys, res=12, how="left", broadcast_polys=False).count()
-    assert al == bl
+    for how in ("inner", "left"):
+        a = sj.points_in_polygons(pts, polys, res=12, how=how)
+        b = sj.points_in_polygons(pts, polys, res=12, how=how, broadcast_polys=False)
+        assert a.schema == b.schema
+        ra = sorted(a.collect(), key=lambda r: (r.point_id, r.poly_id or ""))
+        rb = sorted(b.collect(), key=lambda r: (r.point_id, r.poly_id or ""))
+        assert ra == rb and len(ra) > 100
+    assert sum(r.poly_id is None for r in ra) > 0
+    assert sum(r.poly_id == "holed" for r in ra) > 0
+
+
+def test_points_in_polygons_broadcast_plan_is_one_kernel(spark):
+    """The broadcast path is one narrow mapInPandas over the points: no
+    cover join, no attribute join, no join back."""
+    import contextlib
+    import io
+    import re
+
+    polys, _ = _poly_table(spark)
+    pts = spark.range(100).select(
+        F.col("id").alias("point_id"),
+        (F.col("id") * 200.0).alias("x"),
+        (F.col("id") * 150.0).alias("y"),
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        sj.points_in_polygons(pts, polys, how="inner").explain("formatted")
+    nodes = re.findall(r"^\(\d+\) (\w+)", buf.getvalue(), re.M)
+    assert nodes.count("MapInPandas") == 1, nodes
+    assert not [n for n in nodes if "Join" in n], nodes
 
 
 def test_knn_join_non_broadcast_matches_broadcast(spark):
