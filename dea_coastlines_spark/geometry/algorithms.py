@@ -29,8 +29,10 @@ def points_in_polygon(
     non-degenerate data; tests pin the semantics).
     """
     ring = np.asarray(ring, np.float64)
-    if np.array_equal(ring[0], ring[-1]):
-        ring = ring[:-1]
+    # drop repeated consecutive vertices, compared cyclically (this also
+    # drops the closing vertex of a closed ring): a zero-length edge
+    # would put every point on the boundary
+    ring = ring[np.any(ring != np.roll(ring, -1, axis=0), axis=1)]
     x1, y1 = ring[:, 0], ring[:, 1]
     x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
     px = np.asarray(px, np.float64)[:, None]

@@ -187,9 +187,9 @@ def _banded_buckets(
     candidates the exact verify rejects)."""
     rows_per_band = num_perm // bands
     # explode_OUTER: a plain explode's inferred size>0/isnotnull filter
-    # inlines every band's xxhash64+concat_ws twice more per row (see
-    # operators/lm._doc_grams); the array is fixed-size bands >= 1 with
-    # non-null struct elements, so outer is row-for-row identical
+    # inlines every band's xxhash64+concat_ws twice more per row; the
+    # array is fixed-size bands >= 1 with non-null struct elements, so
+    # outer is row-for-row identical
     return sigs.select(
         id_col,
         F.explode_outer(
@@ -1089,7 +1089,7 @@ def word_ngram_jaccard_pairs(
     # touches it: higher-order functions evaluate interpreted, so an
     # inline token expression is re-split/re-lowered once PER ELEMENT —
     # measured 2 ms/row (10 s of a 22 s sf0.1 run) vs ~40 us
-    # materialized (see text.lower_tokens).
+    # materialized.
     toks_col = F.col("_wj_toks")
     grams = F.array_remove(
         F.array_distinct(

@@ -12,7 +12,7 @@ Operator coverage map (SURVEY.md §2 rows in parentheses):
   (2.3), windows (2.5), set ops (2.7), scalar string/date/math (2.8),
   certainty-cascade CASE semantics (2.2), validation error stats (2.4),
   regression (2.4), mode/median (2.4), spatial joins (2.3, engine ops
-  with brute-force SQL oracles), dedup/similarity/text (training-data
+  with brute-force SQL oracles), dedup/similarity (training-data
   ops), raster->vector pipeline (rows-only, no SQL analog).
 """
 
@@ -795,7 +795,7 @@ FROM o GROUP BY poly_id ORDER BY poly_id
 """
 
 
-# ------------------------------------------- dedup / text / similarity ops
+# ------------------------------------------------ dedup / similarity ops
 
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup groups (md5 hash-groupBy) over documents."""
@@ -874,159 +874,6 @@ SELECT id_a, id_b, ROUND(j, 6) AS jaccard FROM (
   FROM g a JOIN g b ON a.doc_id < b.doc_id
 ) WHERE j >= 0.8
 ORDER BY id_a, id_b
-"""
-
-
-def q_text_quality(spark, sf_dir):
-    """Quality scoring features + label per doc (C4/Gopher-style)."""
-    from ..operators.text import with_quality
-
-    d = _t(spark, sf_dir, "documents")
-    return with_quality(d).select(
-        "doc_id", "n_tokens", "punct_ratio", "stop_hits", "mean_tok_len", "quality"
-    ).orderBy("doc_id")
-
-
-# Whitespace spelled as the explicit class (not \s) on BOTH sides:
-# Java \s matches \x0B, RE2 \s does not. See operators/text.WS_CLASS.
-ORACLE_TEXT_QUALITY = r"""
-WITH q AS (
-  SELECT doc_id, text, TRIM(text) AS trimmed,
-         CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-              ELSE LEN(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '[ \t\n\r\f\x0B]+')) END AS n_tokens,
-         LENGTH(text) - LENGTH(REPLACE(REPLACE(REPLACE(REPLACE(REPLACE(REPLACE(
-             text, '.', ''), ',', ''), '!', ''), '?', ''), ';', ''), ':', '')) AS n_punct,
-         (CASE WHEN CONTAINS(' ' || LOWER(text) || ' ', ' the ') THEN 1 ELSE 0 END
-        + CASE WHEN CONTAINS(' ' || LOWER(text) || ' ', ' and ') THEN 1 ELSE 0 END
-        + CASE WHEN CONTAINS(' ' || LOWER(text) || ' ', ' of ') THEN 1 ELSE 0 END
-        + CASE WHEN CONTAINS(' ' || LOWER(text) || ' ', ' to ') THEN 1 ELSE 0 END
-        + CASE WHEN CONTAINS(' ' || LOWER(text) || ' ', ' is ') THEN 1 ELSE 0 END
-        + CASE WHEN CONTAINS(' ' || LOWER(text) || ' ', ' in ') THEN 1 ELSE 0 END) AS stop_hits
-  FROM documents)
-SELECT doc_id, n_tokens,
-       ROUND(n_punct / GREATEST(LENGTH(text), 1), 6) AS punct_ratio,
-       stop_hits,
-       ROUND(LENGTH(REGEXP_REPLACE(trimmed, '[ \t\n\r\f\x0B]+', '', 'g')) / GREATEST(n_tokens, 1), 6) AS mean_tok_len,
-       CASE WHEN n_tokens < 5 THEN 'too_short'
-            WHEN n_punct / GREATEST(LENGTH(text), 1) > 0.1 THEN 'too_punct'
-            WHEN LENGTH(REGEXP_REPLACE(trimmed, '[ \t\n\r\f\x0B]+', '', 'g')) / GREATEST(n_tokens, 1) > 12 THEN 'gibberish'
-            ELSE 'ok' END AS quality
-FROM q ORDER BY doc_id
-"""
-
-
-def _langid_sql() -> str:
-    """Generate the DuckDB mirror of with_language_id + accuracy rollup."""
-    from ..operators.text import STOPWORDS
-
-    hit_exprs = {}
-    for lang, ws in STOPWORDS.items():
-        terms = " + ".join(
-            f"CASE WHEN CONTAINS(' ' || LOWER(text) || ' ', ' {w} ') THEN 1 ELSE 0 END"
-            for w in ws
-        )
-        hit_exprs[lang] = f"({terms})"
-    hits_cols = ", ".join(f"{e} AS {lang}_hits" for lang, e in hit_exprs.items())
-    greatest = "GREATEST(" + ", ".join(f"{lang}_hits" for lang in STOPWORDS) + ")"
-    whens = "\n".join(
-        f"WHEN {lang}_hits = best THEN '{lang}'" for lang in sorted(STOPWORDS)
-    )
-    return f"""
-WITH h AS (SELECT doc_id, lang, {hits_cols} FROM documents),
-     p AS (SELECT doc_id, lang, {greatest} AS best,
-                  de_hits, en_hits, es_hits, fr_hits FROM h),
-     c AS (SELECT doc_id, lang,
-                  CASE WHEN best = 0 THEN 'und' {whens} END AS pred_lang
-           FROM p)
-SELECT lang, pred_lang, COUNT(*) AS n
-FROM c GROUP BY lang, pred_lang ORDER BY lang, pred_lang
-"""
-
-
-def q_langid(spark, sf_dir):
-    """Language-ID confusion matrix: engine heuristic vs the labeled
-    `lang` column."""
-    from ..operators.text import with_language_id
-
-    d = _t(spark, sf_dir, "documents")
-    return (
-        with_language_id(d)
-        .groupBy("lang", "pred_lang")
-        .agg(F.count("*").alias("n"))
-        .orderBy("lang", "pred_lang")
-    )
-
-
-def q_token_stats(spark, sf_dir):
-    from ..operators.text import token_stats_by
-
-    return token_stats_by(_t(spark, sf_dir, "documents"), "lang")
-
-
-ORACLE_TOKEN_STATS = r"""
-WITH q AS (SELECT lang,
-                  CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-                       ELSE LEN(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '[ \t\n\r\f\x0B]+')) END AS n_tokens
-           FROM documents)
-SELECT lang, COUNT(*) AS n_docs,
-       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,  -- DuckDB SUM(BIGINT)->HUGEINT lands as float64 in pandas; pin int64 to match Spark
-
-       ROUND(AVG(n_tokens), 6) AS avg_tokens, MAX(n_tokens) AS max_tokens
-FROM q GROUP BY lang ORDER BY lang
-"""
-
-
-def q_tfidf_topk(spark, sf_dir):
-    """Top-3 distinctive terms per document by TF-IDF (rational idf
-    variant: exact int64 product + one correctly-rounded division, so
-    scores are bit-identical across engines and ranks deterministic —
-    see tfidf_topk's docstring for why ln is unsafe here)."""
-    from ..operators.text import tfidf_topk
-
-    d = _t(spark, sf_dir, "documents")
-    return tfidf_topk(d, "doc_id", "text", k=3).orderBy("doc_id", "rank")
-
-
-ORACLE_TFIDF_TOPK = """
-WITH toks AS (
-  SELECT doc_id,
-         unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-  FROM documents),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
-n AS (SELECT COUNT(*) AS n_docs FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf,
-         CAST(tf.tf * (n.n_docs - dfq.df_t) AS DOUBLE)
-           / (1.0 + dfq.df_t) AS s
-  FROM tf JOIN dfq USING (term) CROSS JOIN n)
-SELECT doc_id, CAST(rank AS INT) AS rank, term, tf FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                               ORDER BY s DESC, term ASC) AS rank
-  FROM scored)
-WHERE rank <= 3 ORDER BY doc_id, rank
-"""
-
-
-def q_token_counts(spark, sf_dir):
-    """Whitespace + BPE-ish regex token counts (JVM regexp_count vs
-    DuckDB regexp_extract_all on the identical RE2-safe pattern)."""
-    from ..operators.text import with_token_counts
-
-    d = _t(spark, sf_dir, "documents")
-    return with_token_counts(d).select(
-        "doc_id", "n_tokens_ws", "n_tokens_bpe"
-    ).orderBy("doc_id")
-
-
-ORACLE_TOKEN_COUNTS = r"""
-SELECT doc_id,
-       CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-            ELSE LEN(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '[ \t\n\r\f\x0B]+')) END AS n_tokens_ws,
-       LEN(REGEXP_EXTRACT_ALL(text,
-           '''s|''t|''re|''ve|''m|''ll|''d| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r\f\x0B]+|[ \t\n\r\f\x0B]+'
-       )) AS n_tokens_bpe
-FROM documents ORDER BY doc_id
 """
 
 
@@ -2389,62 +2236,6 @@ def q_crosscorpus_dedup(spark, sf_dir):
     )
 
 
-def q_doc_fingerprint(spark, sf_dir):
-    from ..operators.text import with_fingerprint
-
-    d = _t(spark, sf_dir, "documents")
-    return with_fingerprint(d).select(
-        "doc_id", "fingerprint"
-    ).localCheckpoint(eager=False).orderBy("doc_id")
-
-
-# DuckDB CAN express the winnowing fingerprint exactly: HUGEINT (128-bit)
-# arithmetic holds the intermediate fnv1a products (< 2^104), list
-# lambdas do the per-token byte fold, window mins, and the final combine
-# over sorted distinct mins (numpy.unique == list_sort(list_distinct)).
-# Corpus text is ASCII (verified), so ord(char) == utf-8 byte.
-ORACLE_DOC_FINGERPRINT = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS toks
-  FROM documents
-), hashed AS (
-  SELECT doc_id,
-    list_transform(toks, t ->
-      list_reduce(
-        list_prepend(14695981039346656037::HUGEINT,
-                     list_transform(split(t, ''), c -> ord(c)::HUGEINT)),
-        (h, b) -> (xor(h, b) * 1099511628211::HUGEINT)
-                  & 18446744073709551615::HUGEINT
-      )) AS hs
-  FROM toks
-), mins AS (
-  SELECT doc_id,
-    CASE WHEN len(hs) = 0 THEN NULL
-         WHEN len(hs) < 8 THEN [list_min(hs)]
-         ELSE list_transform(generate_series(1, len(hs) - 7),
-                             i -> list_min(hs[i:i+7]))
-    END AS m
-  FROM hashed
-), fps AS (
-  SELECT doc_id,
-    CASE WHEN m IS NULL THEN 0::HUGEINT
-         ELSE list_reduce(
-           list_prepend(14695981039346656037::HUGEINT,
-                        list_sort(list_distinct(m))),
-           (h, b) -> (xor(h, b) * 1099511628211::HUGEINT)
-                     & 18446744073709551615::HUGEINT)
-    END AS u
-  FROM mins
-)
-SELECT doc_id,
-  (CASE WHEN u >= 9223372036854775808::HUGEINT
-        THEN u - 18446744073709551616::HUGEINT ELSE u END)::BIGINT
-    AS fingerprint
-FROM fps ORDER BY doc_id
-"""
-
-
 def q_lsh_ann_topk(spark, sf_dir):
     from ..operators.similarity import lsh_topk
 
@@ -3418,67 +3209,6 @@ def q_contour_certainty(spark, sf_dir):
     ).localCheckpoint(eager=False).orderBy("year", "poly_id", "piece_len_m")
 
 
-def q_pii_scrub(spark, sf_dir):
-    """PII redaction (emails / phone-like digit runs / IPv4) over
-    documents with planted deterministic PII — the scrub chain is pure
-    JVM regexp_replace; the oracle runs the IDENTICAL RE2-safe patterns
-    in DuckDB."""
-    from ..operators.text import scrub_pii
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.col("text"), F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com or +61 2 9374 4000, host 10.0.0.1 ok"),
-        ).alias("text"),
-    )
-    return scrub_pii(d).select("doc_id", "text").orderBy("doc_id")
-
-
-ORACLE_PII_SCRUB = r"""
-SELECT doc_id,
-  regexp_replace(
-    regexp_replace(
-      regexp_replace(
-        text || ' contact user' || doc_id::VARCHAR
-             || '@example.com or +61 2 9374 4000, host 10.0.0.1 ok',
-        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-      '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-    '\+?[0-9][0-9()\[\] .-]{5,}[0-9]', '<PHONE>', 'g'
-  ) AS text
-FROM documents ORDER BY doc_id
-"""
-
-
-def q_dedup_lines(spark, sf_dir):
-    """Cross-document line dedup (C4-style boilerplate removal):
-    first occurrence by (doc_id, line_no) wins globally; docs
-    reassembled from surviving lines in order."""
-    from ..operators.text import dedup_lines
-
-    d = _t(spark, sf_dir, "documents")
-    return dedup_lines(d).orderBy("doc_id")
-
-
-ORACLE_DEDUP_LINES = """
-WITH parts AS (
-  SELECT doc_id, string_split(text, chr(10)) AS ls FROM documents),
-lines AS (
-  SELECT doc_id, i - 1 AS line_no, ls[i] AS line
-  FROM parts, LATERAL (SELECT unnest(generate_series(1, len(ls))) AS i)
-  WHERE LENGTH(ls[i]) >= 1),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY line ORDER BY doc_id, line_no) AS rk
-  FROM lines)
-SELECT doc_id,
-       STRING_AGG(line, chr(10) ORDER BY line_no) AS text,
-       COUNT(*) AS n_lines_kept
-FROM ranked WHERE rk = 1
-GROUP BY doc_id ORDER BY doc_id
-"""
-
-
 def q_stratified_sample(spark, sf_dir):
     """Deterministic per-stratum sampling over documents (sampleBy
     analog, reproducible across partitionings): quadratic-congruential
@@ -3561,57 +3291,6 @@ SELECT doc_id, shard,
        CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY u, doc_id) - 1
             AS INT) AS pos
 FROM s ORDER BY shard, pos
-"""
-
-
-def q_pack_sequences(spark, sf_dir):
-    """GPT-style concat-and-chunk sequence packing over the documents
-    table (seq_len 512, 8 shards): deterministic per-shard layout,
-    exact integer offsets/pack assignments — full SQL-window oracle."""
-    from ..operators.sampling import pack_sequences
-    from ..operators.text import WS_CLASS
-
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "n_tok",
-        F.size(
-            F.filter(F.split(F.col("text"), WS_CLASS), lambda t: t != "")
-        ).cast("long"),
-    )
-    return (
-        pack_sequences(d, "doc_id", "n_tok", seq_len=512, n_shards=8, seed=7)
-        .select("doc_id", "shard", "pos", "offset", "pack_id",
-                "pack_offset", "n_packs")
-        .orderBy("doc_id")
-    )
-
-
-def _pack_sequences_oracle() -> str:
-    from ..operators.sampling import u01_sql
-
-    u = u01_sql("doc_id", 7)
-    return rf"""
-WITH d AS (
-  SELECT doc_id,
-         len(list_filter(string_split_regex(text, '[ \t\n\r\f\x0B]+'),
-                         t -> t <> ''))::BIGINT AS n_tok,
-         {u} AS u
-  FROM documents),
-s AS (SELECT *, LEAST(CAST(FLOOR(u * 8) AS INT), 7) AS shard FROM d),
-o AS (
-  SELECT doc_id, n_tok, shard,
-         CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY u, doc_id) - 1
-              AS INT) AS pos,
-         COALESCE(SUM(n_tok) OVER (PARTITION BY shard ORDER BY u, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  0)::BIGINT AS "offset"
-  FROM s)
-SELECT doc_id, shard, pos, "offset",
-       ("offset" // 512)::BIGINT AS pack_id,
-       ("offset" % 512)::BIGINT AS pack_offset,
-       CASE WHEN n_tok <= 0 THEN 0
-            ELSE (("offset" + n_tok - 1) // 512) - ("offset" // 512) + 1
-       END::BIGINT AS n_packs
-FROM o ORDER BY doc_id
 """
 
 
@@ -4690,100 +4369,6 @@ def q_merge_upsert(spark, sf_dir):
     )
 
 
-# q_jsonl_ingest stages its JSONL rendering once per (application,
-# sf_dir); temp roots are removed at interpreter exit (same discipline
-# as _MERGE_UPSERT_TABLES).
-_JSONL_DIRS: dict[tuple[str, str], str] = {}
-
-# the deterministic malformed shard injected next to the good JSONL —
-# truncated objects and non-JSON lines, the shapes crawl shards
-# actually break in. COUNT is part of the oracle contract below.
-_JSONL_BAD_LINES = (
-    '{"doc_id": 1, "lang": "en", "text": "truncated',
-    "this line is not JSON at all",
-    '{"doc_id": oops}',
-    '{"doc_id": 2 "lang": "de"}',
-    "<html>stray log output</html>",
-    '{"doc_id":',
-    "}{",
-)
-
-
-def q_jsonl_ingest(spark, sf_dir):
-    """JSONL corpus ingress end-to-end (sources/jsonl.py): render the
-    documents table to newline-delimited JSON (executor-parallel sink),
-    inject a deterministic malformed shard, scan it back with a PINNED
-    schema in PERMISSIVE mode capturing unparseable lines, and
-    aggregate per-language doc counts + character volume plus one
-    quarantine row. The oracle recomputes the per-language aggregate
-    straight from the parquet and pins the quarantine count to the
-    injected-line constant — verifying the JSON round trip (values
-    survive encode/decode exactly) AND the malformed-capture contract
-    (every bad line lands in quarantine, no good line does).
-
-    NOTE on timing semantics: the JSONL staging WRITE executes at build
-    time, memoized per (applicationId, sf_dir); a bench timing measures
-    the JSONL SCAN + aggregate. (Reference ingests per-path files,
-    coastlines/raster.py:240-280; this is the tabular corpus analog.)
-    """
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..sources.jsonl import read_jsonl_corpus, write_jsonl
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _JSONL_DIRS.get(key)
-    if path is None:
-        root = tempfile.mkdtemp(prefix="jsonl_ingest_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = root + "/docs"
-        write_jsonl(
-            _t(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
-            path,
-        )
-        with open(path + "/part-corrupt-extra.json", "w") as f:
-            f.write("\n".join(_JSONL_BAD_LINES) + "\n")
-        _JSONL_DIRS[key] = path
-
-    df = read_jsonl_corpus(
-        spark, path, "doc_id bigint, lang string, text string"
-    )
-    # ONE scan, conditional key — not split_corrupt: a two-branch split
-    # would parse the corpus twice (or force a checkpoint), and a
-    # quarantine-only branch trips Spark's corrupt-column-only scan
-    # restriction. Corrupt rows have NULL text, so their group's
-    # sum_chars is NULL — the oracle mirrors that.
-    from ..sources.jsonl import DEFAULT_CORRUPT_COL as _CC
-
-    key = (
-        F.when(F.col(_CC).isNotNull(), F.lit("__quarantine__"))
-        .otherwise(F.coalesce("lang", F.lit("__null__")))
-    )
-    return (
-        df.groupBy(key.alias("lang"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.length("text")).cast("bigint").alias("sum_chars"),
-        )
-        .orderBy("lang")
-    )
-
-
-ORACLE_JSONL_INGEST = f"""
-SELECT COALESCE(lang, '__null__') AS lang,
-       COUNT(*) AS n_docs,
-       CAST(SUM(LENGTH(text)) AS BIGINT) AS sum_chars
-FROM documents
-GROUP BY 1
-UNION ALL
-SELECT '__quarantine__' AS lang,
-       {len(_JSONL_BAD_LINES)} AS n_docs,
-       CAST(NULL AS BIGINT) AS sum_chars
-ORDER BY lang
-"""
-
-
 def q_caption_alignment(spark, sf_dir):
     """Cross-modal caption↔image alignment gate (LAION/DataComp-style
     CLIP-score filtering with the documented deterministic hash towers:
@@ -4956,43 +4541,6 @@ FROM r WHERE rank <= 3 ORDER BY image_id, rank
 """
 
 
-def q_chunk_documents(spark, sf_dir):
-    """Sliding-window document chunking (RAG / long-context splitter,
-    operators/text.chunk_documents): 20-token windows, 5-token overlap,
-    map-only fan-out. The oracle rebuilds the chunk grid with DuckDB
-    generate_series + list slicing."""
-    from ..operators.text import chunk_documents
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return chunk_documents(d, window=20, overlap=5).orderBy(
-        "doc_id", "chunk_idx"
-    )
-
-
-ORACLE_CHUNK_DOCUMENTS = r"""
-WITH t AS (
-  SELECT doc_id,
-         CASE WHEN LENGTH(TRIM(text)) = 0 THEN []::VARCHAR[]
-              ELSE regexp_split_to_array(TRIM(text), '[ \t\n\r\f\x0B]+')
-         END AS toks
-  FROM documents WHERE doc_id < 200),
-g AS (
-  SELECT doc_id, toks,
-         CAST(GREATEST(CEIL((len(toks) - 5) / 15.0) - 1, 0) AS INTEGER)
-           AS last_i
-  FROM t WHERE len(toks) > 0),
-c AS (
-  SELECT doc_id, toks, UNNEST(generate_series(0, last_i)) AS chunk_idx
-  FROM g)
-SELECT doc_id, CAST(chunk_idx AS INTEGER) AS chunk_idx,
-       CAST(len(toks[chunk_idx * 15 + 1 : chunk_idx * 15 + 20]) AS INTEGER)
-         AS n_chunk_tokens,
-       array_to_string(toks[chunk_idx * 15 + 1 : chunk_idx * 15 + 20], ' ')
-         AS chunk
-FROM c ORDER BY doc_id, chunk_idx
-"""
-
-
 def q_hll_distinct(spark, sf_dir):
     """HyperLogLog distinct-user estimate per event_type
     (operators/sketch.hll_distinct, p=10): map-only Arrow (bucket, rho)
@@ -5162,23 +4710,6 @@ def _resample_oracle() -> str:
     ) + " ORDER BY user_id, grid_ts"
 
 
-def q_cooccurrence_pmi(spark, sf_dir):
-    """Skip-gram co-occurrence + PMI (operators/text.cooccurrence_pmi):
-    row-local pair fan-out (nested transform+flatten, no self-join),
-    one pair groupBy, broadcast count/total attachment; top-30 selected
-    by integer keys only (pmi is rounded output, never a sort key)."""
-    from ..operators.text import cooccurrence_pmi
-
-    d = _t(spark, sf_dir, "documents")
-    return cooccurrence_pmi(d, "text", window=3, k=30)
-
-
-def _pmi_oracle() -> str:
-    from ..operators.text import cooccurrence_pmi_sql
-
-    return cooccurrence_pmi_sql("documents", "text", window=3, k=30)
-
-
 def q_weighted_sample(spark, sf_dir):
     """Deterministic weighted systematic sampling (operators/sampling.
     weighted_systematic_sample): inclusion probability proportional to
@@ -5195,50 +4726,6 @@ def _weighted_sample_oracle() -> str:
     from ..operators.sampling import weighted_systematic_sql
 
     return weighted_systematic_sql("documents", "doc_id", "n_chars", n=100)
-
-
-def q_quality_classifier(spark, sf_dir):
-    """Hashed-feature linear quality classifier scoring (fastText-style
-    corpus gate, operators/classifier.py): zero-Python zero-shuffle
-    map-only plan; the oracle replays the polynomial token hash,
-    bucket-weight mix, and hard-sigmoid score in DuckDB list lambdas."""
-    from ..operators.classifier import quality_classifier
-
-    d = _t(spark, sf_dir, "documents")
-    return quality_classifier(d).select(
-        "doc_id", "n_feats", "score", "keep"
-    ).localCheckpoint(eager=False).orderBy("doc_id")
-
-
-ORACLE_QUALITY_CLASSIFIER = """
-WITH t AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-  FROM documents),
-h AS (
-  SELECT doc_id, len(toks) AS n_feats,
-         list_transform(toks, tok ->
-           list_reduce(
-             list_prepend(CAST(0 AS BIGINT),
-               list_transform(range(1, length(tok) + 1),
-                              i -> CAST(ascii(substr(tok, CAST(i AS INT), 1))
-                                        AS BIGINT))),
-             (hh, c) -> (hh * 31 + c) % 1000003)) AS hs
-  FROM t),
-s AS (
-  SELECT doc_id, CAST(n_feats AS INT) AS n_feats,
-         CASE WHEN n_feats > 0 THEN
-           ROUND(LEAST(1.0, GREATEST(0.0,
-             (4.0 * list_reduce(
-                list_prepend(0.0,
-                  list_transform(hs, hv ->
-                    ((hv % 1024) * 2654435761) % 4096 / 2048.0 - 1.0)),
-                (a, w) -> a + w) / n_feats) * 0.25 + 0.5)), 6)
-         END AS score
-  FROM h)
-SELECT doc_id, n_feats, score,
-       COALESCE(score >= 0.5, FALSE) AS keep
-FROM s ORDER BY doc_id
-"""
 
 
 def q_interval_join(spark, sf_dir):
@@ -5434,349 +4921,6 @@ FROM final GROUP BY 1 ORDER BY 1
 """
 
 
-def q_corpus_profile(spark, sf_dir):
-    """Data-card corpus profile: per (source, lang) slice — doc/token/
-    char totals, exact token-count percentiles, ok-quality share."""
-    from ..operators.text import corpus_profile
-
-    d = _t(spark, sf_dir, "documents")
-    return corpus_profile(d).orderBy("source", "lang")
-
-
-ORACLE_CORPUS_PROFILE = r"""
-WITH q AS (
-  SELECT source, lang, text,
-         CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-              ELSE LEN(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '[ \t\n\r\f\x0B]+')) END AS n_tokens,
-         LENGTH(text) - LENGTH(REPLACE(REPLACE(REPLACE(REPLACE(REPLACE(REPLACE(
-             text, '.', ''), ',', ''), '!', ''), '?', ''), ';', ''), ':', '')) AS n_punct
-  FROM documents),
-lab AS (
-  SELECT source, lang, n_tokens, LENGTH(text) AS n_chars,
-         CASE WHEN n_tokens < 5 THEN 'too_short'
-              WHEN ROUND(n_punct / GREATEST(LENGTH(text), 1), 6) > 0.1 THEN 'too_punct'
-              WHEN ROUND(LENGTH(REGEXP_REPLACE(TRIM(text), '[ \t\n\r\f\x0B]+', '', 'g'))
-                         / GREATEST(n_tokens, 1), 6) > 12 THEN 'gibberish'
-              ELSE 'ok' END AS quality
-  FROM q)
-SELECT source, lang,
-       COUNT(*) AS n_docs,
-       SUM(n_tokens)::BIGINT AS total_tokens,
-       SUM(n_chars)::BIGINT AS total_chars,
-       ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY n_tokens), 6) AS p50_tokens,
-       ROUND(percentile_cont(0.9) WITHIN GROUP (ORDER BY n_tokens), 6) AS p90_tokens,
-       ROUND(percentile_cont(0.99) WITHIN GROUP (ORDER BY n_tokens), 6) AS p99_tokens,
-       ROUND(AVG(CASE WHEN quality = 'ok' THEN 1.0 ELSE 0.0 END), 6) AS ok_frac
-FROM lab GROUP BY source, lang ORDER BY source, lang
-"""
-
-
-def q_repetition_signals(spark, sf_dir):
-    """Gopher-style repetition quality signals per document (duplicate
-    lines, top-2-gram and duplicate-5-gram character fractions)."""
-    from ..operators.text import with_repetition_signals
-
-    d = _t(spark, sf_dir, "documents")
-    # the sf parquet is one row-group -> one input split; real corpora
-    # scan as many splits. Repartition stands in for that so the
-    # per-row HOF compute parallelizes (results are partition-invariant)
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    return (
-        with_repetition_signals(d)
-        .select(
-            "doc_id",
-            "dup_line_frac",
-            "dup_line_char_frac",
-            "top2gram_char_frac",
-            "dup5gram_char_frac",
-            "repetitive",
-        )
-        .orderBy("doc_id")
-    )
-
-
-# Mirrors with_repetition_signals exactly: same whitespace class, same
-# struct-sort argmax tie-break (field-wise struct comparison is
-# identical in DuckDB and Spark), thresholds on UNROUNDED values.
-ORACLE_REPETITION = r"""
-WITH base AS (
-  SELECT doc_id, text,
-    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-                l -> l <> '') AS lines,
-    list_filter(string_split_regex(lower(text), '[ \t\n\r\f\x0B]+'),
-                t -> t <> '') AS toks
-  FROM documents
-), g AS (
-  SELECT doc_id, text, lines,
-    CASE WHEN len(toks) >= 2
-         THEN list_transform(generate_series(1, len(toks) - 1),
-                             i -> array_to_string(toks[i:i+1], ' '))
-         ELSE [] END AS grams2,
-    CASE WHEN len(toks) >= 5
-         THEN list_transform(generate_series(1, len(toks) - 4),
-                             i -> array_to_string(toks[i:i+4], ' '))
-         ELSE [] END AS grams5
-  FROM base
-), sig AS (
-  SELECT doc_id,
-    CASE WHEN len(lines) <= 0 THEN 0.0
-         ELSE (len(lines) - len(list_distinct(lines)))::DOUBLE / len(lines)
-    END AS dlf,
-    CASE WHEN COALESCE(list_sum(list_transform(lines, l -> length(l))), 0) <= 0
-         THEN 0.0
-         ELSE COALESCE(list_sum(list_transform(list_distinct(lines),
-                d -> (len(list_filter(lines, x -> x = d)) - 1) * length(d))), 0)::DOUBLE
-              / list_sum(list_transform(lines, l -> length(l)))
-    END AS dlcf,
-    CASE WHEN len(grams2) <= 0 THEN 0.0
-         ELSE (
-           SELECT (-b.negcnt) * length(b.gram)
-           FROM (SELECT list_sort(list_transform(list_distinct(g.grams2),
-                   d -> {'negcnt': -len(list_filter(g.grams2, x -> x = d)),
-                         'gram': d}))[1] AS b)
-         )::DOUBLE / GREATEST(length(text), 1)
-    END AS t2f,
-    COALESCE(list_sum(list_transform(list_distinct(grams5),
-        d -> CASE WHEN len(list_filter(grams5, x -> x = d)) > 1
-                  THEN len(list_filter(grams5, x -> x = d)) * length(d)
-                  ELSE 0 END)), 0)::DOUBLE
-      / GREATEST(length(text), 1) AS d5f
-  FROM g
-)
-SELECT doc_id,
-       ROUND(dlf, 6) AS dup_line_frac,
-       ROUND(dlcf, 6) AS dup_line_char_frac,
-       ROUND(t2f, 6) AS top2gram_char_frac,
-       ROUND(d5f, 6) AS dup5gram_char_frac,
-       (dlf > 0.30 OR dlcf > 0.20 OR t2f > 0.20 OR d5f > 0.15) AS repetitive
-FROM sig ORDER BY doc_id
-"""
-
-
-def q_dedup_passages(spark, sf_dir):
-    """ExactSubstr-style duplicate-passage removal (token-window
-    approximation): every 6-token window occurring >= 2 times anywhere
-    in the corpus marks its positions; documents are reassembled from
-    surviving tokens."""
-    from ..operators.text import remove_duplicate_passages
-
-    d = _t(spark, sf_dir, "documents")
-    # the sf parquet is one row-group -> one input split; real corpora
-    # scan as many splits. Repartition stands in for that so the
-    # per-row HOF compute parallelizes (results are partition-invariant)
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    return (
-        remove_duplicate_passages(d, n=6, min_count=2)
-        .select("doc_id", "n_tokens", "n_removed", "text_clean")
-        .orderBy("doc_id")
-    )
-
-
-# Mirrors remove_duplicate_passages: windows over LOWERCASED tokens
-# (word_ngram_list lowercases; positions align because lowercasing
-# never changes whitespace), reassembly from original-case tokens.
-ORACLE_DEDUP_PASSAGES = r"""
-WITH d AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(text, '[ \t\n\r\f\x0B]+'),
-                t -> t <> '') AS toks,
-    list_filter(string_split_regex(lower(text), '[ \t\n\r\f\x0B]+'),
-                t -> t <> '') AS toksl
-  FROM documents
-), w AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(toksl) - 5),
-                i -> {'pos': i - 1,
-                      'gram': array_to_string(toksl[i:i+5], ' ')}),
-                recursive := true)
-  FROM d WHERE len(toksl) >= 6
-), dup AS (
-  SELECT gram FROM w GROUP BY gram HAVING COUNT(*) >= 2
-), starts AS (
-  SELECT w.doc_id, list(DISTINCT w.pos) AS s
-  FROM w JOIN dup USING (gram) GROUP BY w.doc_id
-), cov AS (
-  SELECT doc_id, pos2 FROM (
-    SELECT doc_id,
-           unnest(flatten(list_transform(s,
-                  st -> generate_series(st, st + 5)))) AS pos2
-    FROM starts
-  ) GROUP BY doc_id, pos2
-), tok AS (
-  SELECT doc_id,
-         unnest(toks) AS tok,
-         unnest(generate_series(1, len(toks))) - 1 AS ti
-  FROM d
-), kept AS (
-  SELECT t.doc_id, t.tok, t.ti
-  FROM tok t LEFT JOIN cov c ON c.doc_id = t.doc_id AND c.pos2 = t.ti
-  WHERE c.pos2 IS NULL
-)
-SELECT d.doc_id,
-       len(d.toks)::BIGINT AS n_tokens,
-       (len(d.toks) - COALESCE(k.cnt, 0))::BIGINT AS n_removed,
-       COALESCE(k.txt, '') AS text_clean
-FROM d
-LEFT JOIN (SELECT doc_id, COUNT(*) AS cnt,
-                  string_agg(tok, ' ' ORDER BY ti) AS txt
-           FROM kept GROUP BY doc_id) k USING (doc_id)
-ORDER BY d.doc_id
-"""
-
-
-def q_decontaminate(spark, sf_dir):
-    """Test-set decontamination: eval split = doc_id % 17 == 0, train =
-    the rest; a train doc is contaminated when it shares >= 1 distinct
-    word 4-gram with any eval doc (eval gram vocabulary broadcast)."""
-    from ..operators.decontam import decontaminate
-
-    d = _t(spark, sf_dir, "documents")
-    # the sf parquet is one row-group -> one input split; real corpora
-    # scan as many splits. Repartition stands in for that so the
-    # per-row HOF compute parallelizes (results are partition-invariant)
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    ev = d.filter(F.col("doc_id") % 17 == 0)
-    tr = d.filter(F.col("doc_id") % 17 != 0)
-    return (
-        decontaminate(tr, ev, text_col="text", id_col="doc_id", n=4, min_hits=1)
-        .select("doc_id", "hits", "contaminated")
-        .orderBy("doc_id")
-    )
-
-
-ORACLE_DECONTAMINATE = r"""
-WITH d AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[ \t\n\r\f\x0B]+'),
-                t -> t <> '') AS toks
-  FROM documents
-), g AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(toks) - 3),
-           i -> array_to_string(toks[i:i+3], ' ')))) AS _g
-  FROM d WHERE len(toks) >= 4
-), ev AS (
-  SELECT DISTINCT _g FROM g WHERE doc_id % 17 = 0
-), h AS (
-  SELECT g.doc_id, COUNT(*) AS hits
-  FROM g JOIN ev USING (_g)
-  WHERE g.doc_id % 17 <> 0
-  GROUP BY g.doc_id
-)
-SELECT t.doc_id,
-       COALESCE(h.hits, 0) AS hits,
-       COALESCE(h.hits, 0) >= 1 AS contaminated
-FROM documents t LEFT JOIN h ON t.doc_id = h.doc_id
-WHERE t.doc_id % 17 <> 0
-ORDER BY t.doc_id
-"""
-
-
-# Deterministic messy-URL synthesis shared by the web-curation queries:
-# every canonicalization branch is exercised (uppercase scheme/host,
-# www., default and non-default ports, tracking params, fragments,
-# trailing slash, co.uk/com.au second-level suffixes). The DuckDB
-# oracles rebuild the identical strings with CASE arms.
-def _synth_url(k: F.Column) -> F.Column:
-    host = F.element_at(
-        F.array(
-            F.lit("Example.COM"),
-            F.lit("news.site.co.uk"),
-            F.lit("blog.example.org"),
-            F.lit("a.b.shop.com.au"),
-            F.lit("media.dupe.net"),
-        ),
-        (k % 5 + 1).cast("int"),
-    )
-    scheme = F.when(k % 4 == 0, F.lit("HTTP")).otherwise(F.lit("https"))
-    www = F.when(k % 7 == 0, F.lit("www.")).otherwise(F.lit(""))
-    port = (
-        F.when((k % 11 == 0) & (k % 4 == 0), F.lit(":80"))
-        .when((k % 11 == 0) & (k % 4 != 0), F.lit(":443"))
-        .when(k % 11 == 1, F.lit(":8080"))
-        .otherwise(F.lit(""))
-    )
-    path = F.concat(F.lit("/P/"), (k % 37).cast("string"))
-    trailing = F.when(k % 5 == 0, F.lit("/")).otherwise(F.lit(""))
-    query = (
-        F.when(k % 6 == 0, F.concat(F.lit("?utm_source=feed&page="), (k % 13).cast("string")))
-        .when(k % 6 == 1, F.concat(F.lit("?page="), (k % 13).cast("string"), F.lit("&gclid=z")))
-        .when(k % 6 == 2, F.lit("?ref=home"))
-        .when(k % 6 == 3, F.lit("?b=2&a=1"))
-        .otherwise(F.lit(""))
-    )
-    frag = F.when(k % 9 == 0, F.lit("#Sec-2")).otherwise(F.lit(""))
-    return F.concat(
-        scheme, F.lit("://"), www, host, port, path, trailing, query, frag
-    )
-
-
-# The same synthesis as a DuckDB SQL fragment (k = doc_id).
-_SYNTH_URL_SQL = """
-    (CASE WHEN doc_id % 4 = 0 THEN 'HTTP' ELSE 'https' END)
-    || '://'
-    || (CASE WHEN doc_id % 7 = 0 THEN 'www.' ELSE '' END)
-    || (CASE CAST(doc_id % 5 AS INTEGER)
-          WHEN 0 THEN 'Example.COM' WHEN 1 THEN 'news.site.co.uk'
-          WHEN 2 THEN 'blog.example.org' WHEN 3 THEN 'a.b.shop.com.au'
-          ELSE 'media.dupe.net' END)
-    || (CASE WHEN doc_id % 11 = 0 AND doc_id % 4 = 0 THEN ':80'
-             WHEN doc_id % 11 = 0 THEN ':443'
-             WHEN doc_id % 11 = 1 THEN ':8080' ELSE '' END)
-    || '/P/' || CAST(doc_id % 37 AS VARCHAR)
-    || (CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END)
-    || (CASE CAST(doc_id % 6 AS INTEGER)
-          WHEN 0 THEN '?utm_source=feed&page=' || CAST(doc_id % 13 AS VARCHAR)
-          WHEN 1 THEN '?page=' || CAST(doc_id % 13 AS VARCHAR) || '&gclid=z'
-          WHEN 2 THEN '?ref=home' WHEN 3 THEN '?b=2&a=1' ELSE '' END)
-    || (CASE WHEN doc_id % 9 = 0 THEN '#Sec-2' ELSE '' END)
-"""
-
-# DuckDB replica of operators/web.py canonical_url + registered-domain
-# extraction over a column named `url` (RE2 patterns, \\1 group refs).
-_CANON_SQL = r"""
-  canon0 AS (
-    SELECT *, regexp_replace(url, '#.*', '') AS u0 FROM urls),
-  canon1 AS (
-    SELECT *, lower(regexp_extract(u0, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*', 0))
-              || substring(u0, length(regexp_extract(u0, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*', 0)) + 1)
-              AS u1 FROM canon0),
-  canon2 AS (
-    SELECT *, regexp_replace(
-                regexp_replace(
-                  regexp_replace(u1, '^(http://[^/:?#]+):80($|[/?#])', '\1\2'),
-                  '^(https://[^/:?#]+):443($|[/?#])', '\1\2'),
-                '^(https?://)www\.', '\1') AS u2 FROM canon1),
-  canon AS (
-    SELECT *,
-      regexp_replace(split_part(u2, '?', 1), '/$', '')
-      || (CASE WHEN contains(u2, '?')
-                AND len(list_filter(string_split(substring(u2, instr(u2, '?') + 1), '&'),
-                        p -> NOT regexp_matches(p, '^(utm_[a-z0-9_]*|fbclid|gclid|msclkid|mc_cid|mc_eid|ref)='))) > 0
-           THEN '?' || array_to_string(
-                  list_filter(string_split(substring(u2, instr(u2, '?') + 1), '&'),
-                    p -> NOT regexp_matches(p, '^(utm_[a-z0-9_]*|fbclid|gclid|msclkid|mc_cid|mc_eid|ref)=')), '&')
-           ELSE '' END) AS canon_url
-    FROM canon2),
-  parts AS (
-    SELECT *,
-      regexp_extract(canon_url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
-    FROM canon),
-  domains AS (
-    SELECT *,
-      CASE WHEN len(string_split(host, '.')) >= 3
-                AND array_to_string(string_split(host, '.')[-2:], '.') IN
-                    ('co.uk','org.uk','ac.uk','gov.uk','com.au','net.au',
-                     'org.au','gov.au','co.jp','or.jp','ne.jp','com.br',
-                     'com.cn','co.in','co.nz','co.za')
-           THEN array_to_string(string_split(host, '.')[-3:], '.')
-           ELSE array_to_string(
-                  string_split(host, '.')[-least(len(string_split(host, '.')), 2):], '.')
-      END AS registered_domain
-    FROM parts)
-"""
-
-
 def q_temperature_mix(spark, sf_dir):
     """Temperature-based corpus mixing (operators/sampling.py:
     temperature_mix — the mT5/XLM-R n^(1/tau) scheme): per-source
@@ -5821,248 +4965,12 @@ FROM fan ORDER BY doc_id, epoch
 """
 
 
-def q_url_domain_caps(spark, sf_dir):
-    """C4/RefinedWeb-style web-corpus front half (operators/web.py):
-    canonicalize deterministic messy URLs, extract the registered
-    domain (two-level-suffix aware), then keep at most 5 docs per
-    domain, longest text first — via the skew-safe salted two-stage
-    cap, which is row-identical to the oracle's single ROW_NUMBER
-    window because the ordering (n_chars DESC, doc_id ASC) is total."""
-    from ..operators.web import cap_per_domain, with_url_parts
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars", _synth_url(F.col("doc_id")).alias("url"))
-    )
-    parts = with_url_parts(d)
-    kept = cap_per_domain(parts, 5, order_col="n_chars")
-    return kept.select(
-        "doc_id", "canon_url", "host", "registered_domain"
-    ).orderBy("doc_id")
-
-
-ORACLE_URL_DOMAIN_CAPS = (
-    "WITH urls AS (SELECT doc_id, n_chars, "
-    + _SYNTH_URL_SQL
-    + " AS url FROM documents),\n"
-    + _CANON_SQL
-    + """,
-ranked AS (
-  SELECT doc_id, canon_url, host, registered_domain,
-         ROW_NUMBER() OVER (PARTITION BY registered_domain
-                            ORDER BY n_chars DESC, doc_id) AS rn
-  FROM domains)
-SELECT doc_id, canon_url, host, registered_domain
-FROM ranked WHERE rn <= 5 ORDER BY doc_id
-"""
-)
-
-
-def q_bloom_screen(spark, sf_dir):
-    """Bloom-filter corpus screening (operators/bloom.py): docs with
-    doc_id % 3 = 0 form the seen corpus, the rest are incoming; keys
-    are synthesized URLs with deliberate collisions (path = doc_id %
-    499) so a meaningful share of incoming keys is genuinely seen. The
-    output is EXACT — the filter has no false negatives and every
-    bloom-positive is confirmed against the real seen table — so the
-    oracle is a plain NOT IN anti-join, independent of the xxhash64
-    bit layout."""
-    from ..operators.bloom import bloom_screen
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.lit("https://ex"),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit(".org/p/"),
-            (F.col("doc_id") % 499).cast("string"),
-        ).alias("url"),
-    )
-    seen = d.filter(F.col("doc_id") % 3 == 0).select("url")
-    incoming = d.filter(F.col("doc_id") % 3 != 0)
-    kept = bloom_screen(incoming, seen, "url", num_bits=1 << 16, num_hashes=5)
-    return kept.select("doc_id", "url").orderBy("doc_id")
-
-
-ORACLE_BLOOM_SCREEN = """
-WITH d AS (
-  SELECT doc_id,
-         'https://ex' || CAST(doc_id % 7 AS VARCHAR) || '.org/p/'
-           || CAST(doc_id % 499 AS VARCHAR) AS url
-  FROM documents),
-seen AS (SELECT url FROM d WHERE doc_id % 3 = 0),
-inc AS (SELECT * FROM d WHERE doc_id % 3 <> 0)
-SELECT doc_id, url FROM inc
-WHERE url NOT IN (SELECT url FROM seen)
-ORDER BY doc_id
-"""
-
-
-def q_ngram_lm_ppl(spark, sf_dir):
-    """CCNet-style n-gram LM quality scoring (operators/lm.py): a
-    Laplace bigram LM is trained on the doc_id % 5 == 0 slice and every
-    remaining document is scored by log2-perplexity. Per-gram log terms
-    are exact int64 micro-bits, so the per-doc sum is partition-
-    invariant and the DuckDB oracle matches bit-for-bit at 6 dp."""
-    from ..operators.lm import ngram_lm_logppl
-
-    d = _t(spark, sf_dir, "documents")
-    # single-row-group parquet -> one split; stand in for a many-split
-    # corpus scan (results are partition-invariant by construction)
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    lm = d.filter(F.col("doc_id") % 5 == 0)
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    return (
-        ngram_lm_logppl(corpus, lm, text_col="text", id_col="doc_id", n=2)
-        .select("doc_id", "n_grams", "logppl")
-        .orderBy("doc_id")
-    )
-
-
-ORACLE_NGRAM_LM_PPL = r"""
-WITH d AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[ \t\n\r\f\x0B]+'),
-                t -> t <> '') AS toks
-  FROM documents
-), lm AS (
-  SELECT toks FROM d WHERE doc_id % 5 = 0
-), voc AS (
-  SELECT count(DISTINCT t) AS v FROM (SELECT unnest(toks) AS t FROM lm)
-), lmpos AS (
-  SELECT toks, unnest(generate_series(1, len(toks) - 1)) AS i
-  FROM lm WHERE len(toks) >= 2
-), gcnt AS (
-  SELECT array_to_string(toks[i:i+1], ' ') AS gram, count(*) AS c_gram
-  FROM lmpos GROUP BY 1
-), ccnt AS (
-  SELECT toks[i] AS ctx, count(*) AS c_ctx FROM lmpos GROUP BY 1
-), docpos AS (
-  SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i
-  FROM d WHERE doc_id % 5 <> 0 AND len(toks) >= 2
-), terms AS (
-  SELECT p.doc_id,
-         CAST(round((log2(COALESCE(g.c_gram, 0) + 1)
-                   - log2(COALESCE(c.c_ctx, 0) + voc.v)) * 1e9) AS BIGINT)
-           AS tm
-  FROM docpos p
-  LEFT JOIN gcnt g ON g.gram = array_to_string(p.toks[p.i:p.i+1], ' ')
-  LEFT JOIN ccnt c ON c.ctx = p.toks[p.i]
-  CROSS JOIN voc
-), agg AS (
-  SELECT doc_id, count(*) AS n_grams, sum(tm) AS sm FROM terms GROUP BY 1
-)
-SELECT t.doc_id,
-       COALESCE(a.n_grams, 0)::BIGINT AS n_grams,
-       CASE WHEN a.n_grams > 0
-            THEN round(-(a.sm / 1e9) / a.n_grams, 6) END AS logppl
-FROM documents t LEFT JOIN agg a USING (doc_id)
-WHERE t.doc_id % 5 <> 0
-ORDER BY t.doc_id
-"""
-
-
-def q_dsir_weights(spark, sf_dir):
-    """DSIR importance resampling (operators/dsir.py): hashed
-    unigram+bigram features (md5-prefix buckets, B = 4096), target
-    slice = doc_id % 7 == 0, raw corpus = the rest; top 25% by
-    importance weight marked selected (exact global rank with doc_id
-    tie-break). Integer micro-bit sums keep the weights bit-identical
-    to the oracle."""
-    from ..operators.dsir import dsir_weights, select_target_like
-
-    d = _t(spark, sf_dir, "documents")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    target = d.filter(F.col("doc_id") % 7 == 0)
-    raw = d.filter(F.col("doc_id") % 7 != 0)
-    w = dsir_weights(raw, target, text_col="text", id_col="doc_id", hex_chars=3)
-    return (
-        select_target_like(w, keep_frac=0.25, id_col="doc_id")
-        .select("doc_id", "n_feats", "logw", "selected")
-        .orderBy("doc_id")
-    )
-
-
-ORACLE_DSIR_WEIGHTS = r"""
-WITH d AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[ \t\n\r\f\x0B]+'),
-                t -> t <> '') AS toks
-  FROM documents
-), feats AS (
-  SELECT doc_id,
-         unnest(list_concat(toks,
-           list_transform(generate_series(1, len(toks) - 1),
-                          i -> array_to_string(toks[i:i+1], ' ')))) AS f
-  FROM d
-), b AS (
-  SELECT doc_id, substr(md5(f), 1, 3) AS bucket FROM feats
-), tgt AS (
-  SELECT bucket FROM b WHERE doc_id % 7 = 0
-), raw AS (
-  SELECT doc_id, bucket FROM b WHERE doc_id % 7 <> 0
-), ct AS (SELECT bucket, count(*) AS ct FROM tgt GROUP BY 1),
-cr AS (SELECT bucket, count(*) AS cr FROM raw GROUP BY 1),
-nt AS (SELECT count(*) AS nt FROM tgt),
-nr AS (SELECT count(*) AS nr FROM raw),
-ratios AS (
-  SELECT bucket,
-         CAST(round((log2(COALESCE(ct, 0) + 1) - log2(nt + 4096)
-                   - log2(COALESCE(cr, 0) + 1) + log2(nr + 4096)) * 1e9)
-              AS BIGINT) AS lr
-  FROM ct FULL JOIN cr USING (bucket) CROSS JOIN nt CROSS JOIN nr
-), perdoc AS (
-  SELECT r.doc_id, count(*) AS n_feats, sum(t.lr) AS sm
-  FROM raw r JOIN ratios t USING (bucket) GROUP BY 1
-), w AS (
-  SELECT t.doc_id,
-         COALESCE(p.n_feats, 0)::BIGINT AS n_feats,
-         CASE WHEN p.n_feats > 0 THEN round(p.sm / 1e9, 6) END AS logw
-  FROM documents t LEFT JOIN perdoc p USING (doc_id)
-  WHERE t.doc_id % 7 <> 0
-), r AS (
-  SELECT *,
-         row_number() OVER (ORDER BY logw DESC NULLS LAST, doc_id) AS rk,
-         count(*) OVER () AS n
-  FROM w
-)
-SELECT doc_id, n_feats, logw,
-       (rk <= ceil(n * 0.25) AND logw IS NOT NULL) AS selected
-FROM r ORDER BY doc_id
-"""
-
-
 # ---------------------------------------------------------------------------
-# Registry ordering = driver-snapshot rotation. The driver's
-# CORRECTNESS_r*.json caps at the FIRST 50 keys of __spark_entry__.
-# queries() (which follows QUERY_ORDER below), while the registry holds
-# 80 (81 with the entry-module-registered shorelines_annual); every
-# query is oracle-verified in pytest every round
-# (tests/test_driver_contract.py), but the driver artifact only carries
-# the head of this list. Rotation plan:
-#   r4 head (this ordering): block A = the 12 queries that had never
-#   appeared in a driver snapshot through r3, block B = new-in-r4,
-#   block C = hash-green in r2 but rotated out of the r3 snapshot,
-#   block D = the scale-critical r3-green set kept for round-over-round
-#   bench/plan diffing.
-#   r5: swap the 30 keys outside r4's head back into the head in place
-#   of blocks A+C (which will then have fresh r4 driver rows). The
-#   exact r5 head list = block E plus the block-D tail pushed out by
-#   block B's growth: spatial_pip_join, knn_anchor_join, overlay_clip,
-#   keep_best_images, image_quality,
-#   corpus_integrity, multimodal_decode_stats, dedup_exact,
-#   minhash_pairs, simhash_pairs, phash_neardup,
-#   embedding_neardup, ann_topk, lsh_ann_topk,
-#   ivf_ann_topk, charset_jaccard, ngram_jaccard,
-#   dedup_passages, decontaminate, tfidf_topk, pricing_summary,
-#   mode_median, error_stats, regr_slope, join_star, semi_anti_join,
-#   asof_nearest, window_running, topk_per_group, set_ops,
-#   scalar_funcs, tz_convert, certainty_cascade, conditional_coalesce,
-#   top1_crs_vote, salted_agg, text_quality, repetition_signals,
-#   corpus_profile, langid, token_stats, token_counts, doc_fingerprint,
-#   streaming_dedup — plus any new-in-r5 queries; the remaining ~20
-#   slots keep the scale-critical block D head for round-over-round
-#   bench/plan diffing.
+# Registry. Key order is the order of __spark_entry__.queries(), which
+# follows QUERY_ORDER below: the driver's correctness snapshot
+# (CORRECTNESS_r*.json) records only the first 50 keys, so the order
+# decides which queries it carries. Every query is checked against its
+# oracle in tests/test_driver_contract.py whatever its position.
 # ---------------------------------------------------------------------------
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- block A: first-ever driver snapshot rows (VERDICT r3 item 1)
@@ -6073,32 +4981,20 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "group_percentiles": q_group_percentiles,
     "asof_join": q_asof_join,
     "sessionize": q_sessionize,
-    "dedup_lines": q_dedup_lines,
-    "pack_sequences": q_pack_sequences,
     "ar_bucket_shards": q_ar_bucket_shards,
     "audio_features": q_audio_features,
     "merge_upsert": q_merge_upsert,
-    # --- block B: new in r4 (growing this block pushes the tail of
-    # block D — dedup_passages, decontaminate, tfidf_topk, all
-    # hash-green in r3 — past the 50-key snapshot head; they stay
-    # pytest-oracle-verified)
+    # --- block B: new in r4
     "streaming_dedup_parity": q_streaming_dedup_parity,
     "semdedup": q_semdedup,
     "dms2dd": q_dms2dd,
     "crosscorpus_dedup": q_crosscorpus_dedup,
-    "url_domain_caps": q_url_domain_caps,
-    "bloom_screen": q_bloom_screen,
     "temperature_mix": q_temperature_mix,
-    "ngram_lm_ppl": q_ngram_lm_ppl,
-    "dsir_weights": q_dsir_weights,
-    "jsonl_ingest": q_jsonl_ingest,
     "interval_join": q_interval_join,
     "interval_overlap": q_interval_overlap,
-    "quality_classifier": q_quality_classifier,
     "caption_alignment": q_caption_alignment,
     "hard_negatives": q_hard_negatives,
     "table_evolution": q_table_evolution,
-    "chunk_documents": q_chunk_documents,
     "hll_distinct": q_hll_distinct,
     "heavy_hitters": q_heavy_hitters,
     "pagerank": q_pagerank,
@@ -6107,7 +5003,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "streaming_hll_parity": q_streaming_hll_parity,
     "tile_pyramid": q_tile_pyramid,
     "weighted_sample": q_weighted_sample,
-    "cooccurrence_pmi": q_cooccurrence_pmi,
     "resample_interpolate": q_resample_interpolate,
     # --- block C: r2 hash-green, rotated out of the r3 snapshot
     # ("shorelines_annual" also belongs here; it is registered by
@@ -6118,7 +5013,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_clusters": q_dedup_clusters,
     "contour_certainty": q_contour_certainty,
     "global_components": q_global_components,
-    "pii_scrub": q_pii_scrub,
     "stratified_sample": q_stratified_sample,
     "train_eval_split": q_train_eval_split,
     "shuffle_shards": q_shuffle_shards,
@@ -6146,11 +5040,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ivf_ann_topk": q_ivf_ann_topk,
     "charset_jaccard": q_charset_jaccard,
     "ngram_jaccard": q_ngram_jaccard,
-    "dedup_passages": q_dedup_passages,
-    "decontaminate": q_decontaminate,
-    "tfidf_topk": q_tfidf_topk,
     # --- block E: r3 hash-green, rotated out of the r4 snapshot
-    # (r5 swaps these back into the head)
     "pricing_summary": q_pricing_summary,
     "mode_median": q_mode_median,
     "error_stats": q_error_stats,
@@ -6167,25 +5057,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "conditional_coalesce": q_conditional_coalesce,
     "top1_crs_vote": q_top1_crs_vote,
     "salted_agg": q_salted_agg,
-    "text_quality": q_text_quality,
-    "repetition_signals": q_repetition_signals,
-    "corpus_profile": q_corpus_profile,
-    "langid": q_langid,
-    "token_stats": q_token_stats,
-    "token_counts": q_token_counts,
-    "doc_fingerprint": q_doc_fingerprint,
     "streaming_dedup": q_streaming_dedup,
 }
 
 # Full key order for __spark_entry__.queries(), including the
-# entry-module-registered "shorelines_annual" (end of block C).
-# r5 rotation (VERDICT r4 item 2): the r4 snapshot head was exactly
-# blocks A+B+C+shorelines_annual (keys 1..50), leaving blocks D+E (the
-# other 50) with r1–r3 rows only — so the r5 head is the clean half
-# swap: D+E first (all 50 get fresh driver rows, max staleness one
-# round across r04 ∪ r05), then A+B+C+shorelines_annual (fresh in
-# r04). New-in-r5 queries, if any, must displace tail-of-E keys into
-# position 51+ and be noted here.
+# entry-module-registered "shorelines_annual" (end of block C): blocks
+# D+E first, then A+B+C and shorelines_annual.
 _BLOCK_C_END = list(QUERIES).index("shuffle_shards") + 1
 _D_START = list(QUERIES).index("shorelines_in_aoi")
 QUERY_ORDER: list[str] = (
@@ -6218,18 +5095,8 @@ ORACLES: dict[str, str] = {
     "dedup_exact": ORACLE_DEDUP_EXACT,
     "charset_jaccard": ORACLE_CHARSET_JACCARD,
     "ngram_jaccard": ORACLE_NGRAM_JACCARD,
-    "text_quality": ORACLE_TEXT_QUALITY,
-    "repetition_signals": ORACLE_REPETITION,
-    "decontaminate": ORACLE_DECONTAMINATE,
-    "dedup_passages": ORACLE_DEDUP_PASSAGES,
-    "corpus_profile": ORACLE_CORPUS_PROFILE,
-    "langid": _langid_sql(),
-    "token_stats": ORACLE_TOKEN_STATS,
-    "tfidf_topk": ORACLE_TFIDF_TOPK,
-    "token_counts": ORACLE_TOKEN_COUNTS,
     "ann_topk": ORACLE_ANN_TOPK,
     "embedding_neardup": ORACLE_EMB_NEARDUP,
-    "doc_fingerprint": ORACLE_DOC_FINGERPRINT,
     "minhash_pairs": _minhash_sql(),
     "simhash_pairs": _simhash_sql(),
     "dissolve": ORACLE_DISSOLVE,
@@ -6239,26 +5106,16 @@ ORACLES: dict[str, str] = {
     "ar_bucket_shards": _ar_shards_oracle(),
     "shuffle_shards": _shards_oracle(),
     "stratified_sample": _sampling_oracle(),
-    "pack_sequences": _pack_sequences_oracle(),
     "train_eval_split": _split_oracle(),
-    "pii_scrub": ORACLE_PII_SCRUB,
-    "dedup_lines": ORACLE_DEDUP_LINES,
     "asof_join": ORACLE_ASOF_JOIN,
     "sessionize": ORACLE_SESSIONIZE,
     "streaming_dedup_parity": ORACLE_STREAMING_DEDUP_PARITY,
     "dms2dd": ORACLE_DMS2DD,
     "crosscorpus_dedup": _crosscorpus_sql(),
-    "url_domain_caps": ORACLE_URL_DOMAIN_CAPS,
-    "bloom_screen": ORACLE_BLOOM_SCREEN,
     "temperature_mix": _temperature_mix_sql(),
-    "ngram_lm_ppl": ORACLE_NGRAM_LM_PPL,
-    "dsir_weights": ORACLE_DSIR_WEIGHTS,
-    "jsonl_ingest": ORACLE_JSONL_INGEST,
     "interval_join": ORACLE_INTERVAL_JOIN,
     "interval_overlap": ORACLE_INTERVAL_OVERLAP,
-    "quality_classifier": ORACLE_QUALITY_CLASSIFIER,
     "table_evolution": ORACLE_TABLE_EVOLUTION,
-    "chunk_documents": ORACLE_CHUNK_DOCUMENTS,
     "hll_distinct": _hll_oracle(),
     "heavy_hitters": _cms_oracle(),
     "pagerank": _pagerank_oracle(),
@@ -6269,12 +5126,11 @@ ORACLES: dict[str, str] = {
     "triangle_counts": _triangles_oracle(),
     "streaming_hll_parity": _hll_stream_oracle(),
     "weighted_sample": _weighted_sample_oracle(),
-    "cooccurrence_pmi": _pmi_oracle(),
     "resample_interpolate": _resample_oracle(),
     "cell_rollup": ORACLE_CELL_ROLLUP,
     "group_percentiles": ORACLE_GROUP_PERCENTILES,
     "merge_upsert": ORACLE_MERGE_UPSERT,
-    # lsh_ann_topk / ivf_ann_topk (data-dependent centroids) /
-    # multimodal_decode_stats (image decode): no SQL analog ->
-    # rows-only driver check
+    # the oracles that read testdata or synthesize inputs are built
+    # lazily in __spark_entry__.oracle_sql(); streaming_dedup is the
+    # one rows-only query
 }

@@ -470,9 +470,9 @@ class SnapshotTable:
     ) -> int:
         """Rewrite small-file partitions into ~target_bytes files —
         content-identical new snapshot (Iceberg rewrite_data_files
-        analog). Incremental appends (jobs/run_corpus_append.py) add one
-        file per partition per commit, so a frequently-appended table
-        accumulates files whose per-file size no scan wants; compaction
+        analog). Incremental appends add one file per partition per
+        commit, so a frequently-appended table accumulates files whose
+        per-file size no scan wants; compaction
         is the maintenance half of that write pattern. Old files stay
         referenced by prior snapshots for time travel until vacuum().
 

@@ -47,7 +47,7 @@ def main(argv=None) -> int:
         table.create(rates)
     else:
         table.append(rates)
-    n = table.read().count()
+    n = table.snapshots()[-1]["n_rows"]
     dt = time.perf_counter() - t0
     print(json.dumps({
         "job": "rates", "n_tiles": n_tiles, "n_points": n,

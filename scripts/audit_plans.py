@@ -78,16 +78,15 @@ def effective_counts(plan: str) -> tuple[int, int]:
 # which the emitted note records (VERDICT r3 item 7).
 HEAVY_SF_QUERIES = [
     "spatial_pip_join", "knn_anchor_join", "overlay_clip",
-    "ngram_jaccard", "charset_jaccard", "dedup_passages", "decontaminate",
-    "tfidf_topk", "embedding_neardup", "minhash_pairs", "simhash_pairs",
+    "ngram_jaccard", "charset_jaccard",
+    "embedding_neardup", "minhash_pairs", "simhash_pairs",
     "lsh_ann_topk", "ivf_ann_topk", "semdedup", "crosscorpus_dedup",
-    "dedup_clusters", "url_domain_caps", "bloom_screen",
+    "dedup_clusters",
     "rates_regression", "group_percentiles", "cell_rollup",
-    "ngram_lm_ppl", "dsir_weights",
-    "interval_join", "interval_overlap", "quality_classifier",
+    "interval_join", "interval_overlap",
     "hll_distinct", "heavy_hitters", "pagerank", "ivfpq_ann_topk",
-    "triangle_counts", "streaming_hll_parity", "chunk_documents",
-    "weighted_sample", "cooccurrence_pmi", "resample_interpolate",
+    "triangle_counts", "streaming_hll_parity",
+    "weighted_sample", "resample_interpolate",
 ]
 
 
@@ -194,10 +193,6 @@ def main() -> None:
         "  SMALL side (query set / dimension table) — the documented",
         "  exactness baselines; the scale paths are lsh_ann_topk /",
         "  ivf_ann_topk and operators/asof.py (zero join nodes).",
-        "- `ngram_lm_ppl` / `dsir_weights` BNLJ flags are 1-ROW scalar",
-        "  aggregates (vocab size, feature totals) broadcast-crossed in",
-        "  — how Spark plans a scalar subquery; constant work per task",
-        "  at any corpus size.",
         "- `hotspots` / `shorelines_in_aoi` / `rates_of_change` are full",
         "  multi-stage pipelines (composite -> vectorize -> join ->",
         "  regress, hotspots at several radii); their stage counts are",

@@ -74,25 +74,3 @@ def test_shards_partition_invariant_and_dense(spark):
         assert g.shard.max() < n_shards
         if n_shards >= 4:
             assert abs(len(g) / (g.shard.max() + 1) - 50) < 25
-
-
-def test_tfidf_topk_hand_corpus(spark):
-    from dea_coastlines_spark.operators.text import tfidf_topk
-
-    docs = spark.createDataFrame(
-        [
-            (1, "apple apple apple banana the the"),
-            (2, "banana banana cherry the"),
-            (3, "the the the cherry"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = tfidf_topk(docs, k=2).toPandas().sort_values(["doc_id", "rank"])
-    top = {d: list(g.term) for d, g in out.groupby("doc_id")}
-    # 'apple' is unique to doc 1 and frequent -> rank 1; 'the' appears
-    # everywhere (df=3, idf=ln(4/4)=0) so it never outranks rarer terms
-    assert top[1][0] == "apple"
-    assert "the" not in top[1]
-    assert top[2][0] == "banana"
-    for _, g in out.groupby("doc_id"):
-        assert list(g["rank"]) == [1, 2]

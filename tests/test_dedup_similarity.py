@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from dea_coastlines_spark.operators import dedup, multimodal, similarity, text
+from dea_coastlines_spark.operators import dedup, multimodal, similarity
 
 BASE_DOCS = [
     "the quick brown fox jumps over the lazy dog and runs away to the hills",
@@ -248,16 +248,6 @@ def test_neardup_plans_have_no_nested_loop_join(spark, docs_df, emb_df):
     )
     _assert_no_nested_loop(dedup.minhash_lsh_pairs(df, "text", "doc_id"))
     _assert_no_nested_loop(dedup.simhash_pairs(df, "text", "doc_id"))
-
-
-def test_fingerprint_robust_to_small_edit(spark, docs_df):
-    df, pdf = docs_df
-    fps = text.with_fingerprint(df).select("doc_id", "fingerprint").toPandas().set_index("doc_id")
-    # identical docs -> identical fingerprints
-    assert fps.loc[0, "fingerprint"] == fps.loc[len(pdf) - 2, "fingerprint"]
-    # deterministic across runs
-    fps2 = text.with_fingerprint(df).select("doc_id", "fingerprint").toPandas().set_index("doc_id")
-    assert fps.fingerprint.tolist() == fps2.fingerprint.tolist()
 
 
 def test_multimodal_resize_halves_dims(spark):

@@ -6,6 +6,7 @@ values (normalized comparison on sorted rows)."""
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -39,7 +40,7 @@ def _norm(v):
             return "NaN"
         # Keep the float marker: the driver's value hash is
         # type-sensitive, so int64 3549 vs float64 3549.0 must FAIL
-        # here too (round-1 token_stats lesson).
+        # here too.
         return f"f:{v:.9g}"
     if isinstance(v, int):
         return str(v)
@@ -86,6 +87,16 @@ def test_all_queries_have_query_fn():
     q = entrymod.queries()
     for name in entrymod.oracle_sql():
         assert name in q
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="needs the sf0.01 tables")
+def test_only_streaming_dedup_is_rows_only():
+    """oracle_sql() turns a lazy builder that raises into a rows-only
+    query without any error; pin the rows-only set so a broken builder
+    fails here instead."""
+    assert set(entrymod.queries()) - set(entrymod.oracle_sql()) == {
+        "streaming_dedup"
+    }
 
 
 ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))

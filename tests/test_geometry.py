@@ -40,6 +40,15 @@ def test_point_in_polygon_square_and_concave():
     px = np.array([1.0, 4.0, 4.0])
     py = np.array([3.0, 3.0, 1.0])
     assert ga.points_in_polygon(px, py, cshape).tolist() == [True, False, True]
+    # a repeated vertex is a zero-length edge, which must not put every
+    # point on the boundary; likewise a closing vertex repeated twice
+    ring = np.array([[0, 0], [10, 0], [10, 0], [10, 10], [0, 10]], float)
+    px = np.array([50.0, -3.0, 5.0, 10.0, 0.0])
+    py = np.array([50.0, 7.0, 5.0, 5.0, 10.0])
+    want = [False, False, True, True, True]
+    assert ga.points_in_polygon(px, py, ring).tolist() == want
+    closed = np.vstack([ring, ring[:1], ring[:1]])
+    assert ga.points_in_polygon(px, py, closed).tolist() == want
 
 
 def test_nearest_point_on_polyline():

@@ -13,9 +13,9 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.errors import DateTimeException
-from pyspark.sql import functions as F
 
 from dea_coastlines_spark.sources import write_tiles
+from dea_coastlines_spark.sources.table import SnapshotTable
 from dea_coastlines_spark.synth import corpus
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -53,14 +53,22 @@ def test_job_chain(spark, chain_dirs, capsys):
     out1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out1["n_shorelines"] > 0
 
-    # 2. rates
-    assert run_rates.main([
+    # 2. rates: the first run creates the table, the second appends;
+    # n_points is the manifest row count, so it must equal a full read
+    rates_args = [
         "--tiles-table", str(base / "tiles"),
         "--output", str(base / "rates"),
         "--baseline-year", "2000", "--no-tide-filter",
-    ]) == 0
+    ]
+    assert run_rates.main(rates_args) == 0
     out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out2["n_points"] > 0
+    rates_table = SnapshotTable(spark, str(base / "rates"))
+    assert out2["n_points"] == rates_table.read().count()
+    assert run_rates.main(rates_args) == 0
+    out2b = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out2b["n_points"] == 2 * out2["n_points"]
+    assert out2b["n_points"] == rates_table.read().count()
 
     # 3. continental hotspots (+ styled multi-layer GeoPackage artifact)
     gpkg = str(base / "hotspots.gpkg")
@@ -123,354 +131,6 @@ def test_job_chain(spark, chain_dirs, capsys):
     # the reference drops MultiPoint intersections — majority must match
     assert stats["overall"]["n"] >= 5
     assert stats["overall"]["mae"] < SPEC.res_m  # within one pixel
-
-
-def test_corpus_prep_job(spark, tmp_path, capsys):
-    import run_corpus_prep
-
-    docs_path = str(tmp_path / "docs")
-    out_path = str(tmp_path / "shards")
-    # corpus of genuinely distinct docs + planted exact/near duplicates
-    words = ["harbor", "glacier", "forest", "timber", "quartz", "meadow",
-             "breeze", "ember", "lantern", "orchid"]
-    rows = []
-    for i in range(30):
-        rows.append((
-            i,
-            f"document {i} about {words[i % 10]} and {words[(i * 3 + 1) % 10]} "
-            f"with unique vocabulary token alpha{i * 17} beta{i * 29} "
-            f"gamma{i * 7} delta{i * 11} epsilon{i * 13}",
-            "en",
-        ))
-    rows.append((100, rows[0][1], "en"))  # exact dup of doc 0
-    rows.append((101, rows[0][1].replace("alpha0", "alphaX"), "en"))  # near dup
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    ).write.mode("overwrite").parquet(docs_path)
-
-    assert run_corpus_prep.main([
-        "--documents", docs_path, "--output", out_path,
-        "--n-shards", "4", "--neardup-threshold", "0.8",
-    ]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["n_in"] == 32
-    # exact dup and near dup both dropped; all originals survive
-    assert out["n_out"] == 30
-    sharded = spark.read.parquet(out_path)
-    assert sharded.select("shard").distinct().count() <= 4
-    assert 100 not in [r.doc_id for r in sharded.collect()]
-    # deterministic: rerun writes the identical (shard, pos) assignment
-    order1 = sorted(
-        (r.shard, r.pos, r.doc_id) for r in sharded.collect()
-    )
-    assert run_corpus_prep.main([
-        "--documents", docs_path, "--output", out_path + "2",
-        "--n-shards", "4", "--neardup-threshold", "0.8",
-    ]) == 0
-    order2 = sorted(
-        (r.shard, r.pos, r.doc_id)
-        for r in spark.read.parquet(out_path + "2").collect()
-    )
-    assert order1 == order2
-
-
-def test_corpus_prep_hygiene_stages(spark, tmp_path, capsys):
-    """--repetition-filter, --dedup-passages and --decontaminate-eval
-    each drop/clean exactly the planted documents."""
-    import run_corpus_prep
-
-    docs_path = str(tmp_path / "docs_h")
-    eval_path = str(tmp_path / "eval_h")
-    out_path = str(tmp_path / "shards_h")
-    words = ["harbor", "glacier", "forest", "timber", "quartz", "meadow",
-             "breeze", "ember", "lantern", "orchid"]
-    rows = []
-    for i in range(20):
-        rows.append((
-            i,
-            f"document {i} about {words[i % 10]} and {words[(i * 3 + 1) % 10]} "
-            f"with unique vocabulary token alpha{i * 17} beta{i * 29} "
-            f"gamma{i * 7} delta{i * 11} epsilon{i * 13}",
-            "en",
-        ))
-    # planted: a doc that is one 2-gram repeated (Gopher-repetitive)
-    rows.append((200, "spam spam " * 40, "en"))
-    # planted: a doc sharing a 4-gram with the eval set
-    leak = "zeta eta theta iota"
-    rows.append((201, f"training doc containing {leak} verbatim benchmark text", "en"))
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    ).write.mode("overwrite").parquet(docs_path)
-    spark.createDataFrame(
-        [(0, f"eval question mentions {leak} exactly")],
-        "doc_id long, text string",
-    ).write.mode("overwrite").parquet(eval_path)
-
-    assert run_corpus_prep.main([
-        "--documents", docs_path, "--output", out_path,
-        "--n-shards", "2", "--repetition-filter",
-        "--dedup-passages", "6",
-        "--decontaminate-eval", eval_path, "--decontam-ngram", "4",
-    ]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["n_in"] == 22
-    sharded = spark.read.parquet(out_path)
-    ids = {r.doc_id for r in sharded.select("doc_id").collect()}
-    assert 200 not in ids  # repetition filter
-    assert 201 not in ids  # decontamination
-    assert set(range(20)) <= ids  # clean docs survive every stage
-    # passage dedup replaced text with the cleaned form: docs i and
-    # i+10 share the same word pair, so the "about A and B with unique
-    # vocabulary token" span is corpus-duplicated and removed, while
-    # the per-doc unique tokens survive
-    texts = {r.doc_id: r.text for r in sharded.select("doc_id", "text").collect()}
-    assert texts[0] == "document 0 alpha0 beta0 gamma0 delta0 epsilon0"
-    assert all("about" not in t for t in texts.values())
-
-
-def test_corpus_prep_classifier_gate(spark, tmp_path, capsys):
-    """--classifier-threshold drops exactly the docs the trained-weight
-    model scores below T; --classifier-weights round-trips the JSON."""
-    import run_corpus_prep
-    from dea_coastlines_spark.operators.classifier import (
-        HASH_MOD,
-        quality_classifier,
-    )
-
-    docs_path = str(tmp_path / "docs_c")
-    out_path = str(tmp_path / "shards_c")
-    words = ["harbor", "glacier", "forest", "timber", "quartz", "meadow"]
-    rows = [
-        (i, f"doc {i} about {words[i % 6]} uniq{i * 17} tok{i * 29}", "en")
-        for i in range(12)
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    ).write.mode("overwrite").parquet(docs_path)
-
-    # a weights vector that up-scores 'harbor' and down-scores 'glacier'
-    def bucket(t):
-        h = 0
-        for ch in t:
-            h = (h * 31 + ord(ch)) % HASH_MOD
-        return h % 64
-
-    w = [0.0] * 64
-    w[bucket("harbor")] = 1.0
-    w[bucket("glacier")] = -1.0
-    wpath = tmp_path / "weights.json"
-    wpath.write_text(json.dumps({"dim": 64, "weights": w}))
-
-    assert run_corpus_prep.main([
-        "--documents", docs_path, "--output", out_path,
-        "--n-shards", "1",
-        "--classifier-threshold", "0.5",
-        "--classifier-weights", str(wpath),
-    ]) == 0
-    survivors = {
-        r.doc_id
-        for r in spark.read.parquet(out_path).select("doc_id").collect()
-    }
-    # independent expectation from the operator itself
-    expect = {
-        r.doc_id
-        for r in quality_classifier(
-            spark.read.parquet(docs_path), dim=64, weights=w, threshold=0.5
-        ).filter("keep").select("doc_id").collect()
-    }
-    assert survivors == expect
-    # glacier docs (negative mean weight) must be gone, harbor docs kept
-    assert not {1, 7} & survivors
-    assert {0, 6} <= survivors
-
-
-def test_corpus_prep_url_stage(spark, tmp_path, capsys):
-    """--url-col canonical-URL dedup, --seen-urls Bloom screening and
-    --domain-cap each drop exactly the planted documents."""
-    import run_corpus_prep
-
-    docs_path = str(tmp_path / "docs_u")
-    seen_path = str(tmp_path / "seen_u")
-    out_path = str(tmp_path / "shards_u")
-    words = ["harbor", "glacier", "forest", "timber", "quartz", "meadow",
-             "breeze", "ember", "lantern", "orchid"]
-    rows = []
-    for i in range(12):
-        rows.append((
-            i,
-            f"document {i} about {words[i % 10]} with unique vocabulary "
-            f"token alpha{i * 17} beta{i * 29} gamma{i * 7} delta{i * 11}",
-            "en",
-            f"https://site{i}.org/page/{i}",
-        ))
-    # planted: same canonical URL as doc 0 (www. + utm param variants)
-    rows.append((300, "different words entirely kappa lambda mu nu xi",
-                 "en", "https://www.site0.org/page/0?utm_source=x"))
-    # planted: URL already crawled (in the seen list)
-    rows.append((301, "fresh content words omicron pi rho sigma tau",
-                 "en", "https://crawled.net/old/1"))
-    # planted: 4 extra docs on one domain (cap 3 keeps lowest ids)
-    for j in range(4):
-        rows.append((310 + j,
-                     f"bulk page {j} words phi chi psi omega{j * 31} "
-                     f"extra{j * 37} filler{j * 41} pad{j * 43}",
-                     "en", f"https://bulk.com/p/{j}"))
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, url string"
-    ).write.mode("overwrite").parquet(docs_path)
-    spark.createDataFrame(
-        [("https://WWW.crawled.net/old/1#frag",)], "url string"
-    ).write.mode("overwrite").parquet(seen_path)
-
-    assert run_corpus_prep.main([
-        "--documents", docs_path, "--output", out_path,
-        "--n-shards", "2", "--url-col", "url",
-        "--seen-urls", seen_path, "--domain-cap", "3",
-        "--keep-quality", "",
-    ]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["n_in"] == 18
-    sharded = spark.read.parquet(out_path)
-    ids = {r.doc_id for r in sharded.select("doc_id").collect()}
-    assert 300 not in ids          # canonical-URL dup of doc 0
-    assert 301 not in ids          # seen-URL Bloom screen
-    assert 313 not in ids          # over the bulk.com cap
-    assert {310, 311, 312} <= ids  # cap keeps the lowest 3 ids
-    assert set(range(12)) <= ids   # clean docs survive
-    # registered_domain column rides through to the shards
-    doms = {r.registered_domain
-            for r in sharded.select("registered_domain").collect()}
-    assert "bulk.com" in doms and "site0.org" in doms
-
-
-def test_corpus_prep_dedup_against(spark, tmp_path, capsys):
-    """--dedup-against drops exactly the docs near-duplicating the
-    reference corpus; the reference itself is untouched on disk."""
-    import run_corpus_prep
-
-    docs_path = str(tmp_path / "docs_x")
-    ref_path = str(tmp_path / "ref_x")
-    out_path = str(tmp_path / "shards_x")
-    words = ["harbor", "glacier", "forest", "timber", "quartz", "meadow",
-             "breeze", "ember", "lantern", "orchid"]
-    rows = []
-    for i in range(20):
-        rows.append((
-            i,
-            f"document {i} about {words[i % 10]} and {words[(i * 3 + 1) % 10]} "
-            f"with unique vocabulary token alpha{i * 17} beta{i * 29} "
-            f"gamma{i * 7} delta{i * 11} epsilon{i * 13}",
-            "en",
-        ))
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    ).write.mode("overwrite").parquet(docs_path)
-    # reference corpus = exact copy of doc 3 + a near copy of doc 7
-    spark.createDataFrame(
-        [(1000, rows[3][1]), (1001, rows[7][1] + " x")],
-        "doc_id long, text string",
-    ).write.mode("overwrite").parquet(ref_path)
-
-    # threshold 0.8: the template corpus has legitimate ~0.73-jaccard
-    # cousins of doc 3 (same topic-word pair, digits differ) that the
-    # default 0.7 would also drop — the planted copies sit at 1.0/0.98
-    assert run_corpus_prep.main([
-        "--documents", docs_path, "--output", out_path,
-        "--n-shards", "2", "--dedup-against", ref_path,
-        "--dedup-against-threshold", "0.8",
-    ]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["n_in"] == 20
-    ids = {r.doc_id for r in spark.read.parquet(out_path).select("doc_id").collect()}
-    assert 3 not in ids and 7 not in ids
-    assert ids == set(range(20)) - {3, 7}
-    # reference corpus unchanged
-    assert spark.read.parquet(ref_path).count() == 2
-
-
-def test_corpus_append_job(spark, tmp_path, capsys):
-    """Incremental corpus maintenance: --create initializes the table,
-    the second run screens the increment (exact copy, near copy, and
-    id collision all dropped; fresh docs appended atomically) and
-    read_incremental exposes exactly the appended rows."""
-    import run_corpus_append
-
-    from dea_coastlines_spark.sources.table import SnapshotTable
-
-    table_path = str(tmp_path / "corpus_t")
-    words = ["harbor", "glacier", "forest", "timber", "quartz", "meadow",
-             "breeze", "ember", "lantern", "orchid"]
-
-    def doc(i):
-        return (
-            f"document {i} about {words[i % 10]} and {words[(i * 3 + 1) % 10]} "
-            f"with unique vocabulary token alpha{i * 17} beta{i * 29} "
-            f"gamma{i * 7} delta{i * 11} epsilon{i * 13}"
-        )
-
-    inc1 = str(tmp_path / "inc1")
-    spark.createDataFrame(
-        [(i, doc(i)) for i in range(10)] + [(50, doc(0))],  # self-dup
-        "doc_id long, text string",
-    ).write.mode("overwrite").parquet(inc1)
-    assert run_corpus_append.main(
-        ["--table", table_path, "--increment", inc1, "--create"]
-    ) == 0
-    out1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out1 == {
-        "n_increment": 11, "n_after_self_dedup": 10, "n_after_exact": 10,
-        "n_dropped_id_collision": 0, "n_appended": 10, "version": 1,
-        "created": True,
-    }
-
-    inc2 = str(tmp_path / "inc2")
-    spark.createDataFrame(
-        [
-            (100, doc(3)),          # exact copy of existing -> stage-2 drop
-            (101, doc(7) + " x"),   # near copy -> stage-4 drop
-            (5, "entirely fresh text about submarine volcano cartography"),
-            # ^ id collision with existing doc 5 -> stage-3 drop
-            (102, "fresh survey of alpine lichen distribution patterns qq"),
-            (103, "fresh treatise on tidal resonance in enclosed basins zz"),
-        ],
-        "doc_id long, text string",
-    ).write.mode("overwrite").parquet(inc2)
-    assert run_corpus_append.main(
-        ["--table", table_path, "--increment", inc2, "--threshold", "0.8"]
-    ) == 0
-    out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out2 == {
-        "n_increment": 5, "n_after_self_dedup": 5, "n_after_exact": 4,
-        "n_dropped_id_collision": 1, "n_appended": 2, "version": 2,
-        "created": False, "compacted": False,
-    }
-    t = SnapshotTable(spark, table_path)
-    assert t.read().count() == 12
-    new_rows = t.read_incremental(since_snapshot=1)
-    assert sorted(r.doc_id for r in new_rows.select("doc_id").collect()) == [102, 103]
-    # existing doc 5 untouched by the colliding increment row
-    assert t.read().filter("doc_id = 5").collect()[0].text == doc(5)
-
-    # third run with --compact-target-bytes: append commits, then the
-    # small-file rewrite lands as its own content-identical snapshot
-    inc3 = str(tmp_path / "inc3")
-    spark.createDataFrame(
-        [(104, "fresh notes on karst aquifer tracing methods kk")],
-        "doc_id long, text string",
-    ).write.mode("overwrite").parquet(inc3)
-    assert run_corpus_append.main(
-        ["--table", table_path, "--increment", inc3,
-         "--compact-target-bytes", str(128 * 1024 * 1024)]
-    ) == 0
-    out3 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out3["n_appended"] == 1 and out3["compacted"] is True
-    assert out3["version"] == 4  # v3 = append, v4 = compact
-    ops = [s["operation"] for s in t.snapshots()]
-    assert ops[-2:] == ["append", "compact"]
-    assert t.read().count() == 13
-    assert len(t._metadata()["files"]) == 1  # unpartitioned -> one file
-    # the pre-compact snapshot still reads (CoW time travel)
-    assert t.read(snapshot=3).count() == 13
 
 
 def test_image_export_job(spark, tmp_path, capsys):
@@ -658,39 +318,6 @@ def test_validation_reads_transect_job_output(spark, tmp_path, capsys):
     assert stats["overall"]["n"] == len(feats) * len(years)
     assert abs(stats["overall"]["bias"]) < 1e-6
     assert abs(stats["overall"]["rmse"]) < 1e-6
-
-
-def test_corpus_prep_pack_sequences(spark, tmp_path, capsys):
-    """--pack-seq-len emits the concat-and-chunk layout columns with
-    exact per-shard running-sum offsets."""
-    import run_corpus_prep
-
-    docs_path = str(tmp_path / "docs_p")
-    out_path = str(tmp_path / "shards_p")
-    rows = [
-        (i, " ".join(f"tok{i}_{j}" for j in range(20 + i % 13)), "en")
-        for i in range(40)
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    ).write.mode("overwrite").parquet(docs_path)
-
-    assert run_corpus_prep.main([
-        "--documents", docs_path, "--output", out_path,
-        "--n-shards", "3", "--keep-quality", "",
-        "--pack-seq-len", "64",
-    ]) == 0
-    out = spark.read.parquet(out_path).toPandas()
-    assert {"shard", "pos", "offset", "pack_id", "pack_offset",
-            "n_packs"} <= set(out.columns)
-    ntok = {i: 20 + i % 13 for i in range(40)}
-    for _, grp in out.groupby("shard"):
-        run = 0
-        for r in grp.sort_values("pos").itertuples():
-            assert r.offset == run
-            assert r.pack_id == r.offset // 64
-            assert r.pack_offset == r.offset % 64
-            run += ntok[r.doc_id]
 
 
 def test_validation_dms_survey_format(spark, tmp_path):

@@ -67,6 +67,55 @@ def test_pip_rectangle_matches_interval_test(pts, cx, cy, half):
     np.testing.assert_array_equal(got[clear], want[clear])
 
 
+def _brute_pip(px, py, shell):
+    """Even-odd ray casting one edge at a time: the semantics of the
+    benchmark's PIP re-check (perfbench/workloads.py brute_pip)."""
+    inside = np.zeros(px.shape, bool)
+    ring = shell if np.array_equal(shell[0], shell[-1]) else np.vstack([shell, shell[:1]])
+    for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
+        crosses = (y1 > py) != (y2 > py)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
+        inside ^= crosses & (px < xint)
+    return inside
+
+
+grid_xy = st.tuples(st.integers(-6, 6), st.integers(-6, 6))
+
+
+@given(
+    st.lists(grid_xy, min_size=3, max_size=8),
+    st.lists(st.tuples(st.integers(0, 7), st.sampled_from(["repeat", "midpoint"])),
+             max_size=4),
+    st.booleans(),
+    st.lists(st.tuples(st.floats(-8, 8), st.floats(-8, 8)), min_size=1, max_size=40),
+)
+@settings(max_examples=150, deadline=None)
+def test_pip_matches_brute_force_on_degenerate_rings(verts, edits, closed, pts):
+    """points_in_polygon == the brute-force even-odd test on rings with
+    repeated vertices, collinear runs (edge midpoints inserted), closed
+    or not. Points within 1e-6 of the boundary are skipped: the kernel
+    counts them as inside, the brute force does not."""
+    ring = [tuple(map(float, v)) for v in verts]
+    for i, how in edits:
+        i %= len(ring)
+        a, b = ring[i], ring[(i + 1) % len(ring)]
+        extra = a if how == "repeat" else ((a[0] + b[0]) / 2, (a[1] + b[1]) / 2)
+        ring.insert(i + 1, extra)
+    if closed:
+        ring.append(ring[0])
+    shell = np.array(ring)
+    px = np.array([p[0] for p in pts])
+    py = np.array([p[1] for p in pts])
+    seg_a = shell
+    seg_b = np.roll(shell, -1, axis=0)
+    dist = np.array([ga.point_segments_distance(x, y, seg_a, seg_b).min()
+                     for x, y in zip(px, py)])
+    clear = dist > 1e-6
+    got = ga.points_in_polygon(px, py, shell)
+    np.testing.assert_array_equal(got[clear], _brute_pip(px, py, shell)[clear])
+
+
 @given(
     arrays(
         np.float32, st.tuples(st.integers(1, 9), st.integers(1, 6), st.integers(1, 6)),
