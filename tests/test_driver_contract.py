@@ -91,9 +91,9 @@ def test_all_queries_have_query_fn():
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="needs the sf0.01 tables")
 def test_only_streaming_dedup_is_rows_only():
-    """oracle_sql() turns a lazy builder that raises into a rows-only
-    query without any error; pin the rows-only set so a broken builder
-    fails here instead."""
+    """oracle_sql() turns a lazy oracle function that raises into a
+    rows-only query without any error; pin the rows-only set so a
+    broken oracle function fails here instead."""
     assert set(entrymod.queries()) - set(entrymod.oracle_sql()) == {
         "streaming_dedup"
     }

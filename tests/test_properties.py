@@ -107,9 +107,8 @@ def test_pip_matches_brute_force_on_degenerate_rings(verts, edits, closed, pts):
     shell = np.array(ring)
     px = np.array([p[0] for p in pts])
     py = np.array([p[1] for p in pts])
-    seg_a = shell
-    seg_b = np.roll(shell, -1, axis=0)
-    dist = np.array([ga.point_segments_distance(x, y, seg_a, seg_b).min()
+    ends = np.roll(shell, -1, axis=0)
+    dist = np.array([ga.point_segments_distance(x, y, shell, ends).min()
                      for x, y in zip(px, py)])
     clear = dist > 1e-6
     got = ga.points_in_polygon(px, py, shell)
