@@ -59,9 +59,9 @@ def _positions(key: F.Column, num_bits: int, num_hashes: int) -> F.Column:
 def _pos_rows(df: DataFrame, key_col: str, num_bits: int, num_hashes: int) -> DataFrame:
     """One row per (key, hash_i): word_idx + single-bit mask."""
     # explode_outer: a plain explode's inferred size>0/isnotnull filter
-    # inlines all num_hashes xxhash64 computations twice more per row
-    # (see operators/lm._doc_grams); positions are pmod results, never
-    # NULL, and the array is fixed-size >= 1, so no null filter needed
+    # inlines all num_hashes xxhash64 computations twice more per row;
+    # positions are pmod results, never NULL, and the array is
+    # fixed-size >= 1, so no null filter needed
     pos = F.explode_outer(
         _positions(F.col(key_col), num_bits, num_hashes)
     ).alias("_pos")

@@ -77,7 +77,7 @@ def quality_classifier(
     )
     # materialize tokens then hashes: HOFs evaluate interpreted, and an
     # inline token expression inside the hash lambda would re-tokenize
-    # per element (see text.lower_tokens)
+    # per element
     out = df.withColumn("_qc_toks", toks)
     out = out.withColumn(
         "_qc_hs", F.transform(F.col("_qc_toks"), _token_hash)

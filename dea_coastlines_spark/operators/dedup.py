@@ -527,8 +527,8 @@ def cross_corpus_neardup(
     that near-duplicates ANY reference-corpus doc (exact shingle
     Jaccard >= threshold). The training-pipeline primitive for "don't
     re-ingest what the last crawl already contributed" / "drop rows
-    near-copying a held-out set" — unlike decontaminate (n-gram
-    containment of a tiny eval vocabulary) this scores whole-document
+    near-copying a held-out set" — unlike n-gram decontamination
+    (containment of a tiny eval vocabulary) this scores whole-document
     set similarity against an arbitrarily large reference corpus.
 
     Candidates come only from shared (band, bucket) pairs ACROSS the

@@ -12,8 +12,9 @@ and end-to-end semantics are exactly-once, not at-least-once.
 
 Scale shape: each micro-batch is ONE atomic manifest commit; the
 screen (optional) is a left-anti equi join against the table's
-current keys. Source parallelism, batch sizing, and backpressure stay
-Spark's (maxFilesPerTrigger etc.).
+current keys — at corpus scale swap the key read for the Bloom path
+(operators/bloom.bloom_screen), same join shape. Source parallelism,
+batch sizing, and backpressure stay Spark's (maxFilesPerTrigger etc.).
 """
 
 from __future__ import annotations

@@ -81,9 +81,9 @@ HEAVY_SF_QUERIES = [
     "ngram_jaccard", "charset_jaccard",
     "embedding_neardup", "minhash_pairs", "simhash_pairs",
     "lsh_ann_topk", "ivf_ann_topk", "semdedup", "crosscorpus_dedup",
-    "dedup_clusters",
+    "dedup_clusters", "url_domain_caps", "bloom_screen",
     "rates_regression", "group_percentiles", "cell_rollup",
-    "interval_join", "interval_overlap",
+    "interval_join", "interval_overlap", "quality_classifier",
     "hll_distinct", "heavy_hitters", "pagerank", "ivfpq_ann_topk",
     "triangle_counts", "streaming_hll_parity",
     "weighted_sample", "resample_interpolate",
