@@ -20,6 +20,9 @@ inside Arrow UDFs (mapInPandas / applyInPandas) — never per-row Python.
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import numpy as np
 
 from . import jpeg, png, tiff
@@ -65,13 +68,32 @@ def encode_tile(img: np.ndarray, fmt: str) -> bytes:
     raise ValueError(f"unknown tile format {fmt!r}")
 
 
+class TileDecodeError(ValueError):
+    """Tile bytes the codec of their format cannot decode."""
+
+
+# what the codecs raise on truncated, bit-flipped or garbage bytes:
+# their own ValueErrors, short struct/zlib reads, header fields that
+# index past the buffer or name a missing table or tag
+_DAMAGE = (
+    ValueError, KeyError, IndexError, OverflowError, struct.error, zlib.error,
+)
+
+
 def decode_tile(buf: bytes, fmt: str) -> np.ndarray:
-    """Decode tile bytes to a float32 (h, w) water-index array (NaN nodata)."""
-    if fmt == "png":
-        return dequantize(png.decode_gray(buf))
-    if fmt == "tiff":
-        return tiff.decode_f32(buf)
-    if fmt == "jpeg":
+    """Decode tile bytes to a float32 (h, w) water-index array (NaN nodata).
+
+    Malformed bytes raise `TileDecodeError`, chained from the codec's
+    own error. The shape comes from the bytes' header: a damaged header
+    can still decode to the wrong (h, w), so callers that know the
+    tile's size compare it (operators/integrity.py does)."""
+    if fmt not in ("png", "tiff", "jpeg"):
+        raise ValueError(f"unknown tile format {fmt!r}")
+    try:
+        if fmt == "png":
+            return dequantize(png.decode_gray(buf))
+        if fmt == "tiff":
+            return tiff.decode_f32(buf)
         x = (jpeg.decode_gray(buf).astype(np.float32) / 127.5 - 1.0).astype(
             np.float32
         )
@@ -79,7 +101,8 @@ def decode_tile(buf: bytes, fmt: str) -> np.ndarray:
         if payload is not None:
             x[jpeg.nan_mask_unpack(payload)] = np.nan
         return x
-    raise ValueError(f"unknown tile format {fmt!r}")
+    except _DAMAGE as e:
+        raise TileDecodeError(f"malformed {fmt} tile: {e}") from e
 
 
 def psnr(a: np.ndarray, b: np.ndarray, peak: float = 2.0) -> float:

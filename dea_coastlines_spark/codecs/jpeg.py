@@ -376,8 +376,13 @@ def decode_gray(buf: bytes) -> np.ndarray:
         data.append(b)
         i += 1
 
-    rdr = _BitReader(bytes(data))
     bh, bw = (h + 7) // 8, (w + 7) // 8
+    # each block takes at least 2 bits (a DC size code and an EOB), so
+    # a frame size the data cannot hold is a damaged header; checked
+    # before the (blocks, 64) coefficient array is allocated
+    if 2 * bh * bw > 8 * len(data):
+        raise ValueError("entropy-coded data too short for the frame size")
+    rdr = _BitReader(bytes(data))
     zz = np.zeros((bh * bw, 64), np.int64)
     prev_dc = 0
     for n in range(bh * bw):

@@ -120,6 +120,8 @@ def decode_gray(buf: bytes) -> np.ndarray:
             idat.append(payload)
         elif tag == b"IEND":
             break
+    if bit_depth is None:
+        raise ValueError("PNG has no IHDR chunk")
     raw = zlib.decompress(b"".join(idat))
     bpp = max(1, bit_depth // 8)
     stride = w * bpp

@@ -235,87 +235,6 @@ def shuffle_shards(
     )
 
 
-def pack_sequences(
-    df: DataFrame,
-    key_col: str,
-    token_count_col: str,
-    seq_len: int,
-    n_shards: int = 1,
-    seed: int = 0,
-) -> DataFrame:
-    """GPT-style sequence packing for LLM pretraining export: documents
-    are laid out in a deterministic shuffled order per shard, logically
-    CONCATENATED, and chunked into fixed `seq_len` token windows — the
-    standard concat-and-chunk packing (documents may straddle a chunk
-    boundary; the reader slices by offset).
-
-    Emits per document:
-      shard        — deterministic shard (same u01 chain as
-                     shuffle_shards, so the layout is a pure function
-                     of (key, seed): re-runs and re-partitionings are
-                     byte-identical)
-      pos          — rank of the document inside its shard stream
-      offset       — first-token offset in the shard's concatenated
-                     stream
-      pack_id      — chunk index containing the first token
-                     (offset div seq_len)
-      pack_offset  — offset within that chunk
-      n_packs      — number of chunks the document touches
-
-    Plan & scale: ONE shuffle (on shard); offset is a running SUM
-    window over the per-shard deterministic order — the same plan
-    shape as shuffle_shards, and every output is exact integer math
-    (full SQL-window oracle). Skew: shards are u01-uniform; a shard's
-    window sort is the standard price of an ordered layout and is
-    bounded by corpus/n_shards."""
-    if seq_len < 1:
-        raise ValueError("seq_len must be >= 1")
-    if n_shards < 1:
-        raise ValueError("n_shards must be >= 1")
-    u = u01(key_col, seed)
-    with_shard = df.withColumn("_u", u).withColumn(
-        "shard",
-        F.least(F.floor(F.col("_u") * n_shards), F.lit(n_shards - 1)).cast("int"),
-    )
-    w = Window.partitionBy("shard").orderBy("_u", key_col)
-    cnt = F.col(token_count_col).cast("long")
-    out = (
-        with_shard.withColumn("pos", F.row_number().over(w) - 1)
-        .withColumn(
-            "offset",
-            F.coalesce(
-                F.sum(cnt).over(
-                    w.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0).cast("long"),
-            ),
-        )
-        .drop("_u")
-    )
-    # integer `div`, not floor(double division): a double loses exact
-    # integer identity past 2^53, and per-shard token streams at the
-    # target scale can reach that — the oracle's `//` is exact, so the
-    # engines would diverge precisely where it can't be tested
-    return (
-        out.withColumn(
-            "pack_id", F.expr(f"offset div {int(seq_len)}").cast("long")
-        )
-        .withColumn(
-            "pack_offset", F.pmod(F.col("offset"), F.lit(seq_len)).cast("long")
-        )
-        .withColumn(
-            "n_packs",
-            F.when(cnt <= 0, F.lit(0).cast("long")).otherwise(
-                F.expr(
-                    f"(offset + `{token_count_col}` - 1) div {int(seq_len)}"
-                )
-                - F.col("pack_id")
-                + 1
-            ).cast("long"),
-        )
-    )
-
-
 def weighted_systematic_sample(
     df: DataFrame,
     key_col: str,
@@ -342,8 +261,8 @@ def weighted_systematic_sample(
     Scale shape: the global cumulative sum is two-phase — a per-bucket
     window over the deterministic order (parallel across n_buckets)
     plus a bucket-offset join from an n_buckets-row aggregate — the
-    same plan family as pack_sequences, never a single-partition global
-    window.  W itself is a 1-row aggregate
+    same plan family as shuffle_shards' per-shard window, never a
+    single-partition global window.  W itself is a 1-row aggregate
     broadcast-crossed in (a scalar subquery).
 
     Returns the selected rows: (key, weight, cum_w, first_pick,

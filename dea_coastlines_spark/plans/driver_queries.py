@@ -3294,61 +3294,6 @@ FROM s ORDER BY shard, pos
 """
 
 
-def q_pack_sequences(spark, sf_dir):
-    """GPT-style concat-and-chunk sequence packing over the documents
-    table (seq_len 512, 8 shards): deterministic per-shard layout,
-    exact integer offsets/pack assignments — full SQL-window oracle."""
-    from ..operators.sampling import pack_sequences
-
-    # explicit whitespace class: Java \s matches \x0B, RE2 \s (the
-    # oracle's) does not
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "n_tok",
-        F.size(
-            F.filter(
-                F.split(F.col("text"), "[ \\t\\n\\r\\f\\x0B]+"),
-                lambda t: t != "",
-            )
-        ).cast("long"),
-    )
-    return (
-        pack_sequences(d, "doc_id", "n_tok", seq_len=512, n_shards=8, seed=7)
-        .select("doc_id", "shard", "pos", "offset", "pack_id",
-                "pack_offset", "n_packs")
-        .orderBy("doc_id")
-    )
-
-
-def _pack_sequences_oracle() -> str:
-    from ..operators.sampling import u01_sql
-
-    u = u01_sql("doc_id", 7)
-    return rf"""
-WITH d AS (
-  SELECT doc_id,
-         len(list_filter(string_split_regex(text, '[ \t\n\r\f\x0B]+'),
-                         t -> t <> ''))::BIGINT AS n_tok,
-         {u} AS u
-  FROM documents),
-s AS (SELECT *, LEAST(CAST(FLOOR(u * 8) AS INT), 7) AS shard FROM d),
-o AS (
-  SELECT doc_id, n_tok, shard,
-         CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY u, doc_id) - 1
-              AS INT) AS pos,
-         COALESCE(SUM(n_tok) OVER (PARTITION BY shard ORDER BY u, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  0)::BIGINT AS "offset"
-  FROM s)
-SELECT doc_id, shard, pos, "offset",
-       ("offset" // 512)::BIGINT AS pack_id,
-       ("offset" % 512)::BIGINT AS pack_offset,
-       CASE WHEN n_tok <= 0 THEN 0
-            ELSE (("offset" + n_tok - 1) // 512) - ("offset" // 512) + 1
-       END::BIGINT AS n_packs
-FROM o ORDER BY doc_id
-"""
-
-
 def q_ar_bucket_shards(spark, sf_dir):
     """Aspect-ratio bucketing + fixed-size shard packing (SDXL-style
     training export over the image corpus shape). Image sizes are
@@ -4424,100 +4369,6 @@ def q_merge_upsert(spark, sf_dir):
     )
 
 
-# q_jsonl_ingest stages its JSONL rendering once per (application,
-# sf_dir); temp roots are removed at interpreter exit (same discipline
-# as _MERGE_UPSERT_TABLES).
-_JSONL_DIRS: dict[tuple[str, str], str] = {}
-
-# the deterministic malformed shard injected next to the good JSONL —
-# truncated objects and non-JSON lines, the shapes crawl shards
-# actually break in. COUNT is part of the oracle contract below.
-_JSONL_BAD_LINES = (
-    '{"doc_id": 1, "lang": "en", "text": "truncated',
-    "this line is not JSON at all",
-    '{"doc_id": oops}',
-    '{"doc_id": 2 "lang": "de"}',
-    "<html>stray log output</html>",
-    '{"doc_id":',
-    "}{",
-)
-
-
-def q_jsonl_ingest(spark, sf_dir):
-    """JSONL corpus ingress end-to-end (sources/jsonl.py): render the
-    documents table to newline-delimited JSON (executor-parallel sink),
-    inject a deterministic malformed shard, scan it back with a PINNED
-    schema in PERMISSIVE mode capturing unparseable lines, and
-    aggregate per-language doc counts + character volume plus one
-    quarantine row. The oracle recomputes the per-language aggregate
-    straight from the parquet and pins the quarantine count to the
-    injected-line constant — verifying the JSON round trip (values
-    survive encode/decode exactly) AND the malformed-capture contract
-    (every bad line lands in quarantine, no good line does).
-
-    NOTE on timing semantics: the JSONL staging WRITE executes at build
-    time, memoized per (applicationId, sf_dir); a bench timing measures
-    the JSONL SCAN + aggregate. (Reference ingests per-path files,
-    coastlines/raster.py:240-280; this is the tabular corpus analog.)
-    """
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..sources.jsonl import read_jsonl_corpus, write_jsonl
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _JSONL_DIRS.get(key)
-    if path is None:
-        root = tempfile.mkdtemp(prefix="jsonl_ingest_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = root + "/docs"
-        write_jsonl(
-            _t(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
-            path,
-        )
-        with open(path + "/part-corrupt-extra.json", "w") as f:
-            f.write("\n".join(_JSONL_BAD_LINES) + "\n")
-        _JSONL_DIRS[key] = path
-
-    df = read_jsonl_corpus(
-        spark, path, "doc_id bigint, lang string, text string"
-    )
-    # ONE scan, conditional key — not split_corrupt: a two-branch split
-    # would parse the corpus twice (or force a checkpoint), and a
-    # quarantine-only branch trips Spark's corrupt-column-only scan
-    # restriction. Corrupt rows have NULL text, so their group's
-    # sum_chars is NULL — the oracle mirrors that.
-    from ..sources.jsonl import DEFAULT_CORRUPT_COL as _CC
-
-    key = (
-        F.when(F.col(_CC).isNotNull(), F.lit("__quarantine__"))
-        .otherwise(F.coalesce("lang", F.lit("__null__")))
-    )
-    return (
-        df.groupBy(key.alias("lang"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.length("text")).cast("bigint").alias("sum_chars"),
-        )
-        .orderBy("lang")
-    )
-
-
-ORACLE_JSONL_INGEST = f"""
-SELECT COALESCE(lang, '__null__') AS lang,
-       COUNT(*) AS n_docs,
-       CAST(SUM(LENGTH(text)) AS BIGINT) AS sum_chars
-FROM documents
-GROUP BY 1
-UNION ALL
-SELECT '__quarantine__' AS lang,
-       {len(_JSONL_BAD_LINES)} AS n_docs,
-       CAST(NULL AS BIGINT) AS sum_chars
-ORDER BY lang
-"""
-
-
 def q_caption_alignment(spark, sf_dir):
     """Cross-modal caption↔image alignment gate (LAION/DataComp-style
     CLIP-score filtering with the documented deterministic hash towers:
@@ -4734,34 +4585,6 @@ def _cms_oracle() -> str:
     return cms_sql("documents", "text", k=20, depth=4, width=1024)
 
 
-def q_pagerank(spark, sf_dir):
-    """8 synchronous PageRank iterations over a deterministic citation
-    graph (operators/pagerank.py) in fixed-point integer arithmetic:
-    every division is an integer div and every sum an integer sum, so
-    the ranks are partition-order invariant and hash-verifiable — the
-    oracle unrolls the same recurrence as 8 chained GROUP BY CTEs
-    (aggregation inside recursive CTEs is not portable SQL; a fixed
-    iteration count needs no recursion). Top-20 by rank."""
-    from ..operators.pagerank import pagerank_fixed_point, synth_citation_edges
-
-    docs = _t(spark, sf_dir, "documents")
-    n = docs.count()  # one count job shared by synth + recurrence
-    edges = synth_citation_edges(docs, n=n)
-    nodes = docs.select(F.col("doc_id").alias("id"))
-    ranks = pagerank_fixed_point(nodes, edges, id_col="id", iters=8, n=n)
-    return (
-        ranks.orderBy(F.desc("rank_fp"), F.asc("id"))
-        .limit(20)
-        .select(F.col("id").alias("doc_id"), "rank_fp")
-    )
-
-
-def _pagerank_oracle() -> str:
-    from ..operators.pagerank import pagerank_sql
-
-    return pagerank_sql(iters=8, k=20)
-
-
 def q_ivfpq_ann_topk(spark, sf_dir):
     """IVF-PQ ANN top-5 (operators/pq.py): the memory-scale path of the
     ANN family — 8x64 product quantization (~32x vector compression:
@@ -4804,38 +4627,6 @@ def ivfpq_ann_oracle_sql() -> str:
     return ivfpq_oracle_sql(coarse, codebook, n_queries=10, k=5, nprobe=4)
 
 
-def q_triangle_counts(spark, sf_dir):
-    """Per-node triangle counts + clustering coefficients over the
-    deterministic citation graph (operators/triangles.py), top-20 by
-    participation. The Spark plan uses degree-ordered orientation
-    (compact-forward) so hub wedges can't explode at web scale; the
-    oracle counts the same triangles from the unoriented a<b<c form —
-    orientation changes the plan, never the integers."""
-    from ..operators.pagerank import synth_citation_edges
-    from ..operators.triangles import triangle_counts
-
-    docs = _t(spark, sf_dir, "documents")
-    edges = synth_citation_edges(docs)
-    return (
-        triangle_counts(edges)
-        .orderBy(F.desc("tri_count"), F.asc("id"))
-        .limit(20)
-    )
-
-
-def _triangles_oracle() -> str:
-    from ..operators.sketch import _splitmix_sql_fragment
-    from ..operators.triangles import triangles_sql
-
-    sm = _splitmix_sql_fragment("CAST(id * 31 + k AS UBIGINT)::UHUGEINT")
-    edges_cte = f"""nodes AS (SELECT doc_id AS id FROM documents),
-nn AS (SELECT COUNT(*) AS n FROM nodes),
-edges AS (
-  SELECT id AS src, CAST(({sm}) % (SELECT n FROM nn)::UHUGEINT AS BIGINT) AS dst
-  FROM nodes, (VALUES (1),(2),(3)) AS ks(k))"""
-    return triangles_sql(edges_cte) + " ORDER BY tri_count DESC, id LIMIT 20"
-
-
 def q_resample_interpolate(spark, sf_dir):
     """Per-user 6-hour resampling with linear interpolation
     (operators/resample.py): row-local sequence() grid, one union + one
@@ -4875,50 +4666,6 @@ def _weighted_sample_oracle() -> str:
     from ..operators.sampling import weighted_systematic_sql
 
     return weighted_systematic_sql("documents", "doc_id", "n_chars", n=100)
-
-
-def q_quality_classifier(spark, sf_dir):
-    """Hashed-feature linear quality classifier scoring (fastText-style
-    corpus gate, operators/classifier.py): zero-Python zero-shuffle
-    map-only plan; the oracle replays the polynomial token hash,
-    bucket-weight mix, and hard-sigmoid score in DuckDB list lambdas."""
-    from ..operators.classifier import quality_classifier
-
-    d = _t(spark, sf_dir, "documents")
-    return quality_classifier(d).select(
-        "doc_id", "n_feats", "score", "keep"
-    ).localCheckpoint(eager=False).orderBy("doc_id")
-
-
-ORACLE_QUALITY_CLASSIFIER = """
-WITH t AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-  FROM documents),
-h AS (
-  SELECT doc_id, len(toks) AS n_feats,
-         list_transform(toks, tok ->
-           list_reduce(
-             list_prepend(CAST(0 AS BIGINT),
-               list_transform(range(1, length(tok) + 1),
-                              i -> CAST(ascii(substr(tok, CAST(i AS INT), 1))
-                                        AS BIGINT))),
-             (hh, c) -> (hh * 31 + c) % 1000003)) AS hs
-  FROM t),
-s AS (
-  SELECT doc_id, CAST(n_feats AS INT) AS n_feats,
-         CASE WHEN n_feats > 0 THEN
-           ROUND(LEAST(1.0, GREATEST(0.0,
-             (4.0 * list_reduce(
-                list_prepend(0.0,
-                  list_transform(hs, hv ->
-                    ((hv % 1024) * 2654435761) % 4096 / 2048.0 - 1.0)),
-                (a, w) -> a + w) / n_feats) * 0.25 + 0.5)), 6)
-         END AS score
-  FROM h)
-SELECT doc_id, n_feats, score,
-       COALESCE(score >= 0.5, FALSE) AS keep
-FROM s ORDER BY doc_id
-"""
 
 
 def q_interval_join(spark, sf_dir):
@@ -5114,111 +4861,6 @@ FROM final GROUP BY 1 ORDER BY 1
 """
 
 
-# Deterministic messy-URL synthesis shared by the web-curation queries:
-# every canonicalization branch is exercised (uppercase scheme/host,
-# www., default and non-default ports, tracking params, fragments,
-# trailing slash, co.uk/com.au second-level suffixes). The DuckDB
-# oracles rebuild the identical strings with CASE arms.
-def _synth_url(k: F.Column) -> F.Column:
-    host = F.element_at(
-        F.array(
-            F.lit("Example.COM"),
-            F.lit("news.site.co.uk"),
-            F.lit("blog.example.org"),
-            F.lit("a.b.shop.com.au"),
-            F.lit("media.dupe.net"),
-        ),
-        (k % 5 + 1).cast("int"),
-    )
-    scheme = F.when(k % 4 == 0, F.lit("HTTP")).otherwise(F.lit("https"))
-    www = F.when(k % 7 == 0, F.lit("www.")).otherwise(F.lit(""))
-    port = (
-        F.when((k % 11 == 0) & (k % 4 == 0), F.lit(":80"))
-        .when((k % 11 == 0) & (k % 4 != 0), F.lit(":443"))
-        .when(k % 11 == 1, F.lit(":8080"))
-        .otherwise(F.lit(""))
-    )
-    path = F.concat(F.lit("/P/"), (k % 37).cast("string"))
-    trailing = F.when(k % 5 == 0, F.lit("/")).otherwise(F.lit(""))
-    query = (
-        F.when(k % 6 == 0, F.concat(F.lit("?utm_source=feed&page="), (k % 13).cast("string")))
-        .when(k % 6 == 1, F.concat(F.lit("?page="), (k % 13).cast("string"), F.lit("&gclid=z")))
-        .when(k % 6 == 2, F.lit("?ref=home"))
-        .when(k % 6 == 3, F.lit("?b=2&a=1"))
-        .otherwise(F.lit(""))
-    )
-    frag = F.when(k % 9 == 0, F.lit("#Sec-2")).otherwise(F.lit(""))
-    return F.concat(
-        scheme, F.lit("://"), www, host, port, path, trailing, query, frag
-    )
-
-
-# The same synthesis as a DuckDB SQL fragment (k = doc_id).
-_SYNTH_URL_SQL = """
-    (CASE WHEN doc_id % 4 = 0 THEN 'HTTP' ELSE 'https' END)
-    || '://'
-    || (CASE WHEN doc_id % 7 = 0 THEN 'www.' ELSE '' END)
-    || (CASE CAST(doc_id % 5 AS INTEGER)
-          WHEN 0 THEN 'Example.COM' WHEN 1 THEN 'news.site.co.uk'
-          WHEN 2 THEN 'blog.example.org' WHEN 3 THEN 'a.b.shop.com.au'
-          ELSE 'media.dupe.net' END)
-    || (CASE WHEN doc_id % 11 = 0 AND doc_id % 4 = 0 THEN ':80'
-             WHEN doc_id % 11 = 0 THEN ':443'
-             WHEN doc_id % 11 = 1 THEN ':8080' ELSE '' END)
-    || '/P/' || CAST(doc_id % 37 AS VARCHAR)
-    || (CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END)
-    || (CASE CAST(doc_id % 6 AS INTEGER)
-          WHEN 0 THEN '?utm_source=feed&page=' || CAST(doc_id % 13 AS VARCHAR)
-          WHEN 1 THEN '?page=' || CAST(doc_id % 13 AS VARCHAR) || '&gclid=z'
-          WHEN 2 THEN '?ref=home' WHEN 3 THEN '?b=2&a=1' ELSE '' END)
-    || (CASE WHEN doc_id % 9 = 0 THEN '#Sec-2' ELSE '' END)
-"""
-
-# DuckDB replica of operators/web.py canonical_url + registered-domain
-# extraction over a column named `url` (RE2 patterns, \\1 group refs).
-_CANON_SQL = r"""
-  canon0 AS (
-    SELECT *, regexp_replace(url, '#.*', '') AS u0 FROM urls),
-  canon1 AS (
-    SELECT *, lower(regexp_extract(u0, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*', 0))
-              || substring(u0, length(regexp_extract(u0, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*', 0)) + 1)
-              AS u1 FROM canon0),
-  canon2 AS (
-    SELECT *, regexp_replace(
-                regexp_replace(
-                  regexp_replace(u1, '^(http://[^/:?#]+):80($|[/?#])', '\1\2'),
-                  '^(https://[^/:?#]+):443($|[/?#])', '\1\2'),
-                '^(https?://)www\.', '\1') AS u2 FROM canon1),
-  canon AS (
-    SELECT *,
-      regexp_replace(split_part(u2, '?', 1), '/$', '')
-      || (CASE WHEN contains(u2, '?')
-                AND len(list_filter(string_split(substring(u2, instr(u2, '?') + 1), '&'),
-                        p -> NOT regexp_matches(p, '^(utm_[a-z0-9_]*|fbclid|gclid|msclkid|mc_cid|mc_eid|ref)='))) > 0
-           THEN '?' || array_to_string(
-                  list_filter(string_split(substring(u2, instr(u2, '?') + 1), '&'),
-                    p -> NOT regexp_matches(p, '^(utm_[a-z0-9_]*|fbclid|gclid|msclkid|mc_cid|mc_eid|ref)=')), '&')
-           ELSE '' END) AS canon_url
-    FROM canon2),
-  parts AS (
-    SELECT *,
-      regexp_extract(canon_url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
-    FROM canon),
-  domains AS (
-    SELECT *,
-      CASE WHEN len(string_split(host, '.')) >= 3
-                AND array_to_string(string_split(host, '.')[-2:], '.') IN
-                    ('co.uk','org.uk','ac.uk','gov.uk','com.au','net.au',
-                     'org.au','gov.au','co.jp','or.jp','ne.jp','com.br',
-                     'com.cn','co.in','co.nz','co.za')
-           THEN array_to_string(string_split(host, '.')[-3:], '.')
-           ELSE array_to_string(
-                  string_split(host, '.')[-least(len(string_split(host, '.')), 2):], '.')
-      END AS registered_domain
-    FROM parts)
-"""
-
-
 def q_temperature_mix(spark, sf_dir):
     """Temperature-based corpus mixing (operators/sampling.py:
     temperature_mix — the mT5/XLM-R n^(1/tau) scheme): per-source
@@ -5263,83 +4905,6 @@ FROM fan ORDER BY doc_id, epoch
 """
 
 
-def q_url_domain_caps(spark, sf_dir):
-    """C4/RefinedWeb-style web-corpus front half (operators/web.py):
-    canonicalize deterministic messy URLs, extract the registered
-    domain (two-level-suffix aware), then keep at most 5 docs per
-    domain, longest text first — via the skew-safe salted two-stage
-    cap, which is row-identical to the oracle's single ROW_NUMBER
-    window because the ordering (n_chars DESC, doc_id ASC) is total."""
-    from ..operators.web import cap_per_domain, with_url_parts
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars", _synth_url(F.col("doc_id")).alias("url"))
-    )
-    parts = with_url_parts(d)
-    kept = cap_per_domain(parts, 5, order_col="n_chars")
-    return kept.select(
-        "doc_id", "canon_url", "host", "registered_domain"
-    ).orderBy("doc_id")
-
-
-ORACLE_URL_DOMAIN_CAPS = (
-    "WITH urls AS (SELECT doc_id, n_chars, "
-    + _SYNTH_URL_SQL
-    + " AS url FROM documents),\n"
-    + _CANON_SQL
-    + """,
-ranked AS (
-  SELECT doc_id, canon_url, host, registered_domain,
-         ROW_NUMBER() OVER (PARTITION BY registered_domain
-                            ORDER BY n_chars DESC, doc_id) AS rn
-  FROM domains)
-SELECT doc_id, canon_url, host, registered_domain
-FROM ranked WHERE rn <= 5 ORDER BY doc_id
-"""
-)
-
-
-def q_bloom_screen(spark, sf_dir):
-    """Bloom-filter corpus screening (operators/bloom.py): docs with
-    doc_id % 3 = 0 form the seen corpus, the rest are incoming; keys
-    are synthesized URLs with deliberate collisions (path = doc_id %
-    499) so a meaningful share of incoming keys is genuinely seen. The
-    output is EXACT — the filter has no false negatives and every
-    bloom-positive is confirmed against the real seen table — so the
-    oracle is a plain NOT IN anti-join, independent of the xxhash64
-    bit layout."""
-    from ..operators.bloom import bloom_screen
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.lit("https://ex"),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit(".org/p/"),
-            (F.col("doc_id") % 499).cast("string"),
-        ).alias("url"),
-    )
-    seen = d.filter(F.col("doc_id") % 3 == 0).select("url")
-    incoming = d.filter(F.col("doc_id") % 3 != 0)
-    kept = bloom_screen(incoming, seen, "url", num_bits=1 << 16, num_hashes=5)
-    return kept.select("doc_id", "url").orderBy("doc_id")
-
-
-ORACLE_BLOOM_SCREEN = """
-WITH d AS (
-  SELECT doc_id,
-         'https://ex' || CAST(doc_id % 7 AS VARCHAR) || '.org/p/'
-           || CAST(doc_id % 499 AS VARCHAR) AS url
-  FROM documents),
-seen AS (SELECT url FROM d WHERE doc_id % 3 = 0),
-inc AS (SELECT * FROM d WHERE doc_id % 3 <> 0)
-SELECT doc_id, url FROM inc
-WHERE url NOT IN (SELECT url FROM seen)
-ORDER BY doc_id
-"""
-
-
 # ---------------------------------------------------------------------------
 # Registry. Key order is the order of __spark_entry__.queries(), which
 # follows QUERY_ORDER below: the driver's correctness snapshot
@@ -5356,7 +4921,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "group_percentiles": q_group_percentiles,
     "asof_join": q_asof_join,
     "sessionize": q_sessionize,
-    "pack_sequences": q_pack_sequences,
     "ar_bucket_shards": q_ar_bucket_shards,
     "audio_features": q_audio_features,
     "merge_upsert": q_merge_upsert,
@@ -5365,21 +4929,15 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "semdedup": q_semdedup,
     "dms2dd": q_dms2dd,
     "crosscorpus_dedup": q_crosscorpus_dedup,
-    "url_domain_caps": q_url_domain_caps,
-    "bloom_screen": q_bloom_screen,
     "temperature_mix": q_temperature_mix,
-    "jsonl_ingest": q_jsonl_ingest,
     "interval_join": q_interval_join,
     "interval_overlap": q_interval_overlap,
-    "quality_classifier": q_quality_classifier,
     "caption_alignment": q_caption_alignment,
     "hard_negatives": q_hard_negatives,
     "table_evolution": q_table_evolution,
     "hll_distinct": q_hll_distinct,
     "heavy_hitters": q_heavy_hitters,
-    "pagerank": q_pagerank,
     "ivfpq_ann_topk": q_ivfpq_ann_topk,
-    "triangle_counts": q_triangle_counts,
     "streaming_hll_parity": q_streaming_hll_parity,
     "tile_pyramid": q_tile_pyramid,
     "weighted_sample": q_weighted_sample,
@@ -5486,29 +5044,22 @@ ORACLES: dict[str, str] = {
     "ar_bucket_shards": _ar_shards_oracle(),
     "shuffle_shards": _shards_oracle(),
     "stratified_sample": _sampling_oracle(),
-    "pack_sequences": _pack_sequences_oracle(),
     "train_eval_split": _split_oracle(),
     "asof_join": ORACLE_ASOF_JOIN,
     "sessionize": ORACLE_SESSIONIZE,
     "streaming_dedup_parity": ORACLE_STREAMING_DEDUP_PARITY,
     "dms2dd": ORACLE_DMS2DD,
     "crosscorpus_dedup": _crosscorpus_sql(),
-    "url_domain_caps": ORACLE_URL_DOMAIN_CAPS,
-    "bloom_screen": ORACLE_BLOOM_SCREEN,
     "temperature_mix": _temperature_mix_sql(),
-    "jsonl_ingest": ORACLE_JSONL_INGEST,
     "interval_join": ORACLE_INTERVAL_JOIN,
     "interval_overlap": ORACLE_INTERVAL_OVERLAP,
-    "quality_classifier": ORACLE_QUALITY_CLASSIFIER,
     "table_evolution": ORACLE_TABLE_EVOLUTION,
     "hll_distinct": _hll_oracle(),
     "heavy_hitters": _cms_oracle(),
-    "pagerank": _pagerank_oracle(),
     # ivfpq_ann_topk: registered lazily in __spark_entry__.oracle_sql()
     # (reads the testdata parquet + runs two k-means fits — an eager
     # call here would break the whole module import on a machine
     # without the testdata dir, and bill every importer for the fit)
-    "triangle_counts": _triangles_oracle(),
     "streaming_hll_parity": _hll_stream_oracle(),
     "weighted_sample": _weighted_sample_oracle(),
     "resample_interpolate": _resample_oracle(),

@@ -59,7 +59,7 @@ def main(argv=None) -> int:
         table.create(hs, partition_by=["radius_m"])
     else:
         table.overwrite_partitions(hs)
-    n = table.read().count()
+    n = table.snapshots()[-1]["n_rows"]
 
     n_layers = 0
     if args.gpkg:

@@ -81,11 +81,11 @@ HEAVY_SF_QUERIES = [
     "ngram_jaccard", "charset_jaccard",
     "embedding_neardup", "minhash_pairs", "simhash_pairs",
     "lsh_ann_topk", "ivf_ann_topk", "semdedup", "crosscorpus_dedup",
-    "dedup_clusters", "url_domain_caps", "bloom_screen",
+    "dedup_clusters",
     "rates_regression", "group_percentiles", "cell_rollup",
-    "interval_join", "interval_overlap", "quality_classifier",
-    "hll_distinct", "heavy_hitters", "pagerank", "ivfpq_ann_topk",
-    "triangle_counts", "streaming_hll_parity",
+    "interval_join", "interval_overlap",
+    "hll_distinct", "heavy_hitters", "ivfpq_ann_topk",
+    "streaming_hll_parity",
     "weighted_sample", "resample_interpolate",
 ]
 
@@ -203,13 +203,12 @@ def main() -> None:
         "  coalesces those exchanges by BYTES to a handful of tasks and",
         "  the hottest bucket straggles. The extra exchanges are the",
         "  trade for full-width CPU (measured 2x on ngram_jaccard).",
-        "- `pagerank` audits as 0 Exchanges because each iteration is",
-        "  localCheckpoint-truncated (Pregel-style): the audited plan is",
-        "  the final ranks read; the per-iteration join+agg plans (2",
-        "  shuffles each) execute at build time, like dedup_clusters'",
-        "  rounds. `streaming_hll_parity` / `merge_upsert` /",
-        "  `table_evolution` similarly time the final store read — their",
-        "  write paths run once at build, memoized per session.",
+        "- `dedup_clusters` audits only the final read: its label",
+        "  propagation rounds are localCheckpoint-truncated and their",
+        "  join+agg plans execute at build time. `streaming_hll_parity`",
+        "  / `merge_upsert` / `table_evolution` similarly time the final",
+        "  store read — their write paths run once at build, memoized",
+        "  per session.",
     ]
     if heavy_rows:
         out += [

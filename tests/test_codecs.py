@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from dea_coastlines_spark.codecs import image, png, tiff
 
@@ -133,6 +135,57 @@ def test_mixed_corpus_formats_decode():
         arr = image.decode_tile(bytes(r["bytes"]), r["fmt"])
         assert arr.shape == (36, 36)
         assert np.isfinite(arr[~np.isnan(arr)]).all()
+
+
+_GOOD = {f: image.encode_tile(_tile(7, 16, 16), f) for f in ("png", "tiff", "jpeg")}
+
+
+@st.composite
+def _damaged(draw):
+    fmt = draw(st.sampled_from(sorted(_GOOD)))
+    buf = _GOOD[fmt]
+    kind = draw(st.sampled_from(["truncate", "flip", "random"]))
+    if kind == "truncate":
+        return fmt, buf[: draw(st.integers(0, len(buf) - 1))]
+    if kind == "flip":
+        out = bytearray(buf)
+        for pos in draw(st.lists(st.integers(0, 8 * len(buf) - 1),
+                                 min_size=1, max_size=4)):
+            out[pos // 8] ^= 1 << (pos % 8)
+        return fmt, bytes(out)
+    # random bytes behind a good tile's first 8 bytes (PNG signature,
+    # TIFF header, JPEG SOI + first marker), so the header parser runs
+    return fmt, buf[:8] + draw(st.binary(max_size=2 * len(buf)))
+
+
+@given(_damaged())
+@settings(max_examples=600, deadline=None)
+def test_decode_damaged_tile_returns_2d_or_raises_typed_error(case):
+    fmt, buf = case
+    try:
+        out = image.decode_tile(buf, fmt)
+    except image.TileDecodeError as e:
+        assert e.__cause__ is not None
+    else:
+        assert out.ndim == 2 and out.dtype == np.float32
+
+
+def test_decode_error_cause_frame_size_and_unknown_format():
+    import zlib
+
+    with pytest.raises(image.TileDecodeError) as ei:
+        image.decode_tile(_GOOD["png"][:60], "png")
+    assert isinstance(ei.value.__cause__, zlib.error)
+    # a JPEG frame header claiming 65535 x 65535 pixels fails before
+    # its coefficient array is allocated
+    buf = bytearray(_GOOD["jpeg"])
+    sof = buf.index(b"\xff\xc0")
+    buf[sof + 5 : sof + 9] = b"\xff\xff\xff\xff"
+    with pytest.raises(image.TileDecodeError, match="too short"):
+        image.decode_tile(bytes(buf), "jpeg")
+    with pytest.raises(ValueError) as ei:
+        image.decode_tile(_GOOD["png"], "webp")
+    assert not isinstance(ei.value, image.TileDecodeError)
 
 
 def test_psnr_mismatched_nan_mask_fails():

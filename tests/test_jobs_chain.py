@@ -70,17 +70,27 @@ def test_job_chain(spark, chain_dirs, capsys):
     assert out2b["n_points"] == 2 * out2["n_points"]
     assert out2b["n_points"] == rates_table.read().count()
 
-    # 3. continental hotspots (+ styled multi-layer GeoPackage artifact)
+    # 3. continental hotspots (+ styled multi-layer GeoPackage artifact);
+    # n_hotspots is the manifest row count, so it must equal a full read
     gpkg = str(base / "hotspots.gpkg")
-    assert run_continental.main([
+    hs_args = [
         "--tiles-table", str(base / "tiles"),
         "--output", str(base / "hs"),
         "--baseline-year", "2000", "--radii", "1000,500",
-        "--no-tide-filter", "--gpkg", gpkg,
-    ]) == 0
+        "--no-tide-filter",
+    ]
+    assert run_continental.main(hs_args + ["--gpkg", gpkg]) == 0
     out3 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out3["n_hotspots"] > 0
     assert out3["gpkg_layers"] == 2
+    hs_table = SnapshotTable(spark, str(base / "hs"))
+    assert out3["n_hotspots"] == hs_table.read().count()
+    # a re-run replaces its radius partitions, so the count must not double
+    assert run_continental.main(hs_args) == 0
+    out3b = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert hs_table.snapshots()[-1]["operation"] == "overwrite_partitions"
+    assert out3b["n_hotspots"] == out3["n_hotspots"]
+    assert out3b["n_hotspots"] == hs_table.read().count()
     import sqlite3 as _sq
 
     con = _sq.connect(gpkg)

@@ -112,53 +112,6 @@ def test_u01_extreme_keys_no_ansi_overflow(spark):
         assert 0.0 <= got[k] < 1.0
 
 
-def test_pack_sequences_offsets_and_packs(spark):
-    from dea_coastlines_spark.operators.sampling import pack_sequences
-
-    rows = [(i, 100 + 37 * (i % 5)) for i in range(200)] + [(900, 0)]
-    df = spark.createDataFrame(rows, "doc_id long, n_tok long")
-    out = pack_sequences(df, "doc_id", "n_tok", seq_len=256, n_shards=4).toPandas()
-    assert len(out) == 201
-    for shard, grp in out.groupby("shard"):
-        g = grp.sort_values("pos").reset_index(drop=True)
-        # offsets are the exact running sum of preceding token counts
-        run = 0
-        for r in g.itertuples():
-            assert r.offset == run
-            run += r.n_tok
-            assert r.pack_id == r.offset // 256
-            assert r.pack_offset == r.offset % 256
-            if r.n_tok == 0:
-                assert r.n_packs == 0
-            else:
-                assert r.n_packs == (r.offset + r.n_tok - 1) // 256 - r.offset // 256 + 1
-    # a 137-token doc at offset 200 straddles chunks 0 and 1
-    assert (out.n_packs >= 1).sum() == 200
-
-
-def test_pack_sequences_partition_invariant(spark):
-    from dea_coastlines_spark.operators.sampling import pack_sequences
-
-    rows = [(i, 50 + i % 7) for i in range(300)]
-    df1 = spark.createDataFrame(rows, "doc_id long, n_tok long").repartition(3)
-    df2 = spark.createDataFrame(rows, "doc_id long, n_tok long").repartition(17)
-    a = sorted(map(tuple, pack_sequences(df1, "doc_id", "n_tok", 128, 8).collect()))
-    b = sorted(map(tuple, pack_sequences(df2, "doc_id", "n_tok", 128, 8).collect()))
-    assert a == b
-
-
-def test_pack_sequences_validation(spark):
-    import pytest as _pytest
-
-    from dea_coastlines_spark.operators.sampling import pack_sequences
-
-    df = spark.createDataFrame([(1, 10)], "doc_id long, n_tok long")
-    with _pytest.raises(ValueError):
-        pack_sequences(df, "doc_id", "n_tok", 0)
-    with _pytest.raises(ValueError):
-        pack_sequences(df, "doc_id", "n_tok", 128, n_shards=0)
-
-
 def test_temperature_rates_tau1_is_natural_and_tau_half_boosts_small(spark):
     import pytest as _pytest
 
