@@ -73,8 +73,6 @@ def oracle_sql() -> dict[str, str]:
         # independent whole-mosaic BFS (no tiling/seam stitch); DuckDB
         # re-derives component sums + canonical representative
         "global_components": driver_queries.components_oracle_sql,
-        # scalar textbook-formula recompute of the audio features
-        "audio_features": driver_queries.audio_oracle_sql,
         # single-threaded sequential recompute of the raster->vector
         # path (plain loops replace every distributed construct);
         # DuckDB re-derives hexing/rounding/aggregation
@@ -89,35 +87,12 @@ def oracle_sql() -> dict[str, str]:
         "contour_certainty": driver_queries.contour_certainty_oracle_sql,
         # writes the shared vertex parquet for the SQL to read
         "coastal_transects": driver_queries.transects_oracle_sql,
-        # embeds seeded hyperplanes / refit centroids as literals;
-        # ivf additionally reads the sf0.01 embeddings parquet
-        "lsh_ann_topk": driver_queries.lsh_ann_oracle_sql,
-        "ivf_ann_topk": driver_queries.ivf_ann_oracle_sql,
-        # refit coarse centroids + PQ codebook embedded as literals
-        "ivfpq_ann_topk": driver_queries.ivfpq_ann_oracle_sql,
-        # refit-centroid literals + keep-priority prune recompute
-        "semdedup": driver_queries.semdedup_oracle_sql,
         # recomputes the composite median driver-side and writes core
         # pixels to parquet; DuckDB does rectangle PIP + aggregation
         "zonal_stats": driver_queries.zonal_oracle_sql,
-        # decodes the deterministic corpus driver-side; DuckDB does the
-        # per-image mean/std/nodata aggregation
-        "multimodal_decode_stats": driver_queries.multimodal_oracle_sql,
-        # decodes the deterministic corpus driver-side into a pixel
-        # GRID parquet; DuckDB re-derives the Laplacian (coordinate
-        # self-joins), entropy (bin group-by) and thresholds
-        "image_quality": driver_queries.image_quality_oracle_sql,
         # sequential plain-Python replay of the ingest-gate checks
         # (bytes-prefix sniff, json.loads, direct decode + hamming)
         "corpus_integrity": driver_queries.integrity_oracle_sql,
-        # DuckDB re-derives hamming pairs, recursive-CTE components,
-        # and the per-cluster quality argmax
-        "keep_best_images": driver_queries.keep_best_oracle_sql,
-        # DuckDB re-derives the caption SimHash tower (UHUGEINT FNV +
-        # per-bit majority) and the bit_count(xor) cosine scoring
-        "caption_alignment": driver_queries.caption_alignment_oracle_sql,
-        # towers + visual-bucket join + md5 donor cap + rank window
-        "hard_negatives": driver_queries.hard_negatives_oracle_sql,
         # sequential composite recompute + plain-loop pyramid; DuckDB
         # reads the replayed fingerprint rows
         "tile_pyramid": driver_queries.tile_pyramid_oracle_sql,

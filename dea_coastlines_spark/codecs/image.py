@@ -86,7 +86,8 @@ def decode_tile(buf: bytes, fmt: str) -> np.ndarray:
     Malformed bytes raise `TileDecodeError`, chained from the codec's
     own error. The shape comes from the bytes' header: a damaged header
     can still decode to the wrong (h, w), so callers that know the
-    tile's size compare it (operators/integrity.py does)."""
+    tile's size compare it (operators/integrity.py and
+    operators/composite.decode_stats do)."""
     if fmt not in ("png", "tiff", "jpeg"):
         raise ValueError(f"unknown tile format {fmt!r}")
     try:

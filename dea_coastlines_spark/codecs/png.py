@@ -68,34 +68,47 @@ def _unfilter(scan: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
             rows = seg == s
             out[rows] = np.cumsum(raw[rows], axis=0)
         return (out & 0xFF).astype(np.uint8)
+    # general path, row by row: Sub is a per-byte-lane prefix sum
+    # (mod 256); Average and Paeth depend on the byte just decoded, so
+    # they loop over plain Python ints (a bytearray), far cheaper per
+    # byte than numpy scalar indexing
     out = np.zeros((h, stride), dtype=np.uint8)
+    prev = np.zeros(stride, np.uint8)  # the row above the first
     for r in range(h):
         ftype = scan[r, 0]
-        line = scan[r, 1:].astype(np.int32)
-        prev = out[r - 1].astype(np.int32) if r > 0 else np.zeros(stride, np.int32)
+        line = scan[r, 1:]
         if ftype == 0:
-            cur = line
-        elif ftype == 2:  # Up
-            cur = (line + prev) & 0xFF
-        elif ftype in (1, 3, 4):  # Sub / Average / Paeth need left-to-right scan
-            cur = np.zeros(stride, np.int32)
-            for i in range(stride):
-                a = cur[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                if ftype == 1:
-                    cur[i] = (line[i] + a) & 0xFF
-                elif ftype == 3:
-                    cur[i] = (line[i] + ((a + b) >> 1)) & 0xFF
-                else:
-                    c = prev[i - bpp] if i >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    cur[i] = (line[i] + pred) & 0xFF
+            out[r] = line
+        elif ftype == 1:  # Sub
+            lanes = line.reshape(-1, bpp).astype(np.int64)
+            out[r] = (np.cumsum(lanes, axis=0) & 0xFF).reshape(stride)
+        elif ftype == 2:  # Up (uint8 addition wraps mod 256)
+            out[r] = line + prev
+        elif ftype in (3, 4):
+            out[r] = np.frombuffer(
+                _unfilter_row(ftype, bytearray(line.tobytes()), prev.tobytes(), bpp),
+                np.uint8,
+            )
         else:
             raise ValueError(f"unsupported PNG filter {ftype}")
-        out[r] = cur.astype(np.uint8)
+        prev = out[r]
     return out
+
+
+def _unfilter_row(ftype: int, cur: bytearray, prev: bytes, bpp: int) -> bytearray:
+    """Undo Average (3) or Paeth (4) on one scanline, in place."""
+    for i in range(bpp):  # no left neighbour: a = c = 0
+        cur[i] = (cur[i] + (prev[i] >> 1 if ftype == 3 else prev[i])) & 0xFF
+    if ftype == 3:
+        for i in range(bpp, len(cur)):
+            cur[i] = (cur[i] + ((cur[i - bpp] + prev[i]) >> 1)) & 0xFF
+        return cur
+    for i in range(bpp, len(cur)):
+        a, b, c = cur[i - bpp], prev[i], prev[i - bpp]
+        pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - c - c)
+        pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+        cur[i] = (cur[i] + pred) & 0xFF
+    return cur
 
 
 def decode_gray(buf: bytes) -> np.ndarray:

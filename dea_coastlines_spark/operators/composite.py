@@ -129,11 +129,20 @@ def _nan_median_std_count(stack: np.ndarray):
 
 def decode_stats(grp: pd.DataFrame):
     """One observation group's encoded tiles -> (median, std, count)
-    rasters: the shared body of every composite kernel."""
-    stack = np.stack(
-        [img_codec.decode_tile(bytes(b), f) for b, f in zip(grp["bytes"], grp["fmt"])]
-    )
-    return _nan_median_std_count(stack)
+    rasters: the shared body of every composite kernel. A tile that
+    decodes to another shape than its row's (h, w) raises
+    `TileDecodeError`: a damaged frame header can decode without error."""
+    arrays = []
+    for i, (b, f, h, w) in enumerate(zip(grp["bytes"], grp["fmt"], grp["h"], grp["w"])):
+        arr = img_codec.decode_tile(bytes(b), f)
+        if arr.shape != (h, w):
+            row = grp.iloc[i]
+            raise img_codec.TileDecodeError(
+                f"tile ({row['tile_x']}, {row['tile_y']}) year {row['year']}: "
+                f"decoded shape {arr.shape}, expected ({h}, {w})"
+            )
+        arrays.append(arr)
+    return _nan_median_std_count(np.stack(arrays))
 
 
 def _composite_group(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -1,8 +1,10 @@
 """Deduplication operators for large-scale training-data pipelines:
-exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
+exact, MinHash+LSH, SimHash, n-gram and char-set Jaccard, and image
+pHash near-dup.
 
-All are DataFrame plans over the `documents`/`embeddings` tables; Python
-appears only in Arrow-batched kernels (minhash/simhash signatures).
+All are DataFrame plans over the `documents` table (pHash: over tile
+rows); Python appears only in Arrow-batched kernels (minhash/simhash
+signatures, Jaccard verify).
 
 Scale notes:
   * exact dedup is one hash-groupBy (map-side partial agg free).
@@ -13,8 +15,6 @@ Scale notes:
   * SimHash: 64-bit signature; candidate pairs via 4x16-bit pigeonhole
     bands (hamming<=3 cannot differ in all 4 chunks); verify with
     bit_count(xor) <= k JVM-side.
-  * embedding near-dup: normalized vectors; candidates via random-
-    hyperplane sign buckets, verify cosine JVM-side (F.aggregate dot).
 """
 
 from __future__ import annotations
@@ -612,9 +612,8 @@ def cross_corpus_neardup(
 def simhash64(texts) -> list:
     """64-bit SimHash (sign of FNV-hash-weighted bit sums over
     lowercased whitespace tokens) for an iterable of strings; int64
-    (two's-complement) per text, 0 for empty/None. Shared by the text
-    near-dup kernel and the cross-modal caption tower
-    (operators/multimodal.caption_alignment).
+    (two's-complement) per text, 0 for empty/None; the signature of the
+    text near-dup kernel.
 
     Fully batch-vectorized: all texts' tokens are hashed in ONE
     _hash_str_array call, per-bit ±1 sums are segment-reduced with

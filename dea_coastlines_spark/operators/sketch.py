@@ -245,7 +245,7 @@ U64MASK_SQL = "18446744073709551615::UHUGEINT"
 def _splitmix_sql_fragment(z0: str) -> str:
     """splitmix64 over a SQL fragment (UHUGEINT wraparound via mask);
     constants identical to operators.dedup._splitmix.  THE canonical
-    copy — plans/driver_queries.py and the graph/pq oracles all import
+    copy — plans/driver_queries.py and this module both use
     this, so the magic constants live in exactly one place."""
     mask = U64MASK_SQL
     z1 = f"(({z0}) + 11400714819323198485::UHUGEINT) & {mask}"

@@ -12,8 +12,9 @@ Operator coverage map (SURVEY.md §2 rows in parentheses):
   (2.3), windows (2.5), set ops (2.7), scalar string/date/math (2.8),
   certainty-cascade CASE semantics (2.2), validation error stats (2.4),
   regression (2.4), mode/median (2.4), spatial joins (2.3, engine ops
-  with brute-force SQL oracles), dedup/similarity (training-data
-  ops), raster->vector pipeline (rows-only, no SQL analog).
+  with brute-force SQL oracles), exact and near-duplicate dedup
+  (training-data ops), raster->vector pipeline (recomputed by
+  sequential oracles).
 """
 
 from __future__ import annotations
@@ -795,7 +796,7 @@ FROM o GROUP BY poly_id ORDER BY poly_id
 """
 
 
-# ------------------------------------------------ dedup / similarity ops
+# ------------------------------------------------------------- dedup ops
 
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup groups (md5 hash-groupBy) over documents."""
@@ -875,113 +876,6 @@ SELECT id_a, id_b, ROUND(j, 6) AS jaccard FROM (
 ) WHERE j >= 0.8
 ORDER BY id_a, id_b
 """
-
-
-def q_ann_topk(spark, sf_dir):
-    """Brute-force cosine top-5 (JVM-side dot products) for 10 query
-    vectors over the embeddings table."""
-    from ..operators.similarity import brute_force_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return brute_force_topk(emb, queries, k=5).orderBy("query_id", "rank")
-
-
-ORACLE_ANN_TOPK = """
-WITH q AS (SELECT vec_id AS query_id,
-                    CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 10),
-     s AS (SELECT query_id, vec_id AS item_id,
-                  ROUND(LIST_COSINE_SIMILARITY(qv, CAST(embedding AS DOUBLE[])), 6) AS cosine
-           FROM q CROSS JOIN embeddings WHERE vec_id != query_id),
-     r AS (SELECT query_id, item_id, cosine,
-                  ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, item_id) AS rank
-           FROM s)
-SELECT query_id, rank, item_id, cosine FROM r WHERE rank <= 5
-ORDER BY query_id, rank
-"""
-
-
-def q_embedding_neardup(spark, sf_dir):
-    """LSH-fronted near-dup over the embeddings table augmented with
-    deterministic in-query duplicates: for vec_id < 40, an exact copy
-    (+100000) and an exactly-2x-scaled copy (+200000). Scaling by a
-    power of two is exact in IEEE doubles, so both copies are exactly
-    parallel to the original — they share every hyperplane bucket in
-    every table, making the LSH path's recall on them provably 1, and
-    their cosines round to exactly 1.0 on both engines. The corpus
-    itself is near-orthogonal (max off-pair cosine ~0.51), so the
-    result is precisely the planted duplicate triangles — non-trivial
-    and hash-verifiable against the exact all-pairs oracle."""
-    from ..operators.similarity import embedding_neardup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    seed = emb.filter(F.col("vec_id") < 40)
-    copies = seed.select(
-        (F.col("vec_id") + 100000).alias("vec_id"), F.col("embedding")
-    ).unionByName(
-        seed.select(
-            (F.col("vec_id") + 200000).alias("vec_id"),
-            F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"),
-        )
-    )
-    aug = emb.unionByName(copies)
-    return embedding_neardup_pairs(
-        aug, dim=64, threshold=0.95
-    ).localCheckpoint(eager=False).orderBy("id_a", "id_b")
-
-
-ORACLE_EMB_NEARDUP = """
-WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings),
-     e AS (
-       SELECT vec_id, embedding FROM base
-       UNION ALL
-       SELECT vec_id + 100000, embedding FROM base WHERE vec_id < 40
-       UNION ALL
-       SELECT vec_id + 200000, list_transform(embedding, x -> x * 2.0)
-       FROM base WHERE vec_id < 40
-     )
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       ROUND(LIST_COSINE_SIMILARITY(a.embedding, b.embedding), 6) AS cosine
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE ROUND(LIST_COSINE_SIMILARITY(a.embedding, b.embedding), 6) >= 0.95
-ORDER BY id_a, id_b
-"""
-
-
-def q_semdedup(spark, sf_dir):
-    """SemDeDup semantic dedup (Abbas et al. 2023) over the embeddings
-    table augmented with the same deterministic duplicate triangles as
-    q_embedding_neardup (exact copy +100000 and exactly-2x copy
-    +200000 for vec_id < 40; power-of-two scaling is IEEE-exact, so
-    both copies normalize to the bitwise-identical unit vector and
-    share the original's cluster and c_sim exactly). The coarse
-    quantizer is refit deterministically from the BASE table (lowest
-    20000 vec_ids, seeded spherical k-means — the ivf_ann_topk recipe)
-    so the DuckDB oracle embeds identical centroid literals and
-    independently recomputes assignment, keep-priority pairing, and
-    the within-cluster cosine prune. The base corpus is
-    near-orthogonal (max off-pair cosine ~0.51 << eps), so exactly
-    the planted copies drop — keep-priority resolves to the lowest id
-    on equal c_sim — and every base row survives."""
-    from ..operators.similarity import semdedup, train_ivf_centroids
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    cents = train_ivf_centroids(emb, n_clusters=16)
-    seed = emb.filter(F.col("vec_id") < 40)
-    copies = seed.select(
-        (F.col("vec_id") + 100000).alias("vec_id"), F.col("embedding")
-    ).unionByName(
-        seed.select(
-            (F.col("vec_id") + 200000).alias("vec_id"),
-            F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"),
-        )
-    )
-    aug = emb.unionByName(copies)
-    return semdedup(aug, n_clusters=16, eps=0.95, centroids=cents).orderBy("vec_id")
 
 
 # --------------------------------------- geospatial pipeline stage queries
@@ -2180,8 +2074,6 @@ ORDER BY id_a, id_b
 """
 
 
-# rows-only entries (no SQL analog): LSH ANN, multimodal decode/resize
-
 def q_minhash_pairs(spark, sf_dir):
     from ..operators.dedup import minhash_lsh_pairs
 
@@ -2233,24 +2125,6 @@ def q_crosscorpus_dedup(spark, sf_dir):
     )
     return cross_corpus_neardup(new, ref, "text", "doc_id", threshold=0.7).orderBy(
         "doc_id"
-    )
-
-
-def q_lsh_ann_topk(spark, sf_dir):
-    from ..operators.similarity import lsh_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return lsh_topk(emb, queries, dim=64, k=5).orderBy("query_id", "rank")
-
-
-def q_ivf_ann_topk(spark, sf_dir):
-    from ..operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk(emb, queries, k=5, n_clusters=16, nprobe=4).orderBy(
-        "query_id", "rank"
     )
 
 
@@ -2357,108 +2231,6 @@ FROM read_parquet('{path}') a
 JOIN read_parquet('{path}') b ON a.image_id < b.image_id
 WHERE bit_count(xor(a.phash, b.phash)) <= 6
 ORDER BY id_a, id_b
-"""
-
-
-def q_keep_best_images(spark, sf_dir):
-    """Quality-aware image dedup keep-one: perceptual-hash near-dup
-    pairs -> connected components -> keep the SHARPEST member of each
-    cluster (argmax Laplacian variance, NULL-last, id tie-break) —
-    what production image dedup does instead of keep-min-id. Fully
-    hash-verified: the oracle re-derives pairs (bit_count), clusters
-    (recursive CTE) and the argmax (window) in DuckDB over a
-    driver-written (image_id, phash, laplacian_var) parquet."""
-    from ..operators.dedup import phash_neardup_pairs
-    from ..operators.graph import keep_best
-    from ..operators.multimodal import image_quality
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2002, obs_per_year=4,
-                              cloud_frac=0.05, seed=9)
-    tiles = spark.createDataFrame(_corpus.generate_pandas(spec))
-    pairs = phash_neardup_pairs(tiles, max_hamming=6).select("id_a", "id_b")
-    # lazy checkpoint: keep_best consumes `docs` in TWO branches (the
-    # cluster-member join and the final anti-join), so the Laplacian
-    # decode kernel executed once per branch without a barrier
-    scored = image_quality(tiles).select(
-        "image_id", "laplacian_var"
-    ).localCheckpoint(eager=False)
-    return (
-        keep_best(scored, pairs, "laplacian_var", id_col="image_id")
-        .orderBy("image_id")
-    )
-
-
-def keep_best_oracle_sql() -> str:
-    """Full SQL oracle for q_keep_best_images: the corpus is a pure
-    function of CorpusSpec(seed=9), so the driver writes (image_id,
-    phash, laplacian_var) — phash from the generator, Laplacian
-    variance recomputed in plain numpy with the image_quality formula —
-    and DuckDB independently re-derives the hamming pairs
-    (bit_count(xor)), the transitive closure (recursive CTE), and the
-    per-cluster argmax with the identical NULL-last/id tie-break."""
-    import os
-    import tempfile
-
-    import numpy as np
-    import pandas as pd
-
-    from ..codecs import image as _img
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2002, obs_per_year=4,
-                              cloud_frac=0.05, seed=9)
-    recs = []
-    for key in _corpus.iter_keys(spec):
-        row = _corpus.make_row(spec, *key)
-        arr = _img.decode_tile(row["bytes"], row["fmt"]).astype(np.float64)
-        finite = np.isfinite(arr)
-        lap_var = None
-        if arr.shape[0] >= 3 and arr.shape[1] >= 3:
-            c = finite[1:-1, 1:-1]
-            ok = (c & finite[:-2, 1:-1] & finite[2:, 1:-1]
-                  & finite[1:-1, :-2] & finite[1:-1, 2:])
-            if ok.any():
-                lap = (4.0 * arr[1:-1, 1:-1] - arr[:-2, 1:-1]
-                       - arr[2:, 1:-1] - arr[1:-1, :-2]
-                       - arr[1:-1, 2:])[ok]
-                lap_var = round(float(lap.var()), 6)
-        recs.append({"image_id": row["image_id"], "phash": row["phash"],
-                     "laplacian_var": lap_var})
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_keepbest_oracle_{os.getpid()}.parquet",
-    )
-    tmp = path + ".tmp"
-    pd.DataFrame(recs).to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-    return f"""
-WITH RECURSIVE
-imgs AS (SELECT * FROM read_parquet('{path}')),
-e0 AS (SELECT a.image_id AS id_a, b.image_id AS id_b
-       FROM imgs a JOIN imgs b ON a.image_id < b.image_id
-       WHERE bit_count(xor(a.phash, b.phash)) <= 6),
-edges AS (SELECT id_a AS u, id_b AS v FROM e0
-          UNION ALL SELECT id_b, id_a FROM e0),
-reach(u, r) AS (
-  SELECT u, u AS r FROM (SELECT DISTINCT u FROM edges)
-  UNION
-  SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.v
-),
-comp AS (SELECT u AS image_id, MIN(r) AS cluster_id FROM reach GROUP BY u),
-ranked AS (
-  SELECT c.cluster_id, i.image_id,
-         ROW_NUMBER() OVER (
-           PARTITION BY c.cluster_id
-           ORDER BY (i.laplacian_var IS NULL), i.laplacian_var DESC,
-                    i.image_id) AS rn
-  FROM comp c JOIN imgs i USING (image_id)),
-drops AS (SELECT image_id FROM ranked WHERE rn > 1)
-SELECT image_id, laplacian_var FROM imgs
-WHERE image_id NOT IN (SELECT image_id FROM drops)
-ORDER BY image_id
 """
 
 
@@ -2683,140 +2455,6 @@ ORDER BY year, level, x, y
 """
 
 
-def q_multimodal_decode_stats(spark, sf_dir):
-    from ..operators.multimodal import decode_stats
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=2, tiles_y=1,
-                              year0=2000, year1=2001, obs_per_year=2, seed=5,
-                              fmt="mixed")
-    tiles = spark.createDataFrame(_corpus.generate_pandas(spec))
-    return decode_stats(tiles).withColumn(
-        "px_mean", F.round("px_mean", 6)
-    ).withColumn("px_std", F.round("px_std", 6)).orderBy("image_id")
-
-
-def q_image_quality(spark, sf_dir):
-    """No-reference image-quality signals (Laplacian-variance blur
-    detector, histogram entropy, dynamic range, nodata fraction) over a
-    deterministic mixed-format tile corpus. Fully hash-verified:
-    image_quality_oracle_sql() writes the decoded pixel GRID to parquet
-    and DuckDB independently re-derives the Laplacian via coordinate
-    self-joins, the entropy via bin group-bys, and the thresholds."""
-    from ..operators.multimodal import image_quality
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2001, obs_per_year=3,
-                              cloud_frac=0.15, seed=11, fmt="mixed")
-    tiles = spark.createDataFrame(_corpus.generate_pandas(spec))
-    return image_quality(tiles).orderBy("image_id")
-
-
-def image_quality_oracle_sql() -> str:
-    """Full hash-verified oracle for q_image_quality. The corpus is a
-    deterministic function of CorpusSpec(seed=11), so decode every
-    image driver-side (same codec the Arrow kernel uses — the codecs
-    carry their own PSNR/round-trip pytest gates) and write the pixel
-    GRID as (image_id, x, y, v) rows (v NULL where non-finite) to a
-    temp parquet. DuckDB then independently recomputes everything the
-    kernel vectorizes: the 4-neighbour Laplacian by coordinate
-    self-joins (interior-ness falls out of inner-join existence),
-    VAR_POP over it, the 256-bin histogram entropy, min/max range, and
-    the low_quality threshold cascade on UNROUNDED values."""
-    import os
-    import tempfile
-
-    import numpy as np
-    import pandas as pd
-
-    from ..codecs import image as _img
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2001, obs_per_year=3,
-                              cloud_frac=0.15, seed=11, fmt="mixed")
-    frames: list[pd.DataFrame] = []
-    totals: list[tuple[str, int]] = []
-    for key in _corpus.iter_keys(spec):
-        row = _corpus.make_row(spec, *key)
-        arr = _img.decode_tile(row["bytes"], row["fmt"]).astype(np.float64)
-        h, w = arr.shape
-        totals.append((row["image_id"], int(arr.size)))
-        yy, xx = np.mgrid[0:h, 0:w]
-        frames.append(pd.DataFrame({
-            "image_id": row["image_id"],
-            "x": xx.ravel().astype(np.int32),
-            "y": yy.ravel().astype(np.int32),
-            "v": np.where(np.isfinite(arr), arr, np.nan).ravel(),
-        }))
-    pdf = pd.concat(frames, ignore_index=True)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_imgq_oracle_{os.getpid()}.parquet",
-    )
-    tmp = path + ".tmp"
-    pdf.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-
-    vals = ", ".join(f"('{iid}', {n})" for iid, n in totals)
-    return f"""
-WITH tot(image_id, npx) AS (VALUES {vals}),
-px AS (SELECT image_id, x, y, v FROM read_parquet('{path}')
-       WHERE v = v),  -- strips the NaN sentinel rows (NULL semantics)
-lap AS (
-  SELECT c.image_id,
-         4.0 * c.v - u.v - d.v - l.v - r.v AS lap
-  FROM px c
-  JOIN px u ON u.image_id = c.image_id AND u.x = c.x AND u.y = c.y - 1
-  JOIN px d ON d.image_id = c.image_id AND d.x = c.x AND d.y = c.y + 1
-  JOIN px l ON l.image_id = c.image_id AND l.x = c.x - 1 AND l.y = c.y
-  JOIN px r ON r.image_id = c.image_id AND r.x = c.x + 1 AND r.y = c.y
-),
-lv AS (SELECT image_id, VAR_POP(lap) AS lap_var FROM lap GROUP BY 1),
-rng AS (SELECT image_id, MIN(v) AS vmin, MAX(v) AS vmax,
-               COUNT(*) AS nfin
-        FROM px GROUP BY 1),
-bins AS (
-  SELECT p.image_id,
-         LEAST(CAST(FLOOR((p.v - r.vmin) / (r.vmax - r.vmin) * 256.0)
-                    AS INTEGER), 255) AS b,
-         COUNT(*) AS c
-  FROM px p JOIN rng r USING (image_id)
-  WHERE r.vmax > r.vmin
-  GROUP BY 1, 2
-),
-ent AS (
-  SELECT image_id,
-         -SUM((c::DOUBLE / nfin) * LN(c::DOUBLE / nfin)) AS entropy
-  FROM bins JOIN rng USING (image_id)
-  GROUP BY image_id
-),
-sig AS (
-  SELECT t.image_id,
-         lv.lap_var,
-         CASE WHEN r.image_id IS NULL THEN NULL
-              ELSE COALESCE(ent.entropy, 0.0) END AS entropy,
-         r.vmax - r.vmin AS rng,
-         1.0 - COALESCE(r.nfin, 0) / CAST(t.npx AS DOUBLE) AS nodata_frac
-  FROM tot t
-  LEFT JOIN lv ON lv.image_id = t.image_id
-  LEFT JOIN rng r ON r.image_id = t.image_id
-  LEFT JOIN ent ON ent.image_id = t.image_id
-)
-SELECT image_id,
-       ROUND(lap_var, 6) AS laplacian_var,
-       ROUND(entropy, 6) AS entropy,
-       ROUND(rng, 6) AS dynamic_range,
-       ROUND(nodata_frac, 6) AS nodata_frac,
-       (COALESCE(lap_var < 1e-6, TRUE)
-        OR COALESCE(entropy < 0.5, TRUE)
-        OR COALESCE(rng < 1e-3, TRUE)
-        OR nodata_frac > 0.5) AS low_quality
-FROM sig ORDER BY image_id
-"""
-
-
 def q_corpus_integrity(spark, sf_dir):
     """Corpus ingest-gate validation over a deterministically-corrupted
     mixed-format tile corpus: magic-byte fmt sniff + caption-JSON parse
@@ -2986,33 +2624,6 @@ SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
 FROM s GROUP BY user_id, session_seq
 ORDER BY user_id, session_seq
 """
-
-
-def q_audio_features(spark, sf_dir):
-    """WAV audio feature extraction over a deterministic synthetic clip
-    set (sine mixtures keyed by events rows; rows-only: FFT has no SQL
-    analog, the features are pinned by closed-form pytest)."""
-    import pandas as pd
-
-    from ..codecs import wav as _wav
-    from ..operators.multimodal import audio_features
-
-    rate = 8000
-    t = np.arange(rate // 2) / rate  # 0.5 s clips
-    rows = []
-    for i in range(8):
-        f0 = 200.0 + 100.0 * i
-        x = (0.4 * np.sin(2 * np.pi * f0 * t)
-             + 0.2 * np.sin(2 * np.pi * 2 * f0 * t)).astype(np.float32)
-        rows.append({"audio_id": f"clip{i:02d}", "bytes": _wav.encode_pcm16(x, rate)})
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    return audio_features(df).select(
-        "audio_id", "sample_rate",
-        F.round("duration_s", 6).alias("duration_s"),
-        F.round("rms", 6).alias("rms"),
-        F.round("zcr_hz", 2).alias("zcr_hz"),
-        F.round("spectral_centroid_hz", 2).alias("spectral_centroid_hz"),
-    ).orderBy("audio_id")
 
 
 def q_rates_regression(spark, sf_dir):
@@ -3292,41 +2903,6 @@ SELECT doc_id, shard,
             AS INT) AS pos
 FROM s ORDER BY shard, pos
 """
-
-
-def q_ar_bucket_shards(spark, sf_dir):
-    """Aspect-ratio bucketing + fixed-size shard packing (SDXL-style
-    training export over the image corpus shape). Image sizes are
-    derived deterministically from doc_id via the shared u01 chain so
-    the oracle reproduces them bit-exactly; bucket assignment is a
-    row-local CASE chain, packing is one (bucket, shard) shuffle."""
-    from ..operators.bucketing import ar_bucket_shards
-    from ..operators.sampling import u01
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    img = d.select(
-        F.col("doc_id").alias("image_id"),
-        (64 * (F.lit(8) + F.floor(u01("doc_id", 101) * 25))).cast("int").alias("w"),
-        (64 * (F.lit(8) + F.floor(u01("doc_id", 202) * 25))).cast("int").alias("h"),
-    )
-    out = ar_bucket_shards(img, "image_id", shard_size=20, seed=7)
-    return out.select(
-        "image_id", "bucket_id", "bucket_w", "bucket_h", "shard", "pos"
-    ).orderBy("bucket_id", "shard", "pos")
-
-
-def _ar_shards_oracle() -> str:
-    from ..operators.bucketing import shard_pack_sql
-    from ..operators.sampling import u01_sql
-
-    w = f"CAST(64 * (8 + FLOOR({u01_sql('doc_id', 101)} * 25)) AS INT)"
-    h = f"CAST(64 * (8 + FLOOR({u01_sql('doc_id', 202)} * 25)) AS INT)"
-    inner = f"(SELECT doc_id AS image_id, {w} AS w, {h} AS h FROM documents)"
-    body = shard_pack_sql(inner, "image_id", "w", "h", shard_size=20, seed=7)
-    return (
-        "SELECT k AS image_id, bucket_id, bucket_w, bucket_h, shard, pos "
-        f"FROM ({body}) ORDER BY bucket_id, shard, pos"
-    )
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -3905,59 +3481,6 @@ ORDER BY z.zone_id, year
 """
 
 
-def multimodal_oracle_sql() -> str:
-    """Full hash-verified oracle for q_multimodal_decode_stats. The
-    corpus is a deterministic function of CorpusSpec(seed=5), so decode
-    every image driver-side (same codec the Arrow kernel uses — the
-    codecs carry their own PSNR/round-trip pytest gates), write the
-    FINITE pixels as (image_id, v) rows to a temp parquet, and let
-    DuckDB independently compute the per-image mean / population std /
-    nodata fraction (via a literal per-image pixel-count table) plus
-    the rounding — checking the distributed mapInPandas path against a
-    plain SQL aggregation."""
-    import os
-    import tempfile
-
-    import numpy as np
-    import pandas as pd
-
-    from ..codecs import image as _img
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=2, tiles_y=1,
-                              year0=2000, year1=2001, obs_per_year=2, seed=5,
-                              fmt="mixed")
-    recs: list[dict] = []
-    totals: list[tuple[str, int]] = []
-    for key in _corpus.iter_keys(spec):
-        row = _corpus.make_row(spec, *key)
-        arr = _img.decode_tile(row["bytes"], row["fmt"])
-        totals.append((row["image_id"], int(arr.size)))
-        v = arr[np.isfinite(arr)].astype(np.float64)
-        recs.extend({"image_id": row["image_id"], "v": float(x)} for x in v)
-    pdf = pd.DataFrame(recs, columns=["image_id", "v"])
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_mmstats_oracle_{os.getpid()}.parquet",
-    )
-    tmp = path + ".tmp"
-    pdf.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-
-    vals = ", ".join(f"('{iid}', {n})" for iid, n in totals)
-    return f"""
-WITH tot(image_id, npx) AS (VALUES {vals})
-SELECT t.image_id,
-       ROUND(AVG(p.v), 6) AS px_mean,
-       ROUND(STDDEV_POP(p.v), 6) AS px_std,
-       1.0 - COUNT(p.v) / CAST(t.npx AS DOUBLE) AS nodata_frac
-FROM tot t
-LEFT JOIN read_parquet('{path}') p USING (image_id)
-GROUP BY t.image_id, t.npx
-ORDER BY t.image_id
-"""
-
-
 def components_oracle_sql() -> str:
     """Full hash-verified oracle for q_global_components. The input
     mask is a pure function of _components_world(), so the driver
@@ -4050,256 +3573,6 @@ ORDER BY comp_tx, comp_ty, comp_label, tile_x, tile_y, label
 """
 
 
-def audio_oracle_sql() -> str:
-    """Full hash-verified oracle for q_audio_features. The clip set is
-    a pure function of the query (sine mixtures, f0 = 200 + 100*i), so
-    the driver re-derives every feature single-threaded from the
-    textbook definitions — RMS, sign-change rate, rfft
-    magnitude-weighted mean frequency — over the SAME pcm16
-    quantization (codecs/wav.py round-trip, which carries its own
-    closed-form pytest gates). DuckDB applies the rounding and ordering
-    independently, checking the distributed mapInPandas path against a
-    scalar recompute."""
-    import os
-    import tempfile
-
-    import numpy as np
-    import pandas as pd
-
-    from ..codecs import wav as _wav
-
-    rate = 8000
-    t = np.arange(rate // 2) / rate
-    recs = []
-    for i in range(8):
-        f0 = 200.0 + 100.0 * i
-        x = (0.4 * np.sin(2 * np.pi * f0 * t)
-             + 0.2 * np.sin(2 * np.pi * 2 * f0 * t)).astype(np.float32)
-        mono, r2 = _wav.decode_pcm16(_wav.encode_pcm16(x, rate))
-        mono = mono.mean(axis=1)
-        n = mono.shape[0]
-        rms = float(np.sqrt(np.mean(mono ** 2)))
-        zcr = float(np.mean(np.diff(np.signbit(mono)) != 0)) * r2
-        mag = np.abs(np.fft.rfft(mono))
-        freqs = np.fft.rfftfreq(n, d=1.0 / r2)
-        tot = float(mag.sum())
-        centroid = float((freqs * mag).sum() / tot) if tot > 0 else 0.0
-        recs.append({
-            "audio_id": f"clip{i:02d}", "sample_rate": int(r2),
-            "duration_s": n / r2, "rms": rms, "zcr_hz": zcr,
-            "spectral_centroid_hz": centroid,
-        })
-    pdf = pd.DataFrame(recs)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_audio_oracle_{os.getpid()}.parquet",
-    )
-    tmp = path + ".tmp"
-    pdf.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-    return f"""
-SELECT audio_id, CAST(sample_rate AS INTEGER) AS sample_rate,
-       ROUND(duration_s, 6) AS duration_s,
-       ROUND(rms, 6) AS rms,
-       ROUND(zcr_hz, 2) AS zcr_hz,
-       ROUND(spectral_centroid_hz, 2) AS spectral_centroid_hz
-FROM read_parquet('{path}')
-ORDER BY audio_id
-"""
-
-
-def _sql_double_list(vals) -> str:
-    """Round-trip-exact DOUBLE[] literal (repr keeps all 17 digits)."""
-    return "[" + ", ".join(repr(float(v)) for v in vals) + "]"
-
-
-def lsh_ann_oracle_sql() -> str:
-    """Full hash-verified oracle for q_lsh_ann_topk. The hyperplanes
-    are a pure function of the seed (default_rng(100+t)), so they are
-    embedded as DOUBLE[] literals and DuckDB *independently recomputes*
-    the whole LSH path: per-(vector, table) bucket id from the sign
-    pattern of 10 plane dot products, candidate generation as the
-    (table, bucket) equi-join, exact cosine rerank, deterministic
-    rank-window top-k. Nothing but the plane constants is shared with
-    the Spark implementation."""
-    import numpy as np
-
-    n_planes, n_tables, dim = 10, 4, 64
-    rows = []
-    for t in range(n_tables):
-        planes = np.random.default_rng(100 + t).standard_normal((n_planes, dim))
-        for p in range(n_planes):
-            rows.append(
-                f"({t}, {p}, CAST({_sql_double_list(planes[p])} AS DOUBLE[]))"
-            )
-    values = ",\n".join(rows)
-    return f"""
-WITH planes(tbl, p, plane) AS (VALUES
-{values}),
-emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-sig AS (
-  SELECT e.vec_id, pl.tbl,
-         CAST(SUM(CASE WHEN list_dot_product(e.v, pl.plane) > 0
-                       THEN 1 << pl.p ELSE 0 END) AS BIGINT) AS bucket
-  FROM emb e CROSS JOIN planes pl
-  GROUP BY e.vec_id, pl.tbl),
-qs AS (SELECT vec_id AS query_id, tbl, bucket FROM sig WHERE vec_id < 10),
-cands AS (
-  SELECT DISTINCT q.query_id, s.vec_id AS item_id
-  FROM qs q JOIN sig s ON q.tbl = s.tbl AND q.bucket = s.bucket
-  WHERE s.vec_id != q.query_id),
-scored AS (
-  SELECT c.query_id, c.item_id,
-         ROUND(LIST_COSINE_SIMILARITY(eq.v, ei.v), 6) AS cosine
-  FROM cands c
-  JOIN emb eq ON eq.vec_id = c.query_id
-  JOIN emb ei ON ei.vec_id = c.item_id),
-r AS (
-  SELECT query_id, item_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, item_id) AS rank
-  FROM scored)
-SELECT query_id, rank, item_id, cosine FROM r WHERE rank <= 5
-ORDER BY query_id, rank
-"""
-
-
-def ivf_ann_oracle_sql() -> str:
-    """Hash-verified oracle for q_ivf_ann_topk. The coarse quantizer is
-    deterministic (sample = lowest-20000 vec_ids, seeded spherical
-    k-means), so the oracle refits it in numpy from the same parquet
-    (shared constants, like the phash corpus), embeds the 16 centroids
-    as DOUBLE[] literals, and DuckDB independently recomputes item
-    assignment (argmax similarity), the nprobe=4 probe set, the
-    (cluster) candidate equi-join, and the exact-cosine rank-window
-    top-k. Reads the sf0.01 embeddings table the driver registers for
-    oracle runs (override dir via SPARK_GRAFT_ORACLE_SF_DIR)."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.similarity import kmeans_fit
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    pdf = pd.read_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"]
-    )
-    pdf = pdf.sort_values("vec_id").head(20_000)
-    x = np.stack([np.asarray(v, np.float64) for v in pdf["embedding"]])
-    cents = kmeans_fit(x, n_clusters=16, n_iter=10, seed=0)
-    values = ",\n".join(
-        f"({c}, CAST({_sql_double_list(cents[c])} AS DOUBLE[]))"
-        for c in range(len(cents))
-    )
-    return f"""
-WITH cents(cluster, c) AS (VALUES
-{values}),
-emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-sims AS (
-  SELECT e.vec_id, c.cluster, list_dot_product(e.v, c.c) AS sim
-  FROM emb e CROSS JOIN cents c),
-item_assign AS (
-  SELECT vec_id AS item_id, cluster FROM (
-    SELECT vec_id, cluster,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY sim DESC, cluster) AS rn
-    FROM sims) WHERE rn = 1),
-probes AS (
-  SELECT vec_id AS query_id, cluster FROM (
-    SELECT vec_id, cluster,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY sim DESC, cluster) AS rn
-    FROM sims WHERE vec_id < 10) WHERE rn <= 4),
-cands AS (
-  SELECT DISTINCT p.query_id, i.item_id
-  FROM probes p JOIN item_assign i ON p.cluster = i.cluster
-  WHERE i.item_id != p.query_id),
-scored AS (
-  SELECT c.query_id, c.item_id,
-         ROUND(LIST_COSINE_SIMILARITY(eq.v, ei.v), 6) AS cosine
-  FROM cands c
-  JOIN emb eq ON eq.vec_id = c.query_id
-  JOIN emb ei ON ei.vec_id = c.item_id),
-r AS (
-  SELECT query_id, item_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, item_id) AS rank
-  FROM scored)
-SELECT query_id, rank, item_id, cosine FROM r WHERE rank <= 5
-ORDER BY query_id, rank
-"""
-
-
-def semdedup_oracle_sql() -> str:
-    """Hash-verified oracle for q_semdedup. Refits the deterministic
-    coarse quantizer from the same parquet sample the Spark query
-    trains on (shared recipe with ivf_ann_oracle_sql), embeds the 16
-    unit centroids as DOUBLE[] literals, and DuckDB independently
-    recomputes: the augmented table, nearest-centroid assignment
-    (argmax cosine, ties to the lowest cluster — the numpy argmax
-    rule), the keep-priority pairing (lower rounded c_sim ranked
-    before, ascending-id tie-break), the within-cluster cosine prune
-    at eps=0.95, and the per-item max duplicate cosine. Only the
-    centroid constants are shared with the Spark implementation."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.similarity import kmeans_fit
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    pdf = pd.read_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"]
-    )
-    pdf = pdf.sort_values("vec_id").head(20_000)
-    x = np.stack([np.asarray(v, np.float64) for v in pdf["embedding"]])
-    cents = kmeans_fit(x, n_clusters=16, n_iter=10, seed=0)
-    values = ",\n".join(
-        f"({c}, CAST({_sql_double_list(cents[c])} AS DOUBLE[]))"
-        for c in range(len(cents))
-    )
-    return f"""
-WITH cents(cluster, c) AS (VALUES
-{values}),
-base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-e AS (
-  SELECT vec_id, v FROM base
-  UNION ALL
-  SELECT vec_id + 100000, v FROM base WHERE vec_id < 40
-  UNION ALL
-  SELECT vec_id + 200000, list_transform(v, x -> x * 2.0)
-  FROM base WHERE vec_id < 40
-),
-sims AS (
-  SELECT e.vec_id, c.cluster, LIST_COSINE_SIMILARITY(e.v, c.c) AS sim
-  FROM e CROSS JOIN cents c),
-assign AS (
-  SELECT vec_id, cluster, ROUND(sim, 6) AS c_sim FROM (
-    SELECT vec_id, cluster, sim,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY sim DESC, cluster) AS rn
-    FROM sims) WHERE rn = 1),
-pairs AS (
-  SELECT a.vec_id AS id_a,
-         ROUND(LIST_COSINE_SIMILARITY(ea.v, eb.v), 6) AS cosine
-  FROM assign a
-  JOIN assign b ON a.cluster = b.cluster
-   AND (b.c_sim < a.c_sim OR (b.c_sim = a.c_sim AND b.vec_id < a.vec_id))
-  JOIN e ea ON ea.vec_id = a.vec_id
-  JOIN e eb ON eb.vec_id = b.vec_id),
-dup AS (
-  SELECT id_a, MAX(cosine) AS dup_cos FROM pairs
-  WHERE cosine >= 0.95 GROUP BY id_a)
-SELECT a.vec_id, a.cluster, a.c_sim,
-       COALESCE(d.dup_cos, -1.0) AS dup_cos,
-       CAST(d.id_a IS NULL AS INTEGER) AS kept
-FROM assign a LEFT JOIN dup d ON a.vec_id = d.id_a
-ORDER BY a.vec_id
-"""
-
-
 # q_merge_upsert stages its CoW table once per (application, sf_dir);
 # the temp roots are removed at interpreter exit, so repeated bench
 # iterations neither re-run the write path nor leak directories.
@@ -4369,178 +3642,6 @@ def q_merge_upsert(spark, sf_dir):
     )
 
 
-def q_caption_alignment(spark, sf_dir):
-    """Cross-modal caption↔image alignment gate (LAION/DataComp-style
-    CLIP-score filtering with the documented deterministic hash towers:
-    phash = image tower, caption SimHash = text tower, cosine =
-    1 - 2·hamming/64). Fully hash-verified: the oracle re-derives the
-    caption SimHash in DuckDB UHUGEINT list lambdas (the proven
-    _simhash_sql construction) over a driver-written (image_id, phash,
-    caption) parquet and scores with bit_count(xor)."""
-    from ..operators.multimodal import caption_alignment
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2002, obs_per_year=4,
-                              cloud_frac=0.05, seed=9)
-    tiles = spark.createDataFrame(_corpus.generate_pandas(spec))
-    return caption_alignment(tiles, threshold=0.0).select(
-        "image_id", "caption_sig", "hamming", "alignment", "keep"
-    ).orderBy("image_id")
-
-
-def caption_alignment_oracle_sql() -> str:
-    """Oracle for q_caption_alignment: same deterministic corpus
-    written to a temp parquet; DuckDB independently recomputes the
-    token FNV hashes, the per-bit majority vote, the signed signature,
-    and the hamming/alignment scoring."""
-    import os
-    import tempfile
-
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2002, obs_per_year=4,
-                              cloud_frac=0.05, seed=9)
-    pdf = _corpus.generate_pandas(spec)[["image_id", "phash", "caption"]]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_caption_align_{os.getpid()}.parquet",
-    )
-    tmp = path + ".tmp"
-    pdf.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-    return rf"""
-WITH toks AS (
-  SELECT image_id, phash,
-         list_filter(string_split_regex(lower(caption), '\s+'),
-                     x -> x <> '') AS toks
-  FROM read_parquet('{path}')),
-hashed AS (
-  SELECT image_id, phash, list_transform(toks, s -> {_FNV_SQL}) AS hs
-  FROM toks),
-sigs AS (
-  SELECT image_id, phash,
-    CASE WHEN len(hs) = 0 THEN 0::HUGEINT
-    ELSE list_reduce(list_prepend(0::HUGEINT,
-      list_transform(generate_series(0, 63), bb ->
-        CASE WHEN 2 * list_sum(list_transform(hs,
-                      h -> ((h >> bb::UHUGEINT) & 1::UHUGEINT)::INT))
-                  > len(hs)
-             THEN (1::UHUGEINT << bb::UHUGEINT)::HUGEINT
-             ELSE 0::HUGEINT END)),
-      (acc, x) -> acc + x)
-    END AS u
-  FROM hashed),
-scored AS (
-  SELECT image_id,
-    (CASE WHEN u >= 9223372036854775808::HUGEINT
-          THEN u - 18446744073709551616::HUGEINT
-          ELSE u END)::BIGINT AS caption_sig,
-    phash
-  FROM sigs)
-SELECT image_id, caption_sig,
-       CAST(bit_count(xor(caption_sig, phash)) AS INTEGER) AS hamming,
-       ROUND(1.0 - CAST(bit_count(xor(caption_sig, phash)) AS INTEGER)
-                   * 2.0 / 64.0, 6) AS alignment,
-       (1.0 - CAST(bit_count(xor(caption_sig, phash)) AS INTEGER)
-              * 2.0 / 64.0 >= 0.0) AS keep
-FROM scored ORDER BY image_id
-"""
-
-
-def q_hard_negatives(spark, sf_dir):
-    """Contrastive hard-negative mining (multimodal.hard_negatives):
-    top-3 most-confusable wrong captions per image within 8-bit phash
-    visual buckets, donor side capped at 16 per bucket by portable md5
-    order. Fully hash-verified: the oracle re-derives the caption
-    SimHash towers, bucket join, cap window, and rank window in DuckDB
-    over the same driver-written parquet as caption_alignment."""
-    from ..operators.multimodal import hard_negatives
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2002, obs_per_year=4,
-                              cloud_frac=0.05, seed=9)
-    tiles = spark.createDataFrame(_corpus.generate_pandas(spec))
-    return hard_negatives(
-        tiles, k=3, prefix_bits=8, bucket_cap=16
-    ).orderBy("image_id", "rank")
-
-
-def hard_negatives_oracle_sql() -> str:
-    """Oracle for q_hard_negatives: caption towers re-derived with the
-    UHUGEINT FNV/majority-vote lambdas, then the visual-bucket join,
-    md5-ordered donor cap, alignment scoring, and top-k rank window —
-    every step independently in DuckDB."""
-    import os
-    import tempfile
-
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2002, obs_per_year=4,
-                              cloud_frac=0.05, seed=9)
-    pdf = _corpus.generate_pandas(spec)[["image_id", "phash", "caption"]]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_hard_neg_{os.getpid()}.parquet",
-    )
-    tmp = path + ".tmp"
-    pdf.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-    return rf"""
-WITH toks AS (
-  SELECT image_id, phash,
-         list_filter(string_split_regex(lower(caption), '\s+'),
-                     x -> x <> '') AS toks
-  FROM read_parquet('{path}')),
-hashed AS (
-  SELECT image_id, phash, list_transform(toks, s -> {_FNV_SQL}) AS hs
-  FROM toks),
-sigs AS (
-  SELECT image_id, phash,
-    CASE WHEN len(hs) = 0 THEN 0::HUGEINT
-    ELSE list_reduce(list_prepend(0::HUGEINT,
-      list_transform(generate_series(0, 63), bb ->
-        CASE WHEN 2 * list_sum(list_transform(hs,
-                      h -> ((h >> bb::UHUGEINT) & 1::UHUGEINT)::INT))
-                  > len(hs)
-             THEN (1::UHUGEINT << bb::UHUGEINT)::HUGEINT
-             ELSE 0::HUGEINT END)),
-      (acc, x) -> acc + x)
-    END AS u
-  FROM hashed),
-b AS (
-  SELECT image_id, phash,
-    (CASE WHEN u >= 9223372036854775808::HUGEINT
-          THEN u - 18446744073709551616::HUGEINT
-          ELSE u END)::BIGINT AS caption_sig,
-    phash >> 56 AS bucket
-  FROM sigs),
-donors AS (
-  SELECT image_id AS neg_image_id, caption_sig AS neg_sig, bucket,
-         ROW_NUMBER() OVER (PARTITION BY bucket
-                            ORDER BY md5(image_id), image_id) AS rk
-  FROM b),
-pairs AS (
-  SELECT a.image_id, d.neg_image_id,
-         ROUND(1.0 - CAST(bit_count(xor(a.phash, d.neg_sig)) AS INTEGER)
-                     * 2.0 / 64.0, 6) AS neg_alignment
-  FROM b a JOIN donors d
-    ON a.bucket = d.bucket AND a.image_id <> d.neg_image_id
-  WHERE d.rk <= 16),
-r AS (
-  SELECT image_id, neg_image_id, neg_alignment,
-         ROW_NUMBER() OVER (PARTITION BY image_id
-                            ORDER BY neg_alignment DESC, neg_image_id)
-           AS rank
-  FROM pairs)
-SELECT image_id, CAST(rank AS INT) AS rank, neg_image_id, neg_alignment
-FROM r WHERE rank <= 3 ORDER BY image_id, rank
-"""
-
-
 def q_hll_distinct(spark, sf_dir):
     """HyperLogLog distinct-user estimate per event_type
     (operators/sketch.hll_distinct, p=10): map-only Arrow (bucket, rho)
@@ -4583,48 +3684,6 @@ def _cms_oracle() -> str:
     from ..operators.sketch import cms_sql
 
     return cms_sql("documents", "text", k=20, depth=4, width=1024)
-
-
-def q_ivfpq_ann_topk(spark, sf_dir):
-    """IVF-PQ ANN top-5 (operators/pq.py): the memory-scale path of the
-    ANN family — 8x64 product quantization (~32x vector compression:
-    8 sub-byte codes vs 64 float32),
-    coarse-cluster candidate join, JVM-side ADC table-lookup scoring.
-    All post-training arithmetic is exact fixed-point integers, so the
-    DuckDB oracle (refit quantizers from the same deterministic sample,
-    embedded as literals) reproduces codes and ADC sums bit-for-bit."""
-    from ..operators.pq import ivfpq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ivfpq_topk(
-        emb, queries, k=5, n_clusters=16, nprobe=4, m=8, ksub=64
-    ).orderBy("query_id", "rank")
-
-
-def ivfpq_ann_oracle_sql() -> str:
-    """Hash-verified oracle for q_ivfpq_ann_topk: refits the coarse
-    quantizer AND the PQ codebook from the same deterministic sample
-    (lowest-20000 vec_ids, seeded, fixed iterations) and embeds both as
-    literals; DuckDB recomputes assignment, probes, integer codes, and
-    ADC sums independently (see operators/pq.ivfpq_oracle_sql)."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.pq import ivfpq_oracle_sql, pq_fit_codebook_np
-    from ..operators.similarity import kmeans_fit
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    pdf = pd.read_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"]
-    )
-    pdf = pdf.sort_values("vec_id").head(20_000)
-    x = np.stack([np.asarray(v, np.float64) for v in pdf["embedding"]])
-    coarse = kmeans_fit(x, n_clusters=16, n_iter=10, seed=0)
-    codebook = pq_fit_codebook_np(x, m=8, ksub=64, n_iter=10, seed=0)
-    return ivfpq_oracle_sql(coarse, codebook, n_queries=10, k=5, nprobe=4)
 
 
 def q_resample_interpolate(spark, sf_dir):
@@ -4921,23 +3980,17 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "group_percentiles": q_group_percentiles,
     "asof_join": q_asof_join,
     "sessionize": q_sessionize,
-    "ar_bucket_shards": q_ar_bucket_shards,
-    "audio_features": q_audio_features,
     "merge_upsert": q_merge_upsert,
     # --- block B: new in r4
     "streaming_dedup_parity": q_streaming_dedup_parity,
-    "semdedup": q_semdedup,
     "dms2dd": q_dms2dd,
     "crosscorpus_dedup": q_crosscorpus_dedup,
     "temperature_mix": q_temperature_mix,
     "interval_join": q_interval_join,
     "interval_overlap": q_interval_overlap,
-    "caption_alignment": q_caption_alignment,
-    "hard_negatives": q_hard_negatives,
     "table_evolution": q_table_evolution,
     "hll_distinct": q_hll_distinct,
     "heavy_hitters": q_heavy_hitters,
-    "ivfpq_ann_topk": q_ivfpq_ann_topk,
     "streaming_hll_parity": q_streaming_hll_parity,
     "tile_pyramid": q_tile_pyramid,
     "weighted_sample": q_weighted_sample,
@@ -4964,18 +4017,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "spatial_pip_join": q_spatial_pip_join,
     "knn_anchor_join": q_knn_anchor_join,
     "overlay_clip": q_overlay_clip,
-    "keep_best_images": q_keep_best_images,
-    "image_quality": q_image_quality,
     "corpus_integrity": q_corpus_integrity,
-    "multimodal_decode_stats": q_multimodal_decode_stats,
     "dedup_exact": q_dedup_exact,
     "minhash_pairs": q_minhash_pairs,
     "simhash_pairs": q_simhash_pairs,
     "phash_neardup": q_phash_neardup,
-    "embedding_neardup": q_embedding_neardup,
-    "ann_topk": q_ann_topk,
-    "lsh_ann_topk": q_lsh_ann_topk,
-    "ivf_ann_topk": q_ivf_ann_topk,
     "charset_jaccard": q_charset_jaccard,
     "ngram_jaccard": q_ngram_jaccard,
     # --- block E: r3 hash-green, rotated out of the r4 snapshot
@@ -5033,15 +4079,12 @@ ORACLES: dict[str, str] = {
     "dedup_exact": ORACLE_DEDUP_EXACT,
     "charset_jaccard": ORACLE_CHARSET_JACCARD,
     "ngram_jaccard": ORACLE_NGRAM_JACCARD,
-    "ann_topk": ORACLE_ANN_TOPK,
-    "embedding_neardup": ORACLE_EMB_NEARDUP,
     "minhash_pairs": _minhash_sql(),
     "simhash_pairs": _simhash_sql(),
     "dissolve": ORACLE_DISSOLVE,
     "rates_regression": ORACLE_RATES_REGRESSION,
     "crs_project": ORACLE_CRS_PROJECT,
     "dedup_clusters": ORACLE_DEDUP_CLUSTERS,
-    "ar_bucket_shards": _ar_shards_oracle(),
     "shuffle_shards": _shards_oracle(),
     "stratified_sample": _sampling_oracle(),
     "train_eval_split": _split_oracle(),
@@ -5056,10 +4099,6 @@ ORACLES: dict[str, str] = {
     "table_evolution": ORACLE_TABLE_EVOLUTION,
     "hll_distinct": _hll_oracle(),
     "heavy_hitters": _cms_oracle(),
-    # ivfpq_ann_topk: registered lazily in __spark_entry__.oracle_sql()
-    # (reads the testdata parquet + runs two k-means fits — an eager
-    # call here would break the whole module import on a machine
-    # without the testdata dir, and bill every importer for the fit)
     "streaming_hll_parity": _hll_stream_oracle(),
     "weighted_sample": _weighted_sample_oracle(),
     "resample_interpolate": _resample_oracle(),

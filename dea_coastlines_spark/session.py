@@ -39,7 +39,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch sizing for a MIXED tabular/multimodal engine:
+        # Arrow batch sizing for a MIXED tabular/raster engine:
         # batches close on whichever cap hits first (Spark 4 semantics).
         #   * maxBytesPerBatch 32 MB bounds UDF-input batches by BYTES —
         #     fat image rows (~100 KB encoded tile each) form ~320-row

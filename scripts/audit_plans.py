@@ -73,18 +73,17 @@ def effective_counts(plan: str) -> tuple[int, int]:
 # input size. The raster-pipeline queries (hotspots, shorelines_in_aoi,
 # masked/multilevel shorelines, rates_of_change, transect_rates,
 # coastal_transects, zonal_stats, validation_stats, dissolve,
-# contour_certainty, image/integrity) build FIXED synthetic corpora
+# contour_certainty, corpus_integrity) build FIXED synthetic corpora
 # independent of sf_dir — their plans are sf-invariant by construction,
 # which the emitted note records (VERDICT r3 item 7).
 HEAVY_SF_QUERIES = [
     "spatial_pip_join", "knn_anchor_join", "overlay_clip",
     "ngram_jaccard", "charset_jaccard",
-    "embedding_neardup", "minhash_pairs", "simhash_pairs",
-    "lsh_ann_topk", "ivf_ann_topk", "semdedup", "crosscorpus_dedup",
+    "minhash_pairs", "simhash_pairs", "crosscorpus_dedup",
     "dedup_clusters",
     "rates_regression", "group_percentiles", "cell_rollup",
     "interval_join", "interval_overlap",
-    "hll_distinct", "heavy_hitters", "ivfpq_ann_topk",
+    "hll_distinct", "heavy_hitters",
     "streaming_hll_parity",
     "weighted_sample", "resample_interpolate",
 ]
@@ -160,9 +159,9 @@ def main() -> None:
         "is whole-stage-codegen JVM); scan column widths (ReadSchema —",
         "pruned projections, not full-row scans); whether filters reached",
         "the scan; and scale-killer joins (CartesianProduct /",
-        "BroadcastNestedLoopJoin — none may appear outside explicitly",
-        "quadratic *_exact test oracles, enforced by",
-        "tests/test_dedup_similarity.py plan gates).",
+        "BroadcastNestedLoopJoin — none may appear outside the",
+        "documented small-side broadcasts below; the near-dup paths are",
+        "enforced by tests/test_dedup_similarity.py plan gates).",
         "",
         "| query | exchanges | python stages | scan cols | pushdown / flags |",
         "|---|---|---|---|---|",
@@ -176,7 +175,7 @@ def main() -> None:
         "  though the plan string prints them under every referencing",
         "  branch — the printed duplicates do not re-execute.",
         "- Synthetic-corpus queries (shoreline pipeline, dissolve,",
-        "  contour_certainty, audio) build their input with",
+        "  contour_certainty) build their input with",
         "  spark.createDataFrame, so `scan cols` shows `-`: there is no",
         "  file scan to prune.",
         "- `dedup_clusters` auto-picks its physical strategy: at sf0.01",
@@ -189,15 +188,14 @@ def main() -> None:
         "- Exchange counts include the final orderBy each query uses for",
         "  deterministic driver-side comparison; production callers drop",
         "  that sort.",
-        "- `ann_topk` / `asof_nearest` intentionally broadcast-cross a",
-        "  SMALL side (query set / dimension table) — the documented",
-        "  exactness baselines; the scale paths are lsh_ann_topk /",
-        "  ivf_ann_topk and operators/asof.py (zero join nodes).",
+        "- `asof_nearest` intentionally broadcast-crosses a SMALL side",
+        "  (the dimension table) — the documented exactness baseline;",
+        "  the scale path is operators/asof.py (zero join nodes).",
         "- `hotspots` / `shorelines_in_aoi` / `rates_of_change` are full",
         "  multi-stage pipelines (composite -> vectorize -> join ->",
         "  regress, hotspots at several radii); their stage counts are",
         "  the pipeline's, not one operator's.",
-        "- `ngram_jaccard` / `charset_jaccard` / `semdedup` carry",
+        "- `ngram_jaccard` / `charset_jaccard` carry",
         "  deliberate fixed-width repartitions on their CPU-bound",
         "  small-bytes join stages (prefix/candidate/pair joins): AQE",
         "  coalesces those exchanges by BYTES to a handful of tasks and",
@@ -222,10 +220,9 @@ def main() -> None:
             "queries (hotspots, shorelines_in_aoi, masked/multilevel",
             "shorelines, rates_of_change, transect_rates,",
             "coastal_transects, zonal_stats, validation_stats, dissolve,",
-            "contour_certainty, image_quality, corpus_integrity,",
-            "multimodal/audio) build FIXED synthetic corpora independent",
-            "of sf_dir — their plans are sf-invariant by construction and",
-            "are not re-listed.",
+            "contour_certainty, corpus_integrity) build FIXED synthetic",
+            "corpora independent of sf_dir — their plans are sf-invariant",
+            "by construction and are not re-listed.",
             "",
             "| query | exchanges | python stages | pushdown / flags | delta vs base |",
             "|---|---|---|---|---|",

@@ -5,7 +5,10 @@ coastline roots: the five `jobs/run_*.py` coastline CLIs,
 `plans.pipeline`, `plans.checkpoint`, `_daemon` (loaded by `get_spark`
 through a conf string, not an import) and every `perfbench/*.py`.
 Prints one JSON line: total lines in `dea_coastlines_spark/`, the lines
-of modules outside the closure, and each such module with its lines.
+of modules outside the closure, each such module with its lines, and
+`orphans`: the top-level functions of `dea_coastlines_spark/` and
+`jobs/` that no code outside the tests names (comments and docstrings
+do not count; tests are not scanned, so a test-only function is listed).
 Run: python scripts/closure_report.py   (standard library only)
 """
 
@@ -45,6 +48,36 @@ def imports(path, name):
             yield from (f"{mod}.{a.name}" for a in node.names)
 
 
+def py_files(*dirs):
+    """Every .py under ROOT/dir, skipping `tests/` directories."""
+    for top in dirs:
+        for d, subdirs, files in os.walk(os.path.join(ROOT, top)):
+            subdirs[:] = [s for s in subdirs if s not in ("tests", "__pycache__")]
+            yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
+
+
+def orphans():
+    """Dotted names of engine top-level functions no non-test code names."""
+    engine = set(py_files(PKG, "jobs"))
+    code = engine | set(py_files("scripts", "perfbench"))
+    code |= {os.path.join(ROOT, f) for f in os.listdir(ROOT) if f.endswith(".py")}
+    used, defs = set(), []
+    for path in code:
+        tree = ast.parse(open(path).read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.update(node.name.split("."))
+        if path in engine:
+            mod = os.path.relpath(path, ROOT)[:-3].replace(os.sep, ".")
+            defs += [(mod.removeprefix(PKG + "."), n.name) for n in tree.body
+                     if isinstance(n, ast.FunctionDef)]
+    return sorted(f"{m}.{f}" for m, f in defs if f not in used)
+
+
 def main():
     mods = module_files()
     lines = {m: sum(1 for _ in open(p)) for m, p in mods.items()}
@@ -69,6 +102,7 @@ def main():
         "engine_lines": sum(lines.values()),
         "outside_lines": sum(lines[m] for m in outside),
         "outside": {m.removeprefix(PKG + "."): lines[m] for m in outside},
+        "orphans": orphans(),
     }))
 
 

@@ -40,13 +40,12 @@ import duckdb
 SRC = "/root/testdata/sf0.1"
 COPIES = 10
 
-# oracles superlinear in corpus/pair volume (similarity pair mining,
-# brute-force ANN) — excluded from the 10x sweep, recorded as skipped
+# oracles superlinear in corpus/pair volume (similarity pair mining)
+# — excluded from the 10x sweep, recorded as skipped
 SKIP = ",".join(
     [
         "minhash_pairs", "ngram_jaccard", "crosscorpus_dedup",
-        "charset_jaccard", "simhash_pairs", "embedding_neardup",
-        "ann_topk",
+        "charset_jaccard", "simhash_pairs",
     ]
 )
 

@@ -76,14 +76,6 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    # sf-dependent oracle builders (semdedup / ivf centroid literals)
-    # re-derive their embedded literals from this dir; it must match
-    # the Spark side's --sf-dir or those queries false-mismatch. Set
-    # before the entry import so module-level ORACLES see it too.
-    import os
-
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = args.sf_dir
-
     import __spark_entry__ as entrymod
 
     from dea_coastlines_spark.session import get_spark

@@ -35,7 +35,7 @@ def test_png_uint8_roundtrip():
 
 
 def test_png_filter_decode():
-    # exercise the Up/Sub/Paeth unfilter paths with a hand-built stream
+    # exercise the None/Up fast path with a hand-built stream
     import struct
     import zlib
 
@@ -55,6 +55,62 @@ def test_png_filter_decode():
         + png._chunk(b"IEND", b"")
     )
     assert np.array_equal(png.decode_gray(buf), img)
+
+
+def _reference_filtered_png(img, ftypes):
+    """A PNG of `img` whose row r carries scanline filter ftypes[r],
+    filtered by a plain-Python transcription of the PNG spec."""
+    import struct
+    import zlib
+
+    bits = 16 if img.dtype == np.uint16 else 8
+    bpp = bits // 8
+    raw = img.astype(">u2" if bits == 16 else np.uint8).tobytes()
+    stride = img.shape[1] * bpp
+    rows, prev = [], [0] * stride
+    for r, ftype in enumerate(ftypes):
+        cur = list(raw[r * stride:(r + 1) * stride])
+        line = [ftype]
+        for i, x in enumerate(cur):
+            a = cur[i - bpp] if i >= bpp else 0
+            b = prev[i]
+            c = prev[i - bpp] if i >= bpp else 0
+            if ftype == 0:
+                pred = 0
+            elif ftype == 1:
+                pred = a
+            elif ftype == 2:
+                pred = b
+            elif ftype == 3:
+                pred = (a + b) // 2
+            else:
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+            line.append((x - pred) % 256)
+        rows.append(bytes(line))
+        prev = cur
+    h, w = img.shape
+    ihdr = struct.pack(">IIBBBBB", w, h, bits, 0, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + png._chunk(b"IHDR", ihdr)
+        + png._chunk(b"IDAT", zlib.compress(b"".join(rows)))
+        + png._chunk(b"IEND", b"")
+    )
+
+
+@pytest.mark.parametrize("ftype", [0, 1, 2, 3, 4, "mixed"])
+@pytest.mark.parametrize("bits", [8, 16])
+def test_png_unfilter_matches_reference_encoder(bits, ftype):
+    dtype = np.uint16 if bits == 16 else np.uint8
+    rng = np.random.default_rng(bits)
+    img = rng.integers(0, np.iinfo(dtype).max + 1, size=(11, 13)).astype(dtype)
+    # small values make Paeth ties (|a - c| == |a + b - 2c| with b != c),
+    # where the spec's tie order decides the predictor
+    img[4:] = rng.integers(0, 4, size=(7, 13))
+    ftypes = [r % 5 for r in range(11)] if ftype == "mixed" else [ftype] * 11
+    assert np.array_equal(png.decode_gray(_reference_filtered_png(img, ftypes)), img)
 
 
 def test_tiff_f32_roundtrip_bitexact():
@@ -186,6 +242,36 @@ def test_decode_error_cause_frame_size_and_unknown_format():
     with pytest.raises(ValueError) as ei:
         image.decode_tile(_GOOD["png"], "webp")
     assert not isinstance(ei.value, image.TileDecodeError)
+
+
+@pytest.mark.parametrize("n_good", [0, 1])
+def test_composite_rejects_tile_decoded_to_wrong_shape(n_good):
+    """A JPEG tile without NaNs whose frame header says 8 rows instead
+    of 32 decodes cleanly to (8, 32); the composite kernel compares
+    each decoded tile with its row's (h, w) and names the tile, alone
+    in its group or next to a good tile."""
+    import pandas as pd
+
+    from dea_coastlines_spark.operators.composite import decode_stats
+
+    good = image.encode_tile(_tile(8, 32, 32, nan_frac=0.0), "jpeg")
+    bad = bytearray(good)
+    sof = bad.index(b"\xff\xc0")
+    bad[sof + 5 : sof + 7] = (8).to_bytes(2, "big")  # SOF0 height
+    assert image.decode_tile(bytes(bad), "jpeg").shape == (8, 32)
+    n = n_good + 1
+    grp = pd.DataFrame({
+        "tile_x": [3] * n, "tile_y": [4] * n, "year": [2001] * n,
+        "bytes": [good] * n_good + [bytes(bad)], "fmt": ["jpeg"] * n,
+        "h": [32] * n, "w": [32] * n,
+    })
+    with pytest.raises(image.TileDecodeError) as ei:
+        decode_stats(grp)
+    assert str(ei.value) == (
+        "tile (3, 4) year 2001: decoded shape (8, 32), expected (32, 32)"
+    )
+    med, _, cnt = decode_stats(grp.assign(bytes=[good] * n))
+    assert med.shape == (32, 32) and cnt.max() == n
 
 
 def test_psnr_mismatched_nan_mask_fails():

@@ -1,5 +1,5 @@
-"""Dedup + similarity operator tests with planted duplicates and
-brute-force oracles."""
+"""Dedup operator tests with planted duplicates and brute-force
+oracles."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from dea_coastlines_spark.operators import dedup, multimodal, similarity
+from dea_coastlines_spark.operators import dedup
 
 BASE_DOCS = [
     "the quick brown fox jumps over the lazy dog and runs away to the hills",
@@ -149,88 +149,18 @@ def test_simhash_exact_dups_zero_hamming(spark, docs_df):
     assert sigs.loc[0, "simhash"] == sigs.loc[dup_id, "simhash"]
 
 
-@pytest.fixture(scope="module")
-def emb_df(spark):
-    rng = np.random.default_rng(8)
-    n, d = 300, 32
-    mat = rng.standard_normal((n, d)).astype(np.float32)
-    mat[10] = mat[0] + 0.01 * rng.standard_normal(d).astype(np.float32)  # near-dup
-    pdf = pd.DataFrame({"vec_id": np.arange(n, dtype=np.int64), "embedding": list(mat)})
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": pdf.vec_id, "embedding": [list(map(float, v)) for v in pdf.embedding]})
-    )
-    df.cache().count()
-    return df, mat
-
-
-def test_brute_force_topk_matches_numpy(spark, emb_df):
-    df, mat = emb_df
-    queries = df.filter(F.col("vec_id") < 5)
-    got = similarity.brute_force_topk(df, queries, k=3).toPandas()
-    norms = np.linalg.norm(mat.astype(np.float64), axis=1)
-    cos = (mat.astype(np.float64) @ mat.astype(np.float64).T) / np.outer(norms, norms)
-    for q in range(5):
-        c = np.round(cos[q], 6)
-        c[q] = -np.inf
-        order = np.lexsort((np.arange(len(c)), -c))[:3]
-        want = [int(i) for i in order]
-        have = got[got.query_id == q].sort_values("rank").item_id.tolist()
-        assert have == want, f"query {q}: {have} vs {want}"
-
-
-def test_lsh_topk_recall(spark, emb_df):
-    df, mat = emb_df
-    queries = df.filter(F.col("vec_id") < 10)
-    exact = similarity.brute_force_topk(df, queries, k=5).toPandas()
-    # 4 planes x 8 tables: collision prob for cosine~0.5 neighbors is
-    # ~(2/3)^4 per table -> ~0.83 union recall on unclustered Gaussians
-    approx = similarity.lsh_topk(df, queries, dim=32, k=5, n_planes=4, n_tables=8).toPandas()
-    recall_hits = 0
-    for q in range(10):
-        e = set(exact[exact.query_id == q].item_id)
-        a = set(approx[approx.query_id == q].item_id)
-        recall_hits += len(e & a)
-    assert recall_hits / (10 * 5) >= 0.5  # multi-table LSH recall floor
-    # the planted near-dup must be found (cosine ~1 -> same buckets w.h.p.)
-    nd = approx[(approx.query_id == 0) & (approx["rank"] == 1)]
-    assert len(nd) == 1 and nd.item_id.iloc[0] == 10
-
-
-def test_embedding_neardup_finds_planted(spark, emb_df):
-    df, mat = emb_df
-    pairs = similarity.embedding_neardup_pairs(df, dim=32, threshold=0.95).toPandas()
-    assert ((pairs.id_a == 0) & (pairs.id_b == 10)).any()
-
-
-def test_embedding_neardup_lsh_matches_exact_on_duplicates(spark, emb_df):
-    """The default (LSH-fronted) near-dup path returns exactly the same
-    pairs as the quadratic exact path on this fixture: the qualifying
-    pairs are near-parallel, where hyperplane recall is ~1."""
-    df, mat = emb_df
-    got = sorted(
-        map(tuple, similarity.embedding_neardup_pairs(df, dim=32, threshold=0.95)
-            .select("id_a", "id_b", "cosine").collect())
-    )
-    want = sorted(
-        map(tuple, similarity.embedding_neardup_pairs_exact(df, threshold=0.95)
-            .select("id_a", "id_b", "cosine").collect())
-    )
-    assert got == want and len(want) >= 1
-
-
 def _assert_no_nested_loop(df):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_neardup_plans_have_no_nested_loop_join(spark, docs_df, emb_df):
+def test_neardup_plans_have_no_nested_loop_join(spark, docs_df):
     """Scale-safety gate: the DEFAULT near-dup paths (prefix-filtered
-    n-gram Jaccard with NO blocking key, charset Jaccard, LSH embedding
-    near-dup) must plan as equi-joins — no CartesianProduct, no
-    BroadcastNestedLoopJoin anywhere in the physical plan."""
+    n-gram Jaccard with NO blocking key, cross-corpus, charset Jaccard,
+    MinHash and SimHash) must plan as equi-joins — no CartesianProduct,
+    no BroadcastNestedLoopJoin anywhere in the physical plan."""
     df, _ = docs_df
-    edf, _ = emb_df
     _assert_no_nested_loop(
         dedup.word_ngram_jaccard_pairs(df, "text", "doc_id", n=2, threshold=0.5)
     )
@@ -243,166 +173,8 @@ def test_neardup_plans_have_no_nested_loop_join(spark, docs_df, emb_df):
     _assert_no_nested_loop(
         dedup.charset_jaccard_pairs(charset, "text", "doc_id", "lang", threshold=0.8)
     )
-    _assert_no_nested_loop(
-        similarity.embedding_neardup_pairs(edf, dim=32, threshold=0.95)
-    )
     _assert_no_nested_loop(dedup.minhash_lsh_pairs(df, "text", "doc_id"))
     _assert_no_nested_loop(dedup.simhash_pairs(df, "text", "doc_id"))
-
-
-def test_multimodal_resize_halves_dims(spark):
-    from dea_coastlines_spark.synth import corpus
-
-    spec = corpus.CorpusSpec(tile_px=64, halo_px=0, tiles_x=1, tiles_y=1,
-                             year0=2000, year1=2000, obs_per_year=1, cloud_frac=0.0, seed=2)
-    tiles = spark.createDataFrame(corpus.generate_pandas(spec))
-    out = multimodal.resize(tiles, factor=2).toPandas()
-    assert (out.w == 32).all() and (out.h == 32).all()
-    from dea_coastlines_spark.codecs import image as ic
-
-    small = ic.decode_tile(bytes(out.bytes.iloc[0]), out.fmt.iloc[0])
-    big, _ = corpus.make_tile(spec, 0, 0, 2000, 0)
-    want = big.reshape(32, 2, 32, 2).mean(axis=(1, 3))
-    assert np.allclose(small, want, atol=3e-4)
-
-
-def test_multimodal_resize_jpeg_roundtrip(spark):
-    # lossy leg of the fmt contract: resize decodes + re-encodes jpeg
-    from dea_coastlines_spark.synth import corpus
-
-    spec = corpus.CorpusSpec(tile_px=64, halo_px=0, tiles_x=1, tiles_y=1,
-                             year0=2000, year1=2000, obs_per_year=1,
-                             cloud_frac=0.0, seed=2, fmt="jpeg")
-    tiles = spark.createDataFrame(corpus.generate_pandas(spec))
-    out = multimodal.resize(tiles, factor=2).toPandas()
-    assert (out.w == 32).all() and (out.fmt == "jpeg").all()
-    from dea_coastlines_spark.codecs import image as ic
-
-    small = ic.decode_tile(bytes(out.bytes.iloc[0]), "jpeg")
-    big, _ = corpus.make_tile(spec, 0, 0, 2000, 0)
-    want = big.reshape(32, 2, 32, 2).mean(axis=(1, 3))
-    # two lossy 8-bit round trips: tolerance is the codec's, not float's
-    assert ic.psnr(want.astype(np.float32), small) >= 35.0
-
-
-def test_multimodal_frame_sample(spark):
-    from dea_coastlines_spark.operators import composite as comp_op
-    from dea_coastlines_spark.synth import corpus
-
-    spec = corpus.CorpusSpec(tile_px=32, halo_px=0, tiles_x=1, tiles_y=1,
-                             year0=2000, year1=2000, obs_per_year=6, cloud_frac=0.0, seed=2)
-    tiles = comp_op.with_caption(spark.createDataFrame(corpus.generate_pandas(spec)))
-    out = multimodal.frame_sample(tiles, every_k=2).toPandas()
-    assert len(out) == 3 and out.frame_idx.tolist() == [0, 2, 4]
-
-
-def test_audio_features_closed_forms(spark):
-    """WAV decode + features vs closed forms: a pure sine at frequency f
-    has RMS A/sqrt(2), zero-crossing rate 2f, spectral centroid f."""
-    from dea_coastlines_spark.codecs import wav
-
-    rate, f, amp, dur = 8000, 440.0, 0.5, 1.0
-    t = np.arange(int(rate * dur)) / rate
-    mono = (amp * np.sin(2 * np.pi * f * t)).astype(np.float32)
-    stereo = np.stack([mono, mono], axis=1)
-    pdf = pd.DataFrame(
-        {
-            "audio_id": ["sine_mono", "sine_stereo"],
-            "bytes": [wav.encode_pcm16(mono, rate), wav.encode_pcm16(stereo, rate)],
-        }
-    )
-    out = (
-        multimodal.audio_features(spark.createDataFrame(pdf))
-        .toPandas()
-        .set_index("audio_id")
-    )
-    for aid in ("sine_mono", "sine_stereo"):
-        r = out.loc[aid]
-        assert r.sample_rate == rate and abs(r.duration_s - dur) < 1e-9
-        assert abs(r.rms - amp / np.sqrt(2)) < 1e-3
-        assert abs(r.zcr_hz - 2 * f) < 5.0
-        assert abs(r.spectral_centroid_hz - f) < 2.0
-
-
-def test_wav_roundtrip_bits(spark):
-    from dea_coastlines_spark.codecs import wav
-
-    rng = np.random.default_rng(3)
-    x = rng.uniform(-1, 1, (500, 2)).astype(np.float32)
-    y, rate = wav.decode_pcm16(wav.encode_pcm16(x, 44100))
-    assert rate == 44100 and y.shape == (500, 2)
-    assert np.abs(y - np.clip(x, -1, 1)).max() <= 1.5 / 32767
-
-
-def test_ivf_topk_recall_vs_brute_force(spark):
-    from dea_coastlines_spark.operators.similarity import brute_force_topk, ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 8)
-    exact = brute_force_topk(emb, queries, k=5).collect()
-    approx = ivf_topk(emb, queries, k=5, n_clusters=8, nprobe=4).collect()
-    exact_set = {(r.query_id, r.item_id) for r in exact}
-    approx_set = {(r.query_id, r.item_id) for r in approx}
-    recall = len(exact_set & approx_set) / len(exact_set)
-    assert recall >= 0.5  # nprobe/half the clusters -> decent recall
-    # deterministic: same call twice -> identical rows
-    again = {(r.query_id, r.rank, r.item_id) for r in
-             ivf_topk(emb, queries, k=5, n_clusters=8, nprobe=4).collect()}
-    assert again == {(r.query_id, r.rank, r.item_id) for r in approx}
-
-
-def test_semdedup_matches_numpy_semantics(spark, emb_df):
-    """Full numpy recompute of the SemDeDup semantics (explicit
-    centroids so both sides share only the constants): nearest-centroid
-    assignment, rounded c_sim, keep-priority pairing (lower c_sim
-    first, id tie-break), within-cluster cosine prune, per-item max
-    duplicate cosine."""
-    df, mat = emb_df
-    x = mat.astype(np.float64)
-    cents = similarity.kmeans_fit(x, n_clusters=8, n_iter=10, seed=3)
-    got = (
-        similarity.semdedup(df, eps=0.95, centroids=cents)
-        .orderBy("vec_id")
-        .toPandas()
-    )
-
-    u = x / np.linalg.norm(x, axis=1, keepdims=True)
-    sims = u @ cents.T
-    cl = sims.argmax(axis=1)
-    c_sim = np.round(sims[np.arange(len(x)), cl], 6)
-    cos = np.round(u @ u.T, 6)
-    n = len(x)
-    dup_cos = np.full(n, -1.0)
-    for a in range(n):
-        best = -1.0
-        for b in range(n):
-            if b == a or cl[b] != cl[a]:
-                continue
-            if (c_sim[b] < c_sim[a]) or (c_sim[b] == c_sim[a] and b < a):
-                if cos[a, b] >= 0.95:
-                    best = max(best, cos[a, b])
-        dup_cos[a] = best
-
-    assert got.vec_id.tolist() == list(range(n))
-    assert got.cluster.tolist() == cl.tolist()
-    assert np.allclose(got.c_sim.to_numpy(), c_sim, atol=2e-6)
-    assert np.allclose(got.dup_cos.to_numpy(), dup_cos, atol=2e-6)
-    assert got.kept.tolist() == [int(d < 0) for d in dup_cos]
-    # the planted near-dup pair (0, 10) resolved: exactly one dropped,
-    # and the survivor is the one farther from its centroid
-    pair = got[got.vec_id.isin([0, 10])]
-    assert sorted(pair.kept.tolist()) == [0, 1]
-    keep = pair[pair.kept == 1].iloc[0]
-    drop = pair[pair.kept == 0].iloc[0]
-    assert keep.c_sim <= drop.c_sim
-
-
-def test_semdedup_plan_is_equi_join(spark, emb_df):
-    """Scale gate: the within-cluster prune plans as an equi-join on
-    cluster — no CartesianProduct / BroadcastNestedLoopJoin."""
-    df, mat = emb_df
-    cents = similarity.kmeans_fit(mat.astype(np.float64), 8, 10, 3)
-    _assert_no_nested_loop(similarity.semdedup(df, centroids=cents))
 
 
 def test_phash_neardup_matches_bruteforce(spark):
@@ -522,158 +294,6 @@ def test_word_ngram_jaccard_degenerate_docs(spark):
         sdf, "text", "doc_id", n=2, threshold=0.5
     ).collect()
     assert {(r.id_a, r.id_b) for r in kept} == {(2, 3)}
-
-
-def test_augment_images_crop_flip_deterministic(spark):
-    from dea_coastlines_spark.codecs import image as ic
-    from dea_coastlines_spark.synth import corpus
-
-    spec = corpus.CorpusSpec(tile_px=32, halo_px=0, tiles_x=2, tiles_y=1,
-                             year0=2000, year1=2000, obs_per_year=2,
-                             cloud_frac=0.0, seed=4, fmt="tiff")
-    tiles = spark.createDataFrame(corpus.generate_pandas(spec))
-    out = multimodal.augment_images(
-        tiles, crop_px=4, hflip=True, brightness=0.1
-    ).toPandas().set_index("image_id")
-    assert (out.w == 24).all() and (out.h == 24).all()
-    # verify against a directly computed transform (tiff = bit-exact)
-    src = corpus.generate_pandas(spec).set_index("image_id")
-    iid = out.index[0]
-    arr = ic.decode_tile(bytes(src.loc[iid, "bytes"]), "tiff")[4:-4, 4:-4]
-    want = np.clip(arr[:, ::-1] + 0.1, -1.0, 1.0).astype(np.float32)
-    got = ic.decode_tile(bytes(out.loc[iid, "bytes"]), "tiff")
-    assert np.allclose(got, want, equal_nan=True)
-    # seeded per-image flips are partition-invariant
-    a = multimodal.augment_images(tiles, hflip=True, seed=9).toPandas()
-    b = multimodal.augment_images(
-        tiles.repartition(5), hflip=True, seed=9
-    ).toPandas()
-    pa = a.set_index("image_id").bytes.apply(bytes).to_dict()
-    pb = b.set_index("image_id").bytes.apply(bytes).to_dict()
-    assert pa == pb
-
-
-def test_caption_alignment_cosine_identities(spark):
-    """phash == caption SimHash -> cosine exactly 1; complement -> -1;
-    empty caption embeds to signature 0."""
-    import pandas as pd
-
-    from dea_coastlines_spark.operators.dedup import simhash64
-    from dea_coastlines_spark.operators.multimodal import caption_alignment
-
-    cap = "annual shoreline tile composite"
-    sig = simhash64([cap])[0]
-    rows = pd.DataFrame(
-        {
-            "image_id": ["same", "opposite", "empty"],
-            "caption": [cap, cap, ""],
-            "phash": [sig, ~sig, 12345],
-        }
-    )
-    got = (
-        caption_alignment(spark.createDataFrame(rows), threshold=0.0)
-        .toPandas()
-        .set_index("image_id")
-    )
-    assert got.loc["same", "hamming"] == 0
-    assert got.loc["same", "alignment"] == 1.0
-    assert bool(got.loc["same", "keep"])
-    assert got.loc["opposite", "hamming"] == 64
-    assert got.loc["opposite", "alignment"] == -1.0
-    assert not bool(got.loc["opposite", "keep"])
-    assert got.loc["empty", "caption_sig"] == 0
-
-
-def test_caption_alignment_prunes_bytes_before_arrow(spark):
-    """Image bytes must never cross into the Python tower pass: the
-    operator narrows to (id, caption, phash) before mapInPandas."""
-    from dea_coastlines_spark.operators.multimodal import caption_alignment
-    from dea_coastlines_spark.synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=32, halo_px=2, tiles_x=2, tiles_y=1,
-                              year0=2000, year1=2000, obs_per_year=2,
-                              cloud_frac=0.0, seed=4)
-    tiles = spark.createDataFrame(_corpus.generate_pandas(spec))
-    out = caption_alignment(tiles)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    (arrow_schema,) = re.findall(r"MapInPandas.*", plan)[:1] or [""]
-    assert "bytes" not in arrow_schema
-    got = out.toPandas()
-    assert len(got) == 4 and got["alignment"].between(-1, 1).all()
-
-
-def test_hard_negatives_matches_bruteforce(spark):
-    """Uncapped mining equals a pandas brute force over the same hash
-    towers; the donor cap only ever shrinks each image's donor pool to
-    the md5-first members of its bucket."""
-    import hashlib
-
-    import pandas as pd
-
-    from dea_coastlines_spark.operators.dedup import simhash64
-    from dea_coastlines_spark.operators.multimodal import hard_negatives
-    from dea_coastlines_spark.synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=32, halo_px=2, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2001, obs_per_year=3,
-                              cloud_frac=0.05, seed=21)
-    pdf = _corpus.generate_pandas(spec)
-    tiles = spark.createDataFrame(pdf)
-    k, bits = 2, 6
-
-    got = (
-        hard_negatives(tiles, k=k, prefix_bits=bits, bucket_cap=None)
-        .toPandas()
-        .sort_values(["image_id", "rank"])
-        .reset_index(drop=True)
-    )
-
-    sigs = simhash64(pdf["caption"])
-    rows = []
-    for i in range(len(pdf)):
-        bucket_i = int(pdf["phash"].iloc[i]) >> (64 - bits)
-        cands = []
-        for j in range(len(pdf)):
-            if i == j or (int(pdf["phash"].iloc[j]) >> (64 - bits)) != bucket_i:
-                continue
-            ham = bin((int(pdf["phash"].iloc[i]) ^ sigs[j]) & ((1 << 64) - 1)).count("1")
-            cands.append((round(1 - ham * 2 / 64, 6), pdf["image_id"].iloc[j]))
-        cands.sort(key=lambda t: (-t[0], t[1]))
-        for r, (al, nid) in enumerate(cands[:k], 1):
-            rows.append((pdf["image_id"].iloc[i], r, nid, al))
-    want = pd.DataFrame(
-        rows, columns=["image_id", "rank", "neg_image_id", "neg_alignment"]
-    ).sort_values(["image_id", "rank"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        got.astype({"rank": "int64"}), want.astype({"rank": "int64"})
-    )
-
-    # cap semantics: donors restricted to each bucket's md5-first 3
-    capped = hard_negatives(
-        tiles, k=k, prefix_bits=bits, bucket_cap=3
-    ).toPandas()
-    by_bucket = {}
-    for j in range(len(pdf)):
-        b = int(pdf["phash"].iloc[j]) >> (64 - bits)
-        by_bucket.setdefault(b, []).append(pdf["image_id"].iloc[j])
-    allowed = set()
-    for b, ids in by_bucket.items():
-        ids.sort(key=lambda s: (hashlib.md5(s.encode()).hexdigest(), s))
-        allowed |= set(ids[:3])
-    assert set(capped["neg_image_id"]) <= allowed
-    # an image receives negatives iff its bucket's capped donor set
-    # contains someone other than itself
-    recv = set(capped["image_id"])
-    for i in range(len(pdf)):
-        b = int(pdf["phash"].iloc[i]) >> (64 - bits)
-        iid = pdf["image_id"].iloc[i]
-        cap_set = set(
-            sorted(by_bucket[b],
-                   key=lambda s: (hashlib.md5(s.encode()).hexdigest(), s))[:3]
-        ) - {iid}
-        assert (iid in recv) == bool(cap_set)
 
 
 def test_verify_jaccard_bitset_budget_fallback(spark, docs_df, monkeypatch):

@@ -104,9 +104,9 @@ ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_queries_run_and_are_deterministic(spark, name):
-    """Queries without a SQL oracle (raster->vector, LSH, multimodal,
-    pipeline stages) must still run and produce a stable row count +
-    schema across invocations (the driver's weaker rows-only check)."""
+    """Queries without a SQL oracle (pinned above to streaming_dedup)
+    must still run and produce a stable row count + schema across
+    invocations (the driver's weaker rows-only check)."""
     q = entrymod.queries()[name]
     a = q(spark, SF_DIR)
     b = q(spark, SF_DIR)

@@ -143,60 +143,6 @@ def test_job_chain(spark, chain_dirs, capsys):
     assert stats["overall"]["mae"] < SPEC.res_m  # within one pixel
 
 
-def test_image_export_job(spark, tmp_path, capsys):
-    import tarfile
-
-    import run_image_export
-    from dea_coastlines_spark.synth import corpus
-
-    spec = corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                             year0=2000, year1=2002, obs_per_year=4,
-                             cloud_frac=0.05, seed=9)
-    pdf = corpus.generate_pandas(spec)
-    imgs_path = str(tmp_path / "imgs")
-    out_path = str(tmp_path / "wds")
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(imgs_path)
-
-    assert run_image_export.main([
-        "--images", imgs_path, "--output", out_path, "--shard-size", "16",
-    ]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["n_in"] == len(pdf)
-    assert out["n_out"] == len(pdf)  # no dedup pass
-    assert out["n_shards"] >= 2
-
-    manifest = spark.read.parquet(out_path + "_manifest").toPandas()
-    assert manifest.n_samples.sum() == len(pdf)
-    name = manifest.shard_name.iloc[0]
-    with tarfile.open(str(tmp_path / "wds" / name)) as tar:
-        assert any(m.endswith(".json") for m in tar.getnames())
-
-    # phash dedup pass drops the corpus's near-identical repeats
-    assert run_image_export.main([
-        "--images", imgs_path, "--output", str(tmp_path / "wds2"),
-        "--shard-size", "16", "--max-hamming", "6",
-    ]) == 0
-    out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert 0 < out2["n_out"] < len(pdf)
-
-    # alignment gate keeps exactly the operator's own survivors
-    from dea_coastlines_spark.operators.multimodal import caption_alignment
-
-    expect = {
-        r.image_id
-        for r in caption_alignment(
-            spark.read.parquet(imgs_path), threshold=0.0
-        ).filter("keep").select("image_id").collect()
-    }
-    assert 0 < len(expect) < len(pdf)  # gate is non-trivial on this corpus
-    assert run_image_export.main([
-        "--images", imgs_path, "--output", str(tmp_path / "wds3"),
-        "--shard-size", "16", "--min-alignment", "0.0",
-    ]) == 0
-    out3 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out3["n_out"] == len(expect)
-
-
 def test_transects_job(spark, tmp_path, capsys):
     import run_transects
 

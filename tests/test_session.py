@@ -1,6 +1,6 @@
 """The engine's Arrow batch contract.
 
-A mixed tabular/multimodal engine needs two independent caps (Spark 4
+A mixed tabular/raster engine needs two independent caps (Spark 4
 semantics: a batch closes when EITHER cap hits):
 
   * maxBytesPerBatch bounds UDF-input batches by BYTES, so fat image
