@@ -2905,6 +2905,41 @@ FROM s ORDER BY shard, pos
 """
 
 
+def q_ar_bucket_shards(spark, sf_dir):
+    """Aspect-ratio bucketing + fixed-size shard packing (SDXL-style
+    training export over the image corpus shape). Image sizes are
+    derived deterministically from doc_id via the shared u01 chain so
+    the oracle reproduces them bit-exactly; bucket assignment is a
+    row-local CASE chain, packing is one (bucket, shard) shuffle."""
+    from ..operators.bucketing import ar_bucket_shards
+    from ..operators.sampling import u01
+
+    d = _t(spark, sf_dir, "documents").select("doc_id")
+    img = d.select(
+        F.col("doc_id").alias("image_id"),
+        (64 * (F.lit(8) + F.floor(u01("doc_id", 101) * 25))).cast("int").alias("w"),
+        (64 * (F.lit(8) + F.floor(u01("doc_id", 202) * 25))).cast("int").alias("h"),
+    )
+    out = ar_bucket_shards(img, "image_id", shard_size=20, seed=7)
+    return out.select(
+        "image_id", "bucket_id", "bucket_w", "bucket_h", "shard", "pos"
+    ).orderBy("bucket_id", "shard", "pos")
+
+
+def _ar_shards_oracle() -> str:
+    from ..operators.bucketing import shard_pack_sql
+    from ..operators.sampling import u01_sql
+
+    w = f"CAST(64 * (8 + FLOOR({u01_sql('doc_id', 101)} * 25)) AS INT)"
+    h = f"CAST(64 * (8 + FLOOR({u01_sql('doc_id', 202)} * 25)) AS INT)"
+    inner = f"(SELECT doc_id AS image_id, {w} AS w, {h} AS h FROM documents)"
+    body = shard_pack_sql(inner, "image_id", "w", "h", shard_size=20, seed=7)
+    return (
+        "SELECT k AS image_id, bucket_id, bucket_w, bucket_h, shard, pos "
+        f"FROM ({body}) ORDER BY bucket_id, shard, pos"
+    )
+
+
 def q_dedup_clusters(spark, sf_dir):
     """Connected components over a pair list -> keep-one dedup clusters
     (the transitive-closure stage downstream of every near-dup
@@ -3980,6 +4015,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "group_percentiles": q_group_percentiles,
     "asof_join": q_asof_join,
     "sessionize": q_sessionize,
+    "ar_bucket_shards": q_ar_bucket_shards,
     "merge_upsert": q_merge_upsert,
     # --- block B: new in r4
     "streaming_dedup_parity": q_streaming_dedup_parity,
@@ -4085,6 +4121,7 @@ ORACLES: dict[str, str] = {
     "rates_regression": ORACLE_RATES_REGRESSION,
     "crs_project": ORACLE_CRS_PROJECT,
     "dedup_clusters": ORACLE_DEDUP_CLUSTERS,
+    "ar_bucket_shards": _ar_shards_oracle(),
     "shuffle_shards": _shards_oracle(),
     "stratified_sample": _sampling_oracle(),
     "train_eval_split": _split_oracle(),
