@@ -14,7 +14,8 @@ over an Iceberg-style table of (image bytes + caption) tile rows:
 Design rules (SURVEY.md §7):
   * DataFrame/SQL first — Catalyst owns pushdown/pruning/join choice.
   * No per-row Python anywhere: all kernels are Arrow-batched
-    (pandas_udf / applyInPandas / mapInPandas), numpy-vectorized inside.
+    (pandas_udf / applyInPandas / applyInArrow / mapInPandas),
+    numpy-vectorized inside.
   * Partition key = quadtree cell_id (S2-style Morton index over the
     projected plane); salting for dense coastal cells.
   * One fat UDF per pipeline stage (Catalyst can't fuse across Python

@@ -15,7 +15,8 @@ Pixel semantics follow the reference's MNDWI rasters: float32 in
                in-band nodata code — decode smear would misclassify).
 
 All functions operate on single tiles; Spark-side callers batch them
-inside Arrow UDFs (mapInPandas / applyInPandas) — never per-row Python.
+inside Arrow UDFs (the composite kernels' `applyInArrow` grouped maps,
+mapInPandas elsewhere) — never per-row Python.
 """
 
 from __future__ import annotations

@@ -169,67 +169,52 @@ def segments_intersect_point(
     return out
 
 
+# Stitch tolerance of clip_polyline_to_bbox, np.allclose's defaults with
+# atol=1e-12. Kept for digest parity with the pinned shorelines, although
+# the relative term joins points up to 1e-5 x |coordinate| apart: 10-50 m
+# at Albers-scale coordinates (1e6-5e6 m), more than one 30 m pixel.
+_STITCH_ATOL = 1e-12
+_STITCH_RTOL = 1e-5
+
+
 def clip_polyline_to_bbox(line: np.ndarray, xmin, ymin, xmax, ymax) -> list[np.ndarray]:
-    """Clip a polyline to an axis-aligned box, returning the pieces inside
-    (Cohen–Sutherland per segment, then stitch runs). The engine's analog
-    of the reference's clip-to-study-area (vector.py:1604,1658) used for
-    halo removal after cross-tile vectorization."""
+    """Clip a polyline to an axis-aligned box, returning the pieces inside.
+    The engine's analog of the reference's clip-to-study-area
+    (vector.py:1604,1658), used for halo removal after cross-tile
+    vectorization.
+
+    Liang–Barsky over all segments at once. Consecutive clipped segments
+    form one piece when the previous segment's end b and the next one's
+    start a satisfy `|b - a| <= _STITCH_ATOL + _STITCH_RTOL * |a|` in
+    both coordinates; the tolerances are kept for digest parity."""
     line = np.asarray(line, np.float64)
-    pieces: list[list[np.ndarray]] = []
-    cur: list[np.ndarray] = []
-
-    def emit():
-        nonlocal cur
-        if len(cur) >= 2:
-            pieces.append(cur)
-        cur = []
-
-    for i in range(len(line) - 1):
-        seg = _clip_segment(line[i], line[i + 1], xmin, ymin, xmax, ymax)
-        if seg is None:
-            emit()
-            continue
-        a, b = seg
-        if cur and np.allclose(cur[-1], a, atol=1e-12):
-            cur.append(b)
-        else:
-            emit()
-            cur = [a, b]
-    emit()
-    return [np.array(p) for p in pieces]
-
-
-def _clip_segment(a, b, xmin, ymin, xmax, ymax):
-    """Liang–Barsky segment-vs-box clip; None if fully outside."""
-    x0, y0 = a
-    x1, y1 = b
-    dx, dy = x1 - x0, y1 - y0
-    t0, t1 = 0.0, 1.0
-    for p, q in (
-        (-dx, x0 - xmin),
-        (dx, xmax - x0),
-        (-dy, y0 - ymin),
-        (dy, ymax - y0),
-    ):
-        if p == 0:
-            if q < 0:
-                return None
-        else:
+    if len(line) < 2:
+        return []
+    x0, y0 = line[:-1, 0], line[:-1, 1]
+    dx, dy = line[1:, 0] - x0, line[1:, 1] - y0
+    t0 = np.zeros(len(x0))
+    t1 = np.ones(len(x0))
+    outside = np.zeros(len(x0), bool)
+    # the four edges in the order a per-segment loop visits them: each
+    # bound moves only on a strict improvement, as max()/min() do
+    # (rejected segments may overflow; they are masked out by `kept`)
+    with np.errstate(all="ignore"):
+        for p, q in ((-dx, x0 - xmin), (dx, xmax - x0), (-dy, y0 - ymin), (dy, ymax - y0)):
+            outside |= (p == 0) & (q < 0)
             r = q / p
-            if p < 0:
-                if r > t1:
-                    return None
-                t0 = max(t0, r)
-            else:
-                if r < t0:
-                    return None
-                t1 = min(t1, r)
-    if t0 > t1:
-        return None
-    return (
-        np.array([x0 + t0 * dx, y0 + t0 * dy]),
-        np.array([x0 + t1 * dx, y0 + t1 * dy]),
-    )
+            t0 = np.where((p < 0) & (r > t0), r, t0)
+            t1 = np.where((p > 0) & (r < t1), r, t1)
+        kept = ~outside & ~(t0 > t1)
+        a = np.stack([x0 + t0 * dx, y0 + t0 * dy], axis=1)
+        b = np.stack([x0 + t1 * dx, y0 + t1 * dy], axis=1)
+        close = np.abs(b[:-1] - a[1:]) <= _STITCH_ATOL + _STITCH_RTOL * np.abs(a[1:])
+        close = close.all(axis=1)
+    # segment i continues the piece of segment i-1
+    join = np.zeros(len(x0), bool)
+    join[1:] = kept[:-1] & kept[1:] & close
+    starts = np.flatnonzero(kept & ~join)
+    ends = np.flatnonzero(kept & ~np.append(join[1:], False))
+    return [np.concatenate((a[s : s + 1], b[s : e + 1])) for s, e in zip(starts, ends)]
 
 
 def _segment_ring_crossings(a: np.ndarray, b: np.ndarray, ring: np.ndarray) -> np.ndarray:

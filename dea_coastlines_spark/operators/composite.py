@@ -9,10 +9,14 @@ Spark plan (scale notes):
     per-tile tide-cutoff aggregation are pure DataFrame ops; Catalyst
     prunes `bytes` out of the scan for the cutoff aggregation (only
     caption columns are touched there).
-  * the pixel stack never leaves Python: ONE `applyInPandas` per
-    (tile_x, tile_y, year) group does decode -> stack -> nanmedian/std/
-    count -> float32-TIFF re-encode. Group size = obs_per_year tiles
-    (bounded memory: the dask-chunk analog, raster.py:549).
+  * the pixel stack never leaves Python: ONE `applyInArrow` per
+    (tile_x, tile_y, year) group reads its columns straight from the
+    group's Arrow table (no pandas frame) and does decode -> stack ->
+    nanmedian/std/count (`decode_stats`) -> float32-TIFF encode of the
+    composite row. `shoreline_pipeline` runs the same `decode_stats` in
+    its own grouped map and never encodes the rasters. Group size =
+    obs_per_year tiles (bounded memory: the dask-chunk analog,
+    raster.py:549).
   * the grouped map's own hash exchange on (tile_x, tile_y, year) is the
     only shuffle of pixel bytes; there is no extra repartition.
 """
@@ -22,8 +26,8 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, StringType, StructField, StructType,
@@ -127,45 +131,59 @@ def _nan_median_std_count(stack: np.ndarray):
     return med, std, n.astype(np.float32)
 
 
-def decode_stats(grp: pd.DataFrame):
+def decode_stats(cols) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """One observation group's encoded tiles -> (median, std, count)
-    rasters: the shared body of every composite kernel. A tile that
-    decodes to another shape than its row's (h, w) raises
+    rasters: the shared body of every composite kernel. `cols` maps the
+    names `bytes`, `fmt`, `h`, `w`, `tile_x`, `tile_y` and `year` to
+    equal-length column sequences (an Arrow table's `to_pydict()`). A
+    tile that decodes to another shape than its row's (h, w) raises
     `TileDecodeError`: a damaged frame header can decode without error."""
     arrays = []
-    for i, (b, f, h, w) in enumerate(zip(grp["bytes"], grp["fmt"], grp["h"], grp["w"])):
+    for i, (b, f, h, w) in enumerate(zip(cols["bytes"], cols["fmt"], cols["h"], cols["w"])):
         arr = img_codec.decode_tile(bytes(b), f)
         if arr.shape != (h, w):
-            row = grp.iloc[i]
             raise img_codec.TileDecodeError(
-                f"tile ({row['tile_x']}, {row['tile_y']}) year {row['year']}: "
+                f"tile ({cols['tile_x'][i]}, {cols['tile_y'][i]}) year {cols['year'][i]}: "
                 f"decoded shape {arr.shape}, expected ({h}, {w})"
             )
         arrays.append(arr)
     return _nan_median_std_count(np.stack(arrays))
 
 
-def _composite_group(pdf: pd.DataFrame) -> pd.DataFrame:
+def apply_rows(grouped: GroupedData, kernel, ddl: str) -> DataFrame:
+    """`grouped.applyInArrow` over `kernel`, which maps one group's
+    columns (name -> list of values) to its output rows (a list of
+    dicts keyed by the column names of `ddl`)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    # parsed here, on the driver: the DDL parser runs in the JVM
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+
+    def run(tbl: pa.Table) -> pa.Table:
+        return pa.Table.from_pylist(kernel(tbl.to_pydict()), schema=schema)
+
+    return grouped.applyInArrow(run, ddl)
+
+
+def _composite_group(cols) -> list[dict]:
     """Grouped-map kernel: one (tile, year) stack -> composite row."""
-    first = pdf.iloc[0]
-    med, std, cnt = decode_stats(pdf)
-    return pd.DataFrame(
-        [
-            {
-                "tile_x": int(first["tile_x"]),
-                "tile_y": int(first["tile_y"]),
-                "year": int(first["year"]),
-                "mndwi_bytes": tiff.encode_f32(med),
-                "stdev_bytes": tiff.encode_f32(std),
-                "count_bytes": tiff.encode_f32(cnt),
-                "w": int(first["w"]),
-                "h": int(first["h"]),
-                "transform": json.dumps(list(first["transform"])),
-                "halo_px": int(first["halo_px"]),
-                "n_obs": len(pdf),
-            }
-        ]
-    )
+    med, std, cnt = decode_stats(cols)
+    return [
+        {
+            "tile_x": cols["tile_x"][0],
+            "tile_y": cols["tile_y"][0],
+            "year": cols["year"][0],
+            "mndwi_bytes": tiff.encode_f32(med),
+            "stdev_bytes": tiff.encode_f32(std),
+            "count_bytes": tiff.encode_f32(cnt),
+            "w": cols["w"][0],
+            "h": cols["h"][0],
+            "transform": json.dumps(cols["transform"][0]),
+            "halo_px": cols["halo_px"][0],
+            "n_obs": len(cols["bytes"]),
+        }
+    ]
 
 
 def observations(tiles: DataFrame, apply_tide_filter: bool = True) -> DataFrame:
@@ -181,9 +199,10 @@ def observations(tiles: DataFrame, apply_tide_filter: bool = True) -> DataFrame:
 
 def annual_composites(tiles: DataFrame, apply_tide_filter: bool = True) -> DataFrame:
     """tiles (input_hint schema) -> composites, one row per (tile, year)."""
-    return observations(tiles, apply_tide_filter).groupBy(
-        "tile_x", "tile_y", "year"
-    ).applyInPandas(_composite_group, COMPOSITE_SCHEMA)
+    return apply_rows(
+        observations(tiles, apply_tide_filter).groupBy("tile_x", "tile_y", "year"),
+        _composite_group, COMPOSITE_SCHEMA,
+    )
 
 
 def gapfill_composites(tiles: DataFrame, apply_tide_filter: bool = True) -> DataFrame:
@@ -209,9 +228,9 @@ def gapfill_composites(tiles: DataFrame, apply_tide_filter: bool = True) -> Data
     # (prev, cur, next) only for produced years)
     years = narrow.select("year").distinct().withColumnRenamed("year", "target_year")
     shifted = shifted.join(F.broadcast(years), "target_year")
-    return (
+    return apply_rows(
         shifted.drop("year")
         .withColumnRenamed("target_year", "year")
-        .groupBy("tile_x", "tile_y", "year")
-        .applyInPandas(_composite_group, COMPOSITE_SCHEMA)
+        .groupBy("tile_x", "tile_y", "year"),
+        _composite_group, COMPOSITE_SCHEMA,
     )

@@ -3,7 +3,7 @@
 tiles (input_hint schema)
   -> caption parse (JVM from_json)
   -> tide-window row filter           (raster.py:330-337 semantics)
-  -> per-(tile, year) grouped map: decode -> composite stats
+  -> per-(tile, year) Arrow grouped map: decode -> composite stats
      (raster.py:379-384) -> marching squares (vector.py:1450-1456)
   -> shoreline rows (cell_id, year, WKB, certainty)
 
@@ -15,7 +15,6 @@ shuffle on (tile_x, tile_y, year) -> grouped map.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators import composite as comp_op
@@ -28,27 +27,28 @@ def shoreline_pipeline(
     apply_tide_filter: bool = True,
     min_vertices: int = 10,
 ) -> DataFrame:
-    """tiles -> shoreline rows, one grouped map per (tile, year). The
-    composite rasters stay in the kernel: no TIFF encode/decode and no
-    second Python stage. Rows are byte-identical to
-    annual_composites |> contours.shorelines, the staged pair for
+    """tiles -> shoreline rows, one `applyInArrow` grouped map per (tile,
+    year). The kernel reads its columns straight from the group's Arrow
+    table and returns an Arrow table; no pandas frame is built on either
+    side. The composite rasters stay in the kernel: no TIFF
+    encode/decode and no second Python stage. Rows are byte-identical
+    to annual_composites |> contours.shorelines, the staged pair for
     callers that need the composite table (rates, masking)."""
 
-    def kernel(grp: pd.DataFrame) -> pd.DataFrame:
-        first = grp.iloc[0]
-        med, std, cnt = comp_op.decode_stats(grp)
+    def kernel(cols) -> list[dict]:
+        med, std, cnt = comp_op.decode_stats(cols)
         pieces = cont_op.extract_shorelines_tile(
-            med, std, cnt, list(first["transform"]), int(first["halo_px"]),
+            med, std, cnt, cols["transform"][0], cols["halo_px"][0],
             min_vertices=min_vertices,
         )
-        return pd.DataFrame(
-            cont_op.shoreline_rows(pieces, first["tile_x"], first["tile_y"], first["year"]),
-            columns=cont_op.SHORELINE_COLUMNS,
+        return cont_op.shoreline_rows(
+            pieces, cols["tile_x"][0], cols["tile_y"][0], cols["year"][0]
         )
 
-    return comp_op.observations(tiles, apply_tide_filter).groupBy(
-        "tile_x", "tile_y", "year"
-    ).applyInPandas(kernel, cont_op.SHORELINE_SCHEMA)
+    return comp_op.apply_rows(
+        comp_op.observations(tiles, apply_tide_filter).groupBy("tile_x", "tile_y", "year"),
+        kernel, cont_op.SHORELINE_SCHEMA,
+    )
 
 
 def rates_pipeline(

@@ -3,7 +3,7 @@ contract.
 
 For every `queries()` entry this records, from the EXECUTED plan
 string at sf0.01: exchange (shuffle) count, Python stage count
-(ArrowEvalPython / FlatMapGroupsInPandas / MapInPandas / cogroup),
+(ArrowEvalPython / grouped map / MapInPandas / MapInArrow / cogroup),
 scan column pruning (ReadSchema width), pushed data filters, and
 scale-killer nodes (CartesianProduct / BroadcastNestedLoopJoin).
 Run: python scripts/audit_plans.py [sf_dir] — rewrites PLANS.md.
@@ -18,8 +18,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-_PY_TAGS = ("ArrowEvalPython", "FlatMapGroupsInPandas",
-            "MapInPandas", "FlatMapCoGroupsInPandas")
+_PY_TAGS = ("ArrowEvalPython", "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+            "MapInPandas", "MapInArrow", "FlatMapCoGroupsInPandas",
+            "FlatMapCoGroupsInArrow")
 
 
 def effective_counts(plan: str) -> tuple[int, int]:

@@ -225,6 +225,28 @@ def test_degenerate_groups(spark):
     assert empty.count() == 0
 
 
+def test_shoreline_pipeline_fails_on_tile_decoded_to_wrong_shape(spark):
+    """A JPEG tile whose frame header says 8 rows instead of 32 decodes
+    cleanly to (8, 32). Inside the shoreline grouped map the job fails
+    with the TileDecodeError that names the tile."""
+    spec = corpus.CorpusSpec(
+        tile_px=24, halo_px=4, tiles_x=1, tiles_y=1, year0=2001, year1=2001,
+        obs_per_year=2, cloud_frac=0.0, fmt="jpeg", seed=5,
+    )
+    pdf = corpus.generate_pandas(spec)
+    bad = bytearray(pdf.at[1, "bytes"])
+    sof = bad.index(b"\xff\xc0")
+    bad[sof + 5 : sof + 7] = (8).to_bytes(2, "big")  # SOF0 height
+    pdf.at[1, "bytes"] = bytes(bad)
+    tiles = spark.createDataFrame(pdf, corpus.TILES_SCHEMA)
+    with pytest.raises(Exception) as ei:
+        shoreline_pipeline(tiles, apply_tide_filter=False).collect()
+    assert (
+        "TileDecodeError: tile (0, 0) year 2001: decoded shape (8, 32), expected (32, 32)"
+        in str(ei.value)
+    )
+
+
 def test_shorelines_in_aoi_matches_bruteforce(spark, tiles_df):
     """Vertex-level PIP of shorelines against AOI rectangles == numpy
     brute force (n_inside, frac_inside, and the surviving pair set),

@@ -63,9 +63,9 @@ def test_flagship_parquet_plan_shape(spark, tmp_path):
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", p)
     assert any(s.strip() == "caption:string" for s in schemas), schemas
     # image bytes cross into Python exactly once: composite and contours
-    # run in the same grouped map
-    assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandas", p)) == 1
-    assert not re.search(r"\(\d+\) MapInPandas", p)
+    # run in the same Arrow grouped map
+    assert len(re.findall(r"\(\d+\) FlatMapGroupsInArrow", p)) == 1
+    assert not re.search(r"\(\d+\) (FlatMapGroupsInPandas|MapInPandas|MapInArrow)", p)
 
 
 def test_knn_k1_plan_has_single_aggregate_no_window(spark):

@@ -6,7 +6,7 @@ operators rely on for exact-match parity under parallelism."""
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
@@ -177,6 +177,106 @@ def test_marching_vertices_interpolate_to_level(a):
         else:
             continue  # exact grid corner: value equals level by construction
         assert abs(v - level) < 1e-9
+
+
+def _clip_segment_scalar(a, b, xmin, ymin, xmax, ymax):
+    """Liang–Barsky for one segment; None if fully outside."""
+    x0, y0 = a
+    x1, y1 = b
+    dx, dy = x1 - x0, y1 - y0
+    t0, t1 = 0.0, 1.0
+    for p, q in (
+        (-dx, x0 - xmin),
+        (dx, xmax - x0),
+        (-dy, y0 - ymin),
+        (dy, ymax - y0),
+    ):
+        if p == 0:
+            if q < 0:
+                return None
+        else:
+            r = q / p
+            if p < 0:
+                if r > t1:
+                    return None
+                t0 = max(t0, r)
+            else:
+                if r < t0:
+                    return None
+                t1 = min(t1, r)
+    if t0 > t1:
+        return None
+    return (
+        np.array([x0 + t0 * dx, y0 + t0 * dy]),
+        np.array([x0 + t1 * dx, y0 + t1 * dy]),
+    )
+
+
+def _clip_polyline_scalar(line, xmin, ymin, xmax, ymax):
+    """The per-segment clip loop: clip each segment, then stitch a
+    segment onto the current piece when np.allclose(atol=1e-12) holds
+    between the piece's last point and the segment's start."""
+    line = np.asarray(line, np.float64)
+    pieces, cur = [], []
+
+    def emit():
+        nonlocal cur
+        if len(cur) >= 2:
+            pieces.append(cur)
+        cur = []
+
+    for i in range(len(line) - 1):
+        seg = _clip_segment_scalar(line[i], line[i + 1], xmin, ymin, xmax, ymax)
+        if seg is None:
+            emit()
+            continue
+        a, b = seg
+        if cur and np.allclose(cur[-1], a, atol=1e-12):
+            cur.append(b)
+        else:
+            emit()
+            cur = [a, b]
+    emit()
+    return [np.array(p) for p in pieces]
+
+
+# a coordinate on the box's grid (edges, corners, axis-parallel runs and
+# repeated vertices) or anywhere around it
+_clip_coord = st.one_of(
+    st.integers(-6, 6).map(float),
+    st.floats(-7, 7, allow_nan=False),
+)
+
+
+@given(
+    st.lists(st.tuples(_clip_coord, _clip_coord), max_size=24),
+    st.tuples(st.integers(-4, 4), st.integers(0, 6), st.integers(-4, 4), st.integers(0, 6)),
+    st.sampled_from([0.0, 1e6, -2.5e6, 4e6]),
+    st.sampled_from([1.0, 0.25, 30.0]),
+    st.booleans(),
+)
+@example([(-6.0, 0.0), (6.0, 0.0)], (-2, 4, -2, 4), 0.0, 1.0, False)  # axis-parallel
+@example([(-2.0, -2.0), (2.0, 2.0), (2.0, 2.0), (9.0, 2.0)], (-2, 4, -2, 4), 0.0, 1.0, False)
+@example([(5.0, 5.0), (6.0, 6.0), (5.0, 6.0)], (-2, 4, -2, 4), 0.0, 1.0, False)  # outside
+# at 1e6 m the relative stitch term (10 m) joins an exit and a re-entry
+# 3 m apart into one piece
+@example([(0.0, 0.0), (0.0, 5.0), (0.1, 5.0), (0.1, 0.0)], (-2, 4, -2, 4), 1e6, 30.0, False)
+@settings(max_examples=300, deadline=None)
+def test_clip_polyline_to_bbox_matches_scalar_clip(verts, box, base, step, repeat):
+    """The vectorized clip returns the scalar clip's pieces byte for
+    byte: same count, shapes and float64 bits."""
+    line = base + step * np.array(verts, np.float64).reshape(-1, 2)
+    if repeat and len(line):
+        line = np.repeat(line, 2, axis=0)
+    x0, w, y0, h = box
+    bounds = (base + step * x0, base + step * y0,
+              base + step * (x0 + w), base + step * (y0 + h))
+    got = ga.clip_polyline_to_bbox(line, *bounds)
+    want = _clip_polyline_scalar(line, *bounds)
+    assert len(got) == len(want)
+    for g, w_ in zip(got, want):
+        assert g.dtype == w_.dtype and g.shape == w_.shape
+        assert g.tobytes() == w_.tobytes()
 
 
 @given(
