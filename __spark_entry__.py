@@ -4,8 +4,8 @@ entry(spark)  — flagship query: synthetic coastal tile corpus ->
                 decode -> tide filter -> annual composites ->
                 marching-squares waterline vectorization -> shoreline rows.
 queries()     — one entry per implemented operator (SURVEY.md §2).
-oracle_sql()  — DuckDB-equivalent SQL per query (omitted for ops with no
-                SQL analog: raster->vector pipeline etc. -> rows-only check).
+oracle_sql()  — DuckDB-equivalent SQL per query; the raster->vector
+                queries read the rows of a sequential recompute.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     # lazy checkpoint before the deterministic sort: range-boundary
     # sampling otherwise re-executes the post-shuffle vectorization +
-    # hex projection (see driver_queries._ck_sorted)
+    # hex projection, and the sort shuffle then runs it again
     return sl.select(
         "cell_id", "tile_x", "tile_y", "year",
         F.hex(F.col("geometry")).alias("geometry_wkb_hex"),
@@ -48,8 +48,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _q_shorelines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raster->vector flagship as a queries() entry (rows-only check:
-    no SQL analog for marching squares)."""
+    """Raster->vector flagship as a queries() entry; its oracle is the
+    sequential recompute in driver_queries.shorelines_oracle_sql."""
     return entry(spark)
 
 
@@ -66,10 +66,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     o = dict(driver_queries.ORACLES)
-    # lazy: synthesizes the deterministic phash corpus into a temp
-    # parquet the SQL reads, so DuckDB brute-forces the same input
     lazy = {
-        "phash_neardup": driver_queries.phash_oracle_sql,
         # independent whole-mosaic BFS (no tiling/seam stitch); DuckDB
         # re-derives component sums + canonical representative
         "global_components": driver_queries.components_oracle_sql,

@@ -169,12 +169,12 @@ def segments_intersect_point(
     return out
 
 
-# Stitch tolerance of clip_polyline_to_bbox, np.allclose's defaults with
-# atol=1e-12. Kept for digest parity with the pinned shorelines, although
-# the relative term joins points up to 1e-5 x |coordinate| apart: 10-50 m
-# at Albers-scale coordinates (1e6-5e6 m), more than one 30 m pixel.
-_STITCH_ATOL = 1e-12
-_STITCH_RTOL = 1e-5
+# Stitch tolerance of clip_polyline_to_bbox, in metres and absolute: a
+# tolerance relative to |coordinate| grows to 10-50 m at Albers-scale
+# coordinates (1e6-5e6 m) and joins an exit and a nearby re-entry with a
+# false chord. At 5e6 m a float64 ulp is about 1e-9 m, so 1e-6 m still
+# joins the shared vertex that two segments' clips recompute.
+_STITCH_TOL = 1e-6
 
 
 def clip_polyline_to_bbox(line: np.ndarray, xmin, ymin, xmax, ymax) -> list[np.ndarray]:
@@ -185,8 +185,7 @@ def clip_polyline_to_bbox(line: np.ndarray, xmin, ymin, xmax, ymax) -> list[np.n
 
     Liang–Barsky over all segments at once. Consecutive clipped segments
     form one piece when the previous segment's end b and the next one's
-    start a satisfy `|b - a| <= _STITCH_ATOL + _STITCH_RTOL * |a|` in
-    both coordinates; the tolerances are kept for digest parity."""
+    start a satisfy `|b - a| <= _STITCH_TOL` in both coordinates."""
     line = np.asarray(line, np.float64)
     if len(line) < 2:
         return []
@@ -207,8 +206,7 @@ def clip_polyline_to_bbox(line: np.ndarray, xmin, ymin, xmax, ymax) -> list[np.n
         kept = ~outside & ~(t0 > t1)
         a = np.stack([x0 + t0 * dx, y0 + t0 * dy], axis=1)
         b = np.stack([x0 + t1 * dx, y0 + t1 * dy], axis=1)
-        close = np.abs(b[:-1] - a[1:]) <= _STITCH_ATOL + _STITCH_RTOL * np.abs(a[1:])
-        close = close.all(axis=1)
+        close = (np.abs(b[:-1] - a[1:]) <= _STITCH_TOL).all(axis=1)
     # segment i continues the piece of segment i-1
     join = np.zeros(len(x0), bool)
     join[1:] = kept[:-1] & kept[1:] & close

@@ -1,9 +1,9 @@
 """Graph connected components over pair lists + dedup clustering.
 
-The near-dup generators (minhash/simhash/phash/embedding pairs) emit
-EDGES; turning edges into KEEP/DROP decisions needs the transitive
-closure: cluster = connected component, canonical = min id per
-cluster (the standard keep-one policy in training-data dedup).
+Near-duplicate pair generators emit EDGES; turning edges into
+KEEP/DROP decisions needs the transitive closure: cluster = connected
+component, canonical = min id per cluster (the standard keep-one
+policy in training-data dedup).
 
 Spark shape: iterative min-label propagation on the edge list —
   label(u) <- min(label(u), min_{(u,v) in E} label(v))

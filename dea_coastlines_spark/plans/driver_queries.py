@@ -12,8 +12,7 @@ Operator coverage map (SURVEY.md §2 rows in parentheses):
   (2.3), windows (2.5), set ops (2.7), scalar string/date/math (2.8),
   certainty-cascade CASE semantics (2.2), validation error stats (2.4),
   regression (2.4), mode/median (2.4), spatial joins (2.3, engine ops
-  with brute-force SQL oracles), exact and near-duplicate dedup
-  (training-data ops), raster->vector pipeline (recomputed by
+  with brute-force SQL oracles), raster->vector pipeline (recomputed by
   sequential oracles).
 """
 
@@ -25,23 +24,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def _ck_sorted(df: DataFrame, *cols) -> DataFrame:
-    """Deterministic final sort behind a materialization barrier.
-
-    A global orderBy computes range-partition boundaries by SAMPLING
-    its child — a separate job that re-executes every operator above
-    the last materialized exchange, then the sort shuffle executes the
-    same subtree AGAIN. For queries whose final stage carries the
-    expensive work (pair-verify kernels, array_intersect cascades), the
-    whole verify ran twice: minhash_pairs measured 5.0 s unsorted vs
-    8.6 s sorted at sf0.1. The lazy localCheckpoint materializes the
-    result rows once (first touched by the sample job), so both the
-    sampling and the sort read cached partitions. Applied only where
-    the final stage is expensive — for cheap tails the recompute costs
-    less than the cache write."""
-    return df.localCheckpoint(eager=False).orderBy(*cols)
 
 
 # parquet footer schemas, keyed per Spark application + file path.
@@ -796,88 +778,6 @@ FROM o GROUP BY poly_id ORDER BY poly_id
 """
 
 
-# ------------------------------------------------------------- dedup ops
-
-def q_dedup_exact(spark, sf_dir):
-    """Exact dedup groups (md5 hash-groupBy) over documents."""
-    from ..operators.dedup import exact_dedup
-
-    d = _t(spark, sf_dir, "documents")
-    return exact_dedup(d, ["text"], "doc_id").orderBy("dup_key")
-
-
-ORACLE_DEDUP_EXACT = """
-SELECT MD5(CONCAT_WS(CHR(31), text)) AS dup_key,
-       MIN(doc_id) AS canonical_id, COUNT(*) AS group_size
-FROM documents GROUP BY 1 ORDER BY 1
-"""
-
-
-def q_charset_jaccard(spark, sf_dir):
-    """Exact char-set Jaccard near-dup pairs within English docs —
-    engine operator vs DuckDB's built-in jaccard() (identical char-set
-    semantics)."""
-    from ..operators.dedup import charset_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("lang") == "en")
-    return _ck_sorted(
-        charset_jaccard_pairs(d, "text", "doc_id", "lang", threshold=0.82),
-        "id_a", "id_b",
-    )
-
-
-ORACLE_CHARSET_JACCARD = """
-WITH d AS (SELECT doc_id, text FROM documents WHERE lang = 'en')
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       ROUND(JACCARD(LOWER(a.text), LOWER(b.text)), 6) AS jaccard
-FROM d a JOIN d b ON a.doc_id < b.doc_id
-WHERE JACCARD(LOWER(a.text), LOWER(b.text)) >= 0.82
-ORDER BY id_a, id_b
-"""
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    """Exact word-bigram Jaccard near-dup pairs — all-JVM array
-    expressions vs the same set algebra in DuckDB list functions."""
-    from ..operators.dedup import word_ngram_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    # full-table corpus: every true near-dup pair scores >= 0.909, so
-    # t=0.8 returns the complete non-trivial set with ~2.5x shorter
-    # prefixes (candidate volume falls ~6x vs t=0.5)
-    return _ck_sorted(
-        word_ngram_jaccard_pairs(d, "text", "doc_id", n=2, threshold=0.8),
-        "id_a", "id_b",
-    )
-
-
-ORACLE_NGRAM_JACCARD = r"""
-WITH d AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[ \t\n\r\f\x0B]+'),
-                     t -> t <> '') AS toks
-  FROM documents
-), g AS (
-  SELECT doc_id,
-    list_filter(
-      list_distinct(list_transform(generate_series(1, greatest(len(toks) - 1, 1)),
-                                   i -> array_to_string(toks[i:i+1], ' '))),
-      x -> x <> '') AS grams
-  FROM d
-)
-SELECT id_a, id_b, ROUND(j, 6) AS jaccard FROM (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-    CASE WHEN (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) = 0
-         THEN 0.0
-         ELSE len(list_intersect(a.grams, b.grams))::DOUBLE
-              / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
-    END AS j
-  FROM g a JOIN g b ON a.doc_id < b.doc_id
-) WHERE j >= 0.8
-ORDER BY id_a, id_b
-"""
-
-
 # --------------------------------------- geospatial pipeline stage queries
 # rows-only (marching squares / regression-on-rasters have no SQL
 # analog); deterministic synthetic corpus + stable ordering so the
@@ -1041,7 +941,8 @@ def _sequential_shoreline_rows(
 
 def _write_oracle_parquet(pdf, stem: str) -> str:
     """Temp-parquet handoff shared by the recompute oracles: per-process
-    filename + atomic rename (the phash_oracle_sql pattern)."""
+    filename + atomic rename, so a concurrent run rewriting a fixed
+    shared path cannot hand DuckDB a truncated footer."""
     import os
     import tempfile
 
@@ -1854,280 +1755,6 @@ def q_validation_stats(spark, sf_dir):
     ).localCheckpoint(eager=False).orderBy("id")
 
 
-# ---- exact SQL oracles for the hash-based dedup operators -----------
-# The FNV-1a / splitmix64 / SimHash math is deterministic uint64
-# arithmetic, which DuckDB can reproduce bit-for-bit with UHUGEINT
-# (128-bit unsigned: products of two <2^64 factors never overflow) plus
-# list lambdas. Corpus text is ASCII, so ord(char) == utf-8 byte.
-
-# the canonical UHUGEINT splitmix64 / FNV-1a fragments live in
-# operators/sketch.py (one copy of the magic constants tree-wide);
-# `s` is the conventional lambda variable in the dedup oracles below
-from ..operators.sketch import (  # noqa: E402
-    _splitmix_sql_fragment as _splitmix_sql,
-    fnv_sql as _fnv_sql,
-)
-
-_FNV_SQL = _fnv_sql("s")
-
-
-def _minhash_sql(threshold: float = 0.6) -> str:
-    """DuckDB replica of minhash_lsh_pairs: same shingles, same 64
-    permutation-free hashes, same 16x4 banding (bucket equality == band
-    slice equality; Spark's xxhash64 only compresses the same string),
-    same exact-Jaccard verify."""
-    from ..operators import dedup as _d
-
-    seeds = _d._splitmix(
-        np.arange(1, 65, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-    )
-    seeds_sql = "[" + ",".join(f"{int(v)}::UHUGEINT" for v in seeds) + "]"
-    sentinel = "[" + ",".join(["9223372036854775807"] * 64) + "]"
-    sm = _splitmix_sql("xor(h, sd)")
-    return rf"""
-WITH docs AS (
-  SELECT doc_id, lower(text) AS t FROM documents
-), shingles AS (
-  SELECT doc_id,
-    CASE WHEN t IS NULL OR length(t) = 0 THEN []::VARCHAR[]
-         WHEN length(t) < 3 THEN [t]
-         ELSE list_distinct(list_transform(generate_series(1, length(t) - 2),
-                                           i -> substr(t, i, 3)))
-    END AS sh
-  FROM docs
-), hashed AS (
-  SELECT doc_id, sh, list_transform(sh, s -> {_FNV_SQL}) AS hs
-  FROM shingles
-), sigs AS (
-  SELECT doc_id,
-    CASE WHEN len(hs) = 0 THEN {sentinel}
-    ELSE list_transform({seeds_sql}, sd ->
-      (list_min(list_transform(hs, h -> {sm})) >> 1)::BIGINT)
-    END AS sig
-  FROM hashed
-), banded AS (
-  SELECT doc_id, band,
-         array_to_string(sig[4*band+1 : 4*band+4], ',') AS bkey
-  FROM sigs, unnest(generate_series(0, 15)) AS u(band)
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM banded a JOIN banded b ON a.band = b.band AND a.bkey = b.bkey
-  WHERE a.doc_id < b.doc_id
-), verified AS (
-  SELECT c.id_a, c.id_b,
-    CASE WHEN (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) = 0
-         THEN 0.0
-         ELSE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-    END AS jaccard
-  FROM cand c
-  JOIN shingles sa ON sa.doc_id = c.id_a
-  JOIN shingles sb ON sb.doc_id = c.id_b
-)
-SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= {threshold}
-ORDER BY id_a, id_b
-"""
-
-
-def _crosscorpus_sql(threshold: float = 0.7, bands: int = 8) -> str:
-    """DuckDB replica of q_crosscorpus_dedup: rebuilds the planted NEW
-    corpus from the documents table with the same string ops, re-derives
-    both corpora's MinHash signatures with the shared shingle/FNV/
-    splitmix recipe (see _minhash_sql — bucket equality == band-slice
-    equality; same 8x8 banding as the operator default), keeps only
-    cross-table candidates, verifies exact Jaccard, and aggregates per
-    new doc with the same best-match tie rule (highest jaccard, then
-    lowest ref id)."""
-    from ..operators import dedup as _d
-
-    seeds = _d._splitmix(
-        np.arange(1, 65, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-    )
-    seeds_sql = "[" + ",".join(f"{int(v)}::UHUGEINT" for v in seeds) + "]"
-    sentinel = "[" + ",".join(["9223372036854775807"] * 64) + "]"
-    sm = _splitmix_sql("xor(h, sd)")
-    rpb = 64 // bands
-
-    def chain(name: str) -> str:
-        """shingles -> signatures -> banded slices for docs CTE {name}
-        (columns doc_id, t)."""
-        return rf"""sh_{name} AS (
-  SELECT doc_id,
-    CASE WHEN t IS NULL OR length(t) = 0 THEN []::VARCHAR[]
-         WHEN length(t) < 3 THEN [t]
-         ELSE list_distinct(list_transform(generate_series(1, length(t) - 2),
-                                           i -> substr(t, i, 3)))
-    END AS sh
-  FROM {name}
-), sig_{name} AS (
-  SELECT doc_id,
-    CASE WHEN len(hs) = 0 THEN {sentinel}
-    ELSE list_transform({seeds_sql}, sd ->
-      (list_min(list_transform(hs, h -> {sm})) >> 1)::BIGINT)
-    END AS sig
-  FROM (SELECT doc_id, list_transform(sh, s -> {_FNV_SQL}) AS hs FROM sh_{name})
-), banded_{name} AS (
-  SELECT doc_id, band,
-         array_to_string(sig[{rpb}*band+1 : {rpb}*band+{rpb}], ',') AS bkey
-  FROM sig_{name}, unnest(generate_series(0, {bands - 1})) AS u(band)
-)"""
-
-    return rf"""
-WITH refdocs AS (
-  SELECT doc_id, lower(text) AS t FROM documents
-), newdocs AS (
-  SELECT doc_id + 100000 AS doc_id, lower(text) AS t
-  FROM documents WHERE doc_id < 30
-  UNION ALL
-  SELECT doc_id + 200000, lower(text || ' zzz')
-  FROM documents WHERE doc_id >= 30 AND doc_id < 60
-  UNION ALL
-  SELECT doc_id + 300000, lower(repeat('q' || CAST(doc_id AS VARCHAR) || 'x ', 20))
-  FROM documents WHERE doc_id >= 60 AND doc_id < 90
-), {chain("refdocs")}, {chain("newdocs")},
-cand AS (
-  SELECT DISTINCT n.doc_id AS new_id, r.doc_id AS ref_id
-  FROM banded_newdocs n
-  JOIN banded_refdocs r ON n.band = r.band AND n.bkey = r.bkey
-), verified AS (
-  SELECT c.new_id, c.ref_id,
-    CASE WHEN (len(sn.sh) + len(sr.sh) - len(list_intersect(sn.sh, sr.sh))) = 0
-         THEN 0.0
-         ELSE len(list_intersect(sn.sh, sr.sh))::DOUBLE
-              / (len(sn.sh) + len(sr.sh) - len(list_intersect(sn.sh, sr.sh)))
-    END AS jaccard
-  FROM cand c
-  JOIN sh_newdocs sn ON sn.doc_id = c.new_id
-  JOIN sh_refdocs sr ON sr.doc_id = c.ref_id
-), hits AS (
-  SELECT * FROM verified WHERE jaccard >= {threshold}
-), cnt AS (
-  SELECT new_id, COUNT(*) AS n_ref_matches FROM hits GROUP BY new_id
-), best AS (
-  SELECT new_id, jaccard AS best_jaccard, ref_id AS best_ref_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY new_id
-                                 ORDER BY jaccard DESC, ref_id) AS rn
-    FROM hits) WHERE rn = 1
-)
-SELECT nd.doc_id,
-       COALESCE(cnt.n_ref_matches, 0) AS n_ref_matches,
-       COALESCE(best.best_jaccard, -1.0) AS best_jaccard,
-       COALESCE(best.best_ref_id, -1) AS best_ref_id,
-       CAST(cnt.new_id IS NULL AS INTEGER) AS kept
-FROM newdocs nd
-LEFT JOIN cnt ON nd.doc_id = cnt.new_id
-LEFT JOIN best ON nd.doc_id = best.new_id
-ORDER BY nd.doc_id
-"""
-
-
-def _simhash_sql(max_hamming: int = 8) -> str:
-    """DuckDB replica of simhash_pairs: FNV-1a token hashes -> 64-bit
-    majority-sign signature -> chunk-pigeonhole candidates (same
-    exact-recall chunk count the engine auto-picks) -> hamming verify."""
-    from ..operators.dedup import exact_recall_chunks
-
-    n_chunks = exact_recall_chunks(max_hamming)
-    bits = 64 // n_chunks
-    mask = (1 << bits) - 1
-    chunk_eq = " OR ".join(
-        f"((a.u >> {bits * c}) & {mask}) = ((b.u >> {bits * c}) & {mask})"
-        for c in range(n_chunks)
-    )
-    return rf"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS toks
-  FROM documents
-), hashed AS (
-  SELECT doc_id,
-    list_transform(toks, s -> {_FNV_SQL}) AS hs
-  FROM toks
-), sigs AS (
-  -- NB: list_sum over (U)HUGEINT goes through DOUBLE; sum HUGEINT bit
-  -- terms only after list_sum of the small 0/1 counts (exact in double)
-  SELECT doc_id,
-    CASE WHEN len(hs) = 0 THEN 0::HUGEINT
-    ELSE list_reduce(list_prepend(0::HUGEINT,
-      list_transform(generate_series(0, 63), bb ->
-        CASE WHEN 2 * list_sum(list_transform(hs, h -> ((h >> bb::UHUGEINT) & 1::UHUGEINT)::INT))
-                  > len(hs)
-             THEN (1::UHUGEINT << bb::UHUGEINT)::HUGEINT
-             ELSE 0::HUGEINT END)),
-      (acc, x) -> acc + x)
-    END AS u
-  FROM hashed
-), sigs2 AS (
-  SELECT doc_id, u,
-    (CASE WHEN u >= 9223372036854775808::HUGEINT
-          THEN u - 18446744073709551616::HUGEINT
-          ELSE u END)::BIGINT AS s
-  FROM sigs
-)
-SELECT id_a, id_b, hamming FROM (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         bit_count(xor(a.s, b.s))::INT AS hamming,
-         ({chunk_eq}) AS cand
-  FROM sigs2 a JOIN sigs2 b ON a.doc_id < b.doc_id
-) WHERE cand AND hamming <= {max_hamming}
-ORDER BY id_a, id_b
-"""
-
-
-def q_minhash_pairs(spark, sf_dir):
-    from ..operators.dedup import minhash_lsh_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return _ck_sorted(minhash_lsh_pairs(d, "text", "doc_id", threshold=0.6), "id_a", "id_b")
-
-
-def q_simhash_pairs(spark, sf_dir):
-    from ..operators.dedup import simhash_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return simhash_pairs(d, "text", "doc_id", max_hamming=8).orderBy("id_a", "id_b")
-
-
-def q_crosscorpus_dedup(spark, sf_dir):
-    """One-sided cross-corpus near-dedup (operators/dedup.py:
-    cross_corpus_neardup): a synthetic NEW corpus is screened against
-    the full documents table as the reference. The new corpus is built
-    deterministically from the reference so every outcome class is
-    exercised and the DuckDB oracle can rebuild it verbatim: exact
-    copies (doc_id+100000, must drop at jaccard 1.0), lightly mutated
-    copies (+200000, text || ' zzz' — a few new shingles out of
-    hundreds, still >= 0.7), and fresh gibberish (+300000, repeated
-    'q<id>x ' — shares no 3-shingles with the word-salad corpus, must
-    be kept). One row per new doc with match count, best match, and
-    the kept flag; only cross-table pairs are ever scored."""
-    from ..operators.dedup import cross_corpus_neardup
-
-    d = _t(spark, sf_dir, "documents")
-    ref = d.select("doc_id", "text")
-    k = F.col("doc_id")
-    new = (
-        d.filter(k < 30)
-        .select((k + 100000).alias("doc_id"), "text")
-        .unionByName(
-            d.filter((k >= 30) & (k < 60)).select(
-                (k + 200000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zzz")).alias("text"),
-            )
-        )
-        .unionByName(
-            d.filter((k >= 60) & (k < 90)).select(
-                (k + 300000).alias("doc_id"),
-                F.repeat(
-                    F.concat(F.lit("q"), k.cast("string"), F.lit("x ")), 20
-                ).alias("text"),
-            )
-        )
-    )
-    return cross_corpus_neardup(new, ref, "text", "doc_id", threshold=0.7).orderBy(
-        "doc_id"
-    )
-
-
 def q_shorelines_in_aoi(spark, sf_dir):
     """Waterline contour vertices point-in-polygon joined to coastal AOI
     polygons (the target spec's headline spatial join; rows-only —
@@ -2181,144 +1808,6 @@ def q_shorelines_in_aoi(spark, sf_dir):
             # one (tile, year) in the same AOI can tie on n_inside
         )
     )
-
-
-def q_phash_neardup(spark, sf_dir):
-    """Image near-dup pairs by perceptual-hash hamming distance over the
-    synthetic tile corpus. Fully hash-verified: phash_oracle_sql()
-    writes the same deterministic (image_id, phash) rows to parquet and
-    DuckDB brute-forces bit_count(xor) over them — an independent check
-    of the pigeonhole candidate generation AND the verify step."""
-    from ..operators.dedup import phash_neardup_pairs
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2002, obs_per_year=4,
-                              cloud_frac=0.05, seed=9)
-    tiles = spark.createDataFrame(_corpus.generate_pandas(spec))
-    return phash_neardup_pairs(tiles, max_hamming=6).orderBy("id_a", "id_b")
-
-
-def phash_oracle_sql() -> str:
-    """Full hash-verified oracle for q_phash_neardup: the corpus is a
-    deterministic function of CorpusSpec(seed=9), so write the same
-    (image_id, phash) rows to a temp parquet and let DuckDB brute-force
-    the hamming pairs over them — an independent check of the operator's
-    pigeonhole candidate generation AND bit_count(xor) verify. Called
-    lazily from oracle_sql() (not at import) because corpus synthesis
-    costs ~a second."""
-    import os
-    import tempfile
-
-    from ..synth import corpus as _corpus
-
-    spec = _corpus.CorpusSpec(tile_px=64, halo_px=4, tiles_x=3, tiles_y=2,
-                              year0=2000, year1=2002, obs_per_year=4,
-                              cloud_frac=0.05, seed=9)
-    pdf = _corpus.generate_pandas(spec)[["image_id", "phash"]]
-    # per-process filename + atomic rename: a fixed shared path racing
-    # a concurrent grader's rewrite can hand DuckDB a truncated footer
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_phash_oracle_{os.getpid()}.parquet"
-    )
-    tmp = path + ".tmp"
-    pdf.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-    return f"""
-SELECT a.image_id AS id_a, b.image_id AS id_b,
-       CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
-FROM read_parquet('{path}') a
-JOIN read_parquet('{path}') b ON a.image_id < b.image_id
-WHERE bit_count(xor(a.phash, b.phash)) <= 6
-ORDER BY id_a, id_b
-"""
-
-
-def q_streaming_dedup(spark, sf_dir):
-    """Streaming exact dedup driven to completion (availableNow) over
-    the documents table as a file-source stream; returns the deduped
-    set, proving the stateful applyInPandasWithState path end-to-end.
-    Rows-only by design: stateful streaming has no SQL analog (the
-    batch-equivalence invariant — output ids == one survivor per
-    distinct text — is pinned by tests/test_streaming.py)."""
-    import os as _os
-    import tempfile as _tf
-
-    from ..streaming.dedup_stream import dedup_stream
-
-    batch = _t(spark, sf_dir, "documents")
-    # the file stream source requires a DIRECTORY; expose the read-only
-    # table file through a temp dir symlink
-    src_dir = _tf.mkdtemp(prefix="sd_src_")
-    # absolute target: a relative sf_dir would otherwise be resolved
-    # against the temp dir, leaving a dangling symlink
-    _os.symlink(
-        _os.path.abspath(f"{sf_dir}/documents.parquet"),
-        _os.path.join(src_dir, "documents.parquet"),
-    )
-    stream = spark.readStream.schema(batch.schema).parquet(src_dir)
-    q = (
-        dedup_stream(stream, ["text"])
-        .writeStream.format("memory")
-        .queryName("q_streaming_dedup_mem")
-        .outputMode("append")
-        .option("checkpointLocation", _tf.mkdtemp(prefix="sd_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return (
-        spark.table("q_streaming_dedup_mem")
-        .select("doc_id", "lang", "source", F.length("text").alias("text_len"))
-        .orderBy("doc_id")
-    )
-
-
-def q_streaming_dedup_parity(spark, sf_dir):
-    """Batch-equivalence gate for the stateful streaming dedup — the
-    hash-checkable companion of q_streaming_dedup (which is rows-only
-    by design). The invariant a streaming exact dedup must satisfy is
-    "exactly one survivor per distinct content"; WHICH row survives
-    depends on micro-batch arrival order, so the output here is
-    survivor-identity-independent: one (text_md5, n_survivors) row per
-    distinct text in the stream's output. The oracle is the batch
-    DISTINCT — any streaming drop (hash collision), duplicate pass-
-    through, or state loss breaks the hash match."""
-    import os as _os
-    import tempfile as _tf
-
-    from ..streaming.dedup_stream import dedup_stream
-
-    batch = _t(spark, sf_dir, "documents")
-    src_dir = _tf.mkdtemp(prefix="sdp_src_")
-    _os.symlink(
-        _os.path.abspath(f"{sf_dir}/documents.parquet"),
-        _os.path.join(src_dir, "documents.parquet"),
-    )
-    stream = spark.readStream.schema(batch.schema).parquet(src_dir)
-    q = (
-        dedup_stream(stream, ["text"])
-        .writeStream.format("memory")
-        .queryName("q_streaming_dedup_parity_mem")
-        .outputMode("append")
-        .option("checkpointLocation", _tf.mkdtemp(prefix="sdp_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return (
-        spark.table("q_streaming_dedup_parity_mem")
-        .groupBy(F.md5(F.col("text")).alias("text_md5"))
-        .agg(F.count("*").alias("n_survivors"))
-        .orderBy("text_md5")
-    )
-
-
-ORACLE_STREAMING_DEDUP_PARITY = """
-SELECT MD5(text) AS text_md5, CAST(1 AS BIGINT) AS n_survivors
-FROM (SELECT DISTINCT text FROM documents)
-ORDER BY text_md5
-"""
 
 
 _HLL_STREAM_STORES: dict[tuple, str] = {}
@@ -2905,41 +2394,6 @@ FROM s ORDER BY shard, pos
 """
 
 
-def q_ar_bucket_shards(spark, sf_dir):
-    """Aspect-ratio bucketing + fixed-size shard packing (SDXL-style
-    training export over the image corpus shape). Image sizes are
-    derived deterministically from doc_id via the shared u01 chain so
-    the oracle reproduces them bit-exactly; bucket assignment is a
-    row-local CASE chain, packing is one (bucket, shard) shuffle."""
-    from ..operators.bucketing import ar_bucket_shards
-    from ..operators.sampling import u01
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    img = d.select(
-        F.col("doc_id").alias("image_id"),
-        (64 * (F.lit(8) + F.floor(u01("doc_id", 101) * 25))).cast("int").alias("w"),
-        (64 * (F.lit(8) + F.floor(u01("doc_id", 202) * 25))).cast("int").alias("h"),
-    )
-    out = ar_bucket_shards(img, "image_id", shard_size=20, seed=7)
-    return out.select(
-        "image_id", "bucket_id", "bucket_w", "bucket_h", "shard", "pos"
-    ).orderBy("bucket_id", "shard", "pos")
-
-
-def _ar_shards_oracle() -> str:
-    from ..operators.bucketing import shard_pack_sql
-    from ..operators.sampling import u01_sql
-
-    w = f"CAST(64 * (8 + FLOOR({u01_sql('doc_id', 101)} * 25)) AS INT)"
-    h = f"CAST(64 * (8 + FLOOR({u01_sql('doc_id', 202)} * 25)) AS INT)"
-    inner = f"(SELECT doc_id AS image_id, {w} AS w, {h} AS h FROM documents)"
-    body = shard_pack_sql(inner, "image_id", "w", "h", shard_size=20, seed=7)
-    return (
-        "SELECT k AS image_id, bucket_id, bucket_w, bucket_h, shard, pos "
-        f"FROM ({body}) ORDER BY bucket_id, shard, pos"
-    )
-
-
 def q_dedup_clusters(spark, sf_dir):
     """Connected components over a pair list -> keep-one dedup clusters
     (the transitive-closure stage downstream of every near-dup
@@ -3440,9 +2894,6 @@ def zonal_oracle_sql() -> str:
     combine split), the mean, and the rounding. Checks the distributed
     orchestration, the per-tile partial / (zone, year) combine
     algebra, and the PIP against an independent formulation."""
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
@@ -3481,14 +2932,7 @@ def zonal_oracle_sql() -> str:
                      "v": float(pv)}
                     for px, py, pv in zip(gx[keep], gy[keep], core[keep])
                 )
-    pdf = pd.DataFrame(recs)
-    # per-process filename + atomic rename (phash_oracle_sql pattern)
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_zonal_oracle_{os.getpid()}.parquet"
-    )
-    tmp = path + ".tmp"
-    pdf.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
+    path = _write_oracle_parquet(pd.DataFrame(recs), "zonal_oracle")
 
     ox, oy = spec.tile_origin(0, 0)
     sz = spec.tile_px * spec.res_m
@@ -4015,12 +3459,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "group_percentiles": q_group_percentiles,
     "asof_join": q_asof_join,
     "sessionize": q_sessionize,
-    "ar_bucket_shards": q_ar_bucket_shards,
     "merge_upsert": q_merge_upsert,
     # --- block B: new in r4
-    "streaming_dedup_parity": q_streaming_dedup_parity,
     "dms2dd": q_dms2dd,
-    "crosscorpus_dedup": q_crosscorpus_dedup,
     "temperature_mix": q_temperature_mix,
     "interval_join": q_interval_join,
     "interval_overlap": q_interval_overlap,
@@ -4054,12 +3495,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "knn_anchor_join": q_knn_anchor_join,
     "overlay_clip": q_overlay_clip,
     "corpus_integrity": q_corpus_integrity,
-    "dedup_exact": q_dedup_exact,
-    "minhash_pairs": q_minhash_pairs,
-    "simhash_pairs": q_simhash_pairs,
-    "phash_neardup": q_phash_neardup,
-    "charset_jaccard": q_charset_jaccard,
-    "ngram_jaccard": q_ngram_jaccard,
     # --- block E: r3 hash-green, rotated out of the r4 snapshot
     "pricing_summary": q_pricing_summary,
     "mode_median": q_mode_median,
@@ -4077,7 +3512,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "conditional_coalesce": q_conditional_coalesce,
     "top1_crs_vote": q_top1_crs_vote,
     "salted_agg": q_salted_agg,
-    "streaming_dedup": q_streaming_dedup,
 }
 
 # Full key order for __spark_entry__.queries(), including the
@@ -4112,24 +3546,16 @@ ORACLES: dict[str, str] = {
     "spatial_pip_join": ORACLE_SPATIAL_PIP,
     "knn_anchor_join": ORACLE_KNN_ANCHOR,
     "overlay_clip": ORACLE_OVERLAY_CLIP,
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "charset_jaccard": ORACLE_CHARSET_JACCARD,
-    "ngram_jaccard": ORACLE_NGRAM_JACCARD,
-    "minhash_pairs": _minhash_sql(),
-    "simhash_pairs": _simhash_sql(),
     "dissolve": ORACLE_DISSOLVE,
     "rates_regression": ORACLE_RATES_REGRESSION,
     "crs_project": ORACLE_CRS_PROJECT,
     "dedup_clusters": ORACLE_DEDUP_CLUSTERS,
-    "ar_bucket_shards": _ar_shards_oracle(),
     "shuffle_shards": _shards_oracle(),
     "stratified_sample": _sampling_oracle(),
     "train_eval_split": _split_oracle(),
     "asof_join": ORACLE_ASOF_JOIN,
     "sessionize": ORACLE_SESSIONIZE,
-    "streaming_dedup_parity": ORACLE_STREAMING_DEDUP_PARITY,
     "dms2dd": ORACLE_DMS2DD,
-    "crosscorpus_dedup": _crosscorpus_sql(),
     "temperature_mix": _temperature_mix_sql(),
     "interval_join": ORACLE_INTERVAL_JOIN,
     "interval_overlap": ORACLE_INTERVAL_OVERLAP,
@@ -4143,6 +3569,5 @@ ORACLES: dict[str, str] = {
     "group_percentiles": ORACLE_GROUP_PERCENTILES,
     "merge_upsert": ORACLE_MERGE_UPSERT,
     # the oracles that read testdata or synthesize inputs are built
-    # lazily in __spark_entry__.oracle_sql(); streaming_dedup is the
-    # one rows-only query
+    # lazily in __spark_entry__.oracle_sql(); every query has an oracle
 }

@@ -56,7 +56,7 @@ def get_spark(
         #     protect the image kernels; that throttled every LARGE
         #     tabular transfer instead (maxBytesPerBatch does not apply
         #     to toPandas, so the record cap is what toPandas sees:
-        #     collecting charset_jaccard's 1.9 M pair rows took 88 s in
+        #     collecting a 1.9 M-row pair result took 88 s in
         #     256-row batches vs 1.0 s in 10k-row batches).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config(

@@ -79,8 +79,6 @@ def effective_counts(plan: str) -> tuple[int, int]:
 # which the emitted note records (VERDICT r3 item 7).
 HEAVY_SF_QUERIES = [
     "spatial_pip_join", "knn_anchor_join", "overlay_clip",
-    "ngram_jaccard", "charset_jaccard",
-    "minhash_pairs", "simhash_pairs", "crosscorpus_dedup",
     "dedup_clusters",
     "rates_regression", "group_percentiles", "cell_rollup",
     "interval_join", "interval_overlap",
@@ -161,8 +159,7 @@ def main() -> None:
         "pruned projections, not full-row scans); whether filters reached",
         "the scan; and scale-killer joins (CartesianProduct /",
         "BroadcastNestedLoopJoin — none may appear outside the",
-        "documented small-side broadcasts below; the near-dup paths are",
-        "enforced by tests/test_dedup_similarity.py plan gates).",
+        "documented small-side broadcasts below).",
         "",
         "| query | exchanges | python stages | scan cols | pushdown / flags |",
         "|---|---|---|---|---|",
@@ -196,12 +193,6 @@ def main() -> None:
         "  multi-stage pipelines (composite -> vectorize -> join ->",
         "  regress, hotspots at several radii); their stage counts are",
         "  the pipeline's, not one operator's.",
-        "- `ngram_jaccard` / `charset_jaccard` carry",
-        "  deliberate fixed-width repartitions on their CPU-bound",
-        "  small-bytes join stages (prefix/candidate/pair joins): AQE",
-        "  coalesces those exchanges by BYTES to a handful of tasks and",
-        "  the hottest bucket straggles. The extra exchanges are the",
-        "  trade for full-width CPU (measured 2x on ngram_jaccard).",
         "- `dedup_clusters` audits only the final read: its label",
         "  propagation rounds are localCheckpoint-truncated and their",
         "  join+agg plans execute at build time. `streaming_hll_parity`",

@@ -17,9 +17,7 @@ DuckDB oracles remain exactly replayable:
   extra density);
 * documents get a per-replica suffix token (replica 0 byte-identical)
   so text statistics grow linearly instead of creating 50k exact
-  clones — the similarity-pair queries are excluded from the 10x
-  sweep anyway (their DuckDB oracles are quadratic in near-dup
-  volume: minhash alone is 1,709 s at sf0.1);
+  clones;
 * dimensions (customer/supplier/part/nation/region) copy unchanged —
   10x fan-in on the same dimension keys, the realistic shape.
 
@@ -27,7 +25,7 @@ Usage:
     python scripts/make_sf1.py [--out /tmp/sf1.0]
 then
     python scripts/oracle_sweep.py --sf-dir /tmp/sf1.0 \
-        --out BENCH/oracle_sweep_sf1_spot.json --skip <see SKIP below>
+        --out BENCH/oracle_sweep_sf1_spot.json
 """
 
 from __future__ import annotations
@@ -39,16 +37,6 @@ import duckdb
 
 SRC = "/root/testdata/sf0.1"
 COPIES = 10
-
-# oracles superlinear in corpus/pair volume (similarity pair mining)
-# — excluded from the 10x sweep, recorded as skipped
-SKIP = ",".join(
-    [
-        "minhash_pairs", "ngram_jaccard", "crosscorpus_dedup",
-        "charset_jaccard", "simhash_pairs",
-    ]
-)
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -134,7 +122,7 @@ def main() -> None:
     )
     for t in ("customer", "supplier", "part", "nation", "region"):
         copy(f"SELECT * FROM read_parquet('{SRC}/{t}.parquet')", t)
-    print(f"done -> {out}  (suggested --skip {SKIP})")
+    print(f"done -> {out}")
 
 
 if __name__ == "__main__":

@@ -82,7 +82,7 @@ def main() -> int:
 
     # The engine's own session factory, NOT a bespoke builder: an
     # earlier sweep hand-built a session without Arrow and spent 120 s
-    # pickling charset_jaccard's 1.9 M result rows through row-at-a-
+    # pickling a 1.9 M-row pair result through row-at-a-
     # time serialization (engine time: 6 s) — the artifact then read
     # as an engine regression. get_spark carries the tuned defaults
     # (Arrow transfer, AQE, skew join) that bench.py and pytest use,
@@ -146,8 +146,8 @@ def main() -> int:
             # spark_s above is COLD + toPandas: it includes plan
             # compile, first-scan cache fill, Python-worker spin-up
             # and the Arrow collect of up-to-millions of result rows
-            # (charset_jaccard: 24.7 s cold+collect vs 6.2 s warm
-            # noop-write at sf0.1) — per-session constants plus
+            # (a 1.9 M-row pair query: 24.7 s cold+collect vs 6.2 s
+            # warm noop-write at sf0.1) — per-session constants plus
             # harness transfer, not engine throughput. Keep it for
             # round-over-round comparability, and ALSO record the
             # bench-methodology figure: best-of-2 warm noop sink.

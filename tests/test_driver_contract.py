@@ -90,27 +90,8 @@ def test_all_queries_have_query_fn():
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="needs the sf0.01 tables")
-def test_only_streaming_dedup_is_rows_only():
+def test_every_query_has_an_oracle():
     """oracle_sql() turns a lazy oracle function that raises into a
-    rows-only query without any error; pin the rows-only set so a
-    broken oracle function fails here instead."""
-    assert set(entrymod.queries()) - set(entrymod.oracle_sql()) == {
-        "streaming_dedup"
-    }
-
-
-ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run_and_are_deterministic(spark, name):
-    """Queries without a SQL oracle (pinned above to streaming_dedup)
-    must still run and produce a stable row count + schema across
-    invocations (the driver's weaker rows-only check)."""
-    q = entrymod.queries()[name]
-    a = q(spark, SF_DIR)
-    b = q(spark, SF_DIR)
-    ca, cb = a.count(), b.count()
-    assert ca > 0
-    assert ca == cb
-    assert a.columns == b.columns
+    query without an oracle, and without any error; every query has
+    one, so a broken oracle function fails here instead."""
+    assert set(entrymod.queries()) == set(entrymod.oracle_sql())

@@ -94,6 +94,27 @@ def test_clip_polyline_to_bbox():
     assert ga.clip_polyline_to_bbox(np.array([[20, 20], [30, 30]], float), 0, 0, 10, 10) == []
 
 
+def test_clip_keeps_an_exit_and_a_nearby_reentry_apart_at_albers_scale():
+    """A line that leaves the box through its east edge at a vertex
+    outside it and comes back in 3 m or 30 m further along that edge is
+    two pieces, at Albers-scale coordinates too. A stitch tolerance of
+    1e-5 x |y| (35 m here) joined the two into one piece with a false
+    chord along the edge."""
+    x0, y0 = 1.5e6, -3.5e6
+    xmax = x0 + 100.0
+    for gap in (3.0, 30.0):
+        # exits at y0 + gap/2, re-enters at y0 + 3 gap/2
+        line = np.array([[x0, y0], [x0 + 200.0, y0 + gap], [x0, y0 + 2 * gap]])
+        pieces = ga.clip_polyline_to_bbox(line, x0 - 10.0, y0 - 50.0, xmax, y0 + 100.0)
+        assert len(pieces) == 2, gap
+        np.testing.assert_allclose(
+            pieces[0], [[x0, y0], [xmax, y0 + gap / 2]], rtol=0, atol=1e-6
+        )
+        np.testing.assert_allclose(
+            pieces[1], [[xmax, y0 + 1.5 * gap], [x0, y0 + 2 * gap]], rtol=0, atol=1e-6
+        )
+
+
 def test_disc_polygon_radius():
     ring = ga.disc_polygon(100.0, -50.0, 30.0, n=128)
     r = np.hypot(ring[:, 0] - 100.0, ring[:, 1] + 50.0)

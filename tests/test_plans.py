@@ -73,21 +73,3 @@ def test_knn_k1_plan_has_single_aggregate_no_window(spark):
     assert "Window" not in p  # k=1 path is the argmin aggregation
 
 
-def test_hamming_pairs_plan_is_jvm_only(spark):
-    """phash near-dup must never leave the JVM: no Python evals in the
-    plan, and the signature table is scanned with only (id, phash)."""
-    import pandas as pd
-
-    from dea_coastlines_spark.operators.dedup import hamming_pairs
-
-    sdf = spark.createDataFrame(
-        pd.DataFrame({"image_id": ["a", "b", "c"], "phash": [1, 2, 3]})
-    )
-    p = plan_of(hamming_pairs(sdf, "phash", "image_id", max_hamming=6))
-    assert "PythonUDF" not in p and "EvalPython" not in p
-    assert "bit_count" in p.lower()
-
-
-def test_ngram_jaccard_plan_is_jvm_only(spark):
-    p = plan_of(dq.QUERIES["ngram_jaccard"](spark, SF))
-    assert "PythonUDF" not in p and "EvalPython" not in p

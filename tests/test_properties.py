@@ -214,8 +214,8 @@ def _clip_segment_scalar(a, b, xmin, ymin, xmax, ymax):
 
 def _clip_polyline_scalar(line, xmin, ymin, xmax, ymax):
     """The per-segment clip loop: clip each segment, then stitch a
-    segment onto the current piece when np.allclose(atol=1e-12) holds
-    between the piece's last point and the segment's start."""
+    segment onto the current piece when the piece's last point and the
+    segment's start are within 1e-6 m in both coordinates."""
     line = np.asarray(line, np.float64)
     pieces, cur = [], []
 
@@ -231,7 +231,7 @@ def _clip_polyline_scalar(line, xmin, ymin, xmax, ymax):
             emit()
             continue
         a, b = seg
-        if cur and np.allclose(cur[-1], a, atol=1e-12):
+        if cur and np.allclose(cur[-1], a, rtol=0.0, atol=1e-6):
             cur.append(b)
         else:
             emit()
@@ -258,9 +258,10 @@ _clip_coord = st.one_of(
 @example([(-6.0, 0.0), (6.0, 0.0)], (-2, 4, -2, 4), 0.0, 1.0, False)  # axis-parallel
 @example([(-2.0, -2.0), (2.0, 2.0), (2.0, 2.0), (9.0, 2.0)], (-2, 4, -2, 4), 0.0, 1.0, False)
 @example([(5.0, 5.0), (6.0, 6.0), (5.0, 6.0)], (-2, 4, -2, 4), 0.0, 1.0, False)  # outside
-# at 1e6 m the relative stitch term (10 m) joins an exit and a re-entry
-# 3 m apart into one piece
+# at 1e6 m: an exit and a re-entry 3 m apart with an outside segment
+# between them, and 2 m apart around one vertex outside the box
 @example([(0.0, 0.0), (0.0, 5.0), (0.1, 5.0), (0.1, 0.0)], (-2, 4, -2, 4), 1e6, 30.0, False)
+@example([(0.0, 0.0), (3.0, 0.1), (0.0, 0.2)], (-2, 4, -2, 4), 1e6, 30.0, False)
 @settings(max_examples=300, deadline=None)
 def test_clip_polyline_to_bbox_matches_scalar_clip(verts, box, base, step, repeat):
     """The vectorized clip returns the scalar clip's pieces byte for
@@ -302,7 +303,7 @@ def test_png_codec_roundtrip_preserves_quantized_pixels(img):
 @settings(max_examples=80, deadline=None)
 def test_simhash_hamming_triangle_and_identity(a, b):
     """Identical texts hash identically; hamming is symmetric."""
-    from dea_coastlines_spark.operators.dedup import _hash_str_array
+    from dea_coastlines_spark.operators.sketch import _hash_str_array
 
     ha = _hash_str_array(a.split() or [""])
     hb = _hash_str_array(b.split() or [""])

@@ -239,50 +239,6 @@ def test_windowed_counts_with_watermark(spark, dirs):
     assert all(n == SPEC.obs_per_year for n in got.values())
 
 
-def test_streaming_exact_dedup_first_seen_wins(spark, dirs):
-    """dedup_stream: duplicates across micro-batches are dropped; each
-    distinct content survives exactly once."""
-    import pandas as pd
-
-    from dea_coastlines_spark.streaming.dedup_stream import dedup_stream
-
-    docs = pd.DataFrame(
-        {
-            "doc_id": list(range(12)),
-            "text": [f"doc {i % 5}" for i in range(12)],  # 5 distinct texts
-        }
-    )
-    schema = "doc_id long, text string"
-    # two file drops so duplicates span micro-batches
-    spark.createDataFrame(docs.iloc[:6], schema=schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(dirs["tiles"])
-    spark.createDataFrame(docs.iloc[6:], schema=schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(dirs["tiles"])
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dirs["tiles"])
-    )
-    q = (
-        dedup_stream(stream, ["text"])
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", dirs["ckpt"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from dedup_out").collect()
-    texts = sorted(r.text for r in rows)
-    assert texts == sorted(f"doc {i}" for i in range(5))
-    # survivors keep full rows with valid ids from the input
-    assert all(0 <= r.doc_id < 12 for r in rows)
-
-
 def test_table_ingest_exactly_once(spark, tmp_path):
     """File-stream -> snapshot-table ingest: all rows land, a restart
     with the same checkpoint ingests only NEW files, and a replayed
