@@ -19,7 +19,7 @@ from dea_coastlines_spark.plans.pipeline import shoreline_pipeline
 from dea_coastlines_spark.synth import corpus
 
 # Flagship corpus: small but multi-tile/multi-year so the full plan
-# (broadcast tide cutoffs, grouped-map composite, vectorize, halo clip)
+# (tide-cutoff window, grouped-map composite, vectorize, halo clip)
 # executes end-to-end. One definition shared with the sequential
 # recompute oracle (driver_queries.shorelines_oracle_sql).
 _FLAGSHIP_SPEC = driver_queries._flagship_spec()
@@ -27,9 +27,10 @@ _FLAGSHIP_SPEC = driver_queries._flagship_spec()
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query; driver checks rows>0 and a stable schema."""
-    # lazy checkpoint: the tide-cutoff aggregation and the composite
-    # branch both consume the tiles; without it the Arrow render kernel
-    # (PNG encode per tile) executes once per branch
+    # lazy checkpoint: the tide window and the composite share one scan
+    # of the tiles, so this only keeps the Arrow render kernel (PNG
+    # encode per tile) from running again in every later action on the
+    # result
     tiles = corpus.generate_spark(spark, _FLAGSHIP_SPEC).localCheckpoint(
         eager=False
     )

@@ -5,10 +5,9 @@ pixelwise median / std / valid-count over the year's observations, after
 the tide-range subset (`load_tidal_subset`, coastlines/raster.py:330-337).
 
 Spark plan (scale notes):
-  * caption parsing is JVM-side `from_json` -> tide filtering and the
-    per-tile tide-cutoff aggregation are pure DataFrame ops; Catalyst
-    prunes `bytes` out of the scan for the cutoff aggregation (only
-    caption columns are touched there).
+  * caption parsing is JVM-side `from_json` -> the per-tile tide cutoffs
+    are a min/max window over (tile_x, tile_y) and the tide filter a row
+    filter, pure DataFrame ops over the one scan of the tiles.
   * the pixel stack never leaves Python: ONE `applyInArrow` per
     (tile_x, tile_y, year) group reads its columns straight from the
     group's Arrow table (no pandas frame) and does decode -> stack ->
@@ -17,8 +16,9 @@ Spark plan (scale notes):
     its own grouped map and never encodes the rasters. Group size =
     obs_per_year tiles (bounded memory: the dask-chunk analog,
     raster.py:549).
-  * the grouped map's own hash exchange on (tile_x, tile_y, year) is the
-    only shuffle of pixel bytes; there is no extra repartition.
+  * the tide window's hash exchange on (tile_x, tile_y) and its sort on
+    (tile_x, tile_y, year) also serve the grouped map, so they are the
+    only shuffle and sort of pixel bytes; there is no extra repartition.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ import json
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, GroupedData
+from pyspark.sql import DataFrame, GroupedData, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, StringType, StructField, StructType,
@@ -87,20 +87,32 @@ def with_caption(tiles: DataFrame) -> DataFrame:
 def tide_filtered(tiles_meta: DataFrame) -> DataFrame:
     """Keep observations inside the per-tile tide cutoff window.
 
-    Reference: `tide_cutoffs` centre +- 0.25*(max-min) over ALL years of a
-    tile (coastlines/raster.py:283-289), then subset + drop empty
-    timesteps (raster.py:330-337). Row-level tide makes this a pure
-    relational filter — it prunes rows BEFORE the expensive decode UDF
-    (the reference's own early-pruning optimization, SURVEY.md §4).
+    Reference: `tide_cutoffs` centre +- 0.25*(max-min) over every year
+    the run loads for a tile (coastlines/raster.py:283-289), then subset
+    + drop empty timesteps (raster.py:330-337). The cutoffs come from the
+    rows passed in: a frame restricted to some years gets the window of
+    those years. Row-level tide makes this a pure relational filter — it
+    prunes rows BEFORE the expensive decode UDF (the reference's own
+    early-pruning optimization, SURVEY.md §4).
+
+    The min/max is a window over (tile_x, tile_y) ordered by year, so
+    its hash exchange and (tile_x, tile_y, year) sort are the ones the
+    composite grouped map needs: the tiles are read once, shuffled once
+    and sorted once. Scale note: observations cross the shuffle before
+    the filter, and all years of a tile share a reduce partition, so a
+    run with fewer tiles than cores gets fewer grouped-map tasks;
+    WindowExec spills a tile's series past its buffer threshold.
     """
-    cutoffs = tiles_meta.groupBy("tile_x", "tile_y").agg(
-        ((F.min("tide_m") + F.max("tide_m")) / 2.0).alias("tide_centre"),
-        ((F.max("tide_m") - F.min("tide_m")) * 0.25).alias("tide_halfwin"),
+    tile = Window.partitionBy("tile_x", "tile_y").orderBy("year").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
-    return tiles_meta.join(F.broadcast(cutoffs), ["tile_x", "tile_y"]).filter(
-        (F.col("tide_m") >= F.col("tide_centre") - F.col("tide_halfwin"))
-        & (F.col("tide_m") <= F.col("tide_centre") + F.col("tide_halfwin"))
-    ).drop("tide_centre", "tide_halfwin")
+    lo, hi = F.col("tide_lo"), F.col("tide_hi")
+    centre, halfwin = (lo + hi) / 2.0, (hi - lo) * 0.25
+    return tiles_meta.withColumns(
+        {"tide_lo": F.min("tide_m").over(tile), "tide_hi": F.max("tide_m").over(tile)}
+    ).filter(
+        (F.col("tide_m") >= centre - halfwin) & (F.col("tide_m") <= centre + halfwin)
+    ).drop("tide_lo", "tide_hi")
 
 
 def _nan_median_std_count(stack: np.ndarray):

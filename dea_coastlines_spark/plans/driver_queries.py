@@ -795,7 +795,7 @@ def _beach_spec():
 
 def _flagship_spec():
     """The flagship corpus (also __spark_entry__.entry): multi-tile /
-    multi-year so broadcast tide cutoffs, grouped composite, vectorize,
+    multi-year so the tide-cutoff window, grouped composite, vectorize,
     and halo clip all execute."""
     from ..synth.corpus import CorpusSpec
 
@@ -870,7 +870,7 @@ def _sequential_shoreline_rows(
     tide window -> per-(tile, year) composite -> (optional
     contours_preprocess masking) -> marching-squares pieces. Runs NO
     Spark — a plain dict-of-lists group loop stands in for the
-    broadcast tide join, the grouped-map shuffle, and the mapInPandas
+    tide-cutoff window, the grouped-map shuffle, and the Arrow
     batching, so the driver compare verifies the distributed
     orchestration end to end (the numeric kernels are shared and carry
     their own pytest parity gates; the staged TIFF round trip is
@@ -1643,9 +1643,10 @@ def q_multilevel_shorelines(spark, sf_dir):
     spec = _corpus.CorpusSpec(tile_px=96, halo_px=6, tiles_x=2, tiles_y=1,
                               year0=2000, year1=2001, obs_per_year=5,
                               cloud_frac=0.04, seed=7)
-    # lazy checkpoint: the tide-cutoff aggregation and the composite
-    # branch both consume the synthesized tiles; without it the Arrow
-    # render kernel (PNG encode per tile) executes once PER BRANCH
+    # lazy checkpoint: the tide window and the composite share one scan
+    # of the synthesized tiles, so this only keeps the Arrow render
+    # kernel (PNG encode per tile) from running again in every later
+    # action on the result
     tiles = _corpus.generate_spark(spark, spec).localCheckpoint(eager=False)
     comps = annual_composites(tiles, apply_tide_filter=True)
     return (
@@ -1768,9 +1769,10 @@ def q_shorelines_in_aoi(spark, sf_dir):
     spec = _corpus.CorpusSpec(tile_px=96, halo_px=6, tiles_x=3, tiles_y=2,
                               year0=2000, year1=2002, obs_per_year=5,
                               cloud_frac=0.04, seed=7)
-    # lazy checkpoint: the tide-cutoff aggregation and the composite
-    # branch both consume the synthesized tiles; without it the Arrow
-    # render kernel (PNG encode per tile) executes once PER BRANCH
+    # lazy checkpoint: the tide window and the composite share one scan
+    # of the synthesized tiles, so this only keeps the Arrow render
+    # kernel (PNG encode per tile) from running again in every later
+    # action on the result
     tiles = _corpus.generate_spark(spark, spec).localCheckpoint(eager=False)
     sl = shoreline_pipeline(tiles, apply_tide_filter=True)
     rects = {
@@ -1878,9 +1880,10 @@ def q_tile_pyramid(spark, sf_dir):
     from ..operators.pyramid import build_pyramid
     from ..synth import corpus as _corpus
 
-    # lazy checkpoint: the tide-cutoff aggregation and the composite
-    # branch both consume the synthesized tiles; without it the Arrow
-    # render kernel (PNG encode per tile) executes once PER BRANCH
+    # lazy checkpoint: the tide window and the composite share one scan
+    # of the synthesized tiles, so this only keeps the Arrow render
+    # kernel (PNG encode per tile) from running again in every later
+    # action on the result
     tiles = _corpus.generate_spark(spark, _pyramid_spec()).localCheckpoint(eager=False)
     comps = annual_composites(tiles, apply_tide_filter=True)
     return build_pyramid(comps, levels=2).orderBy("year", "level", "x", "y")

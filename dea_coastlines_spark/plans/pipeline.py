@@ -9,8 +9,9 @@ tiles (input_hint schema)
 
 One Python stage total, everything before it is Catalyst-optimized
 DataFrame ops. At 100 TB the plan shape is: parquet/Iceberg scan with
-(cell, year) partition pruning -> broadcast join of tide cutoffs ->
-shuffle on (tile_x, tile_y, year) -> grouped map.
+(cell, year) partition pruning -> shuffle on (tile_x, tile_y) and sort
+on (tile_x, tile_y, year) -> tide-cutoff min/max window + row filter ->
+grouped map, which reuses the window's shuffle and sort.
 """
 
 from __future__ import annotations

@@ -44,8 +44,8 @@ def start_incremental_composites(
         if batch_df.isEmpty():
             return
         # recompute by TILE, not (tile, year): the tide-cutoff window is
-        # a min/max over the tile's FULL time series, so pulling only
-        # the touched years would compute different cutoffs (and thus
+        # a min/max over every year the run reads for a tile, so pulling
+        # only the touched years would compute different cutoffs (and thus
         # different composites) than a batch run — the same tile-
         # completeness rule the shorelines job and the checkpointed
         # batch job apply. Median is not incrementally mergeable ->
@@ -91,9 +91,10 @@ def start_incremental_shorelines(
     into the snapshot table (overwrite_partitions) — Iceberg-style
     append + key-scoped recompute (SURVEY.md §2.10), end to end.
 
-    Tide note: the cutoff window is a min/max over a tile's full series,
-    so the recompute pulls ALL years of an affected tile (the same
-    cell-completeness rule the checkpointed batch job uses)."""
+    Tide note: the cutoff window is a min/max over every year the run
+    reads for a tile, so the recompute pulls ALL years of an affected
+    tile (the same cell-completeness rule the checkpointed batch job
+    uses)."""
     from ..plans.pipeline import shoreline_pipeline
     from ..sources.table import SnapshotTable
 

@@ -102,7 +102,7 @@ def main(argv=None) -> int:
         ckpt = CheckpointedPipeline(spark, args.checkpoint_dir)
         resumed_keys = len(ckpt.done_keys("shorelines"))
         # Keyed by cell_id ONLY (not (cell, year)): the tide-cutoff
-        # window is a min/max over a tile's FULL time series
+        # window is a min/max over every year the run reads for a tile
         # (coastlines/raster.py:283-289), so a cell must recompute all
         # its years together or a partial resume would see a truncated
         # series and produce different cutoffs than the original run.

@@ -86,6 +86,54 @@ def test_tide_filter_prunes_rows(tiles_df):
         assert ((got >= centre - half - 1e-9) & (got <= centre + half + 1e-9)).all()
 
 
+def test_tide_cutoffs_span_the_years_read(spark, tmp_path):
+    """The cutoffs come from the rows passed in, as the reference's
+    `tide_cutoffs` covers the range the run loads (raster.py:283-289):
+    a `years=` read gets the window of its own years, not the tile's
+    full series. Each year's tides sit in their own band, so the two
+    readings keep different observations."""
+    from dea_coastlines_spark.sources import read_tiles, write_tiles
+
+    spec = corpus.CorpusSpec(
+        tile_px=32, halo_px=2, tiles_x=2, tiles_y=1,
+        year0=2000, year1=2002, obs_per_year=5, seed=5,
+    )
+    pdf = corpus.generate_pandas(spec)
+
+    def tide(m):  # year y, observation o -> 10*(y - 2000) + o, per-tile offset
+        return 100.0 * m["tile_x"] + 10.0 * (m["year"] - 2000) + m["obs"]
+
+    metas = [json.loads(c) for c in pdf.caption]
+    pdf["caption"] = [json.dumps({**m, "tide_m": tide(m)}) for m in metas]
+    write_tiles(spark.createDataFrame(pdf, schema=corpus.TILES_SCHEMA), str(tmp_path / "t"))
+
+    def kept(years):
+        df = comp_op.tide_filtered(
+            comp_op.with_caption(read_tiles(spark, str(tmp_path / "t"), years=years))
+        )
+        return {(r.tile_x, r.year, r.obs) for r in df.select("tile_x", "year", "obs").collect()}
+
+    def inside_window(years):
+        out = set()
+        for tx in range(spec.tiles_x):
+            ms = [m for m in metas if m["tile_x"] == tx and years[0] <= m["year"] <= years[1]]
+            lo, hi = min(map(tide, ms)), max(map(tide, ms))
+            centre, half = (lo + hi) / 2, (hi - lo) * 0.25
+            out |= {(tx, m["year"], m["obs"]) for m in ms if centre - half <= tide(m) <= centre + half}
+        return out
+
+    full, subset = kept(None), kept((2001, 2002))
+    # full window [6, 18] (+ offset): every 2001 observation
+    assert full == inside_window((2000, 2002)) == {
+        (tx, 2001, o) for tx in (0, 1) for o in range(5)
+    }
+    # 2001-2002 window [13.5, 20.5]: 2001's last and 2002's first
+    # observation, not all of 2001
+    assert subset == inside_window((2001, 2002)) == {
+        (tx, y, o) for tx in (0, 1) for y, o in ((2001, 4), (2002, 0))
+    }
+
+
 def test_shorelines_match_analytic_coast(tiles_df):
     """Extracted waterline should sit within ~1 pixel of the analytic
     median shoreline (noise sd 0.08 over tanh ramp; median of 2-3 obs)."""

@@ -11,6 +11,7 @@ import re
 
 import pytest
 
+from dea_coastlines_spark.operators import composite
 from dea_coastlines_spark.plans import driver_queries as dq
 from dea_coastlines_spark.plans.pipeline import shoreline_pipeline
 from dea_coastlines_spark.synth import corpus
@@ -46,7 +47,7 @@ def test_semi_anti_join_strategies(spark):
     assert "LeftSemi" in p and "LeftAnti" in p
 
 
-def test_flagship_parquet_plan_shape(spark, tmp_path):
+def _parquet_tiles(spark, tmp_path):
     spec = corpus.CorpusSpec(
         tile_px=64, halo_px=4, tiles_x=2, tiles_y=1,
         year0=2000, year1=2001, obs_per_year=2, seed=3,
@@ -54,18 +55,46 @@ def test_flagship_parquet_plan_shape(spark, tmp_path):
     spark.createDataFrame(
         corpus.generate_pandas(spec), schema=corpus.TILES_SCHEMA
     ).write.parquet(str(tmp_path / "t"))
-    tiles = spark.read.parquet(str(tmp_path / "t"))
-    p = plan_of(shoreline_pipeline(tiles, apply_tide_filter=True))
-    # exactly two exchanges: tiny tide-cutoff aggregate + the one
-    # (tile, year) group shuffle
-    assert len(re.findall(r"\) Exchange", p)) == 2
-    # the cutoff subtree scans ONLY the caption column
+    return spark.read.parquet(str(tmp_path / "t"))
+
+
+def _nodes(p: str, name: str) -> list[str]:
+    """Detail entries of the formatted plan's `name` nodes (formatted
+    mode lists each node in the tree AND in the detail section)."""
+    return re.findall(rf"^\(\d+\) {name} *\n(.*?)(?:\n\n|\Z)", p, re.M | re.S)
+
+
+def test_flagship_parquet_plan_shape(spark, tmp_path):
+    p = plan_of(shoreline_pipeline(_parquet_tiles(spark, tmp_path), apply_tide_filter=True))
+    # the tide-cutoff window's exchange on (tile_x, tile_y) and its sort
+    # on (tile_x, tile_y, year) are the grouped map's too: one shuffle,
+    # one sort, and no cutoff aggregate joined back by broadcast
+    assert len(_nodes(p, "Exchange")) == 1
+    assert len(_nodes(p, "Sort")) == 1
+    assert len(_nodes(p, "Window")) == 1
+    assert not re.search(r"\(\d+\) Broadcast", p)
+    assert not _nodes(p, "HashAggregate")
+    # the tiles are scanned once, with the image bytes
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", p)
-    assert any(s.strip() == "caption:string" for s in schemas), schemas
+    assert len(schemas) == 1 and "bytes:binary" in schemas[0], schemas
     # image bytes cross into Python exactly once: composite and contours
     # run in the same Arrow grouped map
-    assert len(re.findall(r"\(\d+\) FlatMapGroupsInArrow", p)) == 1
+    assert len(_nodes(p, "FlatMapGroupsInArrow")) == 1
     assert not re.search(r"\(\d+\) (FlatMapGroupsInPandas|MapInPandas|MapInArrow)", p)
+
+
+@pytest.mark.parametrize("build", ["annual_composites", "gapfill_composites"])
+def test_composites_shuffle_image_bytes_once(spark, tmp_path, build):
+    p = plan_of(getattr(composite, build)(_parquet_tiles(spark, tmp_path)))
+    exchanges = _nodes(p, "Exchange")
+    with_bytes = [e for e in exchanges if re.search(r"\bbytes#", e.split("\n")[0])]
+    # only the tide window's exchange carries the pixels; gapfill's
+    # explode and broadcast year join keep its (tile_x, tile_y)
+    # partitioning, and its other exchanges are in the caption-only
+    # `years` subquery
+    assert len(with_bytes) == 1, exchanges
+    assert re.search(r"hashpartitioning\(tile_x#\d+, tile_y#\d+, \d+\)", with_bytes[0])
+    assert len(_nodes(p, "FlatMapGroupsInArrow")) == 1
 
 
 def test_knn_k1_plan_has_single_aggregate_no_window(spark):
