@@ -68,9 +68,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     o = dict(driver_queries.ORACLES)
     lazy = {
-        # independent whole-mosaic BFS (no tiling/seam stitch); DuckDB
-        # re-derives component sums + canonical representative
-        "global_components": driver_queries.components_oracle_sql,
         # single-threaded sequential recompute of the raster->vector
         # path (plain loops replace every distributed construct);
         # DuckDB re-derives hexing/rounding/aggregation

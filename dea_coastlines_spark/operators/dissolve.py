@@ -22,8 +22,8 @@ input), which is what the SQL oracle verifies.
 Scale notes: one shuffle on the dissolve key; per-key memory is the
 group's bbox raster (bounded by pixel choice), not the polygon count.
 Skewed keys (one giant coastline class) are bounded by the bbox — at
-continental scale dissolve per (key, tile) first, then merge tiles via
-the components operator's seam-equivalence pass.
+continental scale dissolve per (key, tile) first, then merge the
+per-tile pieces across tile seams (not implemented here).
 """
 
 from __future__ import annotations

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..codecs import tiff
-from .sketch import _splitmix
+from ..synth.corpus import _splitmix
 
 _Q = 10**4  # fixed-point quantization for fingerprinting
 _NAN_SENTINEL = np.int64(-(1 << 40))

@@ -19,8 +19,7 @@ from sum/count at the end). This is the scale-critical design choice:
   output by the level count. Re-aggregation never touches raw data
   twice.
 * Each level is persisted before deriving the next so the final
-  union does not recompute the chain (iterative-lineage rule, same
-  as operators/graph.py).
+  union does not recompute the chain.
 
 Rollup-able aggregates only: count, sum, min, max (+ mean derived).
 Median/std intentionally excluded — they don't re-aggregate; use the

@@ -1660,61 +1660,6 @@ def q_multilevel_shorelines(spark, sf_dir):
     )
 
 
-def _components_world():
-    """Deterministic 96x96 multi-tile mask shared by q_global_components
-    and its oracle: a cross spanning all 9 tiles plus two isolated
-    blobs. Returns (world bool array, tile rows) with world[0] = the
-    TOP pixel row (tile_y counts up from the bottom row of tiles)."""
-    import numpy as np
-
-    W = H = 32
-    world = np.zeros((96, 96), bool)
-    world[46:50, 5:90] = True
-    world[10:60, 46:49] = True
-    world[5:8, 5:8] = True
-    world[70:74, 70:74] = True
-    rows = []
-    for ty in range(3):
-        for tx in range(3):
-            block = world[(2 - ty) * H:(3 - ty) * H, tx * W:(tx + 1) * W]
-            rows.append({"tile_x": tx, "tile_y": ty, "w": W, "h": H,
-                         "mask_bytes": block.astype(np.uint8).tobytes()})
-    return world, rows
-
-
-def q_global_components(spark, sf_dir):
-    """Distributed cross-tile connected components (beyond-reference:
-    removes the halo-size limit) on a deterministic multi-tile mask.
-    The opaque min-xxhash64 component id is re-keyed to the component's
-    lexicographically smallest (tile_x, tile_y, label) member — a
-    hash-free canonical representative the DuckDB oracle can recompute
-    independently (components_oracle_sql: whole-mosaic BFS, no tiling,
-    no seam stitch)."""
-    import pandas as pd
-    from pyspark.sql import Window
-
-    from ..operators.components import global_components
-
-    _, rows = _components_world()
-    tiles = spark.createDataFrame(
-        pd.DataFrame(rows), "tile_x int, tile_y int, w int, h int, mask_bytes binary"
-    )
-    gc = global_components(tiles)
-    rep = F.min(F.struct("tile_x", "tile_y", "label")).over(
-        Window.partitionBy("component_id")
-    )
-    return (
-        gc.withColumn("_rep", rep)
-        .select(
-            F.col("_rep.tile_x").alias("comp_tx"),
-            F.col("_rep.tile_y").alias("comp_ty"),
-            F.col("_rep.label").alias("comp_label"),
-            "component_px", "tile_x", "tile_y", "label", "n_px",
-        )
-        .orderBy("comp_tx", "comp_ty", "comp_label", "tile_x", "tile_y", "label")
-    )
-
-
 def q_validation_stats(spark, sf_dir):
     """Validation stage (entry point 4): survey agg -> year join ->
     transect x shoreline chainage -> error stats per transect."""
@@ -1809,55 +1754,6 @@ def q_shorelines_in_aoi(spark, sf_dir):
             "n_vertices_total",  # totalizes the order: two components of
             # one (tile, year) in the same AOI can tie on n_inside
         )
-    )
-
-
-_HLL_STREAM_STORES: dict[tuple, str] = {}
-
-
-def q_streaming_hll_parity(spark, sf_dir):
-    """Batch-equivalence gate for the streaming HyperLogLog
-    (streaming/sketch_stream.py): events split into 4 files stream in
-    as 4 micro-batches whose registers max-merge into a persisted
-    store; the estimates read from that store must equal the batch
-    sketch bit-for-bit (registers are merge-invariant state, and the
-    estimate is a pure function of them) — so the same DuckDB oracle
-    that checks hll_distinct checks the stream. The stream executes at
-    build time, memoized per (applicationId, sf_dir) like merge_upsert;
-    a bench timing measures the store read + estimate aggregate."""
-    import os as _os
-    import tempfile as _tf
-
-    from ..streaming.sketch_stream import read_estimates, start_hll_stream
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    store = _HLL_STREAM_STORES.get(key)
-    if store is None:
-        root = _tf.mkdtemp(prefix="hll_stream_")
-        src = _os.path.join(root, "src")
-        # 4 source files -> 4 micro-batches at maxFilesPerTrigger=1:
-        # the parity is over a genuinely incremental run, not one batch
-        _t(spark, sf_dir, "events").repartitionByRange(
-            4, "event_id"
-        ).write.parquet(src)
-        store = _os.path.join(root, "store")
-        q = start_hll_stream(
-            spark, src, store, _os.path.join(root, "ckpt"), p=10
-        )
-        if not q.awaitTermination(300):
-            # memoizing a partial store would serve wrong estimates for
-            # the rest of the session with no hint the stream hung
-            q.stop()
-            raise TimeoutError("hll stream did not finish within 300 s")
-        _HLL_STREAM_STORES[key] = store
-    return read_estimates(spark, store, p=10).orderBy("event_type")
-
-
-def _hll_stream_oracle() -> str:
-    from ..operators.sketch import hll_sql
-
-    return hll_sql("events", "user_id", ["event_type"], p=10) + (
-        " ORDER BY event_type"
     )
 
 
@@ -2397,38 +2293,6 @@ FROM s ORDER BY shard, pos
 """
 
 
-def q_dedup_clusters(spark, sf_dir):
-    """Connected components over a pair list -> keep-one dedup clusters
-    (the transitive-closure stage downstream of every near-dup
-    generator). Edge fixture: the bipartite order--part graph from
-    lineitem (orders sharing a part are transitively one cluster).
-    Oracle: DuckDB recursive CTE computing min-reachable-id."""
-    from ..operators.graph import dedup_clusters
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 400)
-    edges = li.select(
-        F.col("l_orderkey").alias("id_a"),
-        (F.col("l_partkey") + 10000000).alias("id_b"),
-    ).distinct()
-    return dedup_clusters(edges).orderBy("node_id")
-
-
-ORACLE_DEDUP_CLUSTERS = """
-WITH RECURSIVE
-e0 AS (SELECT DISTINCT l_orderkey AS u, l_partkey + 10000000 AS v
-       FROM lineitem WHERE l_orderkey < 400),
-edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
-reach(u, r) AS (
-  SELECT u, u AS r FROM (SELECT DISTINCT u FROM edges)
-  UNION
-  SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.v
-)
-SELECT u AS node_id, MIN(r) AS cluster_id,
-       (u = MIN(r)) AS is_canonical
-FROM reach GROUP BY u ORDER BY node_id
-"""
-
-
 def q_crs_project(spark, sf_dir):
     """CRS forward projections (to_crs parity, reference raster.py:206
     EPSG:3577 + vector.py:1591): deterministic Australian-extent
@@ -2963,98 +2827,6 @@ ORDER BY z.zone_id, year
 """
 
 
-def components_oracle_sql() -> str:
-    """Full hash-verified oracle for q_global_components. The input
-    mask is a pure function of _components_world(), so the driver
-    recomputes the grouping INDEPENDENTLY of the distributed path: an
-    8-connected breadth-first flood fill over the WHOLE 96x96 mosaic —
-    no tiling, no seam extraction, no label propagation (the parts the
-    distributed operator could get wrong). Per-tile labels reuse
-    functions/label.py (the same kernel the grouped stage runs; it
-    carries its own pytest parity) only to NAME the members; each
-    (tile, label) is then mapped to its whole-mosaic component through
-    any member pixel. DuckDB independently re-derives the component
-    pixel sums and the canonical (tile_x, tile_y, label) representative
-    via window aggregation over the member rows."""
-    import os
-    import tempfile
-    from collections import deque
-
-    import numpy as np
-    import pandas as pd
-
-    from ..functions import label as _label
-
-    world, rows = _components_world()
-    H = W = 32
-
-    # independent whole-mosaic labeling: BFS flood fill, 8-connected
-    wcomp = np.zeros(world.shape, np.int64)
-    nxt = 0
-    hh, ww = world.shape
-    for r0 in range(hh):
-        for c0 in range(ww):
-            if world[r0, c0] and wcomp[r0, c0] == 0:
-                nxt += 1
-                wcomp[r0, c0] = nxt
-                dq = deque([(r0, c0)])
-                while dq:
-                    r, c = dq.popleft()
-                    for dr in (-1, 0, 1):
-                        for dc in (-1, 0, 1):
-                            rr, cc = r + dr, c + dc
-                            if (0 <= rr < hh and 0 <= cc < ww
-                                    and world[rr, cc] and wcomp[rr, cc] == 0):
-                                wcomp[rr, cc] = nxt
-                                dq.append((rr, cc))
-
-    recs = []
-    for t in rows:
-        tx, ty = t["tile_x"], t["tile_y"]
-        block = (
-            np.frombuffer(t["mask_bytes"], np.uint8).reshape(H, W) > 0
-        )
-        labels, n = _label.label(block, 2)
-        if n == 0:
-            continue
-        sizes = _label.region_sizes(labels, n)
-        for lab in range(1, n + 1):
-            rs, cs = np.nonzero(labels == lab)
-            # any member pixel names the whole-mosaic component
-            wr, wc = (2 - ty) * H + int(rs[0]), tx * W + int(cs[0])
-            recs.append({
-                "tile_x": tx, "tile_y": ty, "label": int(lab),
-                "n_px": int(sizes[lab]), "wcomp": int(wcomp[wr, wc]),
-            })
-    pdf = pd.DataFrame(recs, columns=["tile_x", "tile_y", "label", "n_px", "wcomp"])
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_components_oracle_{os.getpid()}.parquet",
-    )
-    tmp = path + ".tmp"
-    pdf.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-
-    # (tile_x, tile_y, label) each < 2^20, so the packed key preserves
-    # lexicographic order and MIN(key) is the canonical representative
-    return f"""
-WITH m AS (SELECT * FROM read_parquet('{path}')),
-agg AS (
-  SELECT *,
-         CAST(SUM(n_px) OVER (PARTITION BY wcomp) AS BIGINT) AS component_px,
-         MIN((CAST(tile_x AS BIGINT) << 40)
-             + (CAST(tile_y AS BIGINT) << 20)
-             + label) OVER (PARTITION BY wcomp) AS repkey
-  FROM m)
-SELECT CAST(repkey >> 40 AS INTEGER) AS comp_tx,
-       CAST((repkey >> 20) & 1048575 AS INTEGER) AS comp_ty,
-       CAST(repkey & 1048575 AS INTEGER) AS comp_label,
-       component_px, tile_x, tile_y, label, CAST(n_px AS BIGINT) AS n_px
-FROM agg
-ORDER BY comp_tx, comp_ty, comp_label, tile_x, tile_y, label
-"""
-
-
 # q_merge_upsert stages its CoW table once per (application, sf_dir);
 # the temp roots are removed at interpreter exit, so repeated bench
 # iterations neither re-run the write path nor leak directories.
@@ -3122,50 +2894,6 @@ def q_merge_upsert(spark, sf_dir):
         )
         .orderBy("o_orderpriority")
     )
-
-
-def q_hll_distinct(spark, sf_dir):
-    """HyperLogLog distinct-user estimate per event_type
-    (operators/sketch.hll_distinct, p=10): map-only Arrow (bucket, rho)
-    kernel, then two map-side-combinable aggregations whose shuffle
-    volume is O(groups * 2^p) regardless of row count — the mergeable-
-    register cardinality sketch every 10^12-row planning pass relies
-    on. The oracle replays splitmix64, the exact integer register sum
-    (UHUGEINT), and the linear-counting correction bit-for-bit."""
-    from ..operators.sketch import hll_distinct
-
-    ev = _t(spark, sf_dir, "events")
-    return hll_distinct(ev, "user_id", ["event_type"], p=10).orderBy(
-        "event_type"
-    )
-
-
-def _hll_oracle() -> str:
-    from ..operators.sketch import hll_sql
-
-    return hll_sql("events", "user_id", ["event_type"], p=10) + (
-        " ORDER BY event_type"
-    )
-
-
-def q_heavy_hitters(spark, sf_dir):
-    """Count-Min heavy hitters over the documents corpus
-    (operators/sketch.cms_heavy_hitters, depth 4 x width 1024): exact
-    per-token reduce (the word-count shuffle), then the counter grid is
-    folded from the DISTINCT-token table (no second pass over raw
-    tokens) and the exact top-20 probe it broadcast-side. cms_count >=
-    exact_count by construction; integer end-to-end. The oracle replays
-    the FNV-1a + splitmix bucket hashes and the min-probe in DuckDB."""
-    from ..operators.sketch import cms_heavy_hitters
-
-    d = _t(spark, sf_dir, "documents")
-    return cms_heavy_hitters(d, "text", k=20, depth=4, width=1024)
-
-
-def _cms_oracle() -> str:
-    from ..operators.sketch import cms_sql
-
-    return cms_sql("documents", "text", k=20, depth=4, width=1024)
 
 
 def q_resample_interpolate(spark, sf_dir):
@@ -3448,10 +3176,12 @@ FROM fan ORDER BY doc_id, epoch
 
 # ---------------------------------------------------------------------------
 # Registry. Key order is the order of __spark_entry__.queries(), which
-# follows QUERY_ORDER below: the driver's correctness snapshot
-# (CORRECTNESS_r*.json) records only the first 50 keys, so the order
-# decides which queries it carries. Every query is checked against its
-# oracle in tests/test_driver_contract.py whatever its position.
+# follows QUERY_ORDER below. The driver's correctness snapshot
+# (CORRECTNESS_r*.json) records only the first 50 keys; queries() has
+# exactly 50 (these 49 plus "shorelines_annual"), so the snapshot
+# carries every query and the order matters only if the registry grows.
+# Every query is checked against its oracle in
+# tests/test_driver_contract.py whatever its position.
 # ---------------------------------------------------------------------------
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- block A: first-ever driver snapshot rows (VERDICT r3 item 1)
@@ -3469,9 +3199,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "interval_join": q_interval_join,
     "interval_overlap": q_interval_overlap,
     "table_evolution": q_table_evolution,
-    "hll_distinct": q_hll_distinct,
-    "heavy_hitters": q_heavy_hitters,
-    "streaming_hll_parity": q_streaming_hll_parity,
     "tile_pyramid": q_tile_pyramid,
     "weighted_sample": q_weighted_sample,
     "resample_interpolate": q_resample_interpolate,
@@ -3481,9 +3208,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dissolve": q_dissolve,
     "rates_regression": q_rates_regression,
     "crs_project": q_crs_project,
-    "dedup_clusters": q_dedup_clusters,
     "contour_certainty": q_contour_certainty,
-    "global_components": q_global_components,
     "stratified_sample": q_stratified_sample,
     "train_eval_split": q_train_eval_split,
     "shuffle_shards": q_shuffle_shards,
@@ -3552,7 +3277,6 @@ ORACLES: dict[str, str] = {
     "dissolve": ORACLE_DISSOLVE,
     "rates_regression": ORACLE_RATES_REGRESSION,
     "crs_project": ORACLE_CRS_PROJECT,
-    "dedup_clusters": ORACLE_DEDUP_CLUSTERS,
     "shuffle_shards": _shards_oracle(),
     "stratified_sample": _sampling_oracle(),
     "train_eval_split": _split_oracle(),
@@ -3563,9 +3287,6 @@ ORACLES: dict[str, str] = {
     "interval_join": ORACLE_INTERVAL_JOIN,
     "interval_overlap": ORACLE_INTERVAL_OVERLAP,
     "table_evolution": ORACLE_TABLE_EVOLUTION,
-    "hll_distinct": _hll_oracle(),
-    "heavy_hitters": _cms_oracle(),
-    "streaming_hll_parity": _hll_stream_oracle(),
     "weighted_sample": _weighted_sample_oracle(),
     "resample_interpolate": _resample_oracle(),
     "cell_rollup": ORACLE_CELL_ROLLUP,

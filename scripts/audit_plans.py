@@ -1,12 +1,13 @@
 """Physical-plan audit: regenerates PLANS.md from the live driver
 contract.
 
-For every `queries()` entry this records, from the EXECUTED plan
-string at sf0.01: exchange (shuffle) count, Python stage count
-(ArrowEvalPython / grouped map / MapInPandas / MapInArrow / cogroup),
-scan column pruning (ReadSchema width), pushed data filters, and
-scale-killer nodes (CartesianProduct / BroadcastNestedLoopJoin).
-Run: python scripts/audit_plans.py [sf_dir] — rewrites PLANS.md.
+For every `driver_queries.QUERIES` entry this records, from the
+EXECUTED plan string at sf0.01: exchange (shuffle) count, Python stage
+count (ArrowEvalPython / grouped map / MapInPandas / MapInArrow /
+cogroup), scan column pruning (ReadSchema width), pushed data filters,
+and scale-killer nodes (CartesianProduct / BroadcastNestedLoopJoin).
+Run: python scripts/audit_plans.py [sf_dir] [--heavy-sf sf_dir] —
+rewrites PLANS.md; --heavy-sf re-audits HEAVY_SF_QUERIES at that sf.
 """
 
 from __future__ import annotations
@@ -79,11 +80,8 @@ def effective_counts(plan: str) -> tuple[int, int]:
 # which the emitted note records (VERDICT r3 item 7).
 HEAVY_SF_QUERIES = [
     "spatial_pip_join", "knn_anchor_join", "overlay_clip",
-    "dedup_clusters",
     "rates_regression", "group_percentiles", "cell_rollup",
     "interval_join", "interval_overlap",
-    "hll_distinct", "heavy_hitters",
-    "streaming_hll_parity",
     "weighted_sample", "resample_interpolate",
 ]
 
@@ -176,13 +174,6 @@ def main() -> None:
         "  contour_certainty) build their input with",
         "  spark.createDataFrame, so `scan cols` shows `-`: there is no",
         "  file scan to prune.",
-        "- `dedup_clusters` auto-picks its physical strategy: at sf0.01",
-        "  the symmetrized edge list is small, so the min-label fixpoint",
-        "  is solved driver-side by a vectorized union-find (the audited",
-        "  1-Exchange plan is the final labels read); corpus-scale graphs",
-        "  take the distributed min-label + pointer-jump loop, whose",
-        "  per-round plans are localCheckpoint-truncated by design",
-        "  (parity pinned by tests/test_graph.py).",
         "- Exchange counts include the final orderBy each query uses for",
         "  deterministic driver-side comparison; production callers drop",
         "  that sort.",
@@ -193,11 +184,8 @@ def main() -> None:
         "  multi-stage pipelines (composite -> vectorize -> join ->",
         "  regress, hotspots at several radii); their stage counts are",
         "  the pipeline's, not one operator's.",
-        "- `dedup_clusters` audits only the final read: its label",
-        "  propagation rounds are localCheckpoint-truncated and their",
-        "  join+agg plans execute at build time. `streaming_hll_parity`",
-        "  / `merge_upsert` / `table_evolution` similarly time the final",
-        "  store read — their write paths run once at build, memoized",
+        "- `merge_upsert` / `table_evolution` audit only the final",
+        "  store read: their write paths run once at build, memoized",
         "  per session.",
     ]
     if heavy_rows:

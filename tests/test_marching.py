@@ -69,3 +69,47 @@ def test_determinism():
     assert len(c1) == len(c2)
     for x, y in zip(c1, c2):
         assert np.array_equal(x, y)
+
+
+def test_tile_contour_that_reenters_the_core_from_the_halo_is_two_pieces():
+    """A one-pixel-row tongue of water ends just inside the east halo, so
+    its 0-level contour leaves the core at one vertex outside it and
+    re-enters 0.2 px (6 m) further down the same edge. At Albers-scale
+    coordinates the kernel keeps the two sides of the tongue apart: two
+    pieces, every vertex inside the core, no chord along the core edge.
+    A relative stitch tolerance (1e-5 x |y|, 35 m here) joined them into
+    one piece."""
+    from dea_coastlines_spark.geometry import wkb
+    from dea_coastlines_spark.operators.contours import extract_shorelines_tile
+
+    n, halo, a_px = 32, 4, 30.0
+    x0, y0 = 1.5e6, -3.5e6
+    rr, cc = np.mgrid[0:n, 0:n].astype(float)
+    # water (> 0) on row 16 only, out to the tip at col 27.75; the core
+    # ends at col 27.5, so the tip is the one vertex outside it
+    mndwi = np.minimum(0.3 - np.abs(rr - 16.0), 27.9 - cc)
+    transform = [a_px, 0.0, x0, 0.0, -a_px, y0]
+    pieces = extract_shorelines_tile(mndwi, None, None, transform, halo)
+
+    def y_of(row):  # pixel-centre world y of a (fractional) row
+        return y0 - (row + 0.5) * a_px
+
+    core_x0, core_x1 = x0 + halo * a_px, x0 + (n - halo) * a_px
+    core_y0, core_y1 = y_of(n - halo - 0.5), y_of(halo - 0.5)
+    assert len(pieces) == 2
+    ends = []
+    for p in pieces:
+        xy = wkb.coords_of(p["geometry"])
+        assert (xy[:, 0] >= core_x0 - 1e-6).all() and (xy[:, 0] <= core_x1 + 1e-6).all()
+        assert (xy[:, 1] >= core_y0 - 1e-6).all() and (xy[:, 1] <= core_y1 + 1e-6).all()
+        west, east = sorted((tuple(xy[0]), tuple(xy[-1])))
+        ends.append((west, east))
+    # top side of the tongue at row 15.7, bottom side at row 16.3; the
+    # sides cross the east core edge at rows 15.9 and 16.1
+    ends.sort(key=lambda e: -e[0][1])
+    np.testing.assert_allclose(
+        np.array(ends).reshape(2, 4),
+        [[core_x0, y_of(15.7), core_x1, y_of(15.9)],
+         [core_x0, y_of(16.3), core_x1, y_of(16.1)]],
+        rtol=0, atol=1e-6,
+    )

@@ -297,16 +297,3 @@ def test_png_codec_roundtrip_preserves_quantized_pixels(img):
     assert img_codec.psnr(back, img) >= 40.0
     again = img_codec.decode_tile(img_codec.encode_tile(back, "png"), "png")
     np.testing.assert_array_equal(again, back)
-
-
-@given(st.text(max_size=200), st.text(max_size=200))
-@settings(max_examples=80, deadline=None)
-def test_simhash_hamming_triangle_and_identity(a, b):
-    """Identical texts hash identically; hamming is symmetric."""
-    from dea_coastlines_spark.operators.sketch import _hash_str_array
-
-    ha = _hash_str_array(a.split() or [""])
-    hb = _hash_str_array(b.split() or [""])
-    assert (_hash_str_array(a.split() or [""]) == ha).all()
-    if a == b:
-        assert (ha == hb).all()
